@@ -458,12 +458,15 @@ def _scoped_shuffle_partitions(spark, n: int):
     feature."""
     p_key = "spark.sql.shuffle.partitions"
     a_key = "spark.sql.adaptive.enabled"
+    # read and parse both old values before the first set, so a
+    # failure here leaves the session conf untouched
     old_p = spark.conf.get(p_key)
     old_a = spark.conf.get(a_key)
-    spark.conf.set(p_key, str(n))
-    if n < int(old_p):
-        spark.conf.set(a_key, "false")
+    sized_down = n < int(old_p)
     try:
+        spark.conf.set(p_key, str(n))
+        if sized_down:
+            spark.conf.set(a_key, "false")
         yield
     finally:
         spark.conf.set(p_key, old_p)

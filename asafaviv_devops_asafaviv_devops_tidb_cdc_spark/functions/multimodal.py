@@ -5,13 +5,12 @@ Arrow-batched ``mapInPandas``.
 ``decode_payload`` is a REAL container-header decoder: it sniffs the
 magic bytes and parses format + dimensions for PNG/JPEG/GIF/BMP/WAV
 from the raw payload — pure stdlib ``struct``, no codec libraries.
-Full pixel/sample decode (``decode_pixels``) is IN-ENGINE for
-uncompressed 24-bit BMP and for ALL deflate-framed PNG — ``_inflate``
-is a complete RFC 1951 inflate (stored, fixed-Huffman, AND
-dynamic-Huffman blocks, canonical table construction included), so
-any spec-compliant 8-bit RGB non-interlaced PNG decodes without a
-codec library. The remaining declared library boundary is DCT-family
-entropy transforms (JPEG/MP3 — PIL/ffmpeg are not in this container);
+Full pixel/sample decode (``decode_pixels``) covers uncompressed
+24-bit BMP and any spec-compliant 8-bit RGB non-interlaced PNG.
+The codec boundary: deflate (the PNG IDAT stream) is the stdlib
+``zlib``'s; the container walks, BMP/WAV/AVI and JPEG
+(functions/jpeg.py) are decoded in-engine. MP3/video decode would
+need a codec library (PIL/ffmpeg) the engine does not depend on;
 corrupt or out-of-scope-variant input uniformly returns None, only
 that genuine boundary raises NotImplementedError.
 ``fake_decode_features`` is the deterministic feature stand-in tests
@@ -103,11 +102,10 @@ def decode_pixels(payload: bytes, mime: str):
     deflate-framed PNG, baseline JPEG — grayscale AND 3-component
     YCbCr color with 4:4:4/4:2:2/4:2:0 subsampling — and PROGRESSIVE
     (SOF2) Huffman JPEG (r11: spectral selection + successive
-    approximation, multi-scan reassembly) are decoded IN-ENGINE (pure
-    stdlib + numpy — fixed headers, chunk/marker walks, a complete
-    RFC 1951 inflate covering stored, fixed- and dynamic-Huffman
-    blocks, interleaved-MCU JPEG entropy decode + IDCT + chroma
-    upsample + YCbCr->RGB, filter reconstruction). Contract (r9/r10
+    approximation, multi-scan reassembly) are decoded by stdlib +
+    numpy — fixed headers, chunk/marker walks, the PNG deflate stream
+    through ``zlib``, interleaved-MCU JPEG entropy decode + IDCT +
+    chroma upsample + YCbCr->RGB, filter reconstruction. Contract (r9/r10
     advice — consistent across formats): corrupt input AND
     unsupported in-format variants both return None — for JPEG that
     means arithmetic-coded, hierarchical, 12-bit and >3-component
@@ -802,13 +800,10 @@ def decode_headers(media: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# PNG (stored-deflate) — the compressed-codec boundary, partially
-# removed (r8 verdict item 7): a PNG whose zlib stream uses ONLY
-# stored (uncompressed) deflate blocks is decodable with pure integer
-# logic — chunk walk, stored-block walk, adler32/crc32 checksums, and
-# the full five-filter scanline reconstruction. Huffman-compressed
-# blocks (BTYPE 1/2) remain the declared codec-library boundary:
-# decode_png_pixels returns None for them, never guesses.
+# PNG: chunk walk with CRC checks, the zlib stream inflated by the
+# stdlib, and the full five-filter scanline reconstruction. The synth
+# side below encodes all three deflate block types itself (BTYPE=2
+# needs our own encoder), so the gate corpus exercises each of them.
 # --------------------------------------------------------------------
 
 
@@ -832,9 +827,8 @@ def _deflate_dynamic(body: bytes) -> bytes:
     library encoder never picks dynamic blocks for the synth's small
     near-uniform rasters, so this encoder guarantees the gate corpus
     actually contains BTYPE=2 streams; pytest cross-validates every
-    emitted stream against ``zlib.decompress`` so compliance is
-    library-checked, while the in-engine ``_inflate`` does the
-    decoding in production.
+    emitted stream against ``zlib.decompress``, the same library
+    ``_inflate`` decodes with.
 
     The tree build + header emission are a pure function of the byte
     HISTOGRAM, so they are memoized (``_dynamic_plan``): inputs with
@@ -907,6 +901,11 @@ def _limit_code_lengths(
     if kraft != budget:
         raise ValueError(f"cannot complete {cap}-bit code")
     return ls
+
+
+# RFC 1951 §3.2.7: the order in which code lengths for the
+# code-length alphabet are transmitted in a dynamic-Huffman header.
+_CLEN_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
 
 
 @functools.lru_cache(maxsize=512)
@@ -1055,13 +1054,11 @@ def synth_png_payloads(media_ids: DataFrame) -> DataFrame:
     guaranteed DYNAMIC-HUFFMAN (BTYPE=2) block with a per-image
     Huffman tree and transmitted code-length tables (zlib-validated in
     pytest — the library encoder never picks dynamic for rasters this
-    small, so the guarantee needs our own RFC 1951 encoder). The
-    encoder may use the library; the in-engine decoder (``_inflate``)
-    may not. Every stream is still split across two IDAT chunks with a
-    decoy tEXt between them, so a decoder only matches the DuckDB
-    oracle if it concatenates IDATs, inflates every deflate block type
-    (verifying adler32), and reconstructs all three filters
-    byte-exactly."""
+    small, so the guarantee needs our own RFC 1951 encoder). Every
+    stream is split across two IDAT chunks with a decoy tEXt between
+    them, so a decoder only matches the DuckDB oracle if it
+    concatenates IDATs, inflates every deflate block type (verifying
+    adler32), and reconstructs all three filters byte-exactly."""
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
@@ -1100,9 +1097,9 @@ def synth_png_payloads(media_ids: DataFrame) -> DataFrame:
                 body = lines.tobytes()
                 variant = mid % 3
                 if variant == 1:
-                    # fixed-Huffman framing via the library ENCODER
-                    # (Z_FIXED forbids dynamic trees; decode stays
-                    # in-engine). memLevel 9 keeps it one block.
+                    # fixed-Huffman framing via the library encoder
+                    # (Z_FIXED forbids dynamic trees). memLevel 9
+                    # keeps it one block.
                     co = zlib.compressobj(6, zlib.DEFLATED, 15, 9, zlib.Z_FIXED)
                     stream = bytearray(co.compress(body) + co.flush())
                 elif variant == 2:
@@ -1149,455 +1146,28 @@ def synth_png_payloads(media_ids: DataFrame) -> DataFrame:
     )
 
 
-# RFC 1951 §3.2.5 fixed tables: length symbol 257+i -> base/extra-bit
-# count, distance symbol i -> base/extra-bit count.
-_LEN_BASE = (
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43,
-    51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258,
-)
-_LEN_EXTRA = (
-    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4,
-    4, 4, 5, 5, 5, 5, 0,
-)
-_DIST_BASE = (
-    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193, 257,
-    385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289,
-    16385, 24577,
-)
-_DIST_EXTRA = (
-    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8, 9, 9,
-    10, 10, 11, 11, 12, 12, 13, 13,
-)
-
-
-class _Corrupt(Exception):
-    pass
-
-
-# RFC 1951 §3.2.7: the order in which code lengths for the
-# code-length alphabet are transmitted in a dynamic-Huffman header.
-_CLEN_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
-
-def _fast_table(lengths: list[int]) -> tuple[list[int], int]:
-    """Canonical Huffman decode table from per-symbol code lengths
-    (RFC 1951 §3.2.2), laid out for O(1) symbol decode: a flat list of
-    ``1 << max_len`` entries indexed by the next ``max_len`` input
-    bits AS THEY SIT IN THE LSB-FIRST ACCUMULATOR (deflate packs
-    MSB-first Huffman codes into LSB-first bytes, so each code's bits
-    are reversed once here at build time instead of once per symbol at
-    decode time). Entry = ``sym << 4 | code_len``; 0 marks a bit
-    pattern no code covers. Returns (table, max_len).
-
-    Raises _Corrupt for an over-subscribed code; incomplete codes are
-    allowed at construction (deflate permits e.g. a
-    single-distance-code tree) and their unassigned patterns surface
-    as decode-time _Corrupt via the 0 entry. Build cost is
-    2^max_len * fill, amortized twice: the fixed-tree tables build
-    once at import, and dynamic trees are MEMOIZED on their
-    code-length vector (_TABLE_CACHE) — real corpora repeat trees
-    heavily (similar blocks of similar content canonicalize to the
-    same lengths; the r13 profile measured ~10x reuse on the gate
-    corpus), so most blocks skip construction entirely."""
-    key = tuple(lengths)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    table = _build_fast_table(lengths)
-    if len(_TABLE_CACHE) >= _TABLE_CACHE_CAP:  # bounded: drop oldest
-        _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
-    _TABLE_CACHE[key] = table
-    return table
-
-
-_TABLE_CACHE: dict[tuple, tuple[list[int], int]] = {}
-_TABLE_CACHE_CAP = 1024
-
-
-def _build_fast_table(lengths: list[int]) -> tuple[list[int], int]:
-    # big alphabets (the per-block literal trees of library-encoded
-    # members, ~290 symbols, mostly cache MISSES because every block's
-    # tree differs) take the vectorized path: canonical code
-    # assignment, the per-code LSB-first bit reversal and the entry
-    # packing all run as array ops, leaving only the C-speed slice
-    # fills in Python. Small alphabets (code-length/distance trees)
-    # stay on the scalar path where numpy overhead would dominate.
-    if len(lengths) >= 64:
-        return _build_fast_table_np(lengths)
-    max_len = max(lengths, default=0)
-    if max_len == 0 or max_len > 15:
-        raise _Corrupt
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + bl_count[bits - 1]) << 1
-        next_code[bits] = code
-        if code + bl_count[bits] > (1 << bits):
-            raise _Corrupt  # over-subscribed
-    size = 1 << max_len
-    table = [0] * size
-    for sym, ln in enumerate(lengths):
-        if not ln:
-            continue
-        msb = next_code[ln]
-        next_code[ln] += 1
-        rev = 0
-        for _ in range(ln):
-            rev = (rev << 1) | (msb & 1)
-            msb >>= 1
-        entry = (sym << 4) | ln
-        step = 1 << ln
-        # C-speed fill: every pattern whose low ln bits equal the
-        # reversed code decodes to this symbol
-        table[rev::step] = [entry] * (size >> ln)
-    return table, max_len
-
-
-def _build_fast_table_np(lengths: list[int]) -> tuple[list[int], int]:
-    """Vectorized twin of the scalar path below — same table, same
-    _Corrupt contract (differentially tested)."""
-    import numpy as np
-
-    lens = np.asarray(lengths, dtype=np.int64)
-    nz = np.nonzero(lens)[0]
-    if len(nz) == 0:
-        raise _Corrupt
-    lnz = lens[nz]
-    max_len = int(lnz.max())
-    if max_len > 15:
-        raise _Corrupt
-    bl_count = np.bincount(lnz, minlength=max_len + 1)
-    code = 0
-    first = [0] * (max_len + 1)
-    for bits in range(1, max_len + 1):
-        code = (code + int(bl_count[bits - 1])) << 1
-        first[bits] = code
-        if code + int(bl_count[bits]) > (1 << bits):
-            raise _Corrupt  # over-subscribed
-    order = np.argsort(lnz, kind="stable")  # canonical: by length, then sym
-    sorted_syms = nz[order]
-    sorted_lens = lnz[order]
-    # canonical code = first[len] + rank within the length group
-    grp_first = np.searchsorted(sorted_lens, sorted_lens)
-    codes = np.asarray(first)[sorted_lens] + (
-        np.arange(len(order)) - grp_first
-    )
-    # LSB-first index = bit-reverse of the code in its own width:
-    # reverse (code << (max_len - len)) in max_len bits
-    tmp = codes << (max_len - sorted_lens)
-    rev = np.zeros_like(tmp)
-    for _ in range(max_len):
-        rev = (rev << 1) | (tmp & 1)
-        tmp >>= 1
-    entries = ((sorted_syms << 4) | sorted_lens).tolist()
-    size = 1 << max_len
-    # plain-list fill: slice assignment is C-speed, and a python list
-    # avoids both the final 32k-element tolist() and numpy-scalar
-    # indexing at decode time (a numpy-filled variant measured SLOWER)
-    table = [0] * size
-    for r, e, ln in zip(rev.tolist(), entries, sorted_lens.tolist()):
-        table[r :: 1 << ln] = [e] * (size >> ln)
-    return table, max_len
-
-
-# RFC 1951 §3.2.6 fixed trees, built once: literal/length symbols
-# 0-143 -> 8 bits, 144-255 -> 9, 256-279 -> 7, 280-287 -> 8; distance
-# symbols 0-31 -> 5 bits (30/31 are reserved and rejected at use).
-_FIXED_LIT_FAST = _fast_table([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
-_FIXED_DIST_FAST = _fast_table([5] * 32)
-
-
-def _inflate_raw(data: bytes, pos: int = 0):
-    """Raw RFC 1951 deflate decode starting at byte offset ``pos`` of
-    ``data``: STORED (BTYPE=0), FIXED-HUFFMAN (BTYPE=1) and
-    DYNAMIC-HUFFMAN (BTYPE=2) blocks — LSB-first bit packing,
-    MSB-first Huffman codes, canonical table construction from
-    transmitted code lengths (incl. the 16/17/18 run-length
-    meta-codes), full LZ77 window copies (overlap-safe). Returns
-    (bytes, end_pos) with end_pos the offset of the first byte after
-    the final block (whole bytes preloaded into the bit accumulator
-    by a stored block are handed back), or None on any framing/code
-    corruption. The zlib framing (``_inflate``: header check bits +
-    adler32 trailer) and the gzip member framing
-    (functions/warc.py::gunzip_members: header walk + crc32/isize
-    trailer) both wrap this core — deflate itself is decoded in one
-    place.
-
-    Decode is symbol-at-a-time against LSB-first lookup tables
-    (``_fast_table``): refill the accumulator to the tree's max code
-    length, index once, consume the matched length — no per-bit walk.
-    A matched length of 0 (pattern of an incomplete tree) or longer
-    than the bits actually remaining is corruption."""
-    out = bytearray()
-    n = len(data)
-    # LSB-first bit accumulator over data[pos:]
-    buf = 0
-    nbits = 0
-
-    def getbits(k: int) -> int:
-        nonlocal buf, nbits, pos
-        while nbits < k:
-            if pos >= n:
-                raise _Corrupt
-            buf |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        v = buf & ((1 << k) - 1)
-        buf >>= k
-        nbits -= k
-        return v
-
-    def read_sym(tbl: list[int], mlen: int) -> int:
-        nonlocal buf, nbits, pos
-        while nbits < mlen and pos < n:
-            buf |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        entry = tbl[buf & ((1 << mlen) - 1)]
-        ln = entry & 15
-        if ln == 0 or ln > nbits:
-            raise _Corrupt
-        buf >>= ln
-        nbits -= ln
-        return entry >> 4
-
-    def huffman_block(lit, dist) -> None:
-        # The per-symbol hot loop. Bit-accumulator state is copied
-        # into plain locals (cell-variable reads cost ~2x a local) and
-        # written back on every exit path via the finally block, so
-        # getbits/read_sym callers and the outer block loop always see
-        # the true position — including when _Corrupt propagates.
-        nonlocal out, buf, nbits, pos
-        b, nb, p = buf, nbits, pos
-        lit_tbl, lit_mlen = lit
-        lit_mask = (1 << lit_mlen) - 1
-        if dist is not None:
-            dist_tbl, dist_mlen = dist
-            dist_mask = (1 << dist_mlen) - 1
-        append = out.append
-        try:
-            while True:
-                while nb < lit_mlen and p < n:
-                    b |= data[p] << nb
-                    p += 1
-                    nb += 8
-                entry = lit_tbl[b & lit_mask]
-                ln = entry & 15
-                if ln == 0 or ln > nb:
-                    raise _Corrupt
-                b >>= ln
-                nb -= ln
-                sym = entry >> 4
-                if sym < 256:
-                    append(sym)
-                    continue
-                if sym == 256:
-                    return
-                if sym > 285:
-                    raise _Corrupt
-                li = sym - 257
-                eb = _LEN_EXTRA[li]
-                if eb:
-                    while nb < eb and p < n:
-                        b |= data[p] << nb
-                        p += 1
-                        nb += 8
-                    if nb < eb:
-                        raise _Corrupt
-                    length = _LEN_BASE[li] + (b & ((1 << eb) - 1))
-                    b >>= eb
-                    nb -= eb
-                else:
-                    length = _LEN_BASE[li]
-                if dist is None:
-                    raise _Corrupt  # literal-only block emitted a match
-                while nb < dist_mlen and p < n:
-                    b |= data[p] << nb
-                    p += 1
-                    nb += 8
-                entry = dist_tbl[b & dist_mask]
-                ln = entry & 15
-                if ln == 0 or ln > nb:
-                    raise _Corrupt
-                b >>= ln
-                nb -= ln
-                dc = entry >> 4
-                if dc > 29:
-                    raise _Corrupt
-                eb = _DIST_EXTRA[dc]
-                if eb:
-                    while nb < eb and p < n:
-                        b |= data[p] << nb
-                        p += 1
-                        nb += 8
-                    if nb < eb:
-                        raise _Corrupt
-                    dist_ = _DIST_BASE[dc] + (b & ((1 << eb) - 1))
-                    b >>= eb
-                    nb -= eb
-                else:
-                    dist_ = _DIST_BASE[dc]
-                # RFC 1951 §2: the LZ77 window is 32 KB. Distances
-                # beyond it are in fact unrepresentable — code 29 + 13
-                # extra bits tops out at exactly 32768 and the
-                # reserved codes 30/31 are rejected above — so this
-                # cap is defense-in-depth documentation of the window
-                # bound (r10 advice: stay as strict as the library),
-                # not a reachable branch.
-                if dist_ > len(out) or dist_ > 32768:
-                    raise _Corrupt
-                start = len(out) - dist_
-                if dist_ >= length:
-                    out += out[start : start + length]
-                else:  # overlapping copy: byte-at-a-time semantics
-                    for i in range(length):
-                        append(out[start + i])
-        finally:
-            buf, nbits, pos = b, nb, p
-
-    def dynamic_tables():
-        """Parse a BTYPE=2 header (RFC 1951 §3.2.7) into lit/len and
-        distance decode tables ((table, max_len) pairs; None distance
-        marks a literal-only block)."""
-        hlit = getbits(5) + 257
-        hdist = getbits(5) + 1
-        hclen = getbits(4) + 4
-        cl_lengths = [0] * 19
-        for i in range(hclen):
-            cl_lengths[_CLEN_ORDER[i]] = getbits(3)
-        cl_tbl, cl_mlen = _fast_table(cl_lengths)
-        # the ~300-symbol length parse is a hot loop like
-        # huffman_block: hoist the accumulator into locals, write back
-        # on every exit path (the finally), and decode symbols by one
-        # flat-table index each
-        lengths: list[int] = []
-        nonlocal buf, nbits, pos
-        b, nb, p = buf, nbits, pos
-        cl_mask = (1 << cl_mlen) - 1
-        total = hlit + hdist
-        append = lengths.append
-        try:
-            while len(lengths) < total:
-                while nb < cl_mlen and p < n:
-                    b |= data[p] << nb
-                    p += 1
-                    nb += 8
-                entry = cl_tbl[b & cl_mask]
-                ln = entry & 15
-                if ln == 0 or ln > nb:
-                    raise _Corrupt
-                b >>= ln
-                nb -= ln
-                sym = entry >> 4
-                if sym < 16:
-                    append(sym)
-                    continue
-                if sym == 16:
-                    if not lengths:
-                        raise _Corrupt
-                    eb, base, rep_val = 2, 3, lengths[-1]
-                elif sym == 17:
-                    eb, base, rep_val = 3, 3, 0
-                else:  # 18
-                    eb, base, rep_val = 7, 11, 0
-                while nb < eb and p < n:
-                    b |= data[p] << nb
-                    p += 1
-                    nb += 8
-                if nb < eb:
-                    raise _Corrupt
-                lengths.extend([rep_val] * (base + (b & ((1 << eb) - 1))))
-                b >>= eb
-                nb -= eb
-        finally:
-            buf, nbits, pos = b, nb, p
-        if len(lengths) != hlit + hdist:
-            raise _Corrupt  # run-length spill across the boundary
-        lit = _fast_table(lengths[:hlit])
-        dist_lengths = lengths[hlit:]
-        if max(dist_lengths, default=0) == 0:
-            # literal-only block: any distance code is corruption
-            return lit, None
-        return lit, _fast_table(dist_lengths)
-
-    try:
-        while True:
-            final = getbits(1)
-            btype = getbits(2)
-            if btype == 0:
-                # stored: discard bits to the byte boundary, then
-                # LEN/NLEN + raw copy (whole bytes may sit in buf)
-                drop = nbits & 7
-                buf >>= drop
-                nbits -= drop
-                ln = getbits(16)
-                nln = getbits(16)
-                if ln != (nln ^ 0xFFFF):
-                    raise _Corrupt
-                take = min(nbits >> 3, ln)
-                for _ in range(take):
-                    out.append(buf & 0xFF)
-                    buf >>= 8
-                    nbits -= 8
-                rest = ln - take
-                if pos + rest > len(data):
-                    raise _Corrupt
-                out += data[pos : pos + rest]
-                pos += rest
-            elif btype == 1:
-                huffman_block(_FIXED_LIT_FAST, _FIXED_DIST_FAST)
-            elif btype == 2:
-                lit, dist = dynamic_tables()
-                huffman_block(lit, dist)
-            else:
-                raise _Corrupt
-            if final:
-                break
-    except _Corrupt:
-        return None
-    # whole bytes preloaded by a stored block belong to whatever
-    # framing follows the deflate stream — hand them back
-    return bytes(out), pos - (nbits >> 3)
-
-
 def _inflate(stream: bytes):
-    """Pure-stdlib zlib-stream inflate over ``_inflate_raw``: RFC 1950
-    framing (header check bits, no preset dictionary) + adler32
-    verification. Returns the uncompressed bytes, or None on any
-    framing/checksum/code corruption — there is no longer a
-    deflate-shaped input this function cannot decode, so the
-    codec-library boundary moves past inflate entirely."""
+    """zlib-stream (RFC 1950) inflate via the stdlib: header check
+    bits, every deflate block type and the adler32 trailer are the
+    library's. Returns the uncompressed bytes, or None for anything
+    the library rejects — a preset dictionary included — for a
+    truncated stream, and for any byte after the trailer."""
     import zlib
 
-    if len(stream) < 6 or (stream[0] & 0x0F) != 8 or (stream[1] & 0x20):
-        return None  # not deflate, or preset dictionary (unsupported)
-    if ((stream[0] << 8) | stream[1]) % 31 != 0:
-        return None  # zlib header check bits
-    res = _inflate_raw(stream[: len(stream) - 4], 2)
-    if res is None:
+    d = zlib.decompressobj(15)
+    try:
+        out = d.decompress(stream)
+    except zlib.error:
         return None
-    out, end = res
-    # RFC 1950: the adler32 trailer follows the final block directly
-    # (after bit padding to the byte boundary) — any whole unread byte
-    # between them is garbage a library inflater would reject too
-    # (r10 advice). Huffman blocks leave < 8 bits in the accumulator;
-    # only stored blocks can leave whole preloaded bytes in it.
-    if end != len(stream) - 4:
-        return None
-    if struct.unpack(">I", stream[-4:])[0] != (zlib.adler32(out) & 0xFFFFFFFF):
+    if not d.eof or d.unused_data:
         return None
     return out
 
 
 def decode_png_pixels(payload: bytes):
-    """REAL PNG decoder, complete for deflate: walks the chunk list
-    verifying every CRC, concatenates IDAT data, inflates the zlib
-    stream (``_inflate`` — stored, fixed- AND dynamic-Huffman blocks,
-    all in-engine), and reconstructs all five scanline filters
+    """REAL PNG decoder: walks the chunk list verifying every CRC,
+    concatenates IDAT data, inflates the zlib stream (``_inflate``,
+    stdlib ``zlib``), and reconstructs all five scanline filters
     (None/Sub/Up/Average/Paeth) into a ``numpy.uint8``
     (height, width, 3) RGB raster. Scope: 8-bit color type 2,
     non-interlaced. Returns None for anything corrupt or out-of-scope
@@ -1612,10 +1182,10 @@ def decode_png_pixels(payload: bytes):
     pos, ihdr, idat = 8, None, bytearray()
     while pos + 12 <= len(b):
         (ln,) = struct.unpack(">I", b[pos : pos + 4])
+        if pos + 12 + ln > len(b):
+            return None  # chunk data or CRC cut short
         ctype = b[pos + 4 : pos + 8]
         data = b[pos + 8 : pos + 8 + ln]
-        if len(data) != ln:
-            return None
         (crc,) = struct.unpack(">I", b[pos + 8 + ln : pos + 12 + ln])
         if crc != (zlib.crc32(ctype + data) & 0xFFFFFFFF):
             return None

@@ -1,15 +1,15 @@
 """WARC web-archive ingestion (north-star E36): the container format
-of Common Crawl — THE canonical 100 TB training-data source — decoded
-in-engine.
+of Common Crawl — THE canonical 100 TB training-data source — parsed
+in-engine on top of the stdlib ``zlib``.
 
 A Common Crawl ``.warc.gz`` is a concatenation of GZIP MEMBERS, one
 member per WARC record (that per-record framing is what makes the
 archives splittable and randomly accessible). ``gunzip_members`` walks
-the member chain: full RFC 1952 header parse (FEXTRA / FNAME /
-FCOMMENT / FHCRC, reserved-flag rejection), raw-deflate decode through
-the SAME ``_inflate_raw`` core the PNG path uses
-(functions/multimodal.py — deflate is decoded in exactly one place),
-then CRC32 + ISIZE trailer verification per member. ``parse_warc_record``
+the member chain with the stdlib ``zlib`` in gzip mode, which parses
+each RFC 1952 header (FEXTRA / FNAME / FCOMMENT / FHCRC, reserved-flag
+rejection), inflates the deflate body and verifies the CRC32 + ISIZE
+trailer — the same library the PNG path inflates with
+(functions/multimodal.py). ``parse_warc_record``
 walks the ISO 28500 record grammar: ``WARC/1.0`` version line, CRLF
 header fields, mandatory Content-Length, the exact-length block, and
 the two-CRLF record terminator.
@@ -20,7 +20,7 @@ bytes, rotating the member compression between stored-block streams,
 the library encoder and our own ``_deflate_dynamic`` (so the gate
 corpus exercises all three BTYPEs inside gzip framing, like the PNG
 corpus does inside zlib framing), and rotating the optional header
-fields (FNAME / FHCRC / FEXTRA) so the header walk is exercised too.
+fields (FNAME / FHCRC / FEXTRA) so header parsing is exercised too.
 
 Everything integer-exact end to end, so the DuckDB oracle re-derives
 the record/byte checksums straight from the id formula
@@ -44,9 +44,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from .multimodal import _deflate_dynamic, _inflate_raw
+from .multimodal import _deflate_dynamic
 
-_FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
+_FHCRC, _FEXTRA, _FNAME = 2, 4, 8
+_FEED_BYTES = 1 << 14  # gunzip_members input slice
 
 
 # ---------------------------------------------------------------------------
@@ -90,7 +91,7 @@ def gzip_member(body: bytes, mtime: int, mode: int, fname: bytes | None = None,
     deflate encoder: 0 -> library stored blocks (level 0), 1 -> library
     default, 2 -> our own dynamic-Huffman block (``_deflate_dynamic``
     with the zlib framing stripped). Optional FNAME / FEXTRA / FHCRC
-    header fields exercise the decoder's header walk."""
+    header fields exercise the decoder's header parsing."""
     if mode == 2:
         raw = _deflate_dynamic(body)[2:-4]  # strip zlib header + adler32
     else:
@@ -119,60 +120,34 @@ def gzip_member(body: bytes, mtime: int, mode: int, fname: bytes | None = None,
 
 
 def gunzip_members(data: bytes):
-    """Split a concatenation of gzip members and inflate each one:
-    full RFC 1952 header walk (CM must be 8, reserved FLG bits
-    rejected, FEXTRA/FNAME/FCOMMENT skipped by their own grammar,
-    FHCRC verified against the header bytes), raw deflate via
-    ``_inflate_raw``, CRC32 + ISIZE trailer verified per member.
-    Returns the list of member bodies, or None for anything corrupt —
-    including trailing garbage after the last member."""
+    """Split a concatenation of gzip members and inflate each one with
+    the stdlib's gzip mode, which checks the whole RFC 1952 member:
+    magic, CM = 8, reserved FLG bits, the optional FEXTRA / FNAME /
+    FCOMMENT fields, FHCRC, and the CRC32 + ISIZE trailer. Returns the
+    list of member bodies, or None for anything corrupt — a truncated
+    member, or trailing bytes that do not form a whole member.
+
+    Input is fed in bounded slices: at a member's end the library
+    copies all input it was given past that end into ``unused_data``,
+    so handing it the whole rest of the archive would copy the archive
+    once per member (quadratic in the member count)."""
     members: list[bytes] = []
-    pos = 0
-    n = len(data)
-    try:
-        while pos < n:
-            start = pos
-            if data[pos : pos + 3] != b"\x1f\x8b\x08":
-                return None
-            flg = data[pos + 3]
-            if flg & 0xE0:
-                return None  # reserved bits (RFC 1952 §2.3.1)
-            pos += 10  # magic, CM, FLG, MTIME, XFL, OS
-            if flg & _FEXTRA:
-                (xlen,) = struct.unpack("<H", data[pos : pos + 2])
-                pos += 2 + xlen
-            if flg & _FNAME:
-                end = data.index(b"\x00", pos)
-                pos = end + 1
-            if flg & _FCOMMENT:
-                end = data.index(b"\x00", pos)
-                pos = end + 1
-            if flg & _FHCRC:
-                (want,) = struct.unpack("<H", data[pos : pos + 2])
-                if zlib.crc32(data[start:pos]) & 0xFFFF != want:
-                    return None
-                pos += 2
-            if pos > n:
-                return None
-            res = _inflate_raw(data, pos)
-            if res is None:
-                return None
-            body, pos = res
-            trailer = data[pos : pos + 8]
-            if len(trailer) != 8:
-                return None
-            crc, isize = struct.unpack("<II", trailer)
-            if crc != zlib.crc32(body) & 0xFFFFFFFF:
-                return None
-            if isize != len(body) & 0xFFFFFFFF:
-                return None
-            pos += 8
-            members.append(body)
-    except (ValueError, struct.error, IndexError):
-        return None
-    if not members:
-        return None
-    return members
+    view, pos = memoryview(data), 0
+    while pos < len(view):
+        d = zlib.decompressobj(31)
+        parts = []
+        try:
+            while not d.eof and pos < len(view):
+                chunk = view[pos : pos + _FEED_BYTES]
+                pos += len(chunk)
+                parts.append(d.decompress(chunk))
+        except zlib.error:
+            return None
+        if not d.eof:
+            return None
+        pos -= len(d.unused_data)
+        members.append(b"".join(parts))
+    return members or None
 
 
 # ---------------------------------------------------------------------------

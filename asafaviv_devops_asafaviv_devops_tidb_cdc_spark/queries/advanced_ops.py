@@ -18,11 +18,10 @@ They extend the mandated north-star surface (SURVEY §2.11/§2.12).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import kmv as KMV, similarity
+from ..functions.dedup import _scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 from ._money import CENTS_SQL, cents
@@ -1881,29 +1880,6 @@ def _doubling_partitions(spark: SparkSession, approx_rows: int) -> int:
     return max(2, min(cur, approx_rows // 50_000 + 2))
 
 
-@contextmanager
-def _scoped_shuffle(spark: SparkSession, n: int):
-    """Same contract as functions/dedup._scoped_shuffle_partitions
-    (r16): a domain sized DOWN from the session setting means the data
-    is measured-small, so AQE is disabled inside the scope as well —
-    adaptive replanning of every tiny stage is pure driver overhead on
-    the log-round doubling loops (measured 1.45x on the web CC loop;
-    the doubling loops share the same per-round shape). At real
-    cardinality the formula hits the session cap and AQE stays on."""
-    p_key = "spark.sql.shuffle.partitions"
-    a_key = "spark.sql.adaptive.enabled"
-    old_p = spark.conf.get(p_key)
-    old_a = spark.conf.get(a_key)
-    spark.conf.set(p_key, str(n))
-    if n < int(old_p):
-        spark.conf.set(a_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(p_key, old_p)
-        spark.conf.set(a_key, old_a)
-
-
 _HIERARCHY_DEPTH_ORACLE = f"""
 WITH RECURSIVE chain(node, cur, depth) AS (
   SELECT CAST(c_custkey AS BIGINT), CAST(c_custkey AS BIGINT), CAST(0 AS BIGINT)
@@ -1978,7 +1954,9 @@ def q_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _anc0.cast("long").alias("anc"),
         _d0.cast("long").alias("d"),
     )
-    with _scoped_shuffle(spark, _doubling_partitions(spark, n_nodes)):
+    with _scoped_shuffle_partitions(
+        spark, _doubling_partitions(spark, n_nodes)
+    ):
         f = reliable_checkpoint(f, None)
         for _ in range(64):
             if f.filter(F.col("anc") != 0).limit(1).count() == 0:
@@ -2068,7 +2046,7 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for leg in legs[1:]:
         pairs = pairs.unionByName(leg)
     pairs = pairs.distinct()
-    with _scoped_shuffle(
+    with _scoped_shuffle_partitions(
         spark, _doubling_partitions(spark, nodes.count() * 8)
     ):  # closure frame is ~n x avg_depth rows, not n
         pairs = reliable_checkpoint(pairs, None)

@@ -1507,10 +1507,10 @@ def q_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes px_sum AND the order-sensitive px_wsum from
     the id formula by brute force — px_wsum only matches if the
     decoder reconstructed the exact raster byte order, so this proves
-    genuine pixel decoding, not header echo. Stored-deflate PNG
-    decodes in-engine too (q_png_pixel_stats); Huffman-compressed
-    PNG/JPEG remains the declared codec-library boundary (reference
-    has no multimodal analogue; north-star E5)."""
+    genuine pixel decoding, not header echo. PNG (deflate via the
+    stdlib zlib) and JPEG decode too (q_png_pixel_stats,
+    q_jpeg_*_stats); MP3/video remain the declared codec-library
+    boundary (reference has no multimodal analogue; north-star E5)."""
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("media_id"))
     payloads = multimodal.synth_bmp_payloads(ids)
     return multimodal.bmp_pixel_stats(payloads)
@@ -1595,8 +1595,7 @@ FROM s
 """,
 )
 def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E5f — REAL PNG decode, COMPLETE for deflate (r8 item 7 -> r9
-    item 7 -> r10: the codec boundary moved past inflate entirely):
+    """E5f — REAL PNG decode, every deflate block type:
     complete valid PNGs — real chunk CRCs, two IDAT chunks with a
     decoy tEXt between them, every scanline filtered with (id+row)%3
     (None/Sub/Up) — are synthesized from the id formula; the zlib
@@ -1605,17 +1604,15 @@ def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back-references), and default-strategy level-9 streams (free to
     emit BTYPE=2 dynamic-Huffman with transmitted code-length
     tables). A separate Arrow stage re-walks the chunks (verifying
-    CRCs), concatenates IDATs, inflates EVERY deflate block type
-    in-engine (RFC 1951: fixed tables, canonical table construction
-    from the 16/17/18 meta-coded lengths, MSB-first codes,
-    overlap-safe window copies, adler32 verified), and reconstructs
-    the filters into the raster (functions/multimodal.py::_inflate /
-    decode_png_pixels / png_pixel_stats). The oracle brute-forces the
+    CRCs), concatenates IDATs, inflates the zlib stream with the
+    stdlib (adler32 verified), and reconstructs the filters into the
+    raster (functions/multimodal.py::_inflate / decode_png_pixels /
+    png_pixel_stats). The oracle brute-forces the
     position-weighted checksum from the formula — px_wsum only
-    matches if framing, Huffman decode, AND filter inversion are all
-    byte-exact. Remaining codec-library boundary (r11): arithmetic/
-    hierarchical/12-bit JPEG and MP3/video codecs only — baseline AND
-    progressive JPEG decode in-engine (q_jpeg_*_stats)."""
+    matches if framing, inflate, AND filter inversion are all
+    byte-exact. Codec boundary: deflate is the stdlib zlib's; JPEG —
+    baseline AND progressive — decodes in-engine (q_jpeg_*_stats);
+    arithmetic/hierarchical JPEG and MP3/video are out of scope."""
     ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("media_id"))
     payloads = multimodal.synth_png_payloads(ids)
     return multimodal.png_pixel_stats(payloads)
@@ -1988,12 +1985,11 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (profile, refers-to, a repeated WARC-Concurrent-To exercising the
     one ISO 28500 repeatable field in the gate corpus) — formula
     bodies, member
-    compression rotating stored / library / in-engine dynamic-Huffman
+    compression rotating stored / library / our own dynamic-Huffman
     deflate, optional FNAME/FHCRC/FEXTRA gzip header fields). A
-    separate Arrow stage walks the member chain ENTIRELY IN-ENGINE —
-    RFC 1952 header grammar, raw deflate through the same _inflate_raw
-    core the PNG path uses, per-member CRC32 + ISIZE verification —
-    then parses each member's ISO 28500 record (version line, CRLF
+    separate Arrow stage walks the member chain with the stdlib zlib
+    in gzip mode — RFC 1952 header, deflate, per-member CRC32 + ISIZE
+    verification — then parses each member's ISO 28500 record (version line, CRLF
     headers, mandatory Content-Length, exact-length block, two-CRLF
     terminator) and emits the per-archive checksums; body_wsum weights
     byte j of record r by (r*512 + j + 1), so member order AND byte
@@ -2104,7 +2100,7 @@ def q_warc_html_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison, comments wrapping markup, entity-encoded tokens,
     a ``>`` inside a quoted attribute value, uppercase tags. A
     separate Arrow stage (warc_html_text_stats) walks the archive
-    ENTIRELY IN-ENGINE — gzip + WARC via the shared E36 grammar, then
+    in-engine — gzip (stdlib zlib) + WARC via the shared E36 path, then
     HTTP parse, then a linear quote-aware tag scanner that drops
     comment/script/style wholesale, strips tags, decodes character
     references AFTER stripping (the double-decode bug is a pinned

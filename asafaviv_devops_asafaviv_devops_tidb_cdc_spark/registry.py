@@ -45,70 +45,70 @@ _QUERY_MODULES = [
 # Queries not listed here keep registration order after the listed ones;
 # all of them still run in bench and pytest regardless.
 _CHECK_FIRST = [
-    # Round-16 window (50 slots), composed mechanically per
+    # Round-17 window (50 slots), composed mechanically per
     # tests/test_freshness.py (scripts/freshness.py is the source of
-    # truth; this list just pins its output). At round start the
-    # changed-path and never-checked sets are both EMPTY (the r15
-    # driver verdict re-proved all 50 r15-window entries, including
-    # every r15-touched path), so all 50 slots are rotation slots =
-    # the 50 oldest verdicts: the 11 r9 window-capacity leftovers the
-    # r15 recomposition documented, then 39 of the 40-query r10
-    # cohort in prior iteration order (q_decay_engagement ties the
-    # r10 round inside — window capacity, the invariant's only
-    # allowed reason to stay out — and leads the r17 rotation).
-    # NOTE: if an optimization this round changes a query's reference
-    # closure, that query must displace rotation slots here (the
-    # freshness tests enforce it) — recompose before round close.
-    "q_embedding_stats",
-    "q_ann_batch",
-    "q_bigram_counts",
-    "q_doc_len_histogram",
-    "q_null_profile",
-    "q_key_skew",
-    "q_schema_drift",
-    "q_pruned_scan",
-    "q_vec_quantize",
-    "q_delta_agg",
-    "q_kmv_distinct",
-    "q_rate_5m",
-    "q_error_ratio",
-    "q_quantiles",
-    "q_hll_error_bound",
-    "q_alert_liveness",
-    "q_prom_quantile",
-    "q_rate_per_op",
-    "q_increase_1h",
-    "q_date_histogram",
-    "q_topk_recent",
-    "q_approx_quantile_bound",
-    "q_funnel_stages",
-    "q_time_weighted_avg",
-    "q_anomaly_mad",
-    "q_metrics_exposition",
-    "q_order_priority",
-    "q_late_shipments",
-    "q_blocking_suppliers",
-    "q_cohort_retention",
-    "q_sample_estimate_bound",
-    "q_minhash_neardup",
-    "q_embedding_neardup",
-    "q_frame_sample",
-    "q_multimodal_features",
-    "q_cosine_pairs",
-    "q_ivf_topk_trained",
-    "q_ann_batch_ivf",
-    "q_neardup_recall",
-    "q_doc_chunks",
-    "q_vocab_coverage",
-    "q_embedding_gram",
-    "q_semantic_dedup",
-    "q_bpe_merges",
-    "q_bpe_tokenize",
-    "q_alert_rules_eval",
-    "q_vocab_growth",
-    "q_zorder_layout",
-    "q_embedding_norm_hist",
-    "q_bloom_decontaminate",
+    # truth; this list just pins its output). 22 changed-path slots:
+    # the round-16 shuffle-domain and staged-corpus rewrites (CC/graph
+    # consumers, doubling loops, web corpus), the stdlib-zlib inflate
+    # swap (PNG, WARC and everything reading WARC members), and the
+    # shared scoped-shuffle helper. The 28 rotation slots take the
+    # oldest verdicts in prior iteration order: the one r10 leftover,
+    # then 27 of the 33-query r11 cohort (the other 6 tie the r11
+    # round inside — window capacity — and lead the next rotation).
+    # NOTE: if a later change touches a query's reference closure,
+    # that query must displace rotation slots here (the freshness
+    # tests enforce it) — recompose before round close.
+    "q_neardup_clusters",
+    "q_cluster_sizes",
+    "q_pipeline_e2e",
+    "q_bmp_pixel_stats",
+    "q_png_pixel_stats",
+    "q_warc_extract",
+    "q_warc_html_text",
+    "q_warc_links",
+    "q_url_dedup",
+    "q_main_content",
+    "q_host_graph",
+    "q_cluster_leakage",
+    "q_canonical_pick",
+    "q_dedup_yield_by_source",
+    "q_takedown_propagation",
+    "q_link_rank",
+    "q_label_prop",
+    "q_hierarchy_depth",
+    "q_subtree_rollup",
+    "q_crawl_frontier",
+    "q_stream_host_graph",
+    "q_web_corpus_e2e",
+    # rotation slots, oldest verdict first
+    "q_udaf_median",
+    "q_old_image",
+    "q_typed_cast",
+    "q_filter_cmp",
+    "q_arith_update",
+    "q_cdc_replay",
+    "q_union_variants",
+    "q_except_deleted",
+    "q_snapshot_diff",
+    "q_ops_pivot",
+    "q_session_windows",
+    "q_pricing_summary",
+    "q_dedup_exact",
+    "q_simhash",
+    "q_simhash_neardup",
+    "q_ngram_jaccard",
+    "q_cosine_topk",
+    "q_ivf_topk",
+    "q_text_stats",
+    "q_token_count",
+    "q_lang_id",
+    "q_quality_score",
+    "q_repetition_ratio",
+    "q_stream_resume",
+    "q_dq_checks",
+    "q_event_drift",
+    "q_events_format_parity",
+    "q_snapshot_roundtrip",
 ]
 
 

@@ -210,6 +210,32 @@ def test_neardup_clusters_uses_reliable_checkpoint(spark, tmp_path):
     assert os.path.isdir(ckpt) and any(os.scandir(ckpt)), "checkpoint dir unused"
 
 
+def test_scoped_shuffle_restores_conf_when_body_raises(spark):
+    """Session conf is restored on every exit path: a scope sized DOWN
+    from the session setting flips both shuffle.partitions and
+    adaptive.enabled, and an exception inside it must put both back."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions.dedup import (
+        _scoped_shuffle_partitions,
+    )
+
+    p_key = "spark.sql.shuffle.partitions"
+    a_key = "spark.sql.adaptive.enabled"
+    old_p, old_a = spark.conf.get(p_key), spark.conf.get(a_key)
+    spark.conf.set(p_key, "8")
+    spark.conf.set(a_key, "true")
+    try:
+        with pytest.raises(RuntimeError, match="scope body"):
+            with _scoped_shuffle_partitions(spark, 2):
+                assert spark.conf.get(p_key) == "2"
+                assert spark.conf.get(a_key) == "false"
+                raise RuntimeError("scope body")
+        assert spark.conf.get(p_key) == "8"
+        assert spark.conf.get(a_key) == "true"
+    finally:
+        spark.conf.set(p_key, old_p)
+        spark.conf.set(a_key, old_a)
+
+
 def test_hll_distinct_within_tolerance(spark):
     rows = registry_queries()["q_hll_distinct"](spark, SF_SMOKE).collect()
     assert rows

@@ -630,14 +630,14 @@ def test_png_decoder_boundary_and_corruption_contract():
             + multimodal._png_chunk(b"IEND", b"")
         )
 
-    # fixed-Huffman (Z_FIXED) streams decode IN-ENGINE (r10)
+    # fixed-Huffman (Z_FIXED) streams decode
     co = zlib.compressobj(6, zlib.DEFLATED, 15, 9, zlib.Z_FIXED)
     fixed = co.compress(body) + co.flush()
     got = multimodal.decode_png_pixels(wrap(fixed))
     assert got is not None and got.shape == (h, w, 3) and not got.any()
 
-    # dynamic-Huffman (BTYPE=2) decodes too — _inflate is a complete
-    # RFC 1951 inflate; prove the stream really is dynamic first
+    # dynamic-Huffman (BTYPE=2) decodes too; prove the stream really
+    # is dynamic first
     rng = np.random.default_rng(3)
     weights = np.arange(1, 65, dtype=np.float64)
     noise = rng.choice(
@@ -647,8 +647,8 @@ def test_png_decoder_boundary_and_corruption_contract():
     dyn_body = b"".join(b"\x00" + raster[r].tobytes() for r in range(h))
     dyn = zlib.compress(dyn_body, 9)
     if (dyn[2] >> 1) & 3 != 2:
-        # tiny inputs may not go dynamic; force it with a bigger body
-        # in the raw _inflate check below instead
+        # tiny inputs may not go dynamic; the bigger body in the
+        # direct _inflate check below covers it instead
         pass
     else:
         px = multimodal.decode_png_pixels(wrap(dyn))
@@ -675,7 +675,7 @@ def test_png_decoder_boundary_and_corruption_contract():
     assert multimodal.decode_png_pixels(b"") is None
     assert multimodal.decode_png_pixels(good[:40]) is None
     # bit-flip INSIDE a fixed-Huffman stream (chunk CRC recomputed, so
-    # the corruption reaches the inflater): adler/framing fails -> None
+    # the corruption reaches zlib): adler/framing fails -> None
     flipped = bytearray(fixed)
     flipped[len(flipped) // 2] ^= 0xFF
     assert multimodal.decode_png_pixels(wrap(bytes(flipped))) is None
@@ -684,10 +684,9 @@ def test_png_decoder_boundary_and_corruption_contract():
 def test_dynamic_deflate_encoder_is_zlib_compliant():
     """Every stream `_deflate_dynamic` emits (the synth's variant-2
     framing) must be accepted by the LIBRARY inflate byte-for-byte,
-    really carry a BTYPE=2 first block, and round-trip through the
-    in-engine `_inflate` — so the gate corpus provably exercises
-    dynamic-Huffman decode against an independently-validated
-    encoding."""
+    really carry a BTYPE=2 first block, and round-trip through
+    `_inflate` (the PNG decoder's zlib wrapper) — so the gate corpus
+    provably exercises dynamic-Huffman decode."""
     import random
     import zlib
 
@@ -713,4 +712,15 @@ def test_dynamic_deflate_encoder_is_zlib_compliant():
         s = multimodal._deflate_dynamic(body)
         assert zlib.decompress(s) == body  # RFC compliance, library-checked
         assert ((s[2] >> 1) & 3) == 2  # genuinely dynamic
-        assert multimodal._inflate(s) == body  # in-engine decode
+        assert multimodal._inflate(s) == body  # the PNG decode path
+
+
+def test_png_decoder_rejects_chunk_cut_inside_its_crc():
+    """A payload that ends inside a chunk's CRC field is corrupt: None,
+    not a struct.error from reading the short CRC."""
+    import struct as _s
+
+    good = _full_png(9)
+    (ln,) = _s.unpack(">I", good[33:37])  # first IDAT, after 8 + 25 bytes
+    assert good[37:41] == b"IDAT"
+    assert multimodal.decode_png_pixels(good[: 33 + 12 + ln - 1]) is None

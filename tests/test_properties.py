@@ -1050,6 +1050,16 @@ def test_inflate_is_as_strict_as_the_library():
     with pytest.raises(zlib.error):
         zlib.decompress(padded)
     assert multimodal._inflate(padded) is None
+    # (d) preset dictionary (FDICT): the PNG/zlib contract carries no
+    # dictionary, so such a stream is undecodable, never guessed
+    co = zlib.compressobj(6, zlib.DEFLATED, 15, zdict=b"strictness probe")
+    with_dict = co.compress(b"strictness probe" * 8) + co.flush()
+    assert with_dict[1] & 0x20
+    with pytest.raises(zlib.error):
+        zlib.decompress(with_dict)
+    assert multimodal._inflate(with_dict) is None
+    # (e) one byte after the adler32 trailer: the stream must end there
+    assert multimodal._inflate(good + b"\x00") is None
 
 
 @given(
@@ -1068,13 +1078,13 @@ def test_inflate_is_as_strict_as_the_library():
 def test_png_compressed_roundtrip_any_geometry_and_framing(
     w, h, seed, filters, level, mem_level, n_idat, strategy
 ):
-    """The r10 complete inflate must invert ANY zlib stream the library
+    """The PNG decode path must invert ANY zlib stream the library
     encoder can emit — Z_FIXED (fixed-Huffman blocks), default and
     Z_RLE strategies (dynamic-Huffman and stored blocks wherever the
     encoder prefers them), every compression level and memLevel
     (different block splits and match choices), every filter, every
-    IDAT split. The encoder is the library; the decoder under test is
-    the pure in-engine one."""
+    IDAT split. The decoder under test is the whole PNG path: chunk
+    walk, IDAT concatenation, inflate and filter reconstruction."""
     import struct as _s
     import zlib
 

@@ -137,6 +137,21 @@ def test_rejects_corrupt_members_and_records():
     bad = bytearray(m)
     bad[4] ^= 1
     assert W.gunzip_members(bytes(bad)) is None
+    # members longer than one input slice, and a member starting
+    # inside a slice, still split exactly
+    body = bytes(range(256)) * 300
+    m = W.gzip_member(body, 0, 0)
+    assert W.gunzip_members(m) == [body]
+    tail = W.gunzip_members(one)
+    assert W.gunzip_members(m + m + one) == [body, body] + tail
+    # deflate body cut before its final block: a two-block stored
+    # member keeps only its first (non-final) block, with and without
+    # the original trailer behind it
+    assert not m[10] & 1  # first block is not BFINAL
+    (first_len,) = struct.unpack("<H", m[11:13])
+    cut = m[: 10 + 5 + first_len]
+    assert W.gunzip_members(cut) is None
+    assert W.gunzip_members(cut + m[-8:]) is None
 
 
 def test_rejects_malformed_warc_grammar():
