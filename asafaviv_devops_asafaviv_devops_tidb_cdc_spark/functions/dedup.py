@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from .text import shingles_from_tokens
 
 N_HASHES = 4  # single-row bands (legacy per-salt signature helper)
@@ -441,38 +441,6 @@ def reliable_checkpoint(df: DataFrame, checkpoint_dir: str | None = None) -> Dat
         df.unpersist()
 
 
-@contextmanager
-def _scoped_shuffle_partitions(spark, n: int):
-    """Run the scope under an ``n``-partition shuffle domain. When the
-    domain was sized DOWN from the session setting — i.e. the caller
-    measured the data and found it small — adaptive execution is
-    disabled inside the scope too (r16): AQE re-plans and re-optimizes
-    every query stage, which on a KB-scale iterative loop is pure
-    driver overhead with nothing to win (measured 1.45x on the web CC
-    loop at sf0.1: 4.53 -> 3.12 s median of 3 interleaved reps,
-    fixpoint identical). At real cardinality the formula hits the
-    session cap (n == session setting) and AQE stays on, so skew/
-    coalesce handling at scale is untouched. NOTE: mutates shared
-    session conf — safe only while queries execute serially (the
-    driver/bench contract); revisit before any concurrent-query
-    feature."""
-    p_key = "spark.sql.shuffle.partitions"
-    a_key = "spark.sql.adaptive.enabled"
-    # read and parse both old values before the first set, so a
-    # failure here leaves the session conf untouched
-    old_p = spark.conf.get(p_key)
-    old_a = spark.conf.get(a_key)
-    sized_down = n < int(old_p)
-    try:
-        spark.conf.set(p_key, str(n))
-        if sized_down:
-            spark.conf.set(a_key, "false")
-        yield
-    finally:
-        spark.conf.set(p_key, old_p)
-        spark.conf.set(a_key, old_a)
-
-
 def _cc_partitions(spark, n_edges: int) -> int:
     """Shuffle domain for the label-propagation rounds: the label/edge
     frames are NARROW (two longs), so at small graph sizes the
@@ -529,7 +497,7 @@ def neardup_clusters(
     )
     spark = edges.sparkSession
     n_edges = edges.count()  # cheap: reads the checkpoint files
-    with _scoped_shuffle_partitions(spark, _cc_partitions(spark, n_edges)):
+    with scoped_shuffle_partitions(spark, _cc_partitions(spark, n_edges)):
         labels = reliable_checkpoint(
             edges.groupBy(F.col("src").alias("node")).agg(
                 F.least(F.first("src"), F.min("dst")).alias("label")

@@ -23,11 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .dedup import (
-    _cc_partitions,
-    _scoped_shuffle_partitions,
-    reliable_checkpoint,
-)
+from ..plans.scale import scoped_shuffle_partitions
+from .dedup import _cc_partitions, reliable_checkpoint
 
 
 def scoped_graph_result(spark, n_rows: int, build) -> DataFrame:
@@ -49,7 +46,7 @@ def scoped_graph_result(spark, n_rows: int, build) -> DataFrame:
     2, never above the session setting) — at real host cardinality
     the session cap governs and the scope is a no-op, so this scales
     by configuration, not rewrite."""
-    with _scoped_shuffle_partitions(spark, _cc_partitions(spark, n_rows)):
+    with scoped_shuffle_partitions(spark, _cc_partitions(spark, n_rows)):
         return reliable_checkpoint(build(), None)
 
 

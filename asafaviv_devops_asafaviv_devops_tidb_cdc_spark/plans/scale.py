@@ -21,9 +21,21 @@ Sizing rules implemented below:
            merge with AQE skew splitting.
 - stream:  `maxOffsetsPerTrigger` sized so one micro-batch's rows fit
            the same 200 MiB/partition envelope across Kafka partitions.
+           A consumer's shuffle domain is sized from that micro-batch
+           bound (`stream_partitions`): ~200 MiB per partition, capped
+           at cores, with NO floor at cores. Each partition of a
+           stateful stream is one state store paying a load and a
+           commit on every trigger, and each one is a task; a KB batch
+           gets one partition. The first run's count is stored in the
+           checkpoint's offset log and holds for every later trigger.
+
+Every "set ``shuffle.partitions``, restore later" scope goes through
+`scoped_shuffle_partitions`.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 MIB = 1 << 20
 GIB = 1 << 30
@@ -39,6 +51,46 @@ def shuffle_partitions(shuffled_bytes: int, total_cores: int) -> int:
     """Upper-bound shuffle partition count for a given shuffle volume."""
     by_size = shuffled_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1
     return int(min(max(by_size, 2 * total_cores), MAX_SHUFFLE_PARTITIONS))
+
+
+def stream_partitions(batch_bytes: int, cores: int) -> int:
+    """Shuffle domain of a stream whose micro-batch holds at most
+    ``batch_bytes``. Composes with ``max_offsets_per_trigger``: a batch
+    of ``cores x 200 MiB`` yields ``cores`` partitions."""
+    return int(min(max(batch_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1, 1), cores))
+
+
+@contextmanager
+def scoped_shuffle_partitions(spark, n: int):
+    """Run the scope under an ``n``-partition shuffle domain. When the
+    domain was sized DOWN from the session setting — i.e. the caller
+    measured the data and found it small — adaptive execution is
+    disabled inside the scope too (r16): AQE re-plans and re-optimizes
+    every query stage, which on a KB-scale iterative loop is pure
+    driver overhead with nothing to win (measured 1.45x on the web CC
+    loop at sf0.1: 4.53 -> 3.12 s median of 3 interleaved reps,
+    fixpoint identical). At real cardinality the formula hits the
+    session cap (n == session setting) and AQE stays on, so skew/
+    coalesce handling at scale is untouched. A stream started inside
+    the scope records ``n`` in its checkpoint, which pins it from then
+    on. NOTE: mutates shared session conf — safe only while queries
+    execute serially (the driver/bench contract); revisit before any
+    concurrent-query feature."""
+    p_key = "spark.sql.shuffle.partitions"
+    a_key = "spark.sql.adaptive.enabled"
+    # read and parse both old values before the first set, so a
+    # failure here leaves the session conf untouched
+    old_p = spark.conf.get(p_key)
+    old_a = spark.conf.get(a_key)
+    sized_down = n < int(old_p)
+    try:
+        spark.conf.set(p_key, str(n))
+        if sized_down:
+            spark.conf.set(a_key, "false")
+        yield
+    finally:
+        spark.conf.set(p_key, old_p)
+        spark.conf.set(a_key, old_a)
 
 
 def recommended_conf(
@@ -127,8 +179,8 @@ def streaming_conf(state_bytes: int, total_cores: int) -> dict[str, str]:
     the foreachBatch maintainers). Shuffle partitions are sized DOWN
     to the state volume: each partition is one state store instance
     paying a per-batch commit, so thousands of near-empty stores are
-    pure fixed overhead (measured ~2x on the replay harness — see
-    streaming/ingest.py::scoped_shuffle_partitions)."""
+    pure fixed overhead (the CDC consumer's stream domain,
+    ``stream_partitions``, follows the same rule)."""
     parts = int(
         min(
             max(state_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1, total_cores),

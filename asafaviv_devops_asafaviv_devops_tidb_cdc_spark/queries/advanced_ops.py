@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import kmv as KMV, similarity
-from ..functions.dedup import _scoped_shuffle_partitions
+from ..plans.scale import scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 from ._money import CENTS_SQL, cents
@@ -1954,7 +1954,7 @@ def q_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _anc0.cast("long").alias("anc"),
         _d0.cast("long").alias("d"),
     )
-    with _scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, _doubling_partitions(spark, n_nodes)
     ):
         f = reliable_checkpoint(f, None)
@@ -2046,7 +2046,7 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for leg in legs[1:]:
         pairs = pairs.unionByName(leg)
     pairs = pairs.distinct()
-    with _scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, _doubling_partitions(spark, nodes.count() * 8)
     ):  # closure frame is ~n x avg_depth rows, not n
         pairs = reliable_checkpoint(pairs, None)

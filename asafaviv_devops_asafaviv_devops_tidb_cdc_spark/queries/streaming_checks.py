@@ -14,6 +14,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 from ..streaming import alerts, ingest, merge
@@ -89,7 +90,7 @@ def _run_stream(spark: SparkSession, sf_dir: str, tag: str, dup_mod: int | None)
     exactly-once from the checkpoint (q_stream_resume proves that
     path at the gate every round). Bump the version on any P1-P5 or
     sink-layout change."""
-    base = ingest.resumable_workdir(sf_dir, "events", f"ing_{tag}", "ingest-v1")
+    base = ingest.resumable_workdir(sf_dir, "events", f"ing_{tag}", "ingest-v2")
     src = ingest.envelope_files(spark, sf_dir, dup_mod)
     ingest.run_ingest(
         spark, src, str(base / "sink"), str(base / "ckpt"), fresh=False
@@ -161,7 +162,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"winagg_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             spark.readStream.schema(events.schema)
             .parquet(src)
@@ -181,7 +182,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 exactly-once upgrade: every 5th envelope is replayed
     (at-least-once duplicate, reference index.js:350-352 semantics);
-    watermarked dropDuplicates on (partition, offset, rownum) must make
+    watermarked dropDuplicates on (partition, offset, rownum, ts) must make
     the sink identical to single-delivery — pytest asserts it."""
     sink = _run_stream(spark, sf_dir, "dup", dup_mod=5)
     return sink.groupBy("table_name", "operation").agg(F.count("*").alias("n"))
@@ -205,7 +206,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_replay_src(spark, sf_dir)
     )
     name = f"sessions_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.groupBy(
                 F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -278,7 +279,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 6 HOURS"))
         & (F.col("click_ts") <= F.col("purchase_ts")),
     )
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             joined.select("user_id", "click_ts", "purchase_ts")
             .writeStream.format("parquet")
@@ -346,7 +347,7 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v2")
     stream_src = spark.readStream.schema(events.schema).parquet(src)
     out = alerts.sustained_alerts_stream(stream_src)
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             out.writeStream.format("parquet")
             .option("path", str(base / "sink"))
@@ -644,7 +645,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"topk_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, ingest.STREAM_SHUFFLE_PARTITIONS
     ):
         q = (
@@ -734,7 +735,7 @@ def q_stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_interleaved,
     )
     name = f"latedrops_{abs(hash(sf_dir)) % 10_000_000}"
-    with ingest.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, ingest.STREAM_SHUFFLE_PARTITIONS
     ):
         q = (

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import sampling as SK, text as TX
 from ..functions.dedup import _with_shingles
+from ..plans.scale import scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 
@@ -830,7 +831,7 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with I.scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold)
             .option("checkpointLocation", str(ckpt))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import text as _TX
+from ..plans.scale import scoped_shuffle_partitions
 from ..registry import register
 from ..sources import load_table
 
@@ -480,7 +481,7 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with I.scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold_batch)
             .option("checkpointLocation", str(ckpt))

@@ -47,14 +47,16 @@ _QUERY_MODULES = [
 _CHECK_FIRST = [
     # Round-17 window (50 slots), composed mechanically per
     # tests/test_freshness.py (scripts/freshness.py is the source of
-    # truth; this list just pins its output). 22 changed-path slots:
-    # the round-16 shuffle-domain and staged-corpus rewrites (CC/graph
-    # consumers, doubling loops, web corpus), the stdlib-zlib inflate
-    # swap (PNG, WARC and everything reading WARC members), and the
-    # shared scoped-shuffle helper. The 28 rotation slots take the
-    # oldest verdicts in prior iteration order: the one r10 leftover,
-    # then 27 of the 33-query r11 cohort (the other 6 tie the r11
-    # round inside — window capacity — and lead the next rotation).
+    # truth; this list just pins its output). All 50 slots are
+    # changed-path queries, so no rotation slot is left this round:
+    # - 22 from the round-16 shuffle-domain and staged-corpus rewrites
+    #   (CC/graph consumers, doubling loops, web corpus), the
+    #   stdlib-zlib inflate swap (PNG, WARC and everything reading WARC
+    #   members) and the shared scoped-shuffle helper;
+    # - 28 whose closure reaches the moved shuffle scope
+    #   (plans/scale.py::scoped_shuffle_partitions), the data-sized CDC
+    #   consumer streams, the bucket fold or the shared envelope
+    #   writer, oldest verdict first.
     # NOTE: if a later change touches a query's reference closure,
     # that query must displace rotation slots here (the freshness
     # tests enforce it) — recompose before round close.
@@ -80,35 +82,35 @@ _CHECK_FIRST = [
     "q_crawl_frontier",
     "q_stream_host_graph",
     "q_web_corpus_e2e",
-    # rotation slots, oldest verdict first
-    "q_udaf_median",
-    "q_old_image",
-    "q_typed_cast",
-    "q_filter_cmp",
-    "q_arith_update",
-    "q_cdc_replay",
-    "q_union_variants",
-    "q_except_deleted",
-    "q_snapshot_diff",
-    "q_ops_pivot",
-    "q_session_windows",
-    "q_pricing_summary",
-    "q_dedup_exact",
-    "q_simhash",
-    "q_simhash_neardup",
-    "q_ngram_jaccard",
-    "q_cosine_topk",
-    "q_ivf_topk",
-    "q_text_stats",
-    "q_token_count",
-    "q_lang_id",
-    "q_quality_score",
-    "q_repetition_ratio",
+    # closure reaches the stream-domain / shuffle-scope change
     "q_stream_resume",
-    "q_dq_checks",
-    "q_event_drift",
-    "q_events_format_parity",
-    "q_snapshot_roundtrip",
+    "q_stream_gapfill",
+    "q_stream_join_view_skew",
+    "q_stream_kmv",
+    "q_stream_pii",
+    "q_stream_transitions",
+    "q_stream_trend",
+    "q_ivf_incremental",
+    "q_stream_alerts",
+    "q_stream_cdc_replay",
+    "q_stream_changepoint",
+    "q_stream_dedupe",
+    "q_stream_delta_agg",
+    "q_stream_dq",
+    "q_stream_event_drift",
+    "q_stream_funnel",
+    "q_stream_ingest_counts",
+    "q_stream_join_view",
+    "q_stream_late_drops",
+    "q_stream_scd2",
+    "q_stream_sessions",
+    "q_stream_stream_join",
+    "q_stream_topk",
+    "q_stream_window_counts",
+    "q_compact_partials",
+    "q_stream_doc_dedup",
+    "q_stream_manifest",
+    "q_stream_sample",
 ]
 
 

@@ -29,6 +29,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 from .merge import N_STATE_BUCKETS, apply_bucketed_fold, read_state
 
@@ -83,7 +84,7 @@ def run_dedup_stream(
             fold,
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
 from ..operators.replay import retraction_totals
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 _BASE_PREFIX = "base_v"
@@ -57,14 +58,13 @@ def run_delta_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
     normalized = P.normalized_events(stream)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         part = retraction_totals(P.typed_rows(batch_df))
         part.write.mode("overwrite").parquet(f"{partials_dir}/epoch={epoch_id}")
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             normalized.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint_dir)

@@ -27,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dq import _ROW_KINDS, _row_predicate
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -77,7 +78,7 @@ def run_dq_stream(
             f"{partials_dir}/epoch={epoch_id}"
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint_dir)

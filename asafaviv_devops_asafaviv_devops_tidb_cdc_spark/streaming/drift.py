@@ -22,6 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -59,7 +60,7 @@ def run_drift_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint_dir)

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.scale import scoped_shuffle_partitions
+
 FUNNEL_TYPES = ("view", "click", "purchase")
 
 _STATE_SCHEMA = StructType(
@@ -147,7 +149,7 @@ def run_funnel_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` (one file per micro-batch) through the
     stateful funnel into a memory sink; return the emissions frame."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
+    from .ingest import STREAM_SHUFFLE_PARTITIONS
 
     stream = (
         spark.readStream.schema(schema)
@@ -201,7 +203,7 @@ def run_funnel_resumable(
     serving at O(users) regardless of how many drains accumulated
     (an append-only emission sink would grow O(users x drains))."""
     from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
+    from .ingest import STREAM_SHUFFLE_PARTITIONS
 
     stream = (
         spark.readStream.schema(schema)

@@ -22,6 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -56,7 +57,7 @@ def run_gapfill_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, ingest.STREAM_SHUFFLE_PARTITIONS
     ):
         q = (

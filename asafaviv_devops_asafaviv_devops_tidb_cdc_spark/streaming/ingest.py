@@ -15,21 +15,27 @@ offsets + a deterministic event key (partition, offset, rownum) +
 watermarked ``dropDuplicates`` = effectively exactly-once.
 
 Scale posture: the chain is stateless map stages except dedupe (keyed
-state, bounded by the watermark) — parallelism is Kafka partitions;
-``maxOffsetsPerTrigger`` bounds micro-batch size (backpressure the
-reference lacks).
+state on the event key plus ``ts``, so the watermark evicts it) — scan
+parallelism is Kafka partitions (file splits here); ``maxOffsetsPerTrigger``
+(``maxFilesPerTrigger`` here) bounds micro-batch size (backpressure the
+reference lacks). The shuffle domain, and with it the number of
+dedupe state stores and sink write tasks, is sized from that bound
+once, on the first run (``stream_domain`` ->
+plans/scale.py::stream_partitions): a KB-scale consumer runs one
+partition instead of a core-sized domain of near-empty stores, and
+the checkpoint pins the count for every later trigger.
 """
 
 from __future__ import annotations
 
 import shutil
 import tempfile
-from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
+from ..plans.scale import scoped_shuffle_partitions, stream_partitions
 from ..sources import envelopes_from_events, load_table
 
 SOURCE_SCHEMA = "value string, partition int, offset long"
@@ -145,6 +151,21 @@ def es_sink_options(
     }
 
 
+def _write_envelopes(
+    spark: SparkSession,
+    sf_dir: str,
+    dest: str,
+    duplicate_fraction_mod: int | None,
+    n_files: int,
+) -> None:
+    raw = envelopes_from_events(load_table(spark, sf_dir, "events"))
+    if duplicate_fraction_mod:
+        raw = raw.unionByName(raw.filter(F.col("offset") % duplicate_fraction_mod == 0))
+    # repartition, not coalesce: coalesce would collapse the upstream
+    # to_json stage to one core
+    raw.repartition(n_files).write.mode("overwrite").json(dest)
+
+
 def write_envelope_files(
     spark: SparkSession,
     sf_dir: str,
@@ -163,16 +184,11 @@ def write_envelope_files(
     unsorted files replay in arbitrary time order across micro-batches
     and the watermark would (correctly!) drop whole batches as late
     data. Order-robust consumers (the merge path, which carries full
-    order keys) can take n_files>1 to exercise multi-batch behavior.
-    repartition, not coalesce: coalesce would collapse the upstream
-    to_json stage to one core."""
+    order keys) can take n_files>1 to exercise multi-batch behavior."""
     out = Path(out_dir)
     if out.exists():
         shutil.rmtree(out)
-    raw = envelopes_from_events(load_table(spark, sf_dir, "events"))
-    if duplicate_fraction_mod:
-        raw = raw.unionByName(raw.filter(F.col("offset") % duplicate_fraction_mod == 0))
-    raw.repartition(n_files).write.mode("overwrite").json(str(out))
+    _write_envelopes(spark, sf_dir, str(out), duplicate_fraction_mod, n_files)
     return str(out)
 
 
@@ -197,34 +213,13 @@ def envelope_files(
     fp = input_fingerprint(
         sf_dir, "events", f"env-v1-d{duplicate_fraction_mod}-f{n_files}"
     )
-
-    def write(dest: str) -> None:
-        raw = envelopes_from_events(load_table(spark, sf_dir, "events"))
-        if duplicate_fraction_mod:
-            raw = raw.unionByName(
-                raw.filter(F.col("offset") % duplicate_fraction_mod == 0)
-            )
-        raw.repartition(n_files).write.mode("overwrite").json(dest)
-
-    return materialized_path("envelopes", fp, write)
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Run a (streaming) query with ``spark.sql.shuffle.partitions=n``,
-    restoring the previous value after. Stateful operators allocate one
-    state store per shuffle partition and pay a per-store commit on
-    every micro-batch — for the replay harness's state sizes, 32 stores
-    are pure fixed overhead (measured ~2x on the availableNow streams).
-    A production stream sizes this to its state volume; the checkpoint
-    pins it from the first run onward either way."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return materialized_path(
+        "envelopes",
+        fp,
+        lambda dest: _write_envelopes(
+            spark, sf_dir, dest, duplicate_fraction_mod, n_files
+        ),
+    )
 
 
 STREAM_SHUFFLE_PARTITIONS = 8
@@ -273,10 +268,35 @@ def resumable_workdir(sf_dir: str, table: str, tag: str, version: str) -> Path:
     return stream_workdir(sf_dir, f"{tag}_{provider[:8]}_{fp}")
 
 
+# micro-batch bound of the ingest stream (backpressure)
+INGEST_MAX_FILES_PER_TRIGGER = 8
+
+
+def stream_domain(spark: SparkSession, source_dir: str, max_files: int) -> int:
+    """Shuffle partitions for a file-source consumer over ``source_dir``,
+    sized from its micro-batch bound: the sum of the ``max_files``
+    largest visible files (hidden and ``_``-prefixed names are skipped,
+    as the file source skips them). Only the first run's value matters:
+    Spark stores ``spark.sql.shuffle.partitions`` in the offset log and
+    every later trigger of the checkpoint reuses it."""
+    base = Path(source_dir)
+    sizes = sorted(
+        (
+            p.stat().st_size
+            for p in (base.iterdir() if base.is_dir() else ())
+            if not p.name.startswith((".", "_")) and p.is_file()
+        ),
+        reverse=True,
+    )
+    return stream_partitions(
+        sum(sizes[:max_files]), spark.sparkContext.defaultParallelism
+    )
+
+
 def read_envelope_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", 8)  # micro-batch bound (backpressure)
+        .option("maxFilesPerTrigger", INGEST_MAX_FILES_PER_TRIGGER)
         .json(source_dir)
     )
 
@@ -300,15 +320,15 @@ def run_ingest(
             p = Path(d)
             if p.exists():
                 shutil.rmtree(p)
+    # no round-robin repartition: the file source already reads each
+    # file (and each maxSplitBytes slice of a large one) as its own task
     stream = read_envelope_stream(spark, source_dir)
-    # spread the parse chain across cores — the file (or a single Kafka
-    # partition) arrives as one task otherwise; raw strings are cheap to
-    # shuffle, the json round-trip downstream is not cheap to serialize
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
     normalized = P.normalized_events(stream)
     if dedupe:
+        # ``ts`` in the key lets the watermark evict state; a replayed
+        # duplicate carries the same ``es``, so it still matches
         normalized = normalized.withWatermark("ts", "1 hour").dropDuplicates(
-            ["partition", "offset", "rownum"]
+            ["partition", "offset", "rownum", "ts"]
         )
     # (table, date) partitioning: per-table readers prune at the scan
     # and retention/compaction work in day units — the sink design the
@@ -320,7 +340,8 @@ def run_ingest(
     normalized = normalized.withColumn("event_date", F.to_date("ts")).repartition(
         "table_name", "event_date"
     )
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+    domain = stream_domain(spark, source_dir, INGEST_MAX_FILES_PER_TRIGGER)
+    with scoped_shuffle_partitions(spark, domain):
         q = (
             normalized.writeStream.format("parquet")
             .option("path", sink_dir)

@@ -39,6 +39,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
+from ..plans.scale import scoped_shuffle_partitions
 from .merge import (
     apply_bucketed_fold,
     apply_merge_batch,
@@ -160,18 +161,13 @@ def run_join_view_stream(
             if p.exists():
                 shutil.rmtree(p)
 
-    from .ingest import (
-        SOURCE_SCHEMA,
-        STREAM_SHUFFLE_PARTITIONS,
-        scoped_shuffle_partitions,
-    )
+    from .ingest import SOURCE_SCHEMA, STREAM_SHUFFLE_PARTITIONS
 
     stream = (
         spark.readStream.schema(SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
     typed = P.typed_rows(P.normalized_events(stream)).filter(
         F.col("table_name").isin(left_table, right_table)
     )

@@ -24,6 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import kmv as KMV
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -67,7 +68,7 @@ def run_kmv_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, ingest.STREAM_SHUFFLE_PARTITIONS
     ):
         q = (

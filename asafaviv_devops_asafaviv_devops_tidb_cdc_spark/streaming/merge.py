@@ -18,6 +18,12 @@ size — exactly the key-partitioned upsert a transactional table format
 (Delta/Iceberg ``MERGE INTO``) productionizes. The semantics — last
 writer wins, DELETE tombstones remove the key, tombstones expire after
 the source's replay horizon — are what the batch oracle checks.
+
+The stream's shuffle domain is sized from its micro-batch bound on the
+first run (streaming/ingest.py::stream_domain) and pinned by the
+checkpoint; the per-batch bucket write runs at most that many tasks,
+so a KB-scale batch folds in one task however many buckets it touches.
+The bucket layout does not depend on the domain.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import parse as P
+from ..plans.scale import scoped_shuffle_partitions
 
 STATE_KEYS = ["table_name", "user_id"]
 STATE_ORDER = ["ts", "offset", "rownum"]
@@ -218,12 +225,14 @@ def apply_bucketed_fold(
         merged = fold(existing, batch_df).withColumn("_bucket", bucket_expr())
         # one write job for all touched buckets; the partition column is
         # recomputable from the keys so it is never stored in the rows.
-        # repartition ON the bucket id first: one task (one file) per
-        # touched bucket instead of |tasks| x |buckets| small files —
-        # bucket count is the size-scaled parallelism unit anyway
-        # (plans/scale.py::state_buckets)
+        # repartition ON the bucket id first: each touched bucket lands
+        # in exactly one task (one file) instead of |tasks| x |buckets|
+        # small files; no more tasks than the batch's shuffle domain
+        # (a stream's, pinned by its checkpoint), since every task pays
+        # its own conf and parquet-writer set-up
+        domain = int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         stage = Path(state_dir) / f"_stage_v{epoch_id:09d}"
-        merged.repartition(len(touched), "_bucket").write.mode(
+        merged.repartition(min(len(touched), domain), "_bucket").write.mode(
             "overwrite"
         ).partitionBy("_bucket").parquet(str(stage))
         empty = merged.drop("_bucket").limit(0)
@@ -324,14 +333,14 @@ def run_replay_stream(
             if p.exists():
                 shutil.rmtree(p)
 
-    from .ingest import SOURCE_SCHEMA
+    from .ingest import SOURCE_SCHEMA, stream_domain
 
+    # no round-robin repartition: each file is its own task
     stream = (
         spark.readStream.schema(SOURCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
     typed = P.typed_rows(P.normalized_events(stream))
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -344,9 +353,8 @@ def run_replay_stream(
             tombstone_horizon_ms=tombstone_horizon_ms,
         )
 
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+    domain = stream_domain(spark, source_dir, max_files_per_trigger)
+    with scoped_shuffle_partitions(spark, domain):
         q = (
             typed.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)

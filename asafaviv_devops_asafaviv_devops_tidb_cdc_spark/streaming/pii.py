@@ -23,6 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import pii as P
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -56,7 +57,7 @@ def run_pii_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint_dir)

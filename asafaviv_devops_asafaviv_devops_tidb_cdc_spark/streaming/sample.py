@@ -25,6 +25,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.sampling import SAMPLE_K, SAMPLE_SALT, salted_key
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -64,7 +65,7 @@ def run_sample_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             stream.writeStream.foreachBatch(fold)
             .option("checkpointLocation", checkpoint_dir)

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
 from ..operators.replay import scd2_versions
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 from .merge import apply_bucketed_fold, bucket_of, read_state
 
@@ -85,7 +86,6 @@ def run_scd2_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(source_dir)
     )
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
     typed = P.typed_rows(P.normalized_events(stream))
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -102,7 +102,7 @@ def run_scd2_stream(
             rebuild_state,
         )
 
-    with ingest.scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
         q = (
             typed.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)

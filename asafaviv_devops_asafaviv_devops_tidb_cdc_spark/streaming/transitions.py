@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.scale import scoped_shuffle_partitions
+
 _STATE_SCHEMA = StructType(
     [
         StructField("t_us", ArrayType(LongType())),
@@ -124,7 +126,7 @@ def run_transitions_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` through the stateful census into a memory
     sink; return the emitted delta frame (test harness path)."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
+    from .ingest import STREAM_SHUFFLE_PARTITIONS
 
     with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
         q = (
@@ -161,7 +163,7 @@ def run_transitions_resumable(
     drain — a no-op unless new epochs landed) bound it at O(grid)
     regardless of stream length. Returns the served count frame."""
     from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS, scoped_shuffle_partitions
+    from .ingest import STREAM_SHUFFLE_PARTITIONS
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         (

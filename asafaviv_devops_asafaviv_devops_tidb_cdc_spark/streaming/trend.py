@@ -20,6 +20,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 
@@ -54,7 +55,7 @@ def run_trend_stream(
             .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with ingest.scoped_shuffle_partitions(
+    with scoped_shuffle_partitions(
         spark, ingest.STREAM_SHUFFLE_PARTITIONS
     ):
         q = (

@@ -214,8 +214,8 @@ def test_scoped_shuffle_restores_conf_when_body_raises(spark):
     """Session conf is restored on every exit path: a scope sized DOWN
     from the session setting flips both shuffle.partitions and
     adaptive.enabled, and an exception inside it must put both back."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions.dedup import (
-        _scoped_shuffle_partitions,
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.plans.scale import (
+        scoped_shuffle_partitions,
     )
 
     p_key = "spark.sql.shuffle.partitions"
@@ -225,7 +225,7 @@ def test_scoped_shuffle_restores_conf_when_body_raises(spark):
     spark.conf.set(a_key, "true")
     try:
         with pytest.raises(RuntimeError, match="scope body"):
-            with _scoped_shuffle_partitions(spark, 2):
+            with scoped_shuffle_partitions(spark, 2):
                 assert spark.conf.get(p_key) == "2"
                 assert spark.conf.get(a_key) == "false"
                 raise RuntimeError("scope body")

@@ -161,6 +161,14 @@ def test_scale_conf_formulas():
     sconf = scale.streaming_conf(100 * scale.GIB, 64)
     assert "RocksDB" in sconf["spark.sql.streaming.stateStore.providerClass"]
     assert int(sconf["spark.sql.shuffle.partitions"]) == 513
+    # stream domain: sized from the micro-batch bound, no floor at cores
+    assert scale.stream_partitions(0, 32) == 1
+    assert scale.stream_partitions(300 * 1024, 32) == 1  # a KB batch
+    assert scale.stream_partitions(3 * 200 * scale.MIB, 32) == 4
+    assert scale.stream_partitions(1 * scale.TIB, 8) == 8  # capped at cores
+    # composes with the Kafka bound: a cores x 200 MiB batch -> cores
+    rows = scale.max_offsets_per_trigger(4, 1024, 64)
+    assert scale.stream_partitions(rows * 1024, 64) == 64
 
 
 def test_embedding_norm_hist_single_shuffle(spark):

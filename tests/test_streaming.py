@@ -3,6 +3,10 @@ the stateful sustained-alert operator's stream/batch agreement."""
 
 from __future__ import annotations
 
+import contextlib
+import json
+
+import pytest
 from pyspark.sql import functions as F
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
@@ -197,27 +201,44 @@ def _bucket_files(state_dir):
     return out
 
 
-def test_merge_rewrites_only_touched_buckets(spark):
+@pytest.mark.parametrize("domain", ["session", "one_partition"])
+def test_merge_rewrites_only_touched_buckets(spark, domain):
     """Partition-pruned MERGE: a micro-batch whose keys hash into one
     bucket must leave every other bucket's files byte-identical (same
     paths, same contents) — per-batch state I/O is bounded by the
-    batch's key spread, not total state size."""
+    batch's key spread, not total state size. The layout must not
+    depend on the shuffle domain: a 1-partition domain writes every
+    touched bucket from one task, still one version dir per bucket."""
     import tempfile
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.plans.scale import (
+        scoped_shuffle_partitions,
+    )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import merge
+
+    def scope():
+        if domain == "session":
+            return contextlib.nullcontext()
+        return scoped_shuffle_partitions(spark, 1)
 
     state = str(Path(tempfile.mkdtemp()) / "state")
     batch1 = _typed_batch(
         spark,
         [("t", u, "insert", u * 10, f"2024-01-01 00:00:{u:02d}", u) for u in range(12)],
     )
-    merge.apply_merge_batch(spark, batch1, state, epoch_id=1, n_buckets=8)
+    with scope():
+        merge.apply_merge_batch(spark, batch1, state, epoch_id=1, n_buckets=8)
     before = _bucket_files(state)
     assert before, "batch1 wrote no state"
+    # one version dir per touched bucket, one data file in each
+    for bdir in Path(state).glob("b*"):
+        assert [v.name for v in bdir.iterdir()] == ["v000000001"]
+        assert len(list((bdir / "v000000001").glob("part-*.parquet"))) == 1
 
     batch2 = _typed_batch(spark, [("t", 3, "update", 999, "2024-01-01 00:01:00", 100)])
     b3 = batch2.select(merge.bucket_of(n_buckets=8).alias("b")).collect()[0]["b"]
-    merge.apply_merge_batch(spark, batch2, state, epoch_id=2, n_buckets=8)
+    with scope():
+        merge.apply_merge_batch(spark, batch2, state, epoch_id=2, n_buckets=8)
     after = _bucket_files(state)
 
     untouched_before = {p: c for p, c in before.items() if not p.startswith(f"b{b3:04d}/")}
@@ -231,6 +252,137 @@ def test_merge_rewrites_only_touched_buckets(spark):
         for r in merge.live_state(merge.read_state(spark, state)).collect()
     }
     assert got == {u: (999 if u == 3 else u * 10) for u in range(12)}
+
+
+def _offset_log_partitions(ckpt) -> set[str]:
+    """``spark.sql.shuffle.partitions`` recorded by every batch of a
+    checkpoint's offset log."""
+    out = set()
+    for f in (Path(ckpt) / "offsets").iterdir():
+        if f.name.isdigit():
+            meta = json.loads(f.read_text().splitlines()[1])
+            out.add(meta["conf"]["spark.sql.shuffle.partitions"])
+    return out
+
+
+def _merge_equals_batch_replay(spark, src, state_dir):
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators.replay import (
+        current_state,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest, merge
+
+    raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(str(src))
+    want = current_state(
+        P.typed_rows(P.normalized_events(raw)),
+        keys=merge.STATE_KEYS,
+        order_by=merge.STATE_ORDER,
+    )
+
+    def rows(df):
+        return sorted(
+            (r["table_name"], r["user_id"], str(r["value"]), str(r["ts"]))
+            for r in df.select("table_name", "user_id", "value", "ts").collect()
+        )
+
+    got = merge.live_state(merge.read_state(spark, str(state_dir)))
+    return rows(got) == rows(want) and len(rows(want)) > 0
+
+
+def test_kb_drain_pins_one_partition_in_both_consumer_checkpoints(spark, tmp_path):
+    """The ingest and merge consumers size their shuffle domain from
+    the micro-batch bound: a KB-scale backlog runs in ONE partition
+    (one dedupe state store, one sink write task), and the offset log
+    records that count for every later trigger."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest, merge
+
+    src = ingest.write_envelope_files(spark, SF_SMOKE, str(tmp_path / "src"), None, n_files=4)
+    ingest.run_ingest(spark, src, str(tmp_path / "sink"), str(tmp_path / "ckpt_i"))
+    merge.run_replay_stream(
+        spark, src, str(tmp_path / "state"), str(tmp_path / "ckpt_m"),
+        max_files_per_trigger=2,
+    )
+    assert _offset_log_partitions(tmp_path / "ckpt_i") == {"1"}
+    assert _offset_log_partitions(tmp_path / "ckpt_m") == {"1"}
+    assert [p.name for p in (tmp_path / "ckpt_i" / "state" / "0").iterdir()
+            if p.name.isdigit()] == ["0"]
+    assert _merge_equals_batch_replay(spark, src, tmp_path / "state")
+
+
+def test_merge_checkpoint_from_eight_partitions_resumes(spark, tmp_path, monkeypatch):
+    """A merge checkpoint created under the old fixed 8-partition
+    domain keeps its count when resumed by the data-sized code (Spark
+    reads it back from the offset log), folds the new files in, and
+    still equals the batch last-writer-wins replay."""
+    import shutil
+
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest, merge
+
+    landing = Path(ingest.envelope_files(spark, SF_SMOKE, None, n_files=4))
+    files = sorted(p for p in landing.iterdir() if p.name.startswith("part-"))
+    src = tmp_path / "src"
+    src.mkdir()
+    for p in files[:2]:
+        shutil.copy(p, src / p.name)
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "stream_domain", lambda *a: 8)
+        merge.run_replay_stream(
+            spark, str(src), str(tmp_path / "state"), str(tmp_path / "ckpt"),
+            max_files_per_trigger=1,
+        )
+    assert _offset_log_partitions(tmp_path / "ckpt") == {"8"}
+    for p in files[2:]:
+        shutil.copy(p, src / p.name)
+    merge.run_replay_stream(
+        spark, str(src), str(tmp_path / "state"), str(tmp_path / "ckpt"),
+        max_files_per_trigger=1, fresh=False,
+    )
+    assert _offset_log_partitions(tmp_path / "ckpt") == {"8"}
+    assert len(list((tmp_path / "ckpt" / "commits").glob("[0-9]*"))) == 4
+    assert _merge_equals_batch_replay(spark, src, tmp_path / "state")
+
+
+def test_ingest_dedupe_state_is_evicted_by_watermark(spark, tmp_path):
+    """The ingest dedupe keys on ``ts`` too, so its 1-hour watermark
+    evicts state: with event time jumping 2 h per file, the state
+    store holds only the newest file's keys instead of every key ever
+    seen, and the sink still holds every row exactly once."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import (
+        envelopes_from_events,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    n_files, per_file = 4, 100
+    events = spark.range(n_files * per_file).selectExpr(
+        "id AS event_id",
+        f"timestamp_seconds(1704067200 + (id div {per_file}) * 7200 + id % {per_file}) AS ts",
+        "id % 7 AS user_id",
+        "'click' AS event_type",
+        "CAST(id AS DOUBLE) AS value",
+        "'{}' AS props",
+    )
+    env = envelopes_from_events(events).orderBy("offset").collect()
+    src = tmp_path / "src"
+    src.mkdir()
+    state_rows = []
+    for k in range(n_files):
+        chunk = env[k * per_file : (k + 1) * per_file]
+        (src / f"part-{k:05d}.json").write_text(
+            "".join(json.dumps(r.asDict()) + "\n" for r in chunk)
+        )
+        ingest.run_ingest(
+            spark, str(src), str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+            fresh=k == 0,
+        )
+        state_rows.append(spark.read.format("statestore").load(str(tmp_path / "ckpt")).count())
+
+    raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(str(src))
+    n_rows = P.normalized_events(raw).count()
+    assert spark.read.parquet(str(tmp_path / "sink")).count() == n_rows
+    # without eviction the store grows by one file's keys per drain;
+    # with it, each drain's no-data batch leaves only the newest file's
+    assert 0 < state_rows[-1] <= state_rows[0] < n_rows, state_rows
 
 
 def test_delta_partials_compaction_preserves_totals(spark):
