@@ -29,6 +29,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import read_parquet
+
 ARTIFACT_ROOT_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
 
 
@@ -60,20 +62,41 @@ def materialized(
     partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Serve ``<root>/<name>/<fingerprint>`` as parquet, building it
-    via ``build()`` on first use. Atomic rename = the commit point
-    (same recipe as sources/event_sink.py and streaming/delta.py):
-    readers never observe a partial build, losing a build race is
-    harmless, and an unwritable artifact root degrades to the live
-    plan instead of failing. ``partition_by`` lays the artifact out as
-    a partitioned table so key-filtered consumers prune at the scan
-    (the IVF cell index reads only probed cells this way)."""
-    dest = _artifact_root() / name / fingerprint
+    via ``build()`` on first use (see ``serve_committed``).
+    ``partition_by`` lays the artifact out as a partitioned table so
+    key-filtered consumers prune at the scan (the IVF cell index reads
+    only probed cells this way)."""
+
+    def write(path: str) -> None:
+        writer = build().write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+
+    return serve_committed(
+        spark, _artifact_root() / name / fingerprint, write, build
+    )
+
+
+def serve_committed(
+    spark: SparkSession,
+    dest: Path,
+    write: Callable[[str], None],
+    live: Callable[[], DataFrame],
+) -> DataFrame:
+    """Serve the committed parquet directory ``dest``, committing it
+    with ``write`` first if it has no ``_SUCCESS`` marker yet. The
+    engine's materializations (artifacts, the event sink, the lineitem
+    layout) all go through here, each under its own root. Readers
+    never observe a partial build, losing a build race is harmless,
+    and an unwritable root degrades to the ``live()`` plan instead of
+    failing."""
     if not (dest / "_SUCCESS").exists():
         try:
-            _build_atomic(build, dest, partition_by)
+            commit(dest, write)
         except OSError:
-            return build()
-    return spark.read.parquet(str(dest))
+            return live()
+    return read_parquet(spark, str(dest))
 
 
 def materialized_path(
@@ -89,35 +112,19 @@ def materialized_path(
     directory, so an OSError propagates."""
     dest = _artifact_root() / name / fingerprint
     if not (dest / "_SUCCESS").exists():
-        root = dest.parent
-        root.mkdir(parents=True, exist_ok=True)
-        if (dest / "_SUCCESS").exists():  # sibling finished (TOCTOU)
-            return str(dest)
-        if dest.exists():
-            shutil.rmtree(dest, ignore_errors=True)
-        tmp = Path(tempfile.mkdtemp(dir=root, prefix="._build_"))
-        try:
-            staged = tmp / "data"
-            write(str(staged))
-            try:
-                os.rename(staged, dest)
-            except OSError:
-                if not (dest / "_SUCCESS").exists():
-                    raise
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        commit(dest, write)
     return str(dest)
 
 
-def _build_atomic(
-    build: Callable[[], DataFrame],
-    dest: Path,
-    partition_by: list[str] | None = None,
-) -> None:
+def commit(dest: Path, write: Callable[[str], None]) -> None:
+    """Build ``dest`` atomically: ``write`` fills a staging directory
+    next to it (its ``_SUCCESS`` marker is the commit record), and a
+    rename makes it visible (the same recipe as streaming/delta.py)."""
     root = dest.parent
     root.mkdir(parents=True, exist_ok=True)
     # re-check under the completed marker: a sibling session may have
-    # finished between the caller's check and now (TOCTOU)
+    # finished between the caller's check and now (TOCTOU) — deleting
+    # its build would break that session's already-returned DataFrames
     if (dest / "_SUCCESS").exists():
         return
     if dest.exists():  # partial build with no marker = dead debris
@@ -125,10 +132,7 @@ def _build_atomic(
     tmp = Path(tempfile.mkdtemp(dir=root, prefix="._build_"))
     try:
         staged = tmp / "data"
-        writer = build().write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(staged))
+        write(str(staged))
         try:
             os.rename(staged, dest)
         except OSError:

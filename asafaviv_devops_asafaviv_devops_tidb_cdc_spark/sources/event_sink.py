@@ -19,23 +19,23 @@ event table once (and letting every query scan the columnar sink with
 pushdown/pruning) is precisely what the reference does with ES and what
 any warehouse does with its bronze->silver hop.
 
-The cache key is (resolved path, size, mtime) of the source parquet, so
-regenerated testdata invalidates automatically; the build is atomic
-(write to a temp dir, rename into place) so concurrent sessions race
-safely.
+The cache key is (resolved path, size, mtime) of the source parquet
+(``artifact.input_fingerprint``), so regenerated testdata invalidates
+automatically; the build is the artifact store's atomic commit (write
+to a temp dir, rename into place) under the sink's own root, so
+concurrent sessions race safely.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import parse as P
+from .artifact import input_fingerprint, serve_committed
 from .cdc_gen import envelopes_from_events
 from .tables import load_table
 
@@ -53,10 +53,9 @@ def _sink_root() -> Path:
 
 
 def _fingerprint(sf_dir: str) -> str:
-    src = Path(sf_dir) / "events.parquet"
-    st = src.stat()
-    key = f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{_SCHEMA_VERSION}"
-    return hashlib.sha256(key.encode()).hexdigest()[:16]
+    # a name of its own: perfbench/layers.py reads it to tell a sink
+    # build from a serve
+    return input_fingerprint(sf_dir, "events", _SCHEMA_VERSION)
 
 
 def build_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,38 +74,11 @@ def normalized_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pushdown/pruning. Falls back to the live chain if the sink
     directory is unwritable.
     """
-    dest = _sink_root() / _fingerprint(sf_dir)
-    if not (dest / "_SUCCESS").exists():
-        try:
-            _materialize(spark, sf_dir, dest)
-        except OSError:
-            return build_normalized(spark, sf_dir)
-    return spark.read.parquet(str(dest))
-
-
-def _materialize(spark: SparkSession, sf_dir: str, dest: Path) -> None:
-    root = dest.parent
-    root.mkdir(parents=True, exist_ok=True)
-    # re-check the marker before clearing: a sibling session may have
-    # FINISHED its build between our caller's check and now — deleting
-    # a completed sink would break that session's already-returned
-    # DataFrames mid-query (TOCTOU)
-    if (dest / "_SUCCESS").exists():
-        return
-    # a directory without _SUCCESS is a dead partial build — clear it
-    if dest.exists():
-        shutil.rmtree(dest, ignore_errors=True)
-    tmp = Path(tempfile.mkdtemp(dir=root, prefix="._build_"))
-    try:
-        build = tmp / "normalized"
-        build_normalized(spark, sf_dir).write.mode("overwrite").parquet(
-            str(build)
-        )
-        try:
-            os.rename(build, dest)
-        except OSError:
-            # lost the race to a concurrent builder — theirs is as good
-            if not (dest / "_SUCCESS").exists():
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return serve_committed(
+        spark,
+        _sink_root() / _fingerprint(sf_dir),
+        lambda path: build_normalized(spark, sf_dir)
+        .write.mode("overwrite")
+        .parquet(path),
+        lambda: build_normalized(spark, sf_dir),
+    )

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .tables import load_table
+from .tables import load_table, read_parquet
 
 # Explicit contract schema for the events table — shared by every
 # format reader. NTZ matches the parquet fixture's TIMESTAMP_NTZ, and
@@ -61,7 +61,7 @@ def read_events(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFra
     never branch on it. Column order is pinned by a final select (JSONL
     readers order columns alphabetically otherwise)."""
     if fmt == "parquet":
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     elif fmt == "json":
         df = spark.read.schema(EVENTS_SCHEMA).option(
             "timestampNTZFormat", _TS_FMT

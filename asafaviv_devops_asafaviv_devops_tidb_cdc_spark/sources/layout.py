@@ -14,7 +14,6 @@ warehouse-side equivalent.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 import shutil
@@ -23,6 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .artifact import input_fingerprint, serve_committed
 from .tables import load_table
 
 LAYOUT_ROOT_ENV = "SPARK_GRAFT_LAYOUT_DIR"
@@ -123,46 +123,22 @@ def _ship_year():
 def partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``lineitem`` re-laid-out as a ship-year-partitioned, shipdate-
     sorted parquet table — materialized once per source fingerprint
-    (same atomic build protocol as the event sink). Readers that filter
-    on ``ship_year`` scan only the matching partition directories."""
-    src = Path(sf_dir) / "lineitem.parquet"
-    st = src.stat()
-    key = f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{_SCHEMA_VERSION}"
-    dest = _layout_root() / hashlib.sha256(key.encode()).hexdigest()[:16]
-    if not (dest / "_SUCCESS").exists():
-        try:
-            _materialize(spark, sf_dir, dest)
-        except OSError:
-            # unwritable scratch: serve the equivalent live frame
-            return load_table(spark, sf_dir, "lineitem").withColumn(
-                "ship_year", _ship_year()
-            )
-    return spark.read.parquet(str(dest))
+    (the artifact store's commit, under the layout root). Readers that
+    filter on ``ship_year`` scan only the matching partition
+    directories; an unwritable root serves the equivalent live
+    frame."""
 
-
-def _materialize(spark: SparkSession, sf_dir: str, dest: Path) -> None:
-    root = dest.parent
-    root.mkdir(parents=True, exist_ok=True)
-    # re-check before clearing: a sibling session may have finished its
-    # build since our caller's check (TOCTOU — same rule as event_sink)
-    if (dest / "_SUCCESS").exists():
-        return
-    if dest.exists():
-        shutil.rmtree(dest, ignore_errors=True)
-    tmp = Path(tempfile.mkdtemp(dir=root, prefix="._build_"))
-    try:
-        build = tmp / "lineitem"
-        df = load_table(spark, sf_dir, "lineitem").withColumn(
+    def live() -> DataFrame:
+        return load_table(spark, sf_dir, "lineitem").withColumn(
             "ship_year", _ship_year()
         )
-        write_partitioned(
-            df, str(build), ["ship_year"], sort_cols=["l_shipdate"]
-        )
+
+    return serve_committed(
+        spark,
+        _layout_root() / input_fingerprint(sf_dir, "lineitem", _SCHEMA_VERSION),
         # partitionBy writes _SUCCESS at the table root
-        try:
-            os.rename(build, dest)
-        except OSError:
-            if not (dest / "_SUCCESS").exists():
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        lambda path: write_partitioned(
+            live(), path, ["ship_year"], sort_cols=["l_shipdate"]
+        ),
+        live,
+    )

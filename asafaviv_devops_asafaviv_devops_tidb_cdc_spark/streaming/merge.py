@@ -33,6 +33,7 @@ from collections.abc import Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import parse as P
 from ..plans.scale import scoped_shuffle_partitions
@@ -190,6 +191,7 @@ def apply_bucketed_fold(
     fold,
     n_buckets: int = N_STATE_BUCKETS,
     touched: list[int] | None = None,
+    state_schema: StructType | None = None,
 ) -> None:
     """Generic partition-pruned state maintenance: fold one micro-batch
     into the hash-bucketed state table, reading and rewriting ONLY the
@@ -200,6 +202,10 @@ def apply_bucketed_fold(
     (must be a pure function of the row's key columns);
     ``fold(existing, batch)`` -> the new state for the touched buckets
     (must be commutative/total-ordered so late batches converge).
+    ``state_schema``: the schema the fold writes, when the caller knows
+    it; prior versions are then read with it instead of inferring it
+    (an inference job per batch, since every batch reads new version
+    directories).
 
     Copy-on-write per bucket: read bucket version N, write version N+1
     to a NEW directory (named by epoch — a micro-batch retry overwrites
@@ -221,7 +227,12 @@ def apply_bucketed_fold(
             return
         prior = latest_bucket_paths(state_dir, before_epoch=epoch_id)
         prior_paths = [prior[b] for b in touched if b in prior]
-        existing = spark.read.parquet(*prior_paths) if prior_paths else None
+        existing = None
+        if prior_paths:
+            reader = spark.read
+            if state_schema is not None:
+                reader = reader.schema(state_schema)
+            existing = reader.parquet(*prior_paths)
         merged = fold(existing, batch_df).withColumn("_bucket", bucket_expr())
         # one write job for all touched buckets; the partition column is
         # recomputable from the keys so it is never stored in the rows.
@@ -305,6 +316,8 @@ def apply_merge_batch(
         fold,
         n_buckets=n_buckets,
         touched=touched,
+        # the state rows are the batch's typed rows, tombstones included
+        state_schema=batch_df.schema,
     )
 
 

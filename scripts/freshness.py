@@ -17,9 +17,11 @@ package function / class / module-level constant it transitively
 references — and compares each unit's source text between HEAD and the
 query's verdict-round marker commit (``round N: verdict/...``).
 
-``tests/test_freshness.py`` turns the result into gate invariants so
-the next window composes itself; ``python scripts/freshness.py``
-prints the ledger for humans.
+``tests/test_freshness.py`` turns the result into gate invariants;
+``python scripts/freshness.py --write`` regenerates the window
+(``registry._CHECK_FIRST``) and its overflow queue
+(``registry._REPROOF_QUEUE``) from them, and ``python
+scripts/freshness.py`` prints the ledger for humans.
 """
 
 from __future__ import annotations
@@ -36,8 +38,9 @@ PKG = "asafaviv_devops_asafaviv_devops_tidb_cdc_spark"
 PKG_DIR = REPO / PKG
 
 # Units in these files are excluded from change detection: registry.py
-# holds only registration plumbing and the _CHECK_FIRST window order,
-# which is REQUIRED to change every round without invalidating verdicts.
+# holds only registration plumbing and the generated window order
+# (_CHECK_FIRST, _REPROOF_QUEUE), which is REQUIRED to change every
+# round without invalidating verdicts.
 _EXCLUDE_FILES = {f"{PKG}/registry.py"}
 
 sys.path.insert(0, str(REPO))
@@ -265,7 +268,13 @@ def query_closure(head: TreeIndex, relpath: str, fn_name: str) -> set[tuple[str,
         if (rel, name) in seen or rel in _EXCLUDE_FILES:
             continue
         mod = head.modules.get(rel)
-        if mod is None or name not in mod.units:
+        if mod is None:
+            continue
+        if name not in mod.units:
+            # a package re-export (`from .tables import load_table` in
+            # sources/__init__.py): follow it to the defining unit
+            if name in mod.from_imports:
+                stack.append(mod.from_imports[name])
             continue
         seen.add((rel, name))
         for ref in _unit_refs(mod, mod.units[name]):
@@ -333,16 +342,109 @@ def changed_queries(
     return out
 
 
+# --------------------------------------------------------------------
+# gate window composition
+# --------------------------------------------------------------------
+
+WINDOW_SIZE = 50
+REGISTRY_PY = PKG_DIR / "registry.py"
+
+
+def compose_window(
+    registered: list[str],
+    verdicts: dict[str, tuple[int, str]],
+    changed: dict[str, list[str]],
+) -> tuple[list[str], list[str]]:
+    """(window, queue). Must-haves — never checked, or changed since
+    their latest verdict — fill the window in re-proof order; those
+    that do not fit form the queue, which later windows take from the
+    front. Slots left over rotate the oldest remaining verdicts. Both
+    go oldest verdict first (never checked before everything), ties in
+    registration order."""
+    rank = {n: i for i, n in enumerate(registered)}
+
+    def key(n: str) -> tuple[int, int]:
+        return verdicts.get(n, (-1, ""))[0], rank[n]
+
+    must = sorted(
+        (n for n in registered if n not in verdicts or n in changed), key=key
+    )
+    rest = sorted(
+        (n for n in registered if n in verdicts and n not in changed), key=key
+    )
+    window = must[:WINDOW_SIZE] + rest[: max(0, WINDOW_SIZE - len(must))]
+    return window, must[WINDOW_SIZE:]
+
+
+def _render_list(
+    name: str, names: list[str], verdicts: dict[str, tuple[int, str]]
+) -> str:
+    lines = [f"{name} = ["]
+    last = None
+    for n in names:
+        rnd = verdicts.get(n, (None, ""))[0]
+        if rnd != last:
+            label = "never checked" if rnd is None else f"verdict r{rnd}"
+            lines.append(f"    # {label}")
+            last = rnd
+        lines.append(f'    "{n}",')
+    return "\n".join(lines + ["]\n"])
+
+
+def write_registry(
+    window: list[str], queue: list[str], verdicts: dict[str, tuple[int, str]]
+) -> None:
+    """Rewrite ``registry._CHECK_FIRST`` and ``registry._REPROOF_QUEUE``
+    in place; everything else in registry.py is left as it is."""
+    src = REGISTRY_PY.read_text()
+    # the old queue with the comment block above it
+    src = re.sub(
+        r"\n(?:#[^\n]*\n)*_REPROOF_QUEUE = \[\n.*?^\]\n", "", src, flags=re.S | re.M
+    )
+    queue_block = (
+        "\n# Must-haves that overflow the window, in the same order; later\n"
+        "# windows take them from the front. Generated with _CHECK_FIRST by\n"
+        "# `python scripts/freshness.py --write`.\n"
+        + _render_list("_REPROOF_QUEUE", queue, verdicts)
+    )
+    new, n = re.subn(
+        r"^_CHECK_FIRST = \[\n.*?^\]\n",
+        lambda _: _render_list("_CHECK_FIRST", window, verdicts) + queue_block,
+        src,
+        count=1,
+        flags=re.S | re.M,
+    )
+    if n != 1:
+        raise SystemExit(f"no _CHECK_FIRST list found in {REGISTRY_PY}")
+    REGISTRY_PY.write_text(new)
+
+
 def main() -> None:
     verdicts = latest_verdicts()
     changed = changed_queries(verdicts=verdicts)
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
 
     registry.load_all()
-    window = set(list(registry.QUERIES)[:50])
+    if "--write" in sys.argv[1:]:
+        window, queue = compose_window(
+            registry.REGISTRATION_ORDER, verdicts, changed
+        )
+        write_registry(window, queue, verdicts)
+        print(
+            f"wrote {REGISTRY_PY.relative_to(REPO)}: {len(window)} window "
+            f"slots, {len(queue)} queued must-haves"
+        )
+        return
+    window = set(list(registry.QUERIES)[:WINDOW_SIZE])
+    queue = set(registry._REPROOF_QUEUE)
     print(f"{len(changed)} queries changed since their latest verdict:")
     for qname, units in sorted(changed.items()):
-        mark = "in-window" if qname in window else "!! NOT IN WINDOW"
+        if qname in window:
+            mark = "in-window"
+        elif qname in queue:
+            mark = "queued"
+        else:
+            mark = "!! NOT IN WINDOW OR QUEUE"
         rnd = verdicts.get(qname, (None, None))[0]
         print(f"  {qname} (verdict r{rnd}, {mark})")
         for u in units[:6]:

@@ -1323,7 +1323,7 @@ def test_ingest_resumable_second_call_is_empty_pass(spark):
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
 
     first = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
-    base = ingest.resumable_workdir(SF_SMOKE, "events", "ing_dup", "ingest-v1")
+    base = ingest.resumable_workdir(SF_SMOKE, "events", "ing_dup", "ingest-v2")
     meta = Path(base) / "sink" / "_spark_metadata"
     committed = sorted(p.name for p in meta.iterdir())
     again = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
