@@ -142,9 +142,9 @@ def state_buckets(state_bytes: int, expected_batch_keys: int) -> int:
       keys hashes into, so per-batch I/O ~= touched_buckets x
       (state_bytes / n_buckets). More buckets -> finer pruning, until
       touched_buckets saturates at the batch's distinct-key count.
-    - file-count pressure: each bucket keeps its own version chain;
-      beyond ~100k live bucket dirs the metadata layer (listing,
-      checkpoint manifests) becomes the bottleneck.
+    - file-count pressure: each bucket keeps the versions the two
+      newest manifests list; beyond ~100k live bucket dirs the metadata
+      layer (listing, checkpoint manifests) becomes the bottleneck.
 
     Sizing rule: make one bucket ~= one shuffle-partition envelope
     (state_bytes / 200 MiB), then cap so a typical batch still touches

@@ -492,7 +492,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # resumable: first call drains, later calls are an empty drain +
     # state read (bump the version on any scd2-fold change)
-    base = I.resumable_workdir(sf_dir, "events", "scd2", "scd2-v1")
+    base = I.resumable_workdir(sf_dir, "events", "scd2", "scd2-v2")
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
     S.run_scd2_stream(
         spark, src, str(base / "state"), str(base / "ckpt"), fresh=False
@@ -829,7 +829,7 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(dest),
     )
-    base = resumable_workdir(sf_dir, "documents", "docdedup", "docdedup-v2")
+    base = resumable_workdir(sf_dir, "documents", "docdedup", "docdedup-v3")
     C.run_dedup_stream(
         spark,
         src,

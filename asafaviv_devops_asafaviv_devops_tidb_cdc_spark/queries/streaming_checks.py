@@ -122,7 +122,7 @@ def q_stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the first invocation drains the backlog; later ones are an empty
     # drain + state read — the steady-state trigger cost a production
     # stream pays (bump the version on any merge-fold change)
-    base = ingest.resumable_workdir(sf_dir, "events", "merge", "merge-v1")
+    base = ingest.resumable_workdir(sf_dir, "events", "merge", "merge-v2")
     # 2 out-of-order micro-batches exercise the merge/tombstone path;
     # tests/test_streaming.py runs the 4-batch variant
     src = ingest.envelope_files(spark, sf_dir, None, n_files=4)
@@ -499,7 +499,7 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resumable: first call drains + materializes the view, later calls
     # are an empty drain + a view read (bump the version on any
     # join-view-fold change)
-    base = ingest.resumable_workdir(sf_dir, "events", "join_view", "jv-v1")
+    base = ingest.resumable_workdir(sf_dir, "events", "join_view", "jv-v2")
     src = ingest.envelope_files(spark, sf_dir, None, n_files=4)
     JV.run_join_view_stream(
         spark,
@@ -510,7 +510,7 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=2,
         fresh=False,
     )
-    return JV.read_join_view(spark, str(base / "view"))
+    return merge.read_state(spark, str(base / "view"))
 
 
 # Zipf-skewed variant of the join-view oracle: the SAME typed-CTE
@@ -568,7 +568,7 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .json(dest),
     )
-    base = ingest.resumable_workdir(sf_dir, "events", "join_view_skew", "jvs-v1")
+    base = ingest.resumable_workdir(sf_dir, "events", "join_view_skew", "jvs-v2")
     JV.run_join_view_stream(
         spark,
         src,
@@ -578,7 +578,7 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=2,
         fresh=False,
     )
-    return JV.read_join_view(spark, str(base / "view"))
+    return merge.read_state(spark, str(base / "view"))
 
 
 # the streamed funnel must agree with the batch q_funnel_stages oracle

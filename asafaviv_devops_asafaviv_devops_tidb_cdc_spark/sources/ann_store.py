@@ -144,6 +144,29 @@ def ivf_query(
     )
 
 
+def index_delta(
+    spark: SparkSession,
+    batch: DataFrame,
+    cents: DataFrame,
+    state_dir: str,
+    epoch: int,
+    n_buckets: int = 8,
+) -> None:
+    """Fold one batch of vectors into the incremental IVF index: assign
+    it against the broadcast centroids and append it to the buckets its
+    cells hash into."""
+    from ..functions import similarity
+    from ..streaming.merge import apply_bucketed_fold
+
+    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+        # append-only: the batch arrives pre-assigned; existing rows
+        # carry over verbatim (cells never re-score)
+        return batch if existing is None else existing.unionByName(batch)
+
+    assigned = similarity.ivf_assignment(batch, cents)
+    apply_bucketed_fold(spark, assigned, state_dir, epoch, ["cid"], fold, n_buckets)
+
+
 def incremental_index(
     spark: SparkSession,
     base_corpus: DataFrame,
@@ -157,13 +180,13 @@ def incremental_index(
     vectors fold into the index without touching existing entries —
     the dominant corpus-growth case. Reuses the CDC merge path's
     hash-bucketed copy-on-write state (streaming/merge.py::
-    apply_bucketed_fold, bucketed BY CELL id): each delta batch
-    assigns against the broadcast centroids and rewrites only the
-    buckets its cells hash into; every other bucket's files stay
-    byte-identical. The result is EXACTLY the full-rebuild index
-    (incremental == batch, hash-checkable), which is the property that
-    lets a 100 TB vector table grow per-ingest instead of re-assigning
-    the corpus per refresh.
+    apply_bucketed_fold, bucketed BY CELL id, one manifest commit per
+    batch): each delta batch assigns against the broadcast centroids
+    and rewrites only the buckets its cells hash into; every other
+    bucket's files stay byte-identical. The result is EXACTLY the
+    full-rebuild index (incremental == batch, hash-checkable), which is
+    the property that lets a 100 TB vector table grow per-ingest
+    instead of re-assigning the corpus per refresh.
 
     Re-embedded (updated) vectors change cells and therefore need a
     tombstone in the OLD cell — that path is deliberately out of
@@ -172,25 +195,9 @@ def incremental_index(
     import shutil as _shutil
     from pathlib import Path as _Path
 
-    from ..functions import similarity
-    from ..streaming.merge import apply_bucketed_fold, read_state
+    from ..streaming.merge import read_state
 
     _shutil.rmtree(_Path(state_dir), ignore_errors=True)
-
-    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-        # append-only: the batch arrives pre-assigned; existing rows
-        # carry over verbatim (cells never re-score)
-        return batch if existing is None else existing.unionByName(batch)
-
     for epoch, batch in enumerate([base_corpus, *deltas]):
-        assigned = similarity.ivf_assignment(batch, cents)
-        apply_bucketed_fold(
-            spark,
-            assigned,
-            state_dir,
-            epoch,
-            lambda: F.pmod(F.xxhash64(F.col("cid")), F.lit(n_buckets)).cast("int"),
-            fold,
-            n_buckets=n_buckets,
-        )
+        index_delta(spark, batch, cents, state_dir, epoch, n_buckets)
     return read_state(spark, state_dir)

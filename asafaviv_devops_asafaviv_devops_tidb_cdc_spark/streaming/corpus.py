@@ -11,8 +11,7 @@ the same survivors, and the streamed result hash-matches the BATCH
 oracle (q_dedup_exact's SQL).
 
 Durability follows streaming/merge.py: hash-bucketed copy-on-write
-state (per-bucket ``v<epoch>`` chains), overwrite-by-epoch idempotent,
-pruned to two.
+state committed by one manifest per epoch; a retried epoch is a no-op.
 
 Scale posture: state is one row per DISTINCT document (the deduped
 corpus itself — the thing you're building anyway); each batch costs
@@ -31,7 +30,34 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
-from .merge import N_STATE_BUCKETS, apply_bucketed_fold, read_state
+from .merge import apply_bucketed_fold, read_state
+
+
+def apply_dedup_batch(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    state_dir: str,
+    epoch_id: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> None:
+    """Fold one micro-batch of documents into the survivor state."""
+
+    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+        combined = batch if existing is None else existing.unionByName(batch)
+        # min-by-id per hash: commutative across batches, so arrival
+        # order cannot change the survivor set
+        w_cols = [c for c in combined.columns if c != "_h"]
+        return (
+            combined.groupBy("_h")
+            .agg(F.min(F.struct(id_col, *[c for c in w_cols if c != id_col])).alias("_s"))
+            .select("_h", "_s.*")
+        )
+
+    batch = batch_df.withColumn("_h", F.sha2(F.col(text_col), 256))
+    # bucket on the content hash — the fold's grouping key, so every row
+    # of one group lands in exactly one bucket
+    apply_bucketed_fold(spark, batch, state_dir, epoch_id, ["_h"], fold)
 
 
 def run_dedup_stream(
@@ -58,33 +84,11 @@ def run_dedup_stream(
         .parquet(source_dir)
     )
 
-    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-        combined = batch if existing is None else existing.unionByName(batch)
-        # min-by-id per hash: commutative across batches, so arrival
-        # order cannot change the survivor set
-        w_cols = [c for c in combined.columns if c != "_h"]
-        return (
-            combined.groupBy("_h")
-            .agg(F.min(F.struct(id_col, *[c for c in w_cols if c != id_col])).alias("_s"))
-            .select("_h", "_s.*")
-        )
-
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.withColumn("_h", F.sha2(F.col(text_col), 256))
-        apply_bucketed_fold(
-            spark,
-            batch,
-            state_dir,
-            epoch_id,
-            # bucket on the content hash — the fold's grouping key, so
-            # every row of one group lands in exactly one bucket
-            lambda: F.pmod(F.xxhash64(F.col("_h")), F.lit(N_STATE_BUCKETS)).cast(
-                "int"
-            ),
-            fold,
-        )
+        apply_dedup_batch(spark, batch_df, state_dir, epoch_id, text_col, id_col)
 
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    domain = ingest.stream_domain(spark, source_dir, max_files_per_trigger)
+    with scoped_shuffle_partitions(spark, domain):
         q = (
             stream.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)

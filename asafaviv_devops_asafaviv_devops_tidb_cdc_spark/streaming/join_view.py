@@ -13,11 +13,13 @@ Design — co-bucketed partial refresh, pruned end to end:
   merge key stays (table_name, user_id): bucketing is a pure function
   of a key subset, so a row's bucket never moves.
 - Per micro-batch: (1) MERGE the batch into the side-state table
-  (touched buckets only, the r4 copy-on-write fold); (2) refresh the
+  (touched buckets only, the copy-on-write fold); (2) refresh the
   view for exactly the user-buckets the batch touched — read THOSE
-  bucket files of the side state (a path-level prune, not a filter
-  over a full scan), re-join left x right within them, and rewrite
-  THOSE view buckets. Untouched view buckets keep byte-identity.
+  buckets of the side state's just-committed manifest (a path-level
+  prune, not a filter over a full scan), re-join left x right within
+  them, and rewrite THOSE view buckets. Untouched view buckets keep
+  byte-identity. Both tables commit through their own manifest, so a
+  reader of the view (``merge.read_state``) sees whole epochs only.
 - Correctness does not depend on batch boundaries: the side-state
   merge is total-ordered (late events converge), and each refresh
   recomputes its buckets from the post-merge state, so the final view
@@ -43,9 +45,8 @@ from ..plans.scale import scoped_shuffle_partitions
 from .merge import (
     apply_bucketed_fold,
     apply_merge_batch,
-    bucket_of,
-    latest_bucket_paths,
     live_state,
+    read_state,
     touched_buckets,
 )
 
@@ -92,13 +93,11 @@ def apply_join_view_batch(
     persisted ONCE and its touched-bucket set computed ONCE (one scalar
     driver action), shared by both folds — state and view bucket on the
     same key, so their touched sets are identical by construction."""
-    ub = lambda: bucket_of(["user_id"], n_buckets)  # noqa: E731
-
     own_cache = not batch_df.is_cached
     if own_cache:
         batch_df = batch_df.persist()
     try:
-        touched = touched_buckets(batch_df, ub)
+        touched = touched_buckets(batch_df, ["user_id"], n_buckets)
         if not touched:
             return
 
@@ -119,9 +118,7 @@ def apply_join_view_batch(
         # function of current side state, which is what makes
         # update/delete handling retraction-free.
         def refresh(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-            paths = latest_bucket_paths(state_dir)
-            touched_paths = [str(paths[b]) for b in touched if b in paths]
-            side = spark.read.parquet(*touched_paths)
+            side = read_state(spark, state_dir, buckets=touched)
             return _view_rows(side, left_table, right_table)
 
         apply_bucketed_fold(
@@ -129,7 +126,7 @@ def apply_join_view_batch(
             batch_df,
             view_dir,
             epoch_id,
-            ub,
+            ["user_id"],
             refresh,
             n_buckets=n_buckets,
             touched=touched,
@@ -161,7 +158,7 @@ def run_join_view_stream(
             if p.exists():
                 shutil.rmtree(p)
 
-    from .ingest import SOURCE_SCHEMA, STREAM_SHUFFLE_PARTITIONS
+    from .ingest import SOURCE_SCHEMA, stream_domain
 
     stream = (
         spark.readStream.schema(SOURCE_SCHEMA)
@@ -184,7 +181,8 @@ def run_join_view_stream(
             n_buckets=n_buckets,
         )
 
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+    domain = stream_domain(spark, source_dir, max_files_per_trigger)
+    with scoped_shuffle_partitions(spark, domain):
         q = (
             typed.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)
@@ -193,10 +191,3 @@ def run_join_view_stream(
         )
         q.awaitTermination()
 
-
-def read_join_view(spark: SparkSession, view_dir: str) -> DataFrame:
-    """The materialized view: union of each bucket's newest version."""
-    buckets = latest_bucket_paths(view_dir)
-    if not buckets:
-        raise FileNotFoundError(f"no view versions under {view_dir}")
-    return spark.read.parquet(*[str(p) for p in buckets.values()])

@@ -11,11 +11,14 @@ recomputes last-writer-wins over (existing state ∪ batch), so late or
 out-of-order batches converge to the same state.
 
 Scale posture: the state table is hash-partitioned into key buckets
-(``b0000/ .. bNNNN/``), each bucket with its own copy-on-write version
-chain. A micro-batch rewrites ONLY the buckets its keys hash into —
-per-batch I/O is bounded by the batch's key spread, not by total state
-size — exactly the key-partitioned upsert a transactional table format
-(Delta/Iceberg ``MERGE INTO``) productionizes. The semantics — last
+(``b0000/ .. bNNNN/``), each holding copy-on-write versions
+``v<epoch>/``, and one JSON manifest per epoch (``_manifest/``) names
+the version of every bucket that makes up the state. A micro-batch
+rewrites ONLY the buckets its keys hash into — per-batch I/O is bounded
+by the batch's key spread, not by total state size — and publishes
+them with one atomic manifest rename: exactly the key-partitioned
+upsert and commit log a transactional table format (Delta/Iceberg
+``MERGE INTO``) productionizes. The semantics — last
 writer wins, DELETE tombstones remove the key, tombstones expire after
 the source's replay horizon — are what the batch oracle checks.
 
@@ -28,6 +31,8 @@ The bucket layout does not depend on the domain.
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 from collections.abc import Sequence
 from pathlib import Path
@@ -101,85 +106,88 @@ def live_state(
     return state.filter(F.col(op_col) != delete_op)
 
 
-def _versions(state_dir: str) -> list[Path]:
-    base = Path(state_dir)
-    if not base.is_dir():
-        return []
-    return sorted(p for p in base.iterdir() if p.name.startswith("v"))
+def _manifest_path(state_dir: str, epoch_id: int) -> Path:
+    return Path(state_dir) / "_manifest" / f"{epoch_id:09d}.json"
 
 
-def latest_state_path(state_dir: str, before_epoch: int | None = None) -> str | None:
-    """Newest committed state version (copy-on-write dir layout).
-
-    ``before_epoch``: a foreachBatch maintainer MUST pass its own epoch
-    id here — on a micro-batch RETRY (crash between the state write and
-    the checkpoint commit) the retried epoch's own ``v<epoch>`` dir
-    already exists, and reading it would fold this batch's events in
-    twice. Restricting to versions strictly older than the current
-    epoch makes every maintainer retry-idempotent regardless of whether
-    its fold tolerates duplicates."""
-    vs = _versions(state_dir)
-    if before_epoch is not None:
-        cut = f"v{before_epoch:09d}"
-        vs = [p for p in vs if p.name < cut]
-    return str(vs[-1]) if vs else None
+def _manifests(state_dir: str) -> list[Path]:
+    """Committed manifests, oldest first (names are zero-padded epochs;
+    an uncommitted ``.tmp`` never matches)."""
+    mdir = Path(state_dir) / "_manifest"
+    return sorted(mdir.glob("*.json")) if mdir.is_dir() else []
 
 
-def _prune_versions(state_dir: str, keep: int = 2) -> None:
-    # keep >= 2: the previous version stays until the new one is fully
-    # written and read at least once — crash-safe without a manifest
-    for old in _versions(state_dir)[:-keep]:
-        shutil.rmtree(old, ignore_errors=True)
-
-
-def _bucket_dirs(state_dir: str) -> list[Path]:
-    base = Path(state_dir)
-    if not base.is_dir():
-        return []
-    return sorted(p for p in base.iterdir() if p.name.startswith("b") and p.is_dir())
-
-
-def latest_bucket_paths(
+def _load(
     state_dir: str, before_epoch: int | None = None
-) -> dict[int, str]:
-    """Newest committed version PER BUCKET. Buckets evolve
-    independently: a micro-batch only writes a new version for buckets
-    its keys hash into, so different buckets are generally at different
-    epochs. ``before_epoch`` has the same retry-idempotence contract as
-    ``latest_state_path``."""
-    out: dict[int, str] = {}
-    for bdir in _bucket_dirs(state_dir):
-        p = latest_state_path(str(bdir), before_epoch)
-        if p is not None:
-            out[int(bdir.name[1:])] = p
-    return out
+) -> tuple[StructType | None, dict[int, str]]:
+    """(schema, bucket -> version dir) of the newest manifest, or of the
+    newest one older than ``before_epoch``; (None, {}) if there is none."""
+    ms = _manifests(state_dir)
+    if before_epoch is not None:
+        ms = [m for m in ms if int(m.stem) < before_epoch]
+    if not ms:
+        return None, {}
+    m = json.loads(ms[-1].read_text())
+    versions = {int(b): v for b, v in m["buckets"].items()}
+    return StructType.fromJson(m["schema"]), versions
 
 
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the newest state (tombstones included — wrap with
-    ``live_state`` for the queryable view). Bucketed layout reads the
-    union of each bucket's newest version; the flat ``v*`` layout is
-    still accepted for single-chain maintainers (scd2/corpus)."""
-    buckets = latest_bucket_paths(state_dir)
-    if buckets:
-        return spark.read.parquet(*buckets.values())
-    latest = latest_state_path(state_dir)
-    if latest is None:
-        raise FileNotFoundError(f"no state versions under {state_dir}")
-    return spark.read.parquet(latest)
+def read_state(
+    spark: SparkSession, state_dir: str, buckets: Sequence[int] | None = None
+) -> DataFrame:
+    """The state the newest manifest commits (tombstones included —
+    wrap with ``live_state`` for the queryable view), read with the
+    schema the manifest records, so no inference job runs.
+    ``buckets`` restricts the read to those bucket ids."""
+    schema, versions = _load(state_dir)
+    if schema is None:
+        raise FileNotFoundError(f"no committed state under {state_dir}")
+    paths = [
+        str(Path(state_dir) / v)
+        for b, v in sorted(versions.items())
+        if buckets is None or b in buckets
+    ]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
-def touched_buckets(batch_df: DataFrame, bucket_expr) -> list[int]:
+def _commit(
+    state_dir: str, epoch_id: int, schema: StructType, versions: dict[int, str]
+) -> None:
+    """Publish an epoch: its manifest's rename is the one point at which
+    the whole epoch becomes visible. Then keep the two newest manifests
+    (the new state, and the one a reader that started before this
+    commit may still be reading) and delete every manifest and bucket
+    version neither of them lists."""
+    path = _manifest_path(state_dir, epoch_id)
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_suffix(".tmp")
+    buckets = {str(b): versions[b] for b in sorted(versions)}
+    tmp.write_text(json.dumps({"schema": schema.jsonValue(), "buckets": buckets}))
+    os.replace(tmp, path)
+    manifests = _manifests(state_dir)
+    live = {
+        v for m in manifests[-2:] for v in json.loads(m.read_text())["buckets"].values()
+    }
+    for m in manifests[:-2]:
+        m.unlink()
+    base = Path(state_dir)
+    for v in base.glob("b*/v*"):
+        if v.relative_to(base).as_posix() not in live:
+            shutil.rmtree(v, ignore_errors=True)
+
+
+def touched_buckets(
+    batch_df: DataFrame, keys: Sequence[str], n_buckets: int = N_STATE_BUCKETS
+) -> list[int]:
     """Bucket ids a batch's keys hash into: ONE scalar driver action,
     <= n_buckets ints. Maintainers that fold a batch into SEVERAL
     state tables on the same key (e.g. the join view's side state +
     view) compute this once and pass it to each fold instead of
     re-running the scan per table."""
-    return sorted(
-        batch_df.select(bucket_expr().alias("_b")).agg(F.collect_set("_b")).collect()[
-            0
-        ][0]
-    )
+    b = batch_df.select(bucket_of(keys, n_buckets).alias("_b"))
+    return sorted(b.agg(F.collect_set("_b")).collect()[0][0])
 
 
 def apply_bucketed_fold(
@@ -187,34 +195,33 @@ def apply_bucketed_fold(
     batch_df: DataFrame,
     state_dir: str,
     epoch_id: int,
-    bucket_expr,
+    keys: Sequence[str],
     fold,
     n_buckets: int = N_STATE_BUCKETS,
     touched: list[int] | None = None,
-    state_schema: StructType | None = None,
 ) -> None:
     """Generic partition-pruned state maintenance: fold one micro-batch
     into the hash-bucketed state table, reading and rewriting ONLY the
-    buckets the batch's keys hash into — every other bucket's files are
-    untouched (byte-identity pinned in tests/test_streaming.py).
+    buckets the batch's keys hash into (``bucket_of(keys, n_buckets)``)
+    — every other bucket's files are untouched (byte-identity pinned in
+    tests/test_streaming.py). ``fold(existing, batch)`` -> the new
+    state for the touched buckets (must be commutative/total-ordered so
+    late batches converge).
 
-    ``bucket_expr()`` -> Column assigning each row its bucket id
-    (must be a pure function of the row's key columns);
-    ``fold(existing, batch)`` -> the new state for the touched buckets
-    (must be commutative/total-ordered so late batches converge).
-    ``state_schema``: the schema the fold writes, when the caller knows
-    it; prior versions are then read with it instead of inferring it
-    (an inference job per batch, since every batch reads new version
-    directories).
-
-    Copy-on-write per bucket: read bucket version N, write version N+1
-    to a NEW directory (named by epoch — a micro-batch retry overwrites
-    its own version, idempotent via ``before_epoch``), then prune old
-    versions. The write job reads old parquet + batch directly
-    (different paths, no overwrite-while-read hazard); on a cluster an
-    executor loss just recomputes from those durable inputs. This is
-    the table-format recipe Delta/Iceberg productionize: immutable data
-    files + per-partition version pointers."""
+    Epoch contract: one JSON manifest per epoch (``_manifest/<epoch>
+    .json``: the state schema and bucket -> ``b<NNNN>/v<epoch>``) is
+    the only record of the state. A fold reads its buckets from the
+    newest older manifest, with its schema, writes their new versions
+    to new directories and renames its manifest into place, so an epoch
+    becomes visible once and whole. An epoch whose manifest exists is a
+    retry of a committed batch (Spark replays the same batch under the
+    same epoch) and is a no-op. A bucket that folds to zero rows leaves
+    the manifest. The write job reads old parquet + batch directly
+    (different paths, no overwrite-while-read hazard). This is the
+    table-format recipe Delta/Iceberg productionize: immutable data
+    files + a log of the files that make up each version."""
+    if _manifest_path(state_dir, epoch_id).exists():
+        return
     # persist only if the caller hasn't: a maintainer driving several
     # folds over one persisted batch keeps its cache alive across them
     own_cache = not batch_df.is_cached
@@ -222,18 +229,14 @@ def apply_bucketed_fold(
         batch_df = batch_df.persist()
     try:
         if touched is None:
-            touched = touched_buckets(batch_df, bucket_expr)
+            touched = touched_buckets(batch_df, keys, n_buckets)
         if not touched:
             return
-        prior = latest_bucket_paths(state_dir, before_epoch=epoch_id)
-        prior_paths = [prior[b] for b in touched if b in prior]
-        existing = None
-        if prior_paths:
-            reader = spark.read
-            if state_schema is not None:
-                reader = reader.schema(state_schema)
-            existing = reader.parquet(*prior_paths)
-        merged = fold(existing, batch_df).withColumn("_bucket", bucket_expr())
+        schema, versions = _load(state_dir, before_epoch=epoch_id)
+        prior = [str(Path(state_dir) / versions[b]) for b in touched if b in versions]
+        existing = spark.read.schema(schema).parquet(*prior) if prior else None
+        merged = fold(existing, batch_df)
+        schema = merged.schema
         # one write job for all touched buckets; the partition column is
         # recomputable from the keys so it is never stored in the rows.
         # repartition ON the bucket id first: each touched bucket lands
@@ -243,24 +246,22 @@ def apply_bucketed_fold(
         # its own conf and parquet-writer set-up
         domain = int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         stage = Path(state_dir) / f"_stage_v{epoch_id:09d}"
-        merged.repartition(min(len(touched), domain), "_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(str(stage))
-        empty = merged.drop("_bucket").limit(0)
+        merged.withColumn("_bucket", bucket_of(keys, n_buckets)).repartition(
+            min(len(touched), domain), "_bucket"
+        ).write.mode("overwrite").partitionBy("_bucket").parquet(str(stage))
         for b in touched:
-            dst = Path(state_dir) / f"b{b:04d}" / f"v{epoch_id:09d}"
-            if dst.exists():  # micro-batch retry: replace our own version
+            rel = f"b{b:04d}/v{epoch_id:09d}"
+            dst = Path(state_dir) / rel
+            if dst.exists():  # left by an attempt that died before its commit
                 shutil.rmtree(dst)
             src = stage / f"_bucket={b}"
             if src.is_dir():
                 dst.parent.mkdir(parents=True, exist_ok=True)
                 src.rename(dst)
-            else:
-                # bucket folded to zero rows (e.g. all tombstones
-                # expired): commit an empty version so the stale one
-                # isn't read
-                empty.write.mode("overwrite").parquet(str(dst))
-            _prune_versions(str(dst.parent), keep=2)
+                versions[b] = rel
+            else:  # the bucket folded to zero rows
+                versions.pop(b, None)
+        _commit(state_dir, epoch_id, schema, versions)
         shutil.rmtree(stage, ignore_errors=True)
     finally:
         if own_cache:
@@ -312,12 +313,10 @@ def apply_merge_batch(
         batch_df,
         state_dir,
         epoch_id,
-        lambda: bucket_of(bucket_keys or keys, n_buckets),
+        bucket_keys or keys,
         fold,
         n_buckets=n_buckets,
         touched=touched,
-        # the state rows are the batch's typed rows, tombstones included
-        state_schema=batch_df.schema,
     )
 
 

@@ -20,8 +20,8 @@ why the streamed result can hash-match the batch oracle. Serving is a
 tombstone filter over precomputed intervals, no window at read time.
 
 Durability follows streaming/merge.py: hash-bucketed copy-on-write
-state (per-bucket ``v<epoch>`` chains), overwrite-by-epoch idempotent
-on retry, pruned to the last two versions per bucket.
+state committed by one manifest per epoch, so an epoch is visible once
+and whole, and a retried epoch is a no-op.
 
 Scale posture: the recompute cost per batch is O(events of touched
 keys), not O(state), and the rewrite is partition-pruned
@@ -42,7 +42,7 @@ from ..operators import parse as P
 from ..operators.replay import scd2_versions
 from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
-from .merge import apply_bucketed_fold, bucket_of, read_state
+from .merge import apply_bucketed_fold, read_state
 
 SCD2_KEYS = ["table_name", "row_id"]
 _INTERVAL_COLS = ["valid_from_ms", "valid_to_ms", "is_current"]
@@ -89,20 +89,16 @@ def run_scd2_stream(
     typed = P.typed_rows(P.normalized_events(stream))
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        # apply_bucketed_fold handles retry idempotence (a retried epoch
-        # never reads its own partial v<epoch> write — the SCD2 fold is
-        # order-sensitive and folding the batch twice would double every
-        # touched key's version rows) and rewrites only touched buckets
+        # apply_bucketed_fold handles retry idempotence (a committed
+        # epoch is never folded again — the SCD2 fold is order-sensitive
+        # and folding the batch twice would double every touched key's
+        # version rows) and rewrites only touched buckets
         apply_bucketed_fold(
-            spark,
-            batch_df,
-            state_dir,
-            epoch_id,
-            lambda: bucket_of(SCD2_KEYS),
-            rebuild_state,
+            spark, batch_df, state_dir, epoch_id, SCD2_KEYS, rebuild_state
         )
 
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
+    domain = ingest.stream_domain(spark, source_dir, max_files_per_trigger)
+    with scoped_shuffle_partitions(spark, domain):
         q = (
             typed.writeStream.foreachBatch(apply)
             .option("checkpointLocation", checkpoint_dir)

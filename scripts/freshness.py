@@ -15,7 +15,7 @@ builds a FUNCTION-granular reference closure per query — the
 ``def q_*`` body, its decorator (the oracle SQL f-string), and every
 package function / class / module-level constant it transitively
 references — and compares each unit's source text between HEAD and the
-query's verdict-round marker commit (``round N: verdict/...``).
+commit that added the query's verdict file (``CORRECTNESS_rN.json``).
 
 ``tests/test_freshness.py`` turns the result into gate invariants;
 ``python scripts/freshness.py --write`` regenerates the window
@@ -77,25 +77,25 @@ def latest_verdicts() -> dict[str, tuple[int, str]]:
     return verdicts
 
 
-def round_commits() -> dict[int, str]:
-    """round -> sha of the driver's EARLIEST 'round N: verdict/...'
-    marker commit (the tree the gate actually checked, to round
-    granularity). git log is newest-first, so plain assignment keeps
-    the LAST marker seen per round = the oldest: if a round ever has
-    multiple markers, comparing against a later one would hide code
-    that landed between the gate's tree and that marker (the r8
-    advice finding) — the earliest marker minimizes that blind
-    spot."""
-    out = subprocess.run(
-        ["git", "log", "--format=%H %s"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout
+def round_commits(repo: Path = REPO) -> dict[int, str]:
+    """round -> sha of the commit that added ``CORRECTNESS_rN.json``:
+    the verdict file is the gate's own output, so the commit that
+    brought it in dates the verdict whatever its subject says. A file
+    re-added after a delete keeps its FIRST adding commit (git log is
+    newest-first, so the last sha seen per round is the oldest): that
+    is the tree nearest the one the gate checked, and comparing against
+    a later one would hide code that landed in between."""
     commits: dict[int, str] = {}
-    for line in out.splitlines():
-        sha, _, subject = line.partition(" ")
-        m = re.match(r"round (\d+): verdict", subject)
-        if m:
-            commits[int(m.group(1))] = sha
+    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        shas = subprocess.run(
+            ["git", "log", "--diff-filter=A", "--format=%H", "--", path.name],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.split()
+        if shas:
+            commits[int(m.group(1))] = shas[-1]
     return commits
 
 
@@ -323,12 +323,12 @@ def changed_queries(
         rnd = v[0]
         sha = commits.get(rnd)
         if sha is None:
-            # FAIL LOUD, not open: without the verdict round's marker
-            # commit the diff cannot be computed, and silently
+            # FAIL LOUD, not open: without the commit that added the
+            # verdict file the diff cannot be computed, and silently
             # reporting "unchanged" is exactly the stale-path escape
             # this module exists to prevent. Flagging forces the query
-            # into the next window until a marker exists.
-            out[qname] = [f"no-marker-commit-for-r{rnd}"]
+            # into the next window until the verdict is committed.
+            out[qname] = [f"uncommitted-verdict-r{rnd}"]
             continue
         if rnd not in old_trees:
             old_trees[rnd] = TreeIndex(sha)

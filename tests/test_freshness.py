@@ -144,3 +144,28 @@ def test_rotation_slots_take_oldest_verdicts(ledger):
         f"rotation slot inside the window (r{newest_inside}); reorder "
         f"registry._CHECK_FIRST oldest-first"
     )
+
+
+def test_verdict_is_dated_by_the_commit_that_added_its_file(tmp_path):
+    """A verdict is dated by the commit that brought its
+    CORRECTNESS_rN.json in, whatever that commit's subject says; a
+    later commit that touches the file does not move the date."""
+    import subprocess
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    git("init", "-q")
+    (tmp_path / "README.md").write_text("x\n")
+    git("add", "-A")
+    git("commit", "-qm", "initial")
+    (tmp_path / "CORRECTNESS_r17.json").write_text("{}\n")
+    git("add", "-A")
+    git("commit", "-qm", "Record the gate's results")
+    added = git("rev-parse", "HEAD")
+    (tmp_path / "CORRECTNESS_r17.json").write_text('{"q": {}}\n')
+    git("commit", "-qam", "Touch the verdict file")
+    assert freshness.round_commits(tmp_path) == {17: added}

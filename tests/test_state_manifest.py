@@ -1,0 +1,236 @@
+"""The epoch contract of the bucketed fold state
+(``streaming/merge.py::apply_bucketed_fold``): one manifest per epoch
+is the only record of the state, so an epoch becomes visible once and
+whole, a committed epoch replayed is a no-op, and reading the state
+never infers a schema.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import time
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import load_table
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources.ann_store import index_delta
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+    corpus,
+    ingest,
+    join_view as JV,
+    merge,
+    scd2,
+)
+from tests.conftest import SF_SMOKE
+from tests.test_streaming import _jv_batch, _typed_batch
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _files(state_dir):
+    """{relative path: (bytes, mtime_ns)} for every file of a state."""
+    return {
+        str(p.relative_to(state_dir)): (p.read_bytes(), p.stat().st_mtime_ns)
+        for p in Path(state_dir).rglob("*")
+        if p.is_file()
+    }
+
+
+def _manifest(state_dir, epoch):
+    return json.loads((Path(state_dir) / "_manifest" / f"{epoch:09d}.json").read_text())
+
+
+def _epoch1(spark):
+    return _typed_batch(
+        spark,
+        [("t", u, "insert", u * 10, f"2024-01-01 00:00:{u:02d}", u) for u in range(12)],
+    )
+
+
+def _epoch2(spark):
+    # updates for every key: the batch touches most of the 8 buckets
+    return _typed_batch(
+        spark,
+        [("t", u, "update", u * 100, f"2024-01-01 00:01:{u:02d}", 100 + u) for u in range(12)],
+    )
+
+
+def test_failed_commit_never_shows_a_torn_epoch(spark, tmp_path, monkeypatch):
+    """A fold that dies between its bucket renames leaves the previous
+    epoch as the whole visible state; its retry equals a clean fold."""
+    state, clean = str(tmp_path / "state"), str(tmp_path / "clean")
+    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=1, n_buckets=8)
+    want1 = _rows(merge.read_state(spark, state))
+    b2 = _epoch2(spark).select(merge.bucket_of(n_buckets=8).alias("b")).distinct()
+    assert b2.count() >= 2
+
+    calls = {"rename": 0, "replace": 0}
+    real_rename, real_replace = Path.rename, os.replace
+
+    def rename(self, target):
+        calls["rename"] += 1
+        if calls["rename"] == 2:
+            raise OSError("injected: crash between two renames")
+        return real_rename(self, target)
+
+    def replace(src, dst):
+        calls["replace"] += 1
+        if calls["replace"] == 2:
+            raise OSError("injected: crash at the second replace")
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(Path, "rename", rename)
+        m.setattr(os, "replace", replace)
+        with pytest.raises(OSError, match="injected"):
+            merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
+    assert _rows(merge.read_state(spark, state)) == want1
+
+    merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
+    merge.apply_merge_batch(spark, _epoch1(spark), clean, epoch_id=1, n_buckets=8)
+    merge.apply_merge_batch(spark, _epoch2(spark), clean, epoch_id=2, n_buckets=8)
+    assert _rows(merge.read_state(spark, state)) == _rows(merge.read_state(spark, clean))
+
+
+def test_committed_epoch_replayed_is_a_noop(spark, tmp_path):
+    """Spark replays a batch under the same epoch after a crash between
+    the fold and its checkpoint commit. Once the epoch's manifest is
+    committed, the replay changes no file, even with other rows."""
+    state = str(tmp_path / "state")
+    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=1, n_buckets=8)
+    merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
+    files, rows = _files(state), _rows(merge.read_state(spark, state))
+    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=2, n_buckets=8)
+    assert _files(state) == files
+    assert _rows(merge.read_state(spark, state)) == rows
+
+
+def test_versions_outside_the_last_two_manifests_are_pruned(spark, tmp_path):
+    state = tmp_path / "state"
+    for e in (1, 2, 3):
+        batch = _typed_batch(spark, [("t", 1, "update", e, f"2024-01-01 00:00:0{e}", e)])
+        merge.apply_merge_batch(spark, batch, str(state), epoch_id=e, n_buckets=1)
+    assert sorted(p.name for p in (state / "_manifest").iterdir()) == [
+        "000000002.json",
+        "000000003.json",
+    ]
+    assert sorted(p.name for p in (state / "b0000").iterdir()) == [
+        "v000000002",
+        "v000000003",
+    ]
+    assert _manifest(state, 3)["buckets"] == {"0": "b0000/v000000003"}
+
+
+def test_bucket_that_folds_to_zero_rows_leaves_the_manifest(spark, tmp_path):
+    """Deleting a user's only purchase empties that user's view bucket:
+    the bucket is dropped from the view's manifest, no empty version is
+    written, and an all-empty state reads as an empty frame."""
+    state, view = str(tmp_path / "state"), str(tmp_path / "view")
+    b1 = _jv_batch(
+        spark,
+        [
+            ("click", 3, "insert", 103, 1.0, "2024-01-01 00:00:00", 0),
+            ("purchase", 3, "insert", 203, 2.0, "2024-01-01 00:00:01", 1),
+        ],
+    )
+    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
+    b = merge.touched_buckets(b1, ["user_id"], JV.VIEW_N_BUCKETS)[0]
+    assert _manifest(view, 1)["buckets"] == {str(b): f"b{b:04d}/v000000001"}
+
+    b2 = _jv_batch(spark, [("purchase", 3, "delete", 203, 2.0, "2024-01-01 00:01:00", 2)])
+    JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
+    assert _manifest(view, 2)["buckets"] == {}
+    assert not (Path(view) / f"b{b:04d}" / "v000000002").exists()
+    empty = merge.read_state(spark, view)
+    assert empty.count() == 0
+    assert empty.columns == ["user_id", "left_row_id", "left_value_cents",
+                             "right_row_id", "right_value_cents"]
+
+
+def test_read_state_without_a_manifest_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        merge.read_state(spark, str(tmp_path / "nothing"))
+
+
+def _jobs(spark, fn):
+    """Number of Spark jobs ``fn()`` starts on this thread."""
+    sc = spark.sparkContext
+    group = f"state_manifest_{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _halves(df, col):
+    return [df.filter(F.col(col) % 2 == 0), df.filter(F.col(col) % 2 == 1)]
+
+
+def _maintainer(spark, name, tmp_path):
+    """(fold(batch, epoch), the folded state's dir, two batches)."""
+    state = str(tmp_path / name)
+    if name in ("merge", "scd2", "join_view"):
+        src = ingest.write_envelope_files(spark, SF_SMOKE, str(tmp_path / "src"), None, n_files=2)
+        raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(src)
+        batches = _halves(P.typed_rows(P.normalized_events(raw)), "offset")
+    if name == "merge":
+        return lambda b, e: merge.apply_merge_batch(spark, b, state, e), state, batches
+    if name == "scd2":
+        return (
+            lambda b, e: merge.apply_bucketed_fold(
+                spark, b, state, e, scd2.SCD2_KEYS, scd2.rebuild_state
+            ),
+            state,
+            batches,
+        )
+    if name == "join_view":
+        view = str(tmp_path / "view")
+        sides = F.col("table_name").isin(JV.LEFT_TABLE, JV.RIGHT_TABLE)
+        return (
+            lambda b, e: JV.apply_join_view_batch(spark, b.filter(sides), state, view, e),
+            view,
+            batches,
+        )
+    if name == "corpus":
+        docs = load_table(spark, SF_SMOKE, "documents")
+        return (
+            lambda b, e: corpus.apply_dedup_batch(spark, b, state, e),
+            state,
+            _halves(docs, "doc_id"),
+        )
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cents = emb.filter(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    )
+    return (
+        lambda b, e: index_delta(spark, b, cents, state, e),
+        state,
+        _halves(emb, "vec_id"),
+    )
+
+
+# Jobs one warm fold of this setup started before the manifest, when the
+# fold inferred the schema of its prior buckets (merge alone passed it)
+# and wrote an empty version for each bucket that folded to zero rows.
+_JOBS_BEFORE_MANIFEST = {"merge": 6, "scd2": 11, "join_view": 12, "corpus": 7, "ann": 9}
+
+
+@pytest.mark.parametrize("name", sorted(_JOBS_BEFORE_MANIFEST))
+def test_fold_and_read_start_no_inference_job(spark, tmp_path, name):
+    fold, state, (b1, b2) = _maintainer(spark, name, tmp_path)
+    fold(b1, 1)
+    warm = _jobs(spark, lambda: fold(b2, 2))
+    assert _jobs(spark, lambda: merge.read_state(spark, state)) == 0
+    if name == "merge":
+        assert warm <= _JOBS_BEFORE_MANIFEST[name]
+    else:
+        assert warm < _JOBS_BEFORE_MANIFEST[name]
+    assert merge.read_state(spark, state).count() > 0

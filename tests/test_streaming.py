@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import load_table
-from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import alerts
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import alerts, merge
 
 from tests.conftest import SF_SMOKE
 
@@ -149,28 +149,6 @@ def test_sustained_alert_stream_matches_batch(spark):
     assert stream == batch
 
 
-def test_state_maintainers_are_retry_idempotent(spark):
-    """A retried micro-batch must not fold its events twice: with the
-    epoch's own version dir already on disk, latest_state_path(...,
-    before_epoch=epoch) must return the PREVIOUS version."""
-    import tempfile
-    from pathlib import Path
-
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming.merge import (
-        latest_state_path,
-    )
-
-    base = Path(tempfile.mkdtemp()) / "state"
-    for e in (0, 1, 2):
-        (base / f"v{e:09d}").mkdir(parents=True)
-    # normal flow: epoch 3 reads newest
-    assert latest_state_path(str(base)).endswith("v000000002")
-    # retry of epoch 2: its own dir exists but must be skipped
-    assert latest_state_path(str(base), before_epoch=2).endswith("v000000001")
-    # retry of epoch 0: nothing older -> fresh start
-    assert latest_state_path(str(base), before_epoch=0) is None
-
-
 from pathlib import Path  # noqa: E402  (used by the bucket-layout tests)
 
 
@@ -196,7 +174,7 @@ def _bucket_files(state_dir):
     """{relative file path: bytes} for every committed bucket file."""
     out = {}
     for p in Path(state_dir).rglob("*"):
-        if p.is_file() and "_stage" not in str(p):
+        if p.is_file() and "_stage" not in str(p) and "_manifest" not in str(p):
             out[str(p.relative_to(state_dir))] = p.read_bytes()
     return out
 
@@ -666,7 +644,7 @@ def test_join_view_maintained_through_updates_and_deletes(spark):
         + [("purchase", u, "insert", 200 + u, 50.0 + u, f"2024-01-01 00:00:{u:02d}", 50 + u) for u in (1, 3, 5)],
     )
     JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
-    v1 = {r["user_id"]: r for r in JV.read_join_view(spark, view).collect()}
+    v1 = {r["user_id"]: r for r in merge.read_state(spark, view).collect()}
     assert set(v1) == {1, 3, 5}
     assert v1[3]["left_value_cents"] == 1300 and v1[3]["right_value_cents"] == 5300
 
@@ -681,7 +659,7 @@ def test_join_view_maintained_through_updates_and_deletes(spark):
         ],
     )
     JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
-    v2 = {r["user_id"]: r for r in JV.read_join_view(spark, view).collect()}
+    v2 = {r["user_id"]: r for r in merge.read_state(spark, view).collect()}
     assert set(v2) == {0, 1, 3}, "delete must drop the pair, insert must add it"
     assert v2[3]["left_value_cents"] == 9900, "update must propagate into the view"
     assert v2[0]["right_value_cents"] == 7700
@@ -719,7 +697,7 @@ def test_join_view_refresh_rewrites_only_touched_buckets(spark):
     untouched_a = {p: c for p, c in after.items() if not p.startswith(f"b{b7:04d}/")}
     assert untouched_b == untouched_a
     assert any(p.startswith(f"b{b7:04d}/v000000002") for p in after)
-    got = {r["user_id"]: r["left_value_cents"] for r in JV.read_join_view(spark, view).collect()}
+    got = {r["user_id"]: r["left_value_cents"] for r in merge.read_state(spark, view).collect()}
     assert got[7] == 900 and got[0] == 100
 
 
@@ -744,7 +722,7 @@ def test_join_view_invariant_to_batch_boundaries(spark):
         for i, chunk in enumerate(chunks, start=1):
             JV.apply_join_view_batch(spark, _jv_batch(spark, chunk), state, view, epoch_id=i)
         return sorted(
-            tuple(r) for r in JV.read_join_view(spark, view).collect()
+            tuple(r) for r in merge.read_state(spark, view).collect()
         )
 
     one = run([rows])
@@ -800,9 +778,9 @@ def test_join_view_retry_idempotent(spark):
         + [("purchase", u, "insert", 50 + u, 9.0, f"2024-01-01 00:00:{u:02d}", 50 + u) for u in (0, 2)],
     )
     JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
-    first = sorted(tuple(r) for r in JV.read_join_view(spark, view).collect())
+    first = sorted(tuple(r) for r in merge.read_state(spark, view).collect())
     JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)  # retry
-    again = sorted(tuple(r) for r in JV.read_join_view(spark, view).collect())
+    again = sorted(tuple(r) for r in merge.read_state(spark, view).collect())
     assert first == again and len(first) == 2
 
 
@@ -884,7 +862,7 @@ def test_join_view_bounded_io_under_zipf_skew(spark):
             r["right_row_id"],
             r["right_value_cents"],
         )
-        for r in JV.read_join_view(spark, view).collect()
+        for r in merge.read_state(spark, view).collect()
     }
     assert got == expected
 
