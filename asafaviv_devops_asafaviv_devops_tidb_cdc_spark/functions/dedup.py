@@ -28,7 +28,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..plans.scale import scoped_shuffle_partitions
+from ..plans.scale import narrow_partitions, scoped_shuffle_partitions
 from .text import shingles_from_tokens
 
 N_HASHES = 4  # single-row bands (legacy per-salt signature helper)
@@ -441,21 +441,6 @@ def reliable_checkpoint(df: DataFrame, checkpoint_dir: str | None = None) -> Dat
         df.unpersist()
 
 
-def _cc_partitions(spark, n_edges: int) -> int:
-    """Shuffle domain for the label-propagation rounds: the label/edge
-    frames are NARROW (two longs), so at small graph sizes the
-    per-round cost is task + checkpoint overhead, not data — the same
-    finding as queries/advanced_ops._doubling_partitions (paying the
-    session default for a few-thousand-edge graph made each round
-    ~2x slower, measured at sf0.1 in r15). Size partitions from the
-    materialized edge count (~50k rows each, floor 2, never above the
-    session setting): at 10^10 edges the formula asks for far more
-    than the session cap and the cap governs — the loop scales by
-    configuration, not rewrite."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(2, min(cur, n_edges // 50_000 + 2))
-
-
 def neardup_clusters(
     pairs: DataFrame, max_iter: int = 15, checkpoint_dir: str | None = None
 ) -> DataFrame:
@@ -482,7 +467,7 @@ def neardup_clusters(
     label = node, computed here by one aggregation over the
     checkpointed edges instead of a distinct + a full join round;
     (2) the rounds run under a scale-adaptive shuffle domain sized
-    from the materialized edge count (``_cc_partitions``) — narrow
+    from the materialized edge count (``scale.narrow_partitions``) — narrow
     label frames at the session's partition count paid pure task
     overhead per round. Web-graph build: 6.7 s -> 3.0 s at sf0.1;
     fixpoint (and therefore every consumer hash) unchanged — the
@@ -497,7 +482,7 @@ def neardup_clusters(
     )
     spark = edges.sparkSession
     n_edges = edges.count()  # cheap: reads the checkpoint files
-    with scoped_shuffle_partitions(spark, _cc_partitions(spark, n_edges)):
+    with scoped_shuffle_partitions(spark, narrow_partitions(spark, n_edges)):
         labels = reliable_checkpoint(
             edges.groupBy(F.col("src").alias("node")).agg(
                 F.least(F.first("src"), F.min("dst")).alias("label")

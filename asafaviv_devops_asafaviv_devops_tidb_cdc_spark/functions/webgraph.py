@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.scale import scoped_shuffle_partitions
-from .dedup import _cc_partitions, reliable_checkpoint
+from ..plans.scale import narrow_partitions, scoped_shuffle_partitions
+from .dedup import reliable_checkpoint
 
 
 def scoped_graph_result(spark, n_rows: int, build) -> DataFrame:
@@ -42,11 +42,11 @@ def scoped_graph_result(spark, n_rows: int, build) -> DataFrame:
     through the same reliable-checkpoint discipline every iterative
     loop in the repo already uses, and the caller gets the
     materialized frame. The domain comes from the measured row count
-    (functions/dedup._cc_partitions: ~50k rows per partition, floor
+    (plans/scale.py::narrow_partitions: ~50k rows per partition, floor
     2, never above the session setting) — at real host cardinality
     the session cap governs and the scope is a no-op, so this scales
     by configuration, not rewrite."""
-    with scoped_shuffle_partitions(spark, _cc_partitions(spark, n_rows)):
+    with scoped_shuffle_partitions(spark, narrow_partitions(spark, n_rows)):
         return reliable_checkpoint(build(), None)
 
 

@@ -21,13 +21,17 @@ Sizing rules implemented below:
            merge with AQE skew splitting.
 - stream:  `maxOffsetsPerTrigger` sized so one micro-batch's rows fit
            the same 200 MiB/partition envelope across Kafka partitions.
-           A consumer's shuffle domain is sized from that micro-batch
-           bound (`stream_partitions`): ~200 MiB per partition, capped
+           Every file-source consumer's shuffle domain is sized from
+           its micro-batch bound (`stream_partitions`, applied by
+           streaming/ingest.py::drain): ~200 MiB per partition, capped
            at cores, with NO floor at cores. Each partition of a
            stateful stream is one state store paying a load and a
            commit on every trigger, and each one is a task; a KB batch
            gets one partition. The first run's count is stored in the
            checkpoint's offset log and holds for every later trigger.
+- narrow:  iterative loops over narrow frames (label propagation,
+           pointer doubling) take ~50k rows per partition, floor 2,
+           never above the session setting (`narrow_partitions`).
 
 Every "set ``shuffle.partitions``, restore later" scope goes through
 `scoped_shuffle_partitions`.
@@ -58,6 +62,18 @@ def stream_partitions(batch_bytes: int, cores: int) -> int:
     ``batch_bytes``. Composes with ``max_offsets_per_trigger``: a batch
     of ``cores x 200 MiB`` yields ``cores`` partitions."""
     return int(min(max(batch_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1, 1), cores))
+
+
+def narrow_partitions(spark, rows: int) -> int:
+    """Shuffle domain for an iterative loop over NARROW frames (a few
+    longs per row: label propagation, pointer doubling). At small sizes
+    each round's cost is task and checkpoint overhead, not data —
+    paying the session default made the CC and doubling rounds 2-4x
+    slower at sf0.1 (r15). ~50k rows per partition, floor 2, never
+    above the session setting: at real cardinality the session cap
+    governs and the loop scales by configuration, not rewrite."""
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(2, min(cur, rows // 50_000 + 2))
 
 
 @contextmanager
@@ -166,7 +182,7 @@ def cosine_blocks(corpus_bytes: int, executor_task_memory_bytes: int) -> int:
     return int(max(need, 2))
 
 
-def streaming_conf(state_bytes: int, total_cores: int) -> dict[str, str]:
+def streaming_conf() -> dict[str, str]:
     """Spark conf for the stateful-streaming layer at scale.
 
     The default (HDFS-backed, in-memory map) state store holds every
@@ -176,17 +192,9 @@ def streaming_conf(state_bytes: int, total_cores: int) -> dict[str, str]:
     checkpointing ships per-batch deltas instead of full SST snapshots
     — commit cost tracks batch size, not state size (the same
     bounded-by-touched-data property the bucketed parquet fold gives
-    the foreachBatch maintainers). Shuffle partitions are sized DOWN
-    to the state volume: each partition is one state store instance
-    paying a per-batch commit, so thousands of near-empty stores are
-    pure fixed overhead (the CDC consumer's stream domain,
-    ``stream_partitions``, follows the same rule)."""
-    parts = int(
-        min(
-            max(state_bytes // TARGET_SHUFFLE_PARTITION_BYTES + 1, total_cores),
-            MAX_SHUFFLE_PARTITIONS,
-        )
-    )
+    the foreachBatch maintainers). The shuffle domain, and with it the
+    number of state stores, is not set here: each stream sizes it from
+    its micro-batch bound (``stream_partitions``)."""
     return {
         "spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state."
@@ -195,7 +203,6 @@ def streaming_conf(state_bytes: int, total_cores: int) -> dict[str, str]:
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
             "true"
         ),
-        "spark.sql.shuffle.partitions": str(parts),
     }
 
 

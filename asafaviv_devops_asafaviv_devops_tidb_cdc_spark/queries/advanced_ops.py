@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import kmv as KMV, similarity
-from ..plans.scale import scoped_shuffle_partitions
+from ..plans.scale import narrow_partitions, scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 from ._money import CENTS_SQL, cents
@@ -1866,20 +1866,6 @@ def _tree_parent(node: str) -> F.Column:
     )
 
 
-def _doubling_partitions(spark: SparkSession, approx_rows: int) -> int:
-    """Shuffle domain for the log-round doubling loops. The pointer /
-    pair frames are O(n log n) NARROW rows, so at test scale the
-    per-round cost is task+checkpoint overhead, not data — paying the
-    session default (32) for a 15k-node forest made each round ~4x
-    slower than an ~row-count-sized domain (measured at sf0.1). Size
-    partitions from the expected frame rows (~50k rows each, floor 2,
-    never above the session setting): at 10^9 nodes the same formula
-    asks for 20k+ partitions and the session cap governs — the loop
-    scales by configuration, not rewrite (plans/scale.py discipline)."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(2, min(cur, approx_rows // 50_000 + 2))
-
-
 _HIERARCHY_DEPTH_ORACLE = f"""
 WITH RECURSIVE chain(node, cur, depth) AS (
   SELECT CAST(c_custkey AS BIGINT), CAST(c_custkey AS BIGINT), CAST(0 AS BIGINT)
@@ -1954,9 +1940,7 @@ def q_hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _anc0.cast("long").alias("anc"),
         _d0.cast("long").alias("d"),
     )
-    with scoped_shuffle_partitions(
-        spark, _doubling_partitions(spark, n_nodes)
-    ):
+    with scoped_shuffle_partitions(spark, narrow_partitions(spark, n_nodes)):
         f = reliable_checkpoint(f, None)
         for _ in range(64):
             if f.filter(F.col("anc") != 0).limit(1).count() == 0:
@@ -2047,7 +2031,7 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = pairs.unionByName(leg)
     pairs = pairs.distinct()
     with scoped_shuffle_partitions(
-        spark, _doubling_partitions(spark, nodes.count() * 8)
+        spark, narrow_partitions(spark, nodes.count() * 8)
     ):  # closure frame is ~n x avg_depth rows, not n
         pairs = reliable_checkpoint(pairs, None)
         prev_n = pairs.count()

@@ -14,7 +14,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.scale import scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 from ..streaming import alerts, ingest, merge
@@ -162,19 +161,16 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"winagg_{abs(hash(sf_dir)) % 10_000_000}"
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            spark.readStream.schema(events.schema)
-            .parquet(src)
-            .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        src,
+        events.schema,
+        lambda s: s.groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+    )
     return spark.sql(f"SELECT w.start AS window_start, event_type, n FROM {name}")
 
 
@@ -202,28 +198,24 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical. Oracle-backed: the streaming session set must equal the
     batch gaps-and-islands sessionization exactly."""
     events = load_table(spark, sf_dir, "events")
-    stream = spark.readStream.schema(events.schema).parquet(
-        _events_replay_src(spark, sf_dir)
-    )
     name = f"sessions_{abs(hash(sf_dir)) % 10_000_000}"
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.groupBy(
-                F.session_window("ts", "30 minutes").alias("w"), "user_id"
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-                .cast("long")
-                .alias("total_value_cents"),
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    ingest.drain(
+        spark,
+        _events_replay_src(spark, sf_dir),
+        events.schema,
+        lambda s: s.groupBy(
+            F.session_window("ts", "30 minutes").alias("w"), "user_id"
         )
-        q.awaitTermination()
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
+            .cast("long")
+            .alias("total_value_cents"),
+        )
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+    )
     return spark.sql(
         f"SELECT user_id, w.start AS session_start, n_events, "
         f"total_value_cents FROM {name}"
@@ -262,34 +254,33 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda dest: events.write.mode("overwrite").parquet(dest),
     )
     base = ingest.resumable_workdir(sf_dir, "events", "ssjoin", "ssjoin-v2")
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "12 hours")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "12 hours")
-        .select(F.col("user_id").alias("user_id"), F.col("ts").alias("purchase_ts"))
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 6 HOURS"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-    )
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
+
+    def sink(stream: DataFrame):
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .withWatermark("ts", "12 hours")
+            .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
+        )
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "12 hours")
+            .select(F.col("user_id").alias("user_id"), F.col("ts").alias("purchase_ts"))
+        )
+        joined = clicks.join(
+            purchases,
+            (F.col("c_user") == F.col("user_id"))
+            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 6 HOURS"))
+            & (F.col("click_ts") <= F.col("purchase_ts")),
+        )
+        return (
             joined.select("user_id", "click_ts", "purchase_ts")
             .writeStream.format("parquet")
             .option("path", str(base / "sink"))
             .option("checkpointLocation", str(base / "ckpt"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+
+    ingest.drain(spark, src, events.schema, sink)
     return spark.read.parquet(str(base / "sink")).select(
         "user_id", "click_ts", "purchase_ts"
     )
@@ -345,17 +336,15 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda dest: events.write.mode("overwrite").parquet(dest),
     )
     base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v2")
-    stream_src = spark.readStream.schema(events.schema).parquet(src)
-    out = alerts.sustained_alerts_stream(stream_src)
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", str(base / "sink"))
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        src,
+        events.schema,
+        lambda s: alerts.sustained_alerts_stream(s)
+        .writeStream.format("parquet")
+        .option("path", str(base / "sink"))
+        .option("checkpointLocation", str(base / "ckpt")),
+    )
     sink = spark.read.parquet(str(base / "sink"))
     return sink.select(
         F.timestamp_millis(F.col("window_ms")).alias("window_start"),
@@ -645,22 +634,17 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     src = _events_replay_src(spark, sf_dir)
     name = f"topk_{abs(hash(sf_dir)) % 10_000_000}"
-    with scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        src,
+        events.schema,
+        lambda s: s.groupBy("user_id")
+        .agg(F.count("*").alias("n_events"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
+        max_files=1,
+    )
     return (
         spark.table(name)
         .orderBy(F.desc("n_events"), "user_id")
@@ -735,23 +719,18 @@ def q_stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_interleaved,
     )
     name = f"latedrops_{abs(hash(sf_dir)) % 10_000_000}"
-    with scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .withWatermark("ts", "5 minutes")
-            .groupBy(F.window("ts", "1 minute").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        str(src),
+        events.schema,
+        lambda s: s.withWatermark("ts", "5 minutes")
+        .groupBy(F.window("ts", "1 minute").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+        max_files=1,
+    )
     return spark.table(name).select(
         F.col("w.start").alias("window_start"),
         F.col("n").cast("long").alias("n"),

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import sampling as SK, text as TX
 from ..functions.dedup import _with_shingles
-from ..plans.scale import scoped_shuffle_partitions
 from ..registry import ORACLES, register
 from ..sources import load_table
 
@@ -816,29 +815,20 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     partials_dir = base / "partials"
     ckpt = base / "ckpt"
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+    # the SAME staging + census expressions as the batch writer
+    # (functions/sampling.py) — the twins cannot drift apart
+    fold = D.epoch_partials(
+        str(partials_dir), lambda b: SK.shard_census(SK.with_shard_cols(b))
     )
-
-    def fold(batch_df, epoch_id):
-        # the SAME staging + census expressions as the batch writer
-        # (functions/sampling.py) — the twins cannot drift apart
-        (
-            SK.shard_census(SK.with_shard_cols(batch_df))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    I.drain(
+        spark,
+        src,
+        "doc_id bigint, text string",
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", str(ckpt)
+        ),
+        max_files=2,
+    )
     D.compact_with(spark, str(partials_dir), SK.fold_manifests)
     return SK.manifest_select(
         D.folded_with(spark, str(partials_dir), SK.fold_manifests)

@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import text as _TX
-from ..plans.scale import scoped_shuffle_partitions
 from ..registry import register
 from ..sources import load_table
 
@@ -465,30 +464,19 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     partials_dir = base / "partials"
     ckpt = base / "ckpt"
-    stream = (
-        spark.readStream.schema("src string, dst string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+    # per-epoch partial = the batch's distinct pairs: idempotent on
+    # replay (overwrite), tiny (O(new host-pairs)), and folds by the
+    # same DISTINCT the serving read applies
+    fold_batch = D.epoch_partials(str(partials_dir), lambda b: b.distinct())
+    I.drain(
+        spark,
+        src,
+        "src string, dst string",
+        lambda s: s.writeStream.foreachBatch(fold_batch).option(
+            "checkpointLocation", str(ckpt)
+        ),
+        max_files=2,
     )
-
-    def fold_batch(batch_df, epoch_id):
-        # per-epoch partial = the batch's distinct pairs: idempotent
-        # on replay (overwrite), tiny (O(new host-pairs)), and folds
-        # by the same DISTINCT the serving read applies
-        (
-            batch_df.distinct()
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, I.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     def fold_pairs(df: DataFrame) -> DataFrame:
         return df.select("src", "dst").distinct()

@@ -65,15 +65,12 @@ def get_spark(app_name: str = "tidb_cdc_spark", shuffle_partitions: int | None =
     # SPARK_GRAFT_STATE_PROVIDER=rocksdb runs every stateful streaming
     # query under the RocksDB provider + changelog checkpointing — the
     # conf a real deployment pins — so the whole stream sweep can be
-    # hash-proven under it, not just unit-pinned. (shuffle.partitions
-    # stays the caller's: the sweep measures provider parity, and the
-    # stream paths already scope their own partition count.)
+    # hash-proven under it, not just unit-pinned.
     if os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "").lower() == "rocksdb":
         from .plans.scale import streaming_conf
 
-        for k, v in streaming_conf(1 << 30, 8).items():
-            if k != "spark.sql.shuffle.partitions":
-                builder = builder.config(k, v)
+        for k, v in streaming_conf().items():
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

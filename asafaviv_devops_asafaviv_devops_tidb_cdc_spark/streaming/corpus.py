@@ -28,7 +28,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 from .merge import apply_bucketed_fold, read_state
 
@@ -78,24 +77,18 @@ def run_dedup_stream(
         for d in (state_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         apply_dedup_batch(spark, batch_df, state_dir, epoch_id, text_col, id_col)
 
-    domain = ingest.stream_domain(spark, source_dir, max_files_per_trigger)
-    with scoped_shuffle_partitions(spark, domain):
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        schema,
+        lambda s: s.writeStream.foreachBatch(apply).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
+    )
 
 
 def survivors(spark: SparkSession, state_dir: str) -> DataFrame:

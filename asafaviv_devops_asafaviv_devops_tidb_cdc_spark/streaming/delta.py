@@ -29,10 +29,23 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
 from ..operators.replay import retraction_totals
-from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 
 _BASE_PREFIX = "base_v"
+
+
+def epoch_partials(partials_dir: str, per_batch):
+    """The ``foreachBatch`` function that folds each micro-batch with
+    ``per_batch`` (DataFrame -> DataFrame) and writes the result to
+    ``<partials_dir>/epoch=<id>`` with overwrite, so a retried batch
+    rewrites its own partial instead of double-counting."""
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        per_batch(batch_df).write.mode("overwrite").parquet(
+            f"{partials_dir}/epoch={epoch_id}"
+        )
+
+    return fold
 
 
 def run_delta_stream(
@@ -53,25 +66,19 @@ def run_delta_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(ingest.SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
+    fold = epoch_partials(
+        partials_dir, lambda b: retraction_totals(P.typed_rows(b))
     )
-    normalized = P.normalized_events(stream)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        part = retraction_totals(P.typed_rows(batch_df))
-        part.write.mode("overwrite").parquet(f"{partials_dir}/epoch={epoch_id}")
-
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            normalized.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        ingest.SOURCE_SCHEMA,
+        lambda s: P.normalized_events(s)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files_per_trigger,
+        "json",
+    )
 
 
 def _base_version(partials_dir: str) -> tuple[int, Path | None]:

@@ -27,8 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dq import _ROW_KINDS, _row_predicate
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def _check_batch(batch: DataFrame, checks: list[dict]) -> DataFrame:
@@ -67,35 +66,22 @@ def run_dq_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    fold = D.epoch_partials(partials_dir, lambda b: _check_batch(b, checks))
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        _check_batch(batch_df, checks).write.mode("overwrite").parquet(
-            f"{partials_dir}/epoch={epoch_id}"
-        )
-
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["check_id"], ["violations"])
 
 
 def folded_violations(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: per-check violation totals over the live partials
     (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["check_id"], ["violations"])

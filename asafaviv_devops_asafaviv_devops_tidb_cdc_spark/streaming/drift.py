@@ -22,8 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def run_drift_stream(
@@ -40,14 +39,9 @@ def run_drift_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+    def counts(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.expr("unix_millis(ts) div 86400000")
                 .cast("long")
@@ -56,28 +50,24 @@ def run_drift_stream(
             )
             .groupBy("day_num", "event_type")
             .agg(F.count("*").cast("long").alias("o"))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
         )
 
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    fold = D.epoch_partials(partials_dir, counts)
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
+    )
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["day_num", "event_type"], ["o"])
 
 
 def folded_counts(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the (day_num, event_type, o) obs frame summed
     across all epochs — feed to queries.profiling.drift_census."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["day_num", "event_type"], ["o"])

@@ -31,8 +31,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..plans.scale import scoped_shuffle_partitions
-
 FUNNEL_TYPES = ("view", "click", "purchase")
 
 _STATE_SCHEMA = StructType(
@@ -149,23 +147,18 @@ def run_funnel_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` (one file per micro-batch) through the
     stateful funnel into a memory sink; return the emissions frame."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS
+    from . import ingest
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    ingest.drain(
+        spark,
+        src_dir,
+        schema,
+        lambda s: funnel_stream(s)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+        max_files=1,
     )
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            funnel_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.table(name)
 
 
@@ -202,30 +195,17 @@ def run_funnel_resumable(
     runs after each drain under the last-per-user monoid, bounding
     serving at O(users) regardless of how many drains accumulated
     (an append-only emission sink would grow O(users x drains))."""
-    from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS
+    from . import delta as D, ingest
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    fold = D.epoch_partials(partials_dir, last_per_user)
+    ingest.drain(
+        spark,
+        src_dir,
+        schema,
+        lambda s: funnel_stream(s)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files=1,
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            last_per_user(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            funnel_stream(stream)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     D.compact_with(spark, partials_dir, last_per_user)
     return D.folded_with(spark, partials_dir, last_per_user)

@@ -18,21 +18,24 @@ Scale posture: the chain is stateless map stages except dedupe (keyed
 state on the event key plus ``ts``, so the watermark evicts it) — scan
 parallelism is Kafka partitions (file splits here); ``maxOffsetsPerTrigger``
 (``maxFilesPerTrigger`` here) bounds micro-batch size (backpressure the
-reference lacks). The shuffle domain, and with it the number of
-dedupe state stores and sink write tasks, is sized from that bound
-once, on the first run (``stream_domain`` ->
-plans/scale.py::stream_partitions): a KB-scale consumer runs one
+reference lacks). Every file-source stream in the package starts
+through :func:`drain`, which takes that bound once and derives both
+the read limit and the shuffle domain from it (``stream_domain`` ->
+plans/scale.py::stream_partitions): the number of state stores and
+sink write tasks follows the data, so a KB-scale consumer runs one
 partition instead of a core-sized domain of near-empty stores, and
-the checkpoint pins the count for every later trigger.
+the checkpoint pins the first run's count for every later trigger.
 """
 
 from __future__ import annotations
 
 import shutil
 import tempfile
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators import parse as P
 from ..plans.scale import scoped_shuffle_partitions, stream_partitions
@@ -222,9 +225,6 @@ def envelope_files(
     )
 
 
-STREAM_SHUFFLE_PARTITIONS = 8
-
-
 def stream_workdir(sf_dir: str, tag: str) -> Path:
     """Scratch dir for a streaming query's src/state/ckpt/sink. Prefers
     tmpfs: checkpoint/state/sink writes fsync, and on a real disk those
@@ -272,13 +272,16 @@ def resumable_workdir(sf_dir: str, table: str, tag: str, version: str) -> Path:
 INGEST_MAX_FILES_PER_TRIGGER = 8
 
 
-def stream_domain(spark: SparkSession, source_dir: str, max_files: int) -> int:
+def stream_domain(
+    spark: SparkSession, source_dir: str, max_files: int | None
+) -> int:
     """Shuffle partitions for a file-source consumer over ``source_dir``,
     sized from its micro-batch bound: the sum of the ``max_files``
-    largest visible files (hidden and ``_``-prefixed names are skipped,
-    as the file source skips them). Only the first run's value matters:
-    Spark stores ``spark.sql.shuffle.partitions`` in the offset log and
-    every later trigger of the checkpoint reuses it."""
+    largest visible files, or of every file when the read is unbounded
+    (hidden and ``_``-prefixed names are skipped, as the file source
+    skips them). Only the first run's value matters: Spark stores
+    ``spark.sql.shuffle.partitions`` in the offset log and every later
+    trigger of the checkpoint reuses it."""
     base = Path(source_dir)
     sizes = sorted(
         (
@@ -293,11 +296,47 @@ def stream_domain(spark: SparkSession, source_dir: str, max_files: int) -> int:
     )
 
 
+def _file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    max_files: int | None = None,
+    fmt: str = "parquet",
+) -> DataFrame:
+    """File-source stream over ``source_dir``; ``max_files`` bounds each
+    micro-batch (``maxFilesPerTrigger``), ``None`` drains the backlog in
+    one batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.format(fmt).load(source_dir)
+
+
+def drain(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    sink: Callable[[DataFrame], DataStreamWriter],
+    max_files: int | None = None,
+    fmt: str = "parquet",
+) -> None:
+    """Drain the file backlog at ``source_dir`` and stop: the one
+    ``Trigger.AvailableNow`` run every file-source consumer goes
+    through. ``sink`` turns the source stream into an unstarted
+    writer (sink, checkpoint, output mode, query name). The read bound
+    ``max_files`` also sizes the shuffle domain (``stream_domain``), so
+    the two cannot drift apart; a resumed checkpoint keeps the count
+    its offset log recorded."""
+    writer = sink(_file_stream(spark, source_dir, schema, max_files, fmt))
+    with scoped_shuffle_partitions(
+        spark, stream_domain(spark, source_dir, max_files)
+    ):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def read_envelope_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", INGEST_MAX_FILES_PER_TRIGGER)
-        .json(source_dir)
+    return _file_stream(
+        spark, source_dir, SOURCE_SCHEMA, INGEST_MAX_FILES_PER_TRIGGER, "json"
     )
 
 
@@ -320,34 +359,34 @@ def run_ingest(
             p = Path(d)
             if p.exists():
                 shutil.rmtree(p)
-    # no round-robin repartition: the file source already reads each
-    # file (and each maxSplitBytes slice of a large one) as its own task
-    stream = read_envelope_stream(spark, source_dir)
-    normalized = P.normalized_events(stream)
-    if dedupe:
-        # ``ts`` in the key lets the watermark evict state; a replayed
-        # duplicate carries the same ``es``, so it still matches
-        normalized = normalized.withWatermark("ts", "1 hour").dropDuplicates(
-            ["partition", "offset", "rownum", "ts"]
-        )
-    # (table, date) partitioning: per-table readers prune at the scan
-    # and retention/compaction work in day units — the sink design the
-    # reference approximates with per-table ES indices + 5 s refresh.
-    # Repartition ON the partition keys first: without it every write
-    # task opens a file in every (table, date) dir — thousands of tiny
-    # files and a 4x slower sink (measured); with it, one file per
-    # partition dir per batch.
-    normalized = normalized.withColumn("event_date", F.to_date("ts")).repartition(
-        "table_name", "event_date"
-    )
-    domain = stream_domain(spark, source_dir, INGEST_MAX_FILES_PER_TRIGGER)
-    with scoped_shuffle_partitions(spark, domain):
-        q = (
+
+    def sink(stream: DataFrame) -> DataStreamWriter:
+        # no round-robin repartition: the file source already reads each
+        # file (and each maxSplitBytes slice of a large one) as its own task
+        normalized = P.normalized_events(stream)
+        if dedupe:
+            # ``ts`` in the key lets the watermark evict state; a replayed
+            # duplicate carries the same ``es``, so it still matches
+            normalized = normalized.withWatermark("ts", "1 hour").dropDuplicates(
+                ["partition", "offset", "rownum", "ts"]
+            )
+        # (table, date) partitioning: per-table readers prune at the scan
+        # and retention/compaction work in day units — the sink design the
+        # reference approximates with per-table ES indices + 5 s refresh.
+        # Repartition ON the partition keys first: without it every write
+        # task opens a file in every (table, date) dir — thousands of tiny
+        # files and a 4x slower sink (measured); with it, one file per
+        # partition dir per batch.
+        normalized = normalized.withColumn(
+            "event_date", F.to_date("ts")
+        ).repartition("table_name", "event_date")
+        return (
             normalized.writeStream.format("parquet")
             .option("path", sink_dir)
             .option("checkpointLocation", checkpoint_dir)
             .partitionBy("table_name", "event_date")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+
+    drain(
+        spark, source_dir, SOURCE_SCHEMA, sink, INGEST_MAX_FILES_PER_TRIGGER, "json"
+    )

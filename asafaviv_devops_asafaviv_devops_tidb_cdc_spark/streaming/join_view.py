@@ -41,7 +41,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
-from ..plans.scale import scoped_shuffle_partitions
 from .merge import (
     apply_bucketed_fold,
     apply_merge_batch,
@@ -158,16 +157,7 @@ def run_join_view_stream(
             if p.exists():
                 shutil.rmtree(p)
 
-    from .ingest import SOURCE_SCHEMA, stream_domain
-
-    stream = (
-        spark.readStream.schema(SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-    typed = P.typed_rows(P.normalized_events(stream)).filter(
-        F.col("table_name").isin(left_table, right_table)
-    )
+    from . import ingest
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         apply_join_view_batch(
@@ -181,13 +171,15 @@ def run_join_view_stream(
             n_buckets=n_buckets,
         )
 
-    domain = stream_domain(spark, source_dir, max_files_per_trigger)
-    with scoped_shuffle_partitions(spark, domain):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        ingest.SOURCE_SCHEMA,
+        lambda s: P.typed_rows(P.normalized_events(s))
+        .filter(F.col("table_name").isin(left_table, right_table))
+        .writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files_per_trigger,
+        "json",
+    )
 

@@ -24,8 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import kmv as KMV
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def _hashed(df: DataFrame) -> DataFrame:
@@ -54,36 +53,23 @@ def run_kmv_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    fold = D.epoch_partials(
+        partials_dir,
+        lambda b: KMV.bottom_k(_hashed(b)).select("member_set", "hv"),
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            KMV.bottom_k(_hashed(batch_df))
-            .select("member_set", "hv")
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
+    )
     # bound the serving read at O(groups x K): bottom-K is a
     # refold-idempotent monoid, so the shared crash-safe compaction
     # folds the epoch partials into one base sketch (no-op when no
     # new epochs landed)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, _base_sketch)
 
 
@@ -100,8 +86,6 @@ def folded_sketch(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the exact global per-group bottom-K sketch over
     the live partials (base + epochs past it; distinct absorbs epoch
     overlap — the fold is idempotent)."""
-    from . import delta as D
-
     parts = D.folded_with(
         spark,
         partials_dir,

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructType
 
 from ..operators import parse as P
-from ..plans.scale import scoped_shuffle_partitions
 
 STATE_KEYS = ["table_name", "user_id"]
 STATE_ORDER = ["ts", "offset", "rownum"]
@@ -345,15 +344,7 @@ def run_replay_stream(
             if p.exists():
                 shutil.rmtree(p)
 
-    from .ingest import SOURCE_SCHEMA, stream_domain
-
-    # no round-robin repartition: each file is its own task
-    stream = (
-        spark.readStream.schema(SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-    typed = P.typed_rows(P.normalized_events(stream))
+    from . import ingest
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         apply_merge_batch(
@@ -365,12 +356,14 @@ def run_replay_stream(
             tombstone_horizon_ms=tombstone_horizon_ms,
         )
 
-    domain = stream_domain(spark, source_dir, max_files_per_trigger)
-    with scoped_shuffle_partitions(spark, domain):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # no round-robin repartition: each file is its own task
+    ingest.drain(
+        spark,
+        source_dir,
+        ingest.SOURCE_SCHEMA,
+        lambda s: P.typed_rows(P.normalized_events(s))
+        .writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files_per_trigger,
+        "json",
+    )

@@ -23,8 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import pii as P
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def run_pii_stream(
@@ -44,38 +43,25 @@ def run_pii_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    fold = D.epoch_partials(
+        partials_dir, lambda b: P.rollup(P.doc_metrics(P.with_planted_pii(b)))
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            P.rollup(P.doc_metrics(P.with_planted_pii(batch_df)))
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
+    )
     # bound the serving read at O(sources): the census is a pure sum
     # monoid, so the shared crash-safe compaction folds the epoch
     # partials into one base (no-op when no new epochs landed)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, P.fold_rollups)
 
 
 def folded_census(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the exact per-source census summed over the live
     partials (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_with(spark, partials_dir, P.fold_rollups)

@@ -25,8 +25,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.sampling import SAMPLE_K, SAMPLE_SALT, salted_key
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def _keyed(df: DataFrame) -> DataFrame:
@@ -50,33 +49,20 @@ def run_sample_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    fold = D.epoch_partials(
+        partials_dir, lambda b: _keyed(b).orderBy("h").limit(SAMPLE_K)
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            _keyed(batch_df)
-            .orderBy("h")
-            .limit(SAMPLE_K)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, ingest.STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
+    )
     # bottom-k is a refold-idempotent monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_with(spark, partials_dir, _bottom_k)
 
 
@@ -88,6 +74,4 @@ def _bottom_k(parts: DataFrame) -> DataFrame:
 def folded_sample(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: exact global bottom-k over the live partials
     (base + epochs past it)."""
-    from . import delta as D
-
     return D.folded_with(spark, partials_dir, _bottom_k)

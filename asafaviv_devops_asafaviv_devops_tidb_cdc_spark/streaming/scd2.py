@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
 from ..operators.replay import scd2_versions
-from ..plans.scale import scoped_shuffle_partitions
 from . import ingest
 from .merge import apply_bucketed_fold, read_state
 
@@ -81,13 +80,6 @@ def run_scd2_stream(
         for d in (state_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(ingest.SOURCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-    typed = P.typed_rows(P.normalized_events(stream))
-
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         # apply_bucketed_fold handles retry idempotence (a committed
         # epoch is never folded again — the SCD2 fold is order-sensitive
@@ -97,15 +89,16 @@ def run_scd2_stream(
             spark, batch_df, state_dir, epoch_id, SCD2_KEYS, rebuild_state
         )
 
-    domain = ingest.stream_domain(spark, source_dir, max_files_per_trigger)
-    with scoped_shuffle_partitions(spark, domain):
-        q = (
-            typed.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        source_dir,
+        ingest.SOURCE_SCHEMA,
+        lambda s: P.typed_rows(P.normalized_events(s))
+        .writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files_per_trigger,
+        "json",
+    )
 
 
 def history(spark: SparkSession, state_dir: str) -> DataFrame:

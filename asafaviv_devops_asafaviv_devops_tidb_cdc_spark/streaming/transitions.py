@@ -44,8 +44,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..plans.scale import scoped_shuffle_partitions
-
 _STATE_SCHEMA = StructType(
     [
         StructField("t_us", ArrayType(LongType())),
@@ -103,13 +101,8 @@ def _update(key, pdfs, state):
         )
 
 
-def _delta_stream(spark: SparkSession, src_dir: str, schema: str):
+def _delta_stream(stream: DataFrame) -> DataFrame:
     """The keyed stateful delta pipeline (shared by both sinks)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     keyed = stream.select(
         "user_id",
         "event_id",
@@ -126,18 +119,18 @@ def run_transitions_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` through the stateful census into a memory
     sink; return the emitted delta frame (test harness path)."""
-    from .ingest import STREAM_SHUFFLE_PARTITIONS
+    from . import ingest
 
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            _delta_stream(spark, src_dir, schema)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ingest.drain(
+        spark,
+        src_dir,
+        schema,
+        lambda s: _delta_stream(s)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+        max_files=1,
+    )
     return spark.table(name)
 
 
@@ -162,25 +155,20 @@ def run_transitions_resumable(
     (streaming/delta.py::compact_generic, called here after each
     drain — a no-op unless new epochs landed) bound it at O(grid)
     regardless of stream length. Returns the served count frame."""
-    from . import delta as D
-    from .ingest import STREAM_SHUFFLE_PARTITIONS
+    from . import delta as D, ingest
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            D.fold_generic(batch_df, _GRID_COLS, ["delta"])
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
-        q = (
-            _delta_stream(spark, src_dir, schema)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    fold = D.epoch_partials(
+        partials_dir, lambda b: D.fold_generic(b, _GRID_COLS, ["delta"])
+    )
+    ingest.drain(
+        spark,
+        src_dir,
+        schema,
+        lambda s: _delta_stream(s)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir),
+        max_files=1,
+    )
     D.compact_generic(spark, partials_dir, _GRID_COLS, ["delta"])
     counts = D.folded_generic(spark, partials_dir, _GRID_COLS, ["delta"])
     return counts.select(

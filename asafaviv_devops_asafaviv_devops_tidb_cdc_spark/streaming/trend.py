@@ -20,8 +20,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.scale import scoped_shuffle_partitions
-from . import ingest
+from . import delta as D, ingest
 
 
 def run_trend_stream(
@@ -38,43 +37,26 @@ def run_trend_stream(
     if fresh:
         for d in (partials_dir, checkpoint_dir):
             shutil.rmtree(Path(d), ignore_errors=True)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    # the SAME aggregation as the batch query (one definition — the
+    # twin contract cannot drift)
+    from ..queries.advanced_ops import _daily_obs
+
+    fold = D.epoch_partials(partials_dir, _daily_obs)
+    ingest.drain(
+        spark,
+        source_dir,
+        source_schema,
+        lambda s: s.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        max_files_per_trigger,
     )
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        # the SAME aggregation as the batch query (one definition —
-        # the twin contract cannot drift)
-        from ..queries.advanced_ops import _daily_obs
-
-        (
-            _daily_obs(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{partials_dir}/epoch={epoch_id}")
-        )
-
-    with scoped_shuffle_partitions(
-        spark, ingest.STREAM_SHUFFLE_PARTITIONS
-    ):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # the fold is a pure integer-sum monoid: compact the epoch
     # partials into one crash-safe base (no-op when nothing new)
-    from . import delta as D
-
     D.compact_generic(spark, partials_dir, ["event_type", "day_num"], ["y"])
 
 
 def folded_daily(spark: SparkSession, partials_dir: str) -> DataFrame:
     """Serving view: the (event_type, day_num, y) daily frame summed
     across epochs — feed to queries.advanced_ops.trend_from_daily."""
-    from . import delta as D
-
     return D.folded_generic(spark, partials_dir, ["event_type", "day_num"], ["y"])

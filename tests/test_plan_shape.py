@@ -156,11 +156,11 @@ def test_scale_conf_formulas():
     assert scale.ivf_cells(1_000_000, 4) == 2000
     assert scale.ivf_cells(0) == 1
     assert scale.ivf_cells(10**13, 16) == 100_000
-    # RocksDB streaming conf: partitions track state volume with a
-    # cores floor
-    sconf = scale.streaming_conf(100 * scale.GIB, 64)
+    # RocksDB streaming conf: the provider only; each stream sizes its
+    # own shuffle domain from its micro-batch bound
+    sconf = scale.streaming_conf()
     assert "RocksDB" in sconf["spark.sql.streaming.stateStore.providerClass"]
-    assert int(sconf["spark.sql.shuffle.partitions"]) == 513
+    assert "spark.sql.shuffle.partitions" not in sconf
     # stream domain: sized from the micro-batch bound, no floor at cores
     assert scale.stream_partitions(0, 32) == 1
     assert scale.stream_partitions(300 * 1024, 32) == 1  # a KB batch

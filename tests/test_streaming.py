@@ -287,37 +287,126 @@ def test_kb_drain_pins_one_partition_in_both_consumer_checkpoints(spark, tmp_pat
     assert _merge_equals_batch_replay(spark, src, tmp_path / "state")
 
 
-def test_merge_checkpoint_from_eight_partitions_resumes(spark, tmp_path, monkeypatch):
-    """A merge checkpoint created under the old fixed 8-partition
-    domain keeps its count when resumed by the data-sized code (Spark
-    reads it back from the offset log), folds the new files in, and
-    still equals the batch last-writer-wins replay."""
+_TRANSITIONS_SCHEMA = "user_id bigint, event_id bigint, ts timestamp, event_type string"
+
+
+@pytest.mark.parametrize("consumer", ["merge", "transitions"])
+def test_checkpoint_from_eight_partitions_resumes(
+    spark, tmp_path, monkeypatch, consumer
+):
+    """A checkpoint created under the old fixed 8-partition domain keeps
+    its count when resumed by the data-sized code (Spark reads it back
+    from the offset log), folds the new files in, and serves the same
+    answer: the batch last-writer-wins replay for the merge fold, a
+    one-shot drain of the whole source for the stateful transitions
+    census."""
     import shutil
 
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest, merge
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        ingest,
+        merge,
+        transitions as TR,
+    )
 
-    landing = Path(ingest.envelope_files(spark, SF_SMOKE, None, n_files=4))
+    if consumer == "merge":
+        landing = Path(ingest.envelope_files(spark, SF_SMOKE, None, n_files=4))
+
+        def run(src, base):
+            merge.run_replay_stream(
+                spark, str(src), str(base / "state"), str(base / "ckpt"),
+                max_files_per_trigger=1, fresh=False,
+            )
+
+        def served(src, base):
+            return _merge_equals_batch_replay(spark, src, base / "state")
+    else:
+        landing = tmp_path / "landing"
+        load_table(spark, SF_SMOKE, "events").select(
+            "user_id", "event_id", "ts", "event_type"
+        ).repartition(4).write.parquet(str(landing))
+
+        def run(src, base):
+            return sorted(
+                tuple(r)
+                for r in TR.run_transitions_resumable(
+                    spark, str(src), _TRANSITIONS_SCHEMA,
+                    str(base / "partials"), str(base / "ckpt"),
+                ).collect()
+            )
+
+        want = run(landing, tmp_path / "one_shot")
+
+        def served(src, base):
+            return run(src, base) == want and len(want) > 0
+
     files = sorted(p for p in landing.iterdir() if p.name.startswith("part-"))
+    assert len(files) == 4
     src = tmp_path / "src"
     src.mkdir()
     for p in files[:2]:
         shutil.copy(p, src / p.name)
     with monkeypatch.context() as m:
         m.setattr(ingest, "stream_domain", lambda *a: 8)
-        merge.run_replay_stream(
-            spark, str(src), str(tmp_path / "state"), str(tmp_path / "ckpt"),
-            max_files_per_trigger=1,
-        )
+        run(src, tmp_path)
     assert _offset_log_partitions(tmp_path / "ckpt") == {"8"}
     for p in files[2:]:
         shutil.copy(p, src / p.name)
-    merge.run_replay_stream(
-        spark, str(src), str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, fresh=False,
-    )
+    run(src, tmp_path)
     assert _offset_log_partitions(tmp_path / "ckpt") == {"8"}
     assert len(list((tmp_path / "ckpt" / "commits").glob("[0-9]*"))) == 4
-    assert _merge_equals_batch_replay(spark, src, tmp_path / "state")
+    assert served(src, tmp_path)
+
+
+@pytest.mark.parametrize("consumer", ["dq", "funnel", "stream_stream_join"])
+def test_moved_drains_record_the_data_sized_domain(
+    spark, tmp_path, monkeypatch, consumer
+):
+    """Every file-source stream starts through ``ingest.drain``, which
+    sizes the shuffle domain from the stream's read bound: over a KB
+    source a stateless foreachBatch fold, a stateful memory-sink stream
+    and the two-sided stream-stream join each record ONE partition in
+    their offset log instead of a fixed count."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        dq,
+        funnel as FU,
+        ingest,
+    )
+
+    events = load_table(spark, SF_SMOKE, "events")
+    src = str(tmp_path / "src")
+    events.repartition(3).write.parquet(src)
+    if consumer == "dq":
+        from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.profiling import (
+            STREAM_DQ_CHECKS,
+        )
+
+        schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in events.schema.fields
+        )
+        dq.run_dq_stream(
+            spark, src, schema, STREAM_DQ_CHECKS,
+            str(tmp_path / "partials"), str(tmp_path / "ckpt"),
+        )
+        ckpt = tmp_path / "ckpt"
+    elif consumer == "funnel":
+        # a memory sink has no checkpoint option; the session default
+        # root places it at <root>/<query name>
+        key = "spark.sql.streaming.checkpointLocation"
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, str(tmp_path / "mem"))
+        try:
+            FU.run_funnel_stream(spark, src, events.schema, "funnel_domain")
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+        ckpt = tmp_path / "mem" / "funnel_domain"
+    else:
+        monkeypatch.setattr(ingest, "resumable_workdir", lambda *a: tmp_path / "ssjoin")
+        assert registry.QUERIES["q_stream_stream_join"](spark, SF_SMOKE).count() > 0
+        ckpt = tmp_path / "ssjoin" / "ckpt"
+    assert _offset_log_partitions(ckpt) == {"1"}
 
 
 def test_ingest_dedupe_state_is_evicted_by_watermark(spark, tmp_path):
@@ -524,7 +613,7 @@ def test_stateful_stream_under_rocksdb_provider(spark, tmp_path):
     one. Runs a real availableNow dropDuplicates stream twice."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.plans import scale
 
-    conf = scale.streaming_conf(1 << 30, 8)
+    conf = scale.streaming_conf()
     assert "RocksDBStateStoreProvider" in conf[
         "spark.sql.streaming.stateStore.providerClass"
     ]
