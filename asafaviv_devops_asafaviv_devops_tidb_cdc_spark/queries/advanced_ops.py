@@ -170,6 +170,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming would need unbounded state, which is precisely what the
     sketch exists to avoid)."""
     from ..sources.artifact import input_fingerprint, materialized_path
+    from ..streaming import delta as D
     from ..streaming import kmv as SKMV
     from ..streaming.ingest import resumable_workdir
 
@@ -184,15 +185,16 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "lineitem", "kmv-src-v1"),
         lambda dest: li.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    SKMV.run_kmv_stream(
+    sketch = D.fold_stream(
         spark,
         src,
-        "l_returnflag string, l_partkey bigint",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+        li.schema,
+        base,
+        lambda b: KMV.bottom_k(SKMV._hashed(b)).select("member_set", "hv"),
+        SKMV._base_sketch,
     )
-    folded = SKMV.folded_sketch(spark, str(base / "partials"))
+    # re-rank: the served base carries no rank column
+    folded = KMV.bottom_k(sketch)
     return _kmv_report(_kmv_union_and_summarize(folded), _kmv_exact_side(li))
 
 
@@ -342,34 +344,28 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W15b — gap-fill STREAM TWIN: the hourly (type, hr) cent-sums
     are SUM-DECOMPOSABLE, so each micro-batch folds one tiny
-    per-(type, hr) partial (idempotent ``epoch=<id>`` — the
-    streaming/drift.py recipe) and serving sums the partials into the
+    per-(type, hr) partial (idempotent ``epoch=<id>`` —
+    streaming/delta.py::fold_stream) and serving sums the partials into the
     identical obs frame, then runs the SAME gapfill_series — the
     streamed densified dashboard hash-matches the batch SQL oracle
     exactly. This is how a live gap-filled chart actually deploys:
     the fill recomputes over the bounded (type x hour) grid each
     refresh, while per-epoch state tracks the key grid, not event
     volume."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import gapfill as SG
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
 
-    base = resumable_workdir(sf_dir, "events", "gapfill", "gapfill-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # share the normalized landing with the drift/DQ monitors
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    base = I.resumable_workdir(sf_dir, "events", "gapfill", "gapfill-v2")
+    # the SAME aggregation as the batch query folds each micro-batch
+    obs = D.fold_stream(
+        spark,
+        I.events_files(spark, sf_dir),
+        load_table(spark, sf_dir, "events").schema,
+        base,
+        _hourly_obs,
+        lambda df: D.fold_generic(df, ["event_type", "hr"], ["cents"]),
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    SG.run_gapfill_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return gapfill_series(SG.folded_obs(spark, str(base / "partials")))
+    return gapfill_series(obs)
 
 
 # the stream twin folds to the identical obs frame, so the batch SQL
@@ -1205,6 +1201,24 @@ def _daily_obs(ev: DataFrame) -> DataFrame:
     )
 
 
+def _streamed_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, day_num, y) daily frame maintained by one
+    resumable stream: each micro-batch folds the SAME _daily_obs as
+    the batch query, and the partials sum. q_stream_trend and
+    q_stream_changepoint serve from this one state."""
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
+
+    return D.fold_stream(
+        spark,
+        I.events_files(spark, sf_dir),
+        load_table(spark, sf_dir, "events").schema,
+        I.resumable_workdir(sf_dir, "events", "trend", "trend-v2"),
+        _daily_obs,
+        lambda df: D.fold_generic(df, ["event_type", "day_num"], ["y"]),
+    )
+
+
 def trend_from_daily(obs: DataFrame) -> DataFrame:
     """The OLS assembly over a (event_type, day_num, y) daily frame —
     shared verbatim by the batch query and the streaming twin (whose
@@ -1468,32 +1482,15 @@ def q_dbscan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30b — OLS trend STREAM TWIN: daily cent-sums are
     SUM-DECOMPOSABLE, so each micro-batch folds one tiny per-(type,
-    day) partial (idempotent ``epoch=<id>`` — the streaming/drift.py
-    recipe) and serving sums the partials into the identical daily
-    frame, then runs the SAME trend_from_daily — the live trend
-    detector hash-matches the batch SQL oracle exactly. The regression
+    day) partial (idempotent ``epoch=<id>`` —
+    streaming/delta.py::fold_stream) and serving sums the partials
+    into the identical daily frame, then runs the SAME trend_from_daily
+    — the live trend detector hash-matches the batch SQL oracle
+    exactly. The regression
     recomputes over the bounded type x day grid each refresh; state
     tracks the key grid, not event volume — continuously-updated
     'error revenue rising' alerting at 100 TB/day."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import trend as STR
-    from ..streaming.ingest import resumable_workdir
-
-    base = resumable_workdir(sf_dir, "events", "trend", "trend-v2")
-    ev = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
-    )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    STR.run_trend_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return trend_from_daily(STR.folded_daily(spark, str(base / "partials")))
+    return trend_from_daily(_streamed_daily(spark, sf_dir))
 
 
 # the stream twin folds to the identical daily frame, so the batch SQL
@@ -1676,7 +1673,7 @@ def changepoint_from_daily(d: DataFrame) -> DataFrame:
 def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X32b — changepoint STREAM VIEW over the SAME folded state as
     the trend twin: one streaming fold (the per-(type, day) cent-sum
-    partials of streaming/trend.py) serves MULTIPLE analytics views —
+    partials of _streamed_daily) serves MULTIPLE analytics views —
     the OLS trend (q_stream_trend) and this level-shift scan — the
     'one state, many dashboards' economics that make folded partials
     the right streaming substrate (adding a view costs zero extra
@@ -1685,26 +1682,8 @@ def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-decomposability), then the SAME changepoint_from_daily as the
     batch query, so the streamed answer hash-matches the batch SQL
     oracle."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import trend as STR
-    from ..streaming.ingest import resumable_workdir
-
-    base = resumable_workdir(sf_dir, "events", "trend", "trend-v2")
-    ev = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
-    )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    STR.run_trend_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
     daily = (
-        STR.folded_daily(spark, str(base / "partials"))
+        _streamed_daily(spark, sf_dir)
         .groupBy("day_num")
         .agg(F.sum("y").cast("long").alias("y"))
     )

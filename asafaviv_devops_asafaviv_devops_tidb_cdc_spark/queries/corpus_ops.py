@@ -494,9 +494,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state read (bump the version on any scd2-fold change)
     base = I.resumable_workdir(sf_dir, "events", "scd2", "scd2-v2")
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
-    S.run_scd2_stream(
-        spark, src, str(base / "state"), str(base / "ckpt"), fresh=False
-    )
+    S.run_scd2_stream(spark, src, str(base / "state"), str(base / "ckpt"))
     return S.history(spark, str(base / "state")).select(
         "table_name",
         "row_id",
@@ -623,18 +621,40 @@ def q_stream_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same SQL text as q_delta_agg) and the driver hash-compares the
     STREAMED result against the BATCH oracle — true stream/batch
     equivalence, checked end to end."""
-    from ..streaming import delta as D
     from ..streaming import ingest as I
 
     # resumable: first call drains into epoch partials, later calls are
     # an empty drain + the monoid fold over the committed partials
     # (bump the version on any retraction-fold change)
     base = I.resumable_workdir(sf_dir, "events", "delta", "delta-v1")
-    src = I.envelope_files(spark, sf_dir, None, n_files=4)
-    D.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"), fresh=False
+    return _streamed_delta_totals(spark, sf_dir, base)
+
+
+def _delta_totals(df: DataFrame) -> DataFrame:
+    """The retraction-totals fold: per-table integer sums."""
+    from ..streaming.delta import fold_generic
+
+    return fold_generic(df, ["table_name"], ["net_rows", "net_sum_micro"])
+
+
+def _streamed_delta_totals(spark: SparkSession, sf_dir: str, workdir) -> DataFrame:
+    """Drain the 4-file envelope backlog through the retraction fold
+    and serve the compacted totals. The fold never inspects event
+    order, so any interleaving of the files converges to the same
+    totals."""
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
+
+    return D.fold_stream(
+        spark,
+        I.envelope_files(spark, sf_dir, None, n_files=4),
+        I.SOURCE_SCHEMA,
+        workdir,
+        lambda b: retraction_totals(P.typed_rows(b)),
+        _delta_totals,
+        fmt="json",
+        stream=P.normalized_events,
     )
-    return D.folded_totals(spark, str(base / "partials"))
 
 
 # stream/batch equivalence IS the claim: the streamed fold must
@@ -836,7 +856,6 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         str(base / "state"),
         str(base / "ckpt"),
         schema="doc_id long, text string, lang string, source string, n_chars long",
-        fresh=False,
     )
     return C.survivors(spark, str(base / "state")).select(
         "doc_id", "lang", "source", "n_chars"
@@ -1148,8 +1167,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_compact_partials", oracle=None)
 def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 maintenance — the crash-safe partials compaction
-    (streaming/delta.py::compact_partials) driven end to end: run the
-    retraction-fold stream (4 epoch partials), compact them into a
+    (streaming/delta.py::compact_with) driven end to end: run the
+    retraction-fold stream, which compacts its epoch partials into a
     versioned base (staged write + atomic rename = the commit point),
     compact AGAIN (must no-op), then serve. The served totals must
     hash-match the BATCH q_delta_agg oracle — totals preservation
@@ -1160,20 +1179,15 @@ def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events fingerprint, fold version) — the FIRST call pays the
     drain + real compaction; every later call still drives the full
     protocol but hits its steady-state branches (empty availableNow
-    drain, two no-op compact passes, base-only serve), which is
-    exactly the per-trigger cost a production maintainer pays."""
+    drain, no-op compact passes, base-only serve), which is exactly
+    the per-trigger cost a production maintainer pays."""
     from ..streaming import delta as D
-    from ..streaming import ingest as I
     from ..streaming.ingest import resumable_workdir
 
     base = resumable_workdir(sf_dir, "events", "delta_compact", "dcompact-v1")
-    src = I.envelope_files(spark, sf_dir, None, n_files=4)
-    D.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"), fresh=False
-    )
-    D.compact_partials(spark, str(base / "partials"))
-    D.compact_partials(spark, str(base / "partials"))  # idempotent no-op
-    return D.folded_totals(spark, str(base / "partials"))
+    _streamed_delta_totals(spark, sf_dir, base)
+    D.compact_with(spark, str(base / "partials"), _delta_totals)  # no-op
+    return D.folded_with(spark, str(base / "partials"), _delta_totals)
 
 
 ORACLES["q_compact_partials"] = ORACLES["q_delta_agg"]

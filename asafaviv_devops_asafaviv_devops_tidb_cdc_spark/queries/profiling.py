@@ -410,26 +410,18 @@ def q_stream_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor a 100 TB ingest runs to catch a poisoned source within one
     micro-batch instead of at the nightly scan). Non-decomposable
     kinds (unique/FK) are refused by the stream evaluator by design."""
-    from ..sources.artifact import input_fingerprint, materialized_path
+    from ..streaming import delta as D
     from ..streaming import dq as SDQ
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming import ingest as I
 
-    base = resumable_workdir(sf_dir, "events", "dq", "dq-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # the stream's file source is the normalized events table, landed
-    # once per fingerprint (same sharing contract as envelope_files)
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    return D.fold_stream(
+        spark,
+        I.events_files(spark, sf_dir),
+        load_table(spark, sf_dir, "events").schema,
+        I.resumable_workdir(sf_dir, "events", "dq", "dq-v2"),
+        SDQ.violation_counts(STREAM_DQ_CHECKS),
+        lambda df: D.fold_generic(df, ["check_id"], ["violations"]),
     )
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields)
-    SDQ.run_dq_stream(
-        spark, src, schema, STREAM_DQ_CHECKS,
-        str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return SDQ.folded_violations(spark, str(base / "partials"))
 
 
 @register(
@@ -473,14 +465,20 @@ def q_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     of silently vanishing. Scale: one (day, type) aggregation over the
     events scan; everything after operates on frames bounded by
     n_days x n_types."""
-    ev = load_table(spark, sf_dir, "events").select(
-        F.expr("unix_millis(ts) div 86400000").cast("long").alias("day_num"),
-        "event_type",
+    return drift_census(_day_type_counts(load_table(spark, sf_dir, "events")))
+
+
+def _day_type_counts(ev: DataFrame) -> DataFrame:
+    """(day_num, event_type, o) counts — the aggregation both the batch
+    drift census and its stream fold reduce to."""
+    return (
+        ev.select(
+            F.expr("unix_millis(ts) div 86400000").cast("long").alias("day_num"),
+            "event_type",
+        )
+        .groupBy("day_num", "event_type")
+        .agg(F.count("*").cast("long").alias("o"))
     )
-    obs = ev.groupBy("day_num", "event_type").agg(
-        F.count("*").cast("long").alias("o")
-    )
-    return drift_census(obs)
 
 
 def drift_census(obs: DataFrame) -> DataFrame:
@@ -523,26 +521,18 @@ def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch of a source going bad, with per-epoch state ONE tiny
     row per (day, type) seen in that batch — state size tracks the
     key grid, not the event volume."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import drift as SD
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
 
-    base = resumable_workdir(sf_dir, "events", "drift", "drift-v2")
-    ev = load_table(spark, sf_dir, "events")
-    # share the normalized landing with the stream-DQ monitor
-    src = materialized_path(
-        "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
-        lambda dest: ev.write.mode("overwrite").parquet(dest),
+    obs = D.fold_stream(
+        spark,
+        I.events_files(spark, sf_dir),
+        load_table(spark, sf_dir, "events").schema,
+        I.resumable_workdir(sf_dir, "events", "drift", "drift-v2"),
+        _day_type_counts,
+        lambda df: D.fold_generic(df, ["day_num", "event_type"], ["o"]),
     )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in ev.schema.fields
-    )
-    SD.run_drift_stream(
-        spark, src, schema, str(base / "partials"), str(base / "ckpt"),
-        fresh=False,
-    )
-    return drift_census(SD.folded_counts(spark, str(base / "partials")))
+    return drift_census(obs)
 
 
 # the stream twin folds to the identical obs frame, so the batch SQL
@@ -731,6 +721,7 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition_report as the batch query — hash-identical to the
     batch SQL oracle over interleaved out-of-order micro-batches."""
     from ..sources.artifact import input_fingerprint, materialized_path
+    from ..streaming import delta as D
     from ..streaming import transitions as ST
     from ..streaming.ingest import resumable_workdir
 
@@ -750,14 +741,26 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold of the compacted grid partials (bump the version on any
     # splice-fold change)
     base = resumable_workdir(sf_dir, "events", "transitions", "trans-v3")
-    counts = ST.run_transitions_resumable(
+
+    def grid(df: DataFrame) -> DataFrame:
+        # each epoch's deltas fold onto the (from_type, to_type) grid
+        return D.fold_generic(df, ["from_type", "to_type"], ["delta"])
+
+    counts = D.fold_stream(
         spark,
         src,
         "user_id bigint, event_id bigint, ts timestamp, event_type string",
-        str(base / "partials"),
-        str(base / "ckpt"),
+        base,
+        grid,
+        grid,
+        max_files=1,
+        stream=ST.pair_deltas,
     )
-    return transition_report(counts)
+    return transition_report(
+        counts.select("from_type", "to_type", F.col("delta").alias("n")).filter(
+            F.col("n") > 0
+        )
+    )
 
 
 # the per-user recomputed pairs aggregate to the identical count

@@ -9,7 +9,6 @@ stream-equals-batch at the DataFrame level.
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -55,27 +54,6 @@ def q_alert_sustained(spark: SparkSession, sf_dir: str) -> DataFrame:
     N windows) via gaps-and-islands; streaming twin in
     streaming/alerts.py::sustained_alerts_stream."""
     return alerts.sustained_alerts(load_table(spark, sf_dir, "events"))
-
-
-def _stream_workdir(sf_dir: str, tag: str) -> Path:
-    return ingest.stream_workdir(sf_dir, tag)
-
-
-def _events_replay_src(spark: SparkSession, sf_dir: str) -> str:
-    """Shared read-only parquet copy of the events table for file-source
-    replay streams (the Kafka-topic stand-in). Materialized ONCE per
-    events fingerprint and shared by every complete-mode replay query —
-    each keeps its own checkpoint/memory sink; none mutates the source.
-    Before this, each such query rewrote its own full copy per call —
-    fixed cost that measured nothing about the stream under test."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-
-    events = load_table(spark, sf_dir, "events")
-    return materialized_path(
-        "events_replay_src",
-        input_fingerprint(sf_dir, "events", "replay-src-v1"),
-        lambda dest: events.write.mode("overwrite").parquet(dest),
-    )
 
 
 def _run_stream(spark: SparkSession, sf_dir: str, tag: str, dup_mod: int | None) -> DataFrame:
@@ -159,7 +137,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed event log. pytest asserts equality with the batch
     windowed aggregation; the driver sees the window-count rows."""
     events = load_table(spark, sf_dir, "events")
-    src = _events_replay_src(spark, sf_dir)
+    src = ingest.events_files(spark, sf_dir)
     name = f"winagg_{abs(hash(sf_dir)) % 10_000_000}"
     ingest.drain(
         spark,
@@ -201,7 +179,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"sessions_{abs(hash(sf_dir)) % 10_000_000}"
     ingest.drain(
         spark,
-        _events_replay_src(spark, sf_dir),
+        ingest.events_files(spark, sf_dir),
         events.schema,
         lambda s: s.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -245,15 +223,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent batch interval join in DuckDB. Resumable (r7): the
     drain + join-state build runs once per source fingerprint; later
     calls are an empty availableNow pass + a sink read."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-
     events = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_ssjoin_src",
-        input_fingerprint(sf_dir, "events", "ssjoin-src-v1"),
-        lambda dest: events.write.mode("overwrite").parquet(dest),
-    )
-    base = ingest.resumable_workdir(sf_dir, "events", "ssjoin", "ssjoin-v2")
+    src = ingest.events_files(spark, sf_dir)
+    # the checkpoint records absolute source file paths: bump the
+    # version whenever the source landing moves
+    base = ingest.resumable_workdir(sf_dir, "events", "ssjoin", "ssjoin-v3")
 
     def sink(stream: DataFrame):
         clicks = (
@@ -327,15 +301,10 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven end to end. Resumable (r7): the drain runs once per source
     fingerprint; later calls are an empty availableNow pass + a sink
     read."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-
     events = load_table(spark, sf_dir, "events")
-    src = materialized_path(
-        "events_alerts_src",
-        input_fingerprint(sf_dir, "events", "alerts-src-v1"),
-        lambda dest: events.write.mode("overwrite").parquet(dest),
-    )
-    base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v2")
+    src = ingest.events_files(spark, sf_dir)
+    # bump the version whenever the source landing moves (see ssjoin)
+    base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v3")
     ingest.drain(
         spark,
         src,
@@ -497,7 +466,6 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         str(base / "view"),
         str(base / "ckpt"),
         max_files_per_trigger=2,
-        fresh=False,
     )
     return merge.read_state(spark, str(base / "view"))
 
@@ -565,7 +533,6 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         str(base / "view"),
         str(base / "ckpt"),
         max_files_per_trigger=2,
-        fresh=False,
     )
     return merge.read_state(spark, str(base / "view"))
 
@@ -588,6 +555,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty availableNow pass + a sink read; max n_updates per user
     (kept in state) selects the newest emission across runs."""
     from ..sources.artifact import input_fingerprint, materialized_path
+    from ..streaming import delta as D
     from ..streaming import funnel as FU
 
     events = load_table(spark, sf_dir, "events")
@@ -602,8 +570,17 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(dest),
     )
     base = ingest.resumable_workdir(sf_dir, "events", "funnel", "funnel-v3")
-    served = FU.run_funnel_resumable(
-        spark, src, events.schema, str(base / "partials"), str(base / "ckpt")
+    # each batch's emissions fold to last-per-user partials, so serving
+    # stays O(users) however many drains accumulate
+    served = D.fold_stream(
+        spark,
+        src,
+        events.schema,
+        base,
+        FU.last_per_user,
+        FU.last_per_user,
+        max_files=1,
+        stream=FU.funnel_stream,
     )
     # `served` is already last-per-user; final_stage_counts' window
     # pass over it is a no-op selection, keeping one serving path
@@ -632,7 +609,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the counter table is user-cardinality, the k-row readout is
     TakeOrderedAndProject on it)."""
     events = load_table(spark, sf_dir, "events")
-    src = _events_replay_src(spark, sf_dir)
+    src = ingest.events_files(spark, sf_dir)
     name = f"topk_{abs(hash(sf_dir)) % 10_000_000}"
     ingest.drain(
         spark,
@@ -750,7 +727,7 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once, and this query is the proof."""
     import shutil
 
-    base = _stream_workdir(sf_dir, "resume")
+    base = ingest.stream_workdir(sf_dir, "resume")
     if base.exists():
         shutil.rmtree(base)
     src = base / "src"

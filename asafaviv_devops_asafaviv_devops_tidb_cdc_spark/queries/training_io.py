@@ -761,26 +761,21 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is EXACTLY the batch sample and hash-matches q_sample_fixed's
     oracle — the deterministic replacement for streaming reservoir
     sampling (whose membership depends on arrival order and RNG)."""
-    from ..sources.artifact import input_fingerprint, materialized_path
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
     from ..streaming import sample as SS
-    from ..streaming.ingest import resumable_workdir
 
-    base = resumable_workdir(sf_dir, "documents", "sample", "sample-v2")
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    src = materialized_path(
-        "documents_sample_src",
-        input_fingerprint(sf_dir, "documents", "sample-src-v1"),
-        lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
-    )
-    SS.run_sample_stream(
+    # the checkpoint records absolute source file paths: bump the
+    # version whenever the source landing moves
+    base = I.resumable_workdir(sf_dir, "documents", "sample", "sample-v3")
+    return D.fold_stream(
         spark,
-        src,
+        I.documents_files(spark, sf_dir),
         "doc_id bigint, source string",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+        base,
+        lambda b: SS._bottom_k(SS._keyed(b)),
+        SS._bottom_k,
     )
-    return SS.folded_sample(spark, str(base / "partials"))
 
 
 # bottom-k folding is exact, so the batch sample's SQL IS the oracle
@@ -801,38 +796,23 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold state is n_shards rows per epoch, COMPACTED after each drain
     through the shared crash-safe base protocol and resumed across
     invocations (provider-keyed workdir)."""
-    from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
     from ..streaming import ingest as I
-    from ..streaming.ingest import resumable_workdir
 
-    base = resumable_workdir(sf_dir, "documents", "manifest", "manifest-v2")
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    src = materialized_path(
-        "documents_manifest_src",
-        input_fingerprint(sf_dir, "documents", "manifest-src-v1"),
-        lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
-    )
-    partials_dir = base / "partials"
-    ckpt = base / "ckpt"
+    # bump the version whenever the source landing moves (see
+    # q_stream_sample)
+    base = I.resumable_workdir(sf_dir, "documents", "manifest", "manifest-v3")
     # the SAME staging + census expressions as the batch writer
     # (functions/sampling.py) — the twins cannot drift apart
-    fold = D.epoch_partials(
-        str(partials_dir), lambda b: SK.shard_census(SK.with_shard_cols(b))
-    )
-    I.drain(
+    manifests = D.fold_stream(
         spark,
-        src,
+        I.documents_files(spark, sf_dir),
         "doc_id bigint, text string",
-        lambda s: s.writeStream.foreachBatch(fold).option(
-            "checkpointLocation", str(ckpt)
-        ),
-        max_files=2,
+        base,
+        lambda b: SK.shard_census(SK.with_shard_cols(b)),
+        SK.fold_manifests,
     )
-    D.compact_with(spark, str(partials_dir), SK.fold_manifests)
-    return SK.manifest_select(
-        D.folded_with(spark, str(partials_dir), SK.fold_manifests)
-    )
+    return SK.manifest_select(manifests)
 
 
 # every manifest stat folds commutatively, so the batch manifest's
@@ -971,34 +951,25 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E23b — PII compliance monitor STREAM TWIN: each micro-batch's
     per-source census lands as an idempotent epoch partial (every
     statistic is a per-source SUM over disjoint doc sets, flagged-doc
-    counts included — streaming/pii.py), and serving folds partials by
+    counts included — functions/pii.py), and serving folds partials by
     addition into EXACTLY the batch census, hash-matched against
     q_pii_census's oracle. This is how the scrub gate deploys at
     100 TB/day: a feed that starts leaking contact data is flagged
     within one micro-batch, with per-epoch state one row per source —
     never proportional to document volume."""
-    from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import pii as SP
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming import delta as D
+    from ..streaming import ingest as I
 
     # resumable: the first call drains the 3 micro-batches into epoch
     # partials, later calls are an empty drain + a partials fold
-    base = resumable_workdir(sf_dir, "documents", "pii", "pii-v2")
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    src = materialized_path(
-        "documents_pii_src",
-        input_fingerprint(sf_dir, "documents", "pii-src-v1"),
-        lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
-    )
-    SP.run_pii_stream(
+    return D.fold_stream(
         spark,
-        src,
+        I.documents_files(spark, sf_dir),
         "doc_id bigint, source string, text string",
-        str(base / "partials"),
-        str(base / "ckpt"),
-        fresh=False,
+        I.resumable_workdir(sf_dir, "documents", "pii", "pii-v2"),
+        lambda b: PII.rollup(PII.doc_metrics(PII.with_planted_pii(b))),
+        PII.fold_rollups,
     )
-    return SP.folded_census(spark, str(base / "partials"))
 
 
 # every census statistic folds commutatively over disjoint doc sets,

@@ -439,7 +439,6 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import html_text as HT
     from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
-    from ..streaming import ingest as I
     from ..streaming.ingest import resumable_workdir
 
     base = resumable_workdir(sf_dir, "documents", "hostgraph", "hostgraph-v1")
@@ -462,27 +461,17 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", "host-edges-v1"),
         _write_src,
     )
-    partials_dir = base / "partials"
-    ckpt = base / "ckpt"
     # per-epoch partial = the batch's distinct pairs: idempotent on
     # replay (overwrite), tiny (O(new host-pairs)), and folds by the
     # same DISTINCT the serving read applies
-    fold_batch = D.epoch_partials(str(partials_dir), lambda b: b.distinct())
-    I.drain(
+    pairs = D.fold_stream(
         spark,
         src,
         "src string, dst string",
-        lambda s: s.writeStream.foreachBatch(fold_batch).option(
-            "checkpointLocation", str(ckpt)
-        ),
-        max_files=2,
+        base,
+        lambda b: b.distinct(),
+        lambda df: df.select("src", "dst").distinct(),
     )
-
-    def fold_pairs(df: DataFrame) -> DataFrame:
-        return df.select("src", "dst").distinct()
-
-    D.compact_with(spark, str(partials_dir), fold_pairs)
-    pairs = D.folded_with(spark, str(partials_dir), fold_pairs)
     n_out = pairs.groupBy(F.col("src").alias("host")).agg(
         F.count("*").cast("long").alias("n_out")
     )

@@ -23,9 +23,6 @@ spread, not corpus size.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import ingest
@@ -68,14 +65,10 @@ def run_dedup_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_files_per_trigger: int = 2,
-    fresh: bool = True,
 ) -> None:
     """Drain a document backlog maintaining min-id-per-content-hash
-    survivor state. ``fresh=False`` resumes from the existing
-    checkpoint (the resumable-workdir posture)."""
-    if fresh:
-        for d in (state_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    survivor state, resuming from the existing checkpoint (the
+    resumable-workdir posture)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         apply_dedup_batch(spark, batch_df, state_dir, epoch_id, text_col, id_col)

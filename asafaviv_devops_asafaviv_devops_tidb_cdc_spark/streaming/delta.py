@@ -1,23 +1,25 @@
-"""Streaming incremental aggregate maintenance (A10 stream form).
+"""The one epoch-partial maintainer protocol (the idempotent
+``foreachBatch`` exactly-once contract of Structured Streaming).
 
-Each micro-batch folds its change events into per-group retraction
-deltas (operators/replay.py::retraction_totals) and writes ONE tiny
-partial row per group; the serving read sums the partials. Because
-retraction deltas are commutative and associative, the folded total is
-independent of batch boundaries and arrival order — which is why the
-driver can hash-compare the streamed result against the BATCH oracle
-(q_delta_agg's SQL) exactly.
+Every stream maintainer whose state is a commutative fold goes through
+:func:`fold_stream`: drain the source (``ingest.drain``), fold each
+micro-batch with the family's ``per_batch`` into ONE small partial,
+compact the partials into a crash-safe base, and serve the fold. A
+family supplies only its two folds — the retraction totals
+(q_stream_delta_agg), DQ violation counts, KMV and sample bottom-k, the
+funnel's last-per-user argmax, the transition grid, the shard manifest
+and so on; the drain, checkpoint, partial layout, compaction and
+serving read exist here once.
 
 Idempotence: partials land in an ``epoch=<id>`` directory written with
 mode=overwrite, so a micro-batch retry after a crash rewrites its own
-partial instead of double-counting — the foreachBatch exactly-once
-recipe. At 100 TB the partials are O(groups x batches) rows;
-``compact_partials`` folds them into a versioned BASE with the same
-commutative fold, bounding the serving read at O(groups + batches
-since last compaction). The base is copy-on-write (``base_v<epoch>``)
-and serving ignores epoch partials at or below the base's version, so
-a crash anywhere in compaction — before the base commit, or before the
-folded epoch dirs are removed — never double-counts or drops a batch.
+partial instead of double-counting. Compaction folds the partials into
+a versioned BASE with the same fold that serves them, bounding the
+serving read at O(fold size + batches since the last compaction). The
+base is copy-on-write (``base_v<epoch>``) and serving ignores epoch
+partials at or below the base's version, so a crash anywhere in
+compaction — before the base commit, or before the folded epoch dirs
+are removed — never double-counts or drops a batch.
 """
 
 from __future__ import annotations
@@ -27,8 +29,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import parse as P
-from ..operators.replay import retraction_totals
 from . import ingest
 
 _BASE_PREFIX = "base_v"
@@ -48,43 +48,10 @@ def epoch_partials(partials_dir: str, per_batch):
     return fold
 
 
-def run_delta_stream(
-    spark: SparkSession,
-    source_dir: str,
-    partials_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-    fresh: bool = True,
-) -> None:
-    """Drain the envelope backlog, folding each micro-batch into
-    retraction partials. Order-robust (unlike the watermarked dedupe
-    path): the fold never inspects event order, so multi-file sources
-    replaying in any interleaving converge to the same totals.
-    ``fresh=False`` resumes from existing partials + checkpoint (an
-    already-drained backlog is an empty drain; the idempotent
-    epoch=<id> partials make a resumed crash exactly-once)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
-    fold = epoch_partials(
-        partials_dir, lambda b: retraction_totals(P.typed_rows(b))
-    )
-    ingest.drain(
-        spark,
-        source_dir,
-        ingest.SOURCE_SCHEMA,
-        lambda s: P.normalized_events(s)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir),
-        max_files_per_trigger,
-        "json",
-    )
-
-
 def _base_version(partials_dir: str) -> tuple[int, Path | None]:
     """(version, path) of the newest COMMITTED base; (-1, None) if none.
 
-    Committed means the rename in ``compact_partials`` completed: the
+    Committed means the rename in ``compact_with`` completed: the
     fold is staged under a ``_tmp`` name and renamed into place only
     after the write job (and its ``_SUCCESS`` marker) finished, so a
     crash mid-write leaves no ``base_v*`` dir at all. The ``_SUCCESS``
@@ -151,26 +118,6 @@ def folded_with(
     return fold_fn(spark.read.parquet(*_live_paths(partials_dir)))
 
 
-def folded_generic(
-    spark: SparkSession,
-    partials_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> DataFrame:
-    """Serving view: fold the live partials (newest base + epochs
-    above its version) into current totals."""
-    return folded_with(
-        spark, partials_dir, lambda df: fold_generic(df, group_cols, sum_cols)
-    )
-
-
-def folded_totals(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Serving view: sum the live partials into current totals."""
-    return folded_generic(
-        spark, partials_dir, ["table_name"], ["net_rows", "net_sum_micro"]
-    )
-
-
 def compact_with(
     spark: SparkSession, partials_dir: str, fold_fn
 ) -> None:
@@ -218,20 +165,38 @@ def compact_with(
         shutil.rmtree(old_base, ignore_errors=True)
 
 
-def compact_generic(
+def fold_stream(
     spark: SparkSession,
-    partials_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> None:
-    """compact_with under the integer-sum fold."""
-    compact_with(
-        spark, partials_dir, lambda df: fold_generic(df, group_cols, sum_cols)
-    )
+    source_dir: str,
+    schema,
+    workdir,
+    per_batch,
+    fold,
+    max_files: int = 2,
+    fmt: str = "parquet",
+    stream=None,
+) -> DataFrame:
+    """Run one epoch-partial maintainer and serve its fold.
 
-
-def compact_partials(spark: SparkSession, partials_dir: str) -> None:
-    """The delta-agg family's compaction (see compact_with)."""
-    compact_generic(
-        spark, partials_dir, ["table_name"], ["net_rows", "net_sum_micro"]
+    Drains ``source_dir`` (``stream`` applied to the source first, when
+    given), writing each micro-batch's ``per_batch`` fold to
+    ``<workdir>/partials/epoch=<id>`` under the checkpoint
+    ``<workdir>/ckpt``; then compacts the partials under ``fold`` and
+    returns ``fold`` over the live partials. ``fold`` must be
+    refold-idempotent (see folded_with). The checkpoint makes every
+    call after the first an empty drain over an already-consumed
+    backlog, and a file landed later is folded exactly once."""
+    partials = f"{workdir}/partials"
+    sink = epoch_partials(partials, per_batch)
+    ingest.drain(
+        spark,
+        source_dir,
+        schema,
+        lambda s: (stream(s) if stream else s)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", f"{workdir}/ckpt"),
+        max_files,
+        fmt,
     )
+    compact_with(spark, partials, fold)
+    return folded_with(spark, partials, fold)

@@ -21,13 +21,9 @@ one micro-batch), not from a nightly scan after the damage is merged.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dq import _ROW_KINDS, _row_predicate
-from . import delta as D, ingest
 
 
 def _check_batch(batch: DataFrame, checks: list[dict]) -> DataFrame:
@@ -44,44 +40,13 @@ def _check_batch(batch: DataFrame, checks: list[dict]) -> DataFrame:
     )
 
 
-def run_dq_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema: str,
-    checks: list[dict],
-    partials_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-    fresh: bool = True,
-) -> None:
-    """Drain a file backlog, folding each micro-batch's row-level
-    violation counts into an idempotent ``epoch=<id>`` partial (ONE
-    tiny row per check per batch). ``fresh=False`` resumes from the
-    existing checkpoint (the resumable-workdir posture)."""
+def violation_counts(checks: list[dict]):
+    """The per-batch fold for ``delta.fold_stream``: one row of
+    violation counts per check. Refuses non-row kinds here, before any
+    stream starts."""
     bad = [c["id"] for c in checks if c["kind"] not in _ROW_KINDS]
     if bad:
         raise ValueError(
             f"stream DQ accepts only row-level kinds; not decomposable: {bad}"
         )
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
-    fold = D.epoch_partials(partials_dir, lambda b: _check_batch(b, checks))
-    ingest.drain(
-        spark,
-        source_dir,
-        source_schema,
-        lambda s: s.writeStream.foreachBatch(fold).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        max_files_per_trigger,
-    )
-    # the fold is a pure integer-sum monoid: compact the epoch
-    # partials into one crash-safe base (no-op when nothing new)
-    D.compact_generic(spark, partials_dir, ["check_id"], ["violations"])
-
-
-def folded_violations(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Serving view: per-check violation totals over the live partials
-    (base + epochs past it)."""
-    return D.folded_generic(spark, partials_dir, ["check_id"], ["violations"])
+    return lambda b: _check_batch(b, checks)

@@ -177,35 +177,3 @@ def last_per_user(emissions: DataFrame) -> DataFrame:
         F.col("s.c_ms").alias("c_ms"),
         F.col("s.p_ms").alias("p_ms"),
     )
-
-
-def run_funnel_resumable(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    partials_dir: str,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Resumable drain with BOUNDED serving state: each micro-batch's
-    emissions fold to last-per-user as an idempotent ``epoch=<id>``
-    partial (<= touched users rows), with a persistent checkpoint +
-    state store — first invocation pays the drain, later ones are an
-    empty availableNow pass + a fold of the compacted partials. The
-    shared crash-safe compaction (streaming/delta.py::compact_with)
-    runs after each drain under the last-per-user monoid, bounding
-    serving at O(users) regardless of how many drains accumulated
-    (an append-only emission sink would grow O(users x drains))."""
-    from . import delta as D, ingest
-
-    fold = D.epoch_partials(partials_dir, last_per_user)
-    ingest.drain(
-        spark,
-        src_dir,
-        schema,
-        lambda s: funnel_stream(s)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir),
-        max_files=1,
-    )
-    D.compact_with(spark, partials_dir, last_per_user)
-    return D.folded_with(spark, partials_dir, last_per_user)

@@ -225,6 +225,39 @@ def envelope_files(
     )
 
 
+
+def events_files(spark: SparkSession, sf_dir: str) -> str:
+    """Shared parquet landing of the events table, every column as
+    loaded: the file source of each stream that replays events as they
+    are. Written once per events fingerprint, like
+    :func:`envelope_files`; consumers read it and keep their own
+    checkpoints. A resumable consumer's checkpoint records these
+    absolute file paths, so moving a consumer onto or off this landing
+    needs a workdir version bump."""
+    from ..sources.artifact import input_fingerprint, materialized_path
+
+    events = load_table(spark, sf_dir, "events")
+    return materialized_path(
+        "events_normalized",
+        input_fingerprint(sf_dir, "events", "dq-src-v1"),
+        lambda dest: events.write.mode("overwrite").parquet(dest),
+    )
+
+
+def documents_files(spark: SparkSession, sf_dir: str) -> str:
+    """Shared parquet landing of the documents columns the document
+    streams read (``doc_id``, ``source``, ``text``), in 6 files so a
+    bounded drain runs several micro-batches. Same sharing contract as
+    :func:`events_files`."""
+    from ..sources.artifact import input_fingerprint, materialized_path
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    return materialized_path(
+        "documents_pii_src",
+        input_fingerprint(sf_dir, "documents", "pii-src-v1"),
+        lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
+    )
+
 def stream_workdir(sf_dir: str, tag: str) -> Path:
     """Scratch dir for a streaming query's src/state/ckpt/sink. Prefers
     tmpfs: checkpoint/state/sink writes fsync, and on a real disk those

@@ -35,9 +35,6 @@ simply drops out of the rejoined bucket.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
@@ -145,17 +142,10 @@ def run_join_view_stream(
     right_table: str = RIGHT_TABLE,
     max_files_per_trigger: int = 2,
     n_buckets: int = VIEW_N_BUCKETS,
-    fresh: bool = True,
 ) -> None:
     """Drain the envelope backlog, maintaining side state AND the
-    materialized join view per micro-batch. ``fresh=False`` resumes
-    from existing state/view/checkpoint (see
-    merge.run_replay_stream)."""
-    if fresh:
-        for d in (state_dir, view_dir, checkpoint_dir):
-            p = Path(d)
-            if p.exists():
-                shutil.rmtree(p)
+    materialized join view per micro-batch, resuming from existing
+    state/view/checkpoint (see merge.run_replay_stream)."""
 
     from . import ingest
 

@@ -19,13 +19,9 @@ work is a local TakeOrderedAndProject — no shuffle of the corpus.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.sampling import SAMPLE_K, SAMPLE_SALT, salted_key
-from . import delta as D, ingest
 
 
 def _keyed(df: DataFrame) -> DataFrame:
@@ -34,44 +30,6 @@ def _keyed(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "source", salted_key(SAMPLE_SALT).alias("h"))
 
 
-def run_sample_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema: str,
-    partials_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-    fresh: bool = True,
-) -> None:
-    """Drain a file backlog, folding each micro-batch's local bottom-k
-    into an idempotent ``epoch=<id>`` partial. ``fresh=False`` resumes
-    from the existing checkpoint (the resumable-workdir posture)."""
-    if fresh:
-        for d in (partials_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
-    fold = D.epoch_partials(
-        partials_dir, lambda b: _keyed(b).orderBy("h").limit(SAMPLE_K)
-    )
-    ingest.drain(
-        spark,
-        source_dir,
-        source_schema,
-        lambda s: s.writeStream.foreachBatch(fold).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        max_files_per_trigger,
-    )
-    # bottom-k is a refold-idempotent monoid: compact the epoch
-    # partials into one crash-safe base (no-op when nothing new)
-    D.compact_with(spark, partials_dir, _bottom_k)
-
-
 def _bottom_k(parts: DataFrame) -> DataFrame:
     """The sample family's serving/compaction monoid."""
     return parts.orderBy("h").limit(SAMPLE_K).select("doc_id", "source", "h")
-
-
-def folded_sample(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Serving view: exact global bottom-k over the live partials
-    (base + epochs past it)."""
-    return D.folded_with(spark, partials_dir, _bottom_k)

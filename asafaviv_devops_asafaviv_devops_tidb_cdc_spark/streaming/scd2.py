@@ -33,9 +33,6 @@ touched at all.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import parse as P
@@ -71,14 +68,10 @@ def run_scd2_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    fresh: bool = True,
 ) -> None:
     """Drain the envelope backlog maintaining the per-key event state
-    the SCD2 view derives from. ``fresh=False`` resumes from existing
-    state + checkpoint (see merge.run_replay_stream)."""
-    if fresh:
-        for d in (state_dir, checkpoint_dir):
-            shutil.rmtree(Path(d), ignore_errors=True)
+    the SCD2 view derives from, resuming from existing state +
+    checkpoint (see merge.run_replay_stream)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         # apply_bucketed_fold handles retry idempotence (a committed

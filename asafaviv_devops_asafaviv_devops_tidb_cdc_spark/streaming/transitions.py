@@ -101,7 +101,7 @@ def _update(key, pdfs, state):
         )
 
 
-def _delta_stream(stream: DataFrame) -> DataFrame:
+def pair_deltas(stream: DataFrame) -> DataFrame:
     """The keyed stateful delta pipeline (shared by both sinks)."""
     keyed = stream.select(
         "user_id",
@@ -125,55 +125,13 @@ def run_transitions_stream(
         spark,
         src_dir,
         schema,
-        lambda s: _delta_stream(s)
+        lambda s: pair_deltas(s)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append"),
         max_files=1,
     )
     return spark.table(name)
-
-
-_GRID_COLS = ["from_type", "to_type"]
-
-
-def run_transitions_resumable(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str,
-    partials_dir: str,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Resumable drain with BOUNDED serving state: each micro-batch's
-    deltas fold onto the (from_type, to_type) grid as an idempotent
-    ``epoch=<id>`` partial (<= type^2 rows — a retried batch
-    overwrites its own partial), with a persistent checkpoint + state
-    store, so the FIRST invocation pays the real drain and every later
-    one is an empty availableNow pass plus a grid fold. Appending raw
-    deltas to a sink would grow the serving read O(events) forever;
-    the per-epoch grid fold + the shared crash-safe compaction
-    (streaming/delta.py::compact_generic, called here after each
-    drain — a no-op unless new epochs landed) bound it at O(grid)
-    regardless of stream length. Returns the served count frame."""
-    from . import delta as D, ingest
-
-    fold = D.epoch_partials(
-        partials_dir, lambda b: D.fold_generic(b, _GRID_COLS, ["delta"])
-    )
-    ingest.drain(
-        spark,
-        src_dir,
-        schema,
-        lambda s: _delta_stream(s)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir),
-        max_files=1,
-    )
-    D.compact_generic(spark, partials_dir, _GRID_COLS, ["delta"])
-    counts = D.folded_generic(spark, partials_dir, _GRID_COLS, ["delta"])
-    return counts.select(
-        "from_type", "to_type", F.col("delta").cast("long").alias("n")
-    ).filter(F.col("n") > 0)
 
 
 def final_pair_counts(emissions: DataFrame) -> DataFrame:

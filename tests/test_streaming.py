@@ -290,6 +290,49 @@ def test_kb_drain_pins_one_partition_in_both_consumer_checkpoints(spark, tmp_pat
 _TRANSITIONS_SCHEMA = "user_id bigint, event_id bigint, ts timestamp, event_type string"
 
 
+def _transition_counts(spark, src, schema, workdir):
+    """The q_stream_transitions maintainer over ``src``: served
+    (from_type, to_type, n) rows with n > 0."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        delta,
+        transitions as TR,
+    )
+
+    def grid(df):
+        return delta.fold_generic(df, ["from_type", "to_type"], ["delta"])
+
+    counts = delta.fold_stream(
+        spark, str(src), schema, workdir, grid, grid,
+        max_files=1, stream=TR.pair_deltas,
+    )
+    return counts.select(
+        "from_type", "to_type", F.col("delta").alias("n")
+    ).filter(F.col("n") > 0)
+
+
+def _delta_epochs(spark, src, pdir, ckpt):
+    """Drain ``src`` into retraction ``epoch=<id>`` partials and leave
+    them uncompacted: the drain and partial writer delta.fold_stream
+    runs, without its compaction."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators.replay import (
+        retraction_totals,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
+
+    sink = delta.epoch_partials(pdir, lambda b: retraction_totals(P.typed_rows(b)))
+    ingest.drain(
+        spark,
+        src,
+        ingest.SOURCE_SCHEMA,
+        lambda s: P.normalized_events(s)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt),
+        2,
+        "json",
+    )
+
+
 @pytest.mark.parametrize("consumer", ["merge", "transitions"])
 def test_checkpoint_from_eight_partitions_resumes(
     spark, tmp_path, monkeypatch, consumer
@@ -305,7 +348,6 @@ def test_checkpoint_from_eight_partitions_resumes(
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
         ingest,
         merge,
-        transitions as TR,
     )
 
     if consumer == "merge":
@@ -328,9 +370,8 @@ def test_checkpoint_from_eight_partitions_resumes(
         def run(src, base):
             return sorted(
                 tuple(r)
-                for r in TR.run_transitions_resumable(
-                    spark, str(src), _TRANSITIONS_SCHEMA,
-                    str(base / "partials"), str(base / "ckpt"),
+                for r in _transition_counts(
+                    spark, src, _TRANSITIONS_SCHEMA, base
                 ).collect()
             )
 
@@ -367,6 +408,7 @@ def test_moved_drains_record_the_data_sized_domain(
     and the two-sided stream-stream join each record ONE partition in
     their offset log instead of a fixed count."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        delta,
         dq,
         funnel as FU,
         ingest,
@@ -380,12 +422,10 @@ def test_moved_drains_record_the_data_sized_domain(
             STREAM_DQ_CHECKS,
         )
 
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in events.schema.fields
-        )
-        dq.run_dq_stream(
-            spark, src, schema, STREAM_DQ_CHECKS,
-            str(tmp_path / "partials"), str(tmp_path / "ckpt"),
+        delta.fold_stream(
+            spark, src, events.schema, tmp_path,
+            dq.violation_counts(STREAM_DQ_CHECKS),
+            lambda df: delta.fold_generic(df, ["check_id"], ["violations"]),
         )
         ckpt = tmp_path / "ckpt"
     elif consumer == "funnel":
@@ -461,19 +501,20 @@ def test_delta_partials_compaction_preserves_totals(spark):
     import shutil as sh
     import tempfile
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
+        _delta_totals,
+    )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
 
     base = Path(tempfile.mkdtemp())
     src = ingest.write_envelope_files(spark, SF_SMOKE, str(base / "src"), None, n_files=4)
-    delta.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"), max_files_per_trigger=2
-    )
     pdir = str(base / "partials")
+    _delta_epochs(spark, src, pdir, str(base / "ckpt"))
 
     def totals():
         return sorted(
             (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_totals(spark, pdir).collect()
+            for r in delta.folded_with(spark, pdir, _delta_totals).collect()
         )
 
     before = totals()
@@ -482,13 +523,13 @@ def test_delta_partials_compaction_preserves_totals(spark):
     saved = Path(tempfile.mkdtemp()) / epochs[0][1].name
     sh.copytree(epochs[0][1], saved)
 
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, _delta_totals)
     assert totals() == before
     assert delta._epoch_dirs(pdir) == []  # all folded into the base
     ver, _ = delta._base_version(pdir)
     assert ver == max(e for e, _ in epochs)
 
-    delta.compact_partials(spark, pdir)  # idempotent no-op
+    delta.compact_with(spark, pdir, _delta_totals)  # idempotent no-op
     assert totals() == before
 
     # interrupted-cleanup simulation: a stale folded epoch reappears
@@ -662,7 +703,13 @@ def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
     kinds are refused up front."""
     import pytest as _pytest
 
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import dq as SDQ
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        delta as D,
+        dq as SDQ,
+    )
+
+    def fold(df):
+        return D.fold_generic(df, ["check_id"], ["violations"])
 
     src = str(tmp_path / "src")
     spark.range(0, 100).selectExpr(
@@ -670,27 +717,29 @@ def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
     ).repartition(4).write.mode("overwrite").parquet(src)
     checks = [{"id": "nn_s", "table": "t", "kind": "not_null", "column": "s"}]
     partials = str(tmp_path / "partials")
-    SDQ.run_dq_stream(
-        spark, src, "id long, s string", checks, partials,
-        str(tmp_path / "ckpt"), max_files_per_trigger=1,
+    D.fold_stream(
+        spark, src, "id long, s string", tmp_path,
+        SDQ.violation_counts(checks), fold, max_files=1,
     )
-    before = SDQ.folded_violations(spark, partials).collect()
+    before = D.folded_with(spark, partials, fold).collect()
     assert {r["check_id"]: r["violations"] for r in before} == {"nn_s": 10}
     # simulate a micro-batch RETRY: re-fold one batch into its own epoch
     batch = spark.read.parquet(src).limit(0)
     SDQ._check_batch(batch, checks).write.mode("overwrite").parquet(
         f"{partials}/epoch=0"
     )
-    again = SDQ.folded_violations(spark, partials).collect()
+    again = D.folded_with(spark, partials, fold).collect()
     # epoch 0 now holds the retried (empty) fold — totals reflect the
     # OVERWRITE, not an addition; no partial is ever counted twice
     assert {r["check_id"]: r["violations"] for r in again}["nn_s"] <= 10
 
     with _pytest.raises(ValueError, match="not decomposable"):
-        SDQ.run_dq_stream(
-            spark, src, "id long, s string",
-            [{"id": "u", "table": "t", "kind": "unique", "columns": ["id"]}],
-            str(tmp_path / "p2"), str(tmp_path / "c2"),
+        D.fold_stream(
+            spark, src, "id long, s string", tmp_path / "w2",
+            SDQ.violation_counts(
+                [{"id": "u", "table": "t", "kind": "unique", "columns": ["id"]}]
+            ),
+            fold,
         )
 
 
@@ -1143,10 +1192,6 @@ def test_transitions_resumable_incremental_update(spark, tmp_path):
     them must add zero deltas. This is the applyInPandasWithState
     state-restore path across SEPARATE query starts, not micro-batches
     within one start."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
-        transitions as TR,
-    )
-
     types = ["view", "click", "purchase"]
     rows = []
     for i in range(120):
@@ -1166,16 +1211,12 @@ def test_transitions_resumable_incremental_update(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(dest)
 
     src = str(tmp_path / "src")
-    parts = str(tmp_path / "partials")
-    ckpt = str(tmp_path / "ckpt")
     schema = "user_id long, event_id long, event_type string, ts timestamp"
 
     def counts():
         return {
             (r["from_type"], r["to_type"]): r["n"]
-            for r in TR.run_transitions_resumable(
-                spark, src, schema, parts, ckpt
-            ).collect()
+            for r in _transition_counts(spark, src, schema, tmp_path).collect()
         }
 
     write_chunk(src, rows[:70])
@@ -1222,7 +1263,7 @@ def test_dedup_stream_resume_incremental(spark, tmp_path):
         ).parquet(src)
 
     def drain():
-        C.run_dedup_stream(spark, src, state, ckpt, schema=schema, fresh=False)
+        C.run_dedup_stream(spark, src, state, ckpt, schema=schema)
         return {
             (r["doc_id"], r["text"])
             for r in C.survivors(spark, state).collect()
@@ -1319,6 +1360,80 @@ def test_alerts_stream_resume_continues_streaks(spark, tmp_path):
     assert got == [(int(ms), ppm, st) for ms, ppm, st in want]
 
 
+def _land_in_files(spark, query, dest):
+    """The source a fold-stream query drains, landed as 4 files."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    if query == "q_stream_delta_agg":
+        ingest.write_envelope_files(spark, SF_SMOKE, str(dest), None, n_files=4)
+    elif query == "q_stream_sample":
+        load_table(spark, SF_SMOKE, "documents").select(
+            "doc_id", "source", "text"
+        ).repartition(4).write.parquet(str(dest))
+    else:
+        load_table(spark, SF_SMOKE, "events").repartition(4).write.parquet(str(dest))
+
+
+@pytest.mark.parametrize(
+    "query", ["q_stream_delta_agg", "q_stream_sample", "q_stream_funnel"]
+)
+def test_fold_stream_serves_one_compacted_base(spark, tmp_path, monkeypatch, query):
+    """The fold-stream contract, over an integer-sum (delta), a bottom-k
+    (sample) and an argmax (funnel) maintainer run through their
+    registered queries: after every call the partials dir holds one
+    committed base and no ``epoch=`` dir, a repeated call adds no
+    epoch and serves identical rows, and a file landed afterwards is
+    folded exactly once — one new batch, and the served rows equal a
+    one-shot drain of every file."""
+    import shutil
+
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import artifact
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
+
+    landing, src = tmp_path / "landing", tmp_path / "src"
+    _land_in_files(spark, query, landing)
+    files = sorted(p for p in landing.iterdir() if p.name.startswith("part-"))
+    assert len(files) == 4
+    src.mkdir()
+    for p in files[:3]:
+        shutil.copy(p, src / p.name)
+    work = {"dir": tmp_path / "work"}
+    monkeypatch.setattr(ingest, "resumable_workdir", lambda *a: work["dir"])
+    if query == "q_stream_delta_agg":
+        monkeypatch.setattr(ingest, "envelope_files", lambda *a, **k: str(src))
+    elif query == "q_stream_sample":
+        monkeypatch.setattr(ingest, "documents_files", lambda *a: str(src))
+    else:
+        monkeypatch.setattr(artifact, "materialized_path", lambda *a: str(src))
+
+    def run():
+        rows = registry.QUERIES[query](spark, SF_SMOKE).collect()
+        return sorted(tuple(r) for r in rows)
+
+    def one_base():
+        pdir = work["dir"] / "partials"
+        names = {p.name for p in pdir.iterdir()}
+        assert not any(n.startswith("epoch=") for n in names), names
+        ver, base = delta._base_version(str(pdir))
+        assert base is not None
+        assert [n for n in names if n.startswith(delta._BASE_PREFIX)] == [base.name]
+        return ver
+
+    def n_commits():
+        return len(list((work["dir"] / "ckpt" / "commits").glob("[0-9]*")))
+
+    first = run()
+    ver, commits = one_base(), n_commits()
+    assert run() == first and len(first) > 0
+    assert one_base() == ver and n_commits() == commits
+
+    shutil.copy(files[3], src / files[3].name)
+    got = run()
+    assert one_base() > ver and n_commits() == commits + 1
+    work["dir"] = tmp_path / "one_shot"
+    assert got == run()
+
+
 def test_compaction_crash_debris_never_corrupts_serving(spark):
     """The shared compaction protocol's two crash points, pinned: a
     staged ``_tmp_base_*`` fold (crash before the rename commit) and a
@@ -1329,26 +1444,26 @@ def test_compaction_crash_debris_never_corrupts_serving(spark):
     import shutil as sh
     import tempfile
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
+        _delta_totals,
+    )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
 
     base = Path(tempfile.mkdtemp())
     src = ingest.write_envelope_files(
         spark, SF_SMOKE, str(base / "src"), None, n_files=4
     )
-    delta.run_delta_stream(
-        spark, src, str(base / "partials"), str(base / "ckpt"),
-        max_files_per_trigger=2,
-    )
     pdir = str(base / "partials")
+    _delta_epochs(spark, src, pdir, str(base / "ckpt"))
 
     def totals():
         return sorted(
             (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_totals(spark, pdir).collect()
+            for r in delta.folded_with(spark, pdir, _delta_totals).collect()
         )
 
     before = totals()
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, _delta_totals)
     ver, committed = delta._base_version(pdir)
     assert committed is not None
 
@@ -1372,7 +1487,7 @@ def test_compaction_crash_debris_never_corrupts_serving(spark):
     assert totals() == before
 
     # the sweep removes both debris dirs; serving still identical
-    delta.compact_partials(spark, pdir)
+    delta.compact_with(spark, pdir, _delta_totals)
     assert totals() == before
     names = {p.name for p in Path(pdir).iterdir()}
     assert not any(n.startswith("_tmp_") for n in names), names

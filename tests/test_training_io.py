@@ -231,6 +231,7 @@ def test_stream_sample_batch_boundary_invariance(spark, tmp_path):
     yields byte-identical samples (the commutative-fold property on a
     real stream, not just in algebra)."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+        delta as D,
         sample as SS,
     )
 
@@ -240,20 +241,16 @@ def test_stream_sample_batch_boundary_invariance(spark, tmp_path):
     outs = []
     for mft in (1, 4):
         base = tmp_path / f"run_{mft}"
-        SS.run_sample_stream(
+        sample = D.fold_stream(
             spark,
             src,
             "doc_id bigint, source string",
-            str(base / "partials"),
-            str(base / "ckpt"),
-            max_files_per_trigger=mft,
+            base,
+            lambda b: SS._bottom_k(SS._keyed(b)),
+            SS._bottom_k,
+            max_files=mft,
         )
-        outs.append(
-            sorted(
-                tuple(r)
-                for r in SS.folded_sample(spark, str(base / "partials")).collect()
-            )
-        )
+        outs.append(sorted(tuple(r) for r in sample.collect()))
     assert outs[0] == outs[1] and len(outs[0]) > 0
 
 
@@ -398,7 +395,7 @@ def test_stream_pii_invariant_to_batch_boundaries(spark, tmp_path):
     of how the backlog splits into micro-batches (per-source sums over
     disjoint doc sets fold by addition)."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions import pii as P
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import pii as SP
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta as D
 
     docs = load_table(spark, SF_SMOKE, "documents").select(
         "doc_id", "source", "text"
@@ -412,18 +409,14 @@ def test_stream_pii_invariant_to_batch_boundaries(spark, tmp_path):
     outs = []
     for mft in (1, 4):
         base = tmp_path / f"run_{mft}"
-        SP.run_pii_stream(
+        census = D.fold_stream(
             spark,
             src,
             "doc_id bigint, source string, text string",
-            str(base / "partials"),
-            str(base / "ckpt"),
-            max_files_per_trigger=mft,
+            base,
+            lambda b: P.rollup(P.doc_metrics(P.with_planted_pii(b))),
+            P.fold_rollups,
+            max_files=mft,
         )
-        outs.append(
-            sorted(
-                tuple(r)
-                for r in SP.folded_census(spark, str(base / "partials")).collect()
-            )
-        )
+        outs.append(sorted(tuple(r) for r in census.collect()))
     assert outs[0] == outs[1] == want and len(want) > 0
