@@ -174,17 +174,17 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import kmv as SKMV
     from ..streaming.ingest import resumable_workdir
 
-    # resumable: the first call drains the 3 micro-batches into epoch
-    # partials, later calls are an empty drain + a partials fold
-    base = resumable_workdir(sf_dir, "lineitem", "kmv", "kmv-v2")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_partkey"
     )
     src = materialized_path(
         "lineitem_kmv_src",
-        input_fingerprint(sf_dir, "lineitem", "kmv-src-v1"),
+        input_fingerprint(sf_dir, "lineitem", q_stream_kmv),
         lambda dest: li.repartition(6).write.mode("overwrite").parquet(dest),
     )
+    # resumable: the first call drains the 3 micro-batches into epoch
+    # partials, later calls are an empty drain + a partials fold
+    base = resumable_workdir(src, q_stream_kmv)
     sketch = D.fold_stream(
         spark,
         src,
@@ -355,13 +355,13 @@ def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
-    base = I.resumable_workdir(sf_dir, "events", "gapfill", "gapfill-v2")
+    src = I.events_files(spark, sf_dir)
     # the SAME aggregation as the batch query folds each micro-batch
     obs = D.fold_stream(
         spark,
-        I.events_files(spark, sf_dir),
+        src,
         load_table(spark, sf_dir, "events").schema,
-        base,
+        I.resumable_workdir(src, q_stream_gapfill),
         _hourly_obs,
         lambda df: D.fold_generic(df, ["event_type", "hr"], ["cents"]),
     )
@@ -1209,11 +1209,12 @@ def _streamed_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
+    src = I.events_files(spark, sf_dir)
     return D.fold_stream(
         spark,
-        I.events_files(spark, sf_dir),
+        src,
         load_table(spark, sf_dir, "events").schema,
-        I.resumable_workdir(sf_dir, "events", "trend", "trend-v2"),
+        I.resumable_workdir(src, _streamed_daily),
         _daily_obs,
         lambda df: D.fold_generic(df, ["event_type", "day_num"], ["y"]),
     )

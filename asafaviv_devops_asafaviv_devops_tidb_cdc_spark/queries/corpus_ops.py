@@ -491,9 +491,9 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import scd2 as S
 
     # resumable: first call drains, later calls are an empty drain +
-    # state read (bump the version on any scd2-fold change)
-    base = I.resumable_workdir(sf_dir, "events", "scd2", "scd2-v2")
+    # state read
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
+    base = I.resumable_workdir(src, q_stream_scd2)
     S.run_scd2_stream(spark, src, str(base / "state"), str(base / "ckpt"))
     return S.history(spark, str(base / "state")).select(
         "table_name",
@@ -625,9 +625,10 @@ def q_stream_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # resumable: first call drains into epoch partials, later calls are
     # an empty drain + the monoid fold over the committed partials
-    # (bump the version on any retraction-fold change)
-    base = I.resumable_workdir(sf_dir, "events", "delta", "delta-v1")
-    return _streamed_delta_totals(spark, sf_dir, base)
+    src = I.envelope_files(spark, sf_dir, None, n_files=4)
+    return _streamed_delta_totals(
+        spark, src, I.resumable_workdir(src, q_stream_delta_agg)
+    )
 
 
 def _delta_totals(df: DataFrame) -> DataFrame:
@@ -637,17 +638,16 @@ def _delta_totals(df: DataFrame) -> DataFrame:
     return fold_generic(df, ["table_name"], ["net_rows", "net_sum_micro"])
 
 
-def _streamed_delta_totals(spark: SparkSession, sf_dir: str, workdir) -> DataFrame:
-    """Drain the 4-file envelope backlog through the retraction fold
-    and serve the compacted totals. The fold never inspects event
-    order, so any interleaving of the files converges to the same
-    totals."""
+def _streamed_delta_totals(spark: SparkSession, src: str, workdir) -> DataFrame:
+    """Drain an envelope backlog through the retraction fold and serve
+    the compacted totals. The fold never inspects event order, so any
+    interleaving of the files converges to the same totals."""
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
     return D.fold_stream(
         spark,
-        I.envelope_files(spark, sf_dir, None, n_files=4),
+        src,
         I.SOURCE_SCHEMA,
         workdir,
         lambda b: retraction_totals(P.typed_rows(b)),
@@ -843,13 +843,13 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drain + survivor-state build runs once per corpus fingerprint.
     src = materialized_path(
         "documents_docdedup_src",
-        input_fingerprint(sf_dir, "documents", "docdedup-src-v1"),
+        input_fingerprint(sf_dir, "documents", q_stream_doc_dedup),
         lambda dest: _doubled_docs(spark, sf_dir)
         .repartition(4)
         .write.mode("overwrite")
         .parquet(dest),
     )
-    base = resumable_workdir(sf_dir, "documents", "docdedup", "docdedup-v3")
+    base = resumable_workdir(src, q_stream_doc_dedup)
     C.run_dedup_stream(
         spark,
         src,
@@ -1176,16 +1176,17 @@ def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB compaction is what bounds the serving read at O(groups +
     batches-since-compaction); correctness must therefore survive it
     byte-exactly. Resumable (r7b): partials + checkpoint persist per
-    (events fingerprint, fold version) — the FIRST call pays the
+    (envelope landing, fold code) — the FIRST call pays the
     drain + real compaction; every later call still drives the full
     protocol but hits its steady-state branches (empty availableNow
     drain, no-op compact passes, base-only serve), which is exactly
     the per-trigger cost a production maintainer pays."""
     from ..streaming import delta as D
-    from ..streaming.ingest import resumable_workdir
+    from ..streaming.ingest import envelope_files, resumable_workdir
 
-    base = resumable_workdir(sf_dir, "events", "delta_compact", "dcompact-v1")
-    _streamed_delta_totals(spark, sf_dir, base)
+    src = envelope_files(spark, sf_dir, None, n_files=4)
+    base = resumable_workdir(src, q_compact_partials)
+    _streamed_delta_totals(spark, src, base)
     D.compact_with(spark, str(base / "partials"), _delta_totals)  # no-op
     return D.folded_with(spark, str(base / "partials"), _delta_totals)
 
@@ -1367,7 +1368,7 @@ def q_takedown_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes — the near-dup cluster table, the mod50 IVF cell
     index, the training-shard landing — is REBUILT from the purged
     source through its real build path under a purge-aware fingerprint
-    (sources/takedown.py: the purge spec joins the artifact version,
+    (sources/takedown.py: the purge spec is a key parameter,
     so a new takedown batch = new fingerprint = from-scratch rebuild;
     this drives the artifact-store invalidation path no other query
     exercises). The output is one certification row per artifact:

@@ -3192,7 +3192,7 @@ def q_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     what lets a 100 TB vector table grow per-ingest instead of
     re-assigning the corpus per refresh. Growth is per-INGEST work,
     not per-read (r7b): the three-installment fold runs once per
-    (embeddings fingerprint, version) into a cid-partitioned artifact
+    (embeddings fingerprint, code key) into a cid-partitioned artifact
     — every read (including the gate's) probes the GROWN index with
     partition pruning, and the stepwise incremental == full-rebuild
     identity is pinned by
@@ -3216,7 +3216,7 @@ def q_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = materialized(
         spark,
         "ivf_grown",
-        input_fingerprint(sf_dir, "embeddings", "ivf-inc-v1"),
+        input_fingerprint(sf_dir, "embeddings", q_ivf_incremental),
         grow,
         partition_by=["cid"],
     )
@@ -3484,7 +3484,7 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer, so hashes cannot change)."""
     from ..sources.artifact import input_fingerprint, materialized
 
-    fp = input_fingerprint(sf_dir, "documents", f"bpe-v1-r{_BPE_ROUNDS}")
+    fp = input_fingerprint(sf_dir, "documents", bpe_merge_table, _BPE_ROUNDS)
     return materialized(
         spark, "bpe_merges", fp, lambda: _train_bpe(spark, sf_dir)
     )

@@ -414,11 +414,12 @@ def q_stream_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import dq as SDQ
     from ..streaming import ingest as I
 
+    src = I.events_files(spark, sf_dir)
     return D.fold_stream(
         spark,
-        I.events_files(spark, sf_dir),
+        src,
         load_table(spark, sf_dir, "events").schema,
-        I.resumable_workdir(sf_dir, "events", "dq", "dq-v2"),
+        I.resumable_workdir(src, q_stream_dq),
         SDQ.violation_counts(STREAM_DQ_CHECKS),
         lambda df: D.fold_generic(df, ["check_id"], ["violations"]),
     )
@@ -524,11 +525,12 @@ def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
+    src = I.events_files(spark, sf_dir)
     obs = D.fold_stream(
         spark,
-        I.events_files(spark, sf_dir),
+        src,
         load_table(spark, sf_dir, "events").schema,
-        I.resumable_workdir(sf_dir, "events", "drift", "drift-v2"),
+        I.resumable_workdir(src, q_stream_event_drift),
         _day_type_counts,
         lambda df: D.fold_generic(df, ["day_num", "event_type"], ["o"]),
     )
@@ -730,7 +732,7 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MULTIPLE micro-batches (the order-independence being proven)
     src = materialized_path(
         "events_transitions_src",
-        input_fingerprint(sf_dir, "events", "transitions-src-v1"),
+        input_fingerprint(sf_dir, "events", q_stream_transitions),
         lambda dest: ev.select("user_id", "event_id", "ts", "event_type")
         .repartition(6)
         .write.mode("overwrite")
@@ -738,9 +740,8 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # resumable: the first call drains the 6 interleaved micro-batches
     # through the history state; later calls are an empty drain + a
-    # fold of the compacted grid partials (bump the version on any
-    # splice-fold change)
-    base = resumable_workdir(sf_dir, "events", "transitions", "trans-v3")
+    # fold of the compacted grid partials
+    base = resumable_workdir(src, q_stream_transitions)
 
     def grid(df: DataFrame) -> DataFrame:
         # each epoch's deltas fold onto the (from_type, to_type) grid

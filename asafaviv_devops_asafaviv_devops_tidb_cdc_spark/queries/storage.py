@@ -237,7 +237,7 @@ def q_compaction_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reads the raw events — any row lost or duplicated by
     the rewrite is a gate hash miss. Once-per-fingerprint (r7b): the
     fragment + compact + file-count check run when the (events
-    fingerprint, layout version) artifact is first built — compaction
+    fingerprint, code key) artifact is first built — compaction
     is a per-corpus-version maintenance job, not per-read work — and
     every call (including the gate's) hash-checks the aggregation
     over the COMPACTED table against the raw-events oracle; the
@@ -260,7 +260,7 @@ def q_compaction_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frag = materialized_path(
         "compacted_events",
-        input_fingerprint(sf_dir, "events", "compaction-v1"),
+        input_fingerprint(sf_dir, "events", q_compaction_parity),
         build,
     )
     return (
@@ -332,7 +332,7 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str, keys):
     from ..sources import load_table
     from ..sources.artifact import _artifact_root, input_fingerprint
 
-    fp = input_fingerprint(sf_dir, name, f"bkt-v1-{_BUCKETS}")
+    fp = input_fingerprint(sf_dir, name, _bucketed_table, _BUCKETS)
     tbl = f"{name}_bkt_{fp}"
     if not spark.catalog.tableExists(tbl):
         path = _artifact_root() / "bucketed" / tbl
@@ -465,7 +465,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = materialized_path(
         "events_generations",
-        input_fingerprint(sf_dir, "events", "schema-evo-v1"),
+        input_fingerprint(sf_dir, "events", q_schema_evolution),
         write,
     )
     merged = (

@@ -56,19 +56,18 @@ def q_alert_sustained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return alerts.sustained_alerts(load_table(spark, sf_dir, "events"))
 
 
-def _run_stream(spark: SparkSession, sf_dir: str, tag: str, dup_mod: int | None) -> DataFrame:
+def _run_stream(spark: SparkSession, sf_dir: str, dup_mod: int | None) -> DataFrame:
     """Resumable ingest drain (r7): sink + checkpoint persist per
-    (events fingerprint, dup_mod, chain version), so the FIRST
-    invocation pays the real P1-P5 drain and every later one is an
-    empty availableNow pass plus a sink read — the steady-state
-    trigger cost a production consumer pays. Crash debris is
-    invisible: the parquet file sink's _spark_metadata transaction log
-    only exposes committed files, and a killed drain resumes
+    envelope landing (events fingerprint, dup_mod) and the code of this
+    drain, so the FIRST invocation pays the real P1-P5 drain and every
+    later one is an empty availableNow pass plus a sink read — the
+    steady-state trigger cost a production consumer pays. Crash debris
+    is invisible: the parquet file sink's _spark_metadata transaction
+    log only exposes committed files, and a killed drain resumes
     exactly-once from the checkpoint (q_stream_resume proves that
-    path at the gate every round). Bump the version on any P1-P5 or
-    sink-layout change."""
-    base = ingest.resumable_workdir(sf_dir, "events", f"ing_{tag}", "ingest-v2")
+    path at the gate every round)."""
     src = ingest.envelope_files(spark, sf_dir, dup_mod)
+    base = ingest.resumable_workdir(src, _run_stream)
     ingest.run_ingest(
         spark, src, str(base / "sink"), str(base / "ckpt"), fresh=False
     )
@@ -81,7 +80,7 @@ def q_stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     query (availableNow file source standing in for Kafka, parquet
     sink partitioned by table); returns per-(table,op) counts from the
     sink — pytest asserts equality with the batch chain."""
-    sink = _run_stream(spark, sf_dir, "plain", dup_mod=None)
+    sink = _run_stream(spark, sf_dir, dup_mod=None)
     return sink.groupBy("table_name", "operation").agg(F.count("*").alias("n"))
 
 
@@ -95,14 +94,14 @@ def q_stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     total state size — the Delta/Iceberg MERGE INTO shape). Returns
     per-table state counts; pytest asserts the final state equals the
     batch replay exactly and untouched buckets stay byte-identical."""
-    # state + checkpoint persist per (events fingerprint, fold version):
-    # the first invocation drains the backlog; later ones are an empty
-    # drain + state read — the steady-state trigger cost a production
-    # stream pays (bump the version on any merge-fold change)
-    base = ingest.resumable_workdir(sf_dir, "events", "merge", "merge-v2")
     # 2 out-of-order micro-batches exercise the merge/tombstone path;
     # tests/test_streaming.py runs the 4-batch variant
     src = ingest.envelope_files(spark, sf_dir, None, n_files=4)
+    # state + checkpoint persist per (landing, fold code): the first
+    # invocation drains the backlog; later ones are an empty drain +
+    # state read — the steady-state trigger cost a production stream
+    # pays
+    base = ingest.resumable_workdir(src, q_stream_cdc_replay)
     merge.run_replay_stream(
         spark,
         src,
@@ -158,7 +157,7 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at-least-once duplicate, reference index.js:350-352 semantics);
     watermarked dropDuplicates on (partition, offset, rownum, ts) must make
     the sink identical to single-delivery — pytest asserts it."""
-    sink = _run_stream(spark, sf_dir, "dup", dup_mod=5)
+    sink = _run_stream(spark, sf_dir, dup_mod=5)
     return sink.groupBy("table_name", "operation").agg(F.count("*").alias("n"))
 
 
@@ -225,9 +224,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls are an empty availableNow pass + a sink read."""
     events = load_table(spark, sf_dir, "events")
     src = ingest.events_files(spark, sf_dir)
-    # the checkpoint records absolute source file paths: bump the
-    # version whenever the source landing moves
-    base = ingest.resumable_workdir(sf_dir, "events", "ssjoin", "ssjoin-v3")
+    base = ingest.resumable_workdir(src, q_stream_stream_join)
 
     def sink(stream: DataFrame):
         clicks = (
@@ -303,8 +300,7 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     read."""
     events = load_table(spark, sf_dir, "events")
     src = ingest.events_files(spark, sf_dir)
-    # bump the version whenever the source landing moves (see ssjoin)
-    base = ingest.resumable_workdir(sf_dir, "events", "alerts", "alerts-v3")
+    base = ingest.resumable_workdir(src, q_stream_alerts)
     ingest.drain(
         spark,
         src,
@@ -455,10 +451,9 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import join_view as JV
 
     # resumable: first call drains + materializes the view, later calls
-    # are an empty drain + a view read (bump the version on any
-    # join-view-fold change)
-    base = ingest.resumable_workdir(sf_dir, "events", "join_view", "jv-v2")
+    # are an empty drain + a view read
     src = ingest.envelope_files(spark, sf_dir, None, n_files=4)
+    base = ingest.resumable_workdir(src, q_stream_join_view)
     JV.run_join_view_stream(
         spark,
         src,
@@ -519,13 +514,13 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = materialized_path(
         "envelopes_skew",
-        input_fingerprint(sf_dir, "events", "env-skew-v1-f4"),
+        input_fingerprint(sf_dir, "events", q_stream_join_view_skew),
         lambda dest: envelopes_from_events(events)
         .repartition(4)
         .write.mode("overwrite")
         .json(dest),
     )
-    base = ingest.resumable_workdir(sf_dir, "events", "join_view_skew", "jvs-v2")
+    base = ingest.resumable_workdir(src, q_stream_join_view_skew)
     JV.run_join_view_stream(
         spark,
         src,
@@ -562,14 +557,14 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 interleaved files = 3 out-of-order micro-batches
     src = materialized_path(
         "events_funnel_src",
-        input_fingerprint(sf_dir, "events", "funnel-src-v1"),
+        input_fingerprint(sf_dir, "events", q_stream_funnel),
         lambda dest: events.withColumn("_f", F.col("event_id") % 3)
         .repartition(3, "_f")
         .drop("_f")
         .write.mode("overwrite")
         .parquet(dest),
     )
-    base = ingest.resumable_workdir(sf_dir, "events", "funnel", "funnel-v3")
+    base = ingest.resumable_workdir(src, q_stream_funnel)
     # each batch's emissions fold to last-per-user partials, so serving
     # stays O(users) however many drains accumulate
     served = D.fold_stream(
@@ -692,7 +687,7 @@ def q_stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = materialized_path(
         "events_latedrops_src",
-        input_fingerprint(sf_dir, "events", "latedrops-src-v1"),
+        input_fingerprint(sf_dir, "events", q_stream_late_drops),
         write_interleaved,
     )
     name = f"latedrops_{abs(hash(sf_dir)) % 10_000_000}"

@@ -90,7 +90,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = materialized_path(
-        "train_shards", input_fingerprint(sf_dir, "documents", "shards-v1"), write
+        "train_shards", input_fingerprint(sf_dir, "documents", q_shard_manifest), write
     )
     written = spark.read.schema(
         "doc_id bigint, n_bytes bigint, h string, shard string"
@@ -765,14 +765,12 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import ingest as I
     from ..streaming import sample as SS
 
-    # the checkpoint records absolute source file paths: bump the
-    # version whenever the source landing moves
-    base = I.resumable_workdir(sf_dir, "documents", "sample", "sample-v3")
+    src = I.documents_files(spark, sf_dir)
     return D.fold_stream(
         spark,
-        I.documents_files(spark, sf_dir),
+        src,
         "doc_id bigint, source string",
-        base,
+        I.resumable_workdir(src, q_stream_sample),
         lambda b: SS._bottom_k(SS._keyed(b)),
         SS._bottom_k,
     )
@@ -799,16 +797,14 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
-    # bump the version whenever the source landing moves (see
-    # q_stream_sample)
-    base = I.resumable_workdir(sf_dir, "documents", "manifest", "manifest-v3")
+    src = I.documents_files(spark, sf_dir)
     # the SAME staging + census expressions as the batch writer
     # (functions/sampling.py) — the twins cannot drift apart
     manifests = D.fold_stream(
         spark,
-        I.documents_files(spark, sf_dir),
+        src,
         "doc_id bigint, text string",
-        base,
+        I.resumable_workdir(src, q_stream_manifest),
         lambda b: SK.shard_census(SK.with_shard_cols(b)),
         SK.fold_manifests,
     )
@@ -962,11 +958,12 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # resumable: the first call drains the 3 micro-batches into epoch
     # partials, later calls are an empty drain + a partials fold
+    src = I.documents_files(spark, sf_dir)
     return D.fold_stream(
         spark,
-        I.documents_files(spark, sf_dir),
+        src,
         "doc_id bigint, source string, text string",
-        I.resumable_workdir(sf_dir, "documents", "pii", "pii-v2"),
+        I.resumable_workdir(src, q_stream_pii),
         lambda b: PII.rollup(PII.doc_metrics(PII.with_planted_pii(b))),
         PII.fold_rollups,
     )
@@ -1075,7 +1072,7 @@ def q_edit_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "edit_dist")
         )
 
-    fp_key = input_fingerprint(sf_dir, "documents", "edit-pairs-v1")
+    fp_key = input_fingerprint(sf_dir, "documents", q_edit_neardup)
     return materialized(spark, "edit_neardup_pairs", fp_key, build)
 
 
@@ -1334,7 +1331,7 @@ def phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialized(
         spark,
         "phrase_index",
-        input_fingerprint(sf_dir, "documents", "phrase-index-v1"),
+        input_fingerprint(sf_dir, "documents", phrase_index),
         build,
     )
 
@@ -1407,7 +1404,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = materialized(
         spark,
         "phrase_probe",
-        input_fingerprint(sf_dir, "documents", "phrase-probe-v1"),
+        input_fingerprint(sf_dir, "documents", q_phrase_search),
         build_probe,
     )
     a = index.join(

@@ -441,8 +441,6 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming.ingest import resumable_workdir
 
-    base = resumable_workdir(sf_dir, "documents", "hostgraph", "hostgraph-v1")
-
     def _write_src(dest: str) -> None:
         ids = _docs(spark, sf_dir).select(F.col("doc_id").alias("media_id"))
         edges = HT.warc_edges(HT.synth_warc_html_payloads(ids))
@@ -458,7 +456,7 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = materialized_path(
         "host_edges_src",
-        input_fingerprint(sf_dir, "documents", "host-edges-v1"),
+        input_fingerprint(sf_dir, "documents", q_stream_host_graph),
         _write_src,
     )
     # per-epoch partial = the batch's distinct pairs: idempotent on
@@ -468,7 +466,7 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         "src string, dst string",
-        base,
+        resumable_workdir(src, q_stream_host_graph),
         lambda b: b.distinct(),
         lambda df: df.select("src", "dst").distinct(),
     )

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .artifact import input_fingerprint, materialized
 from .tables import load_table
 
-_IVF_VERSION = "ivf-v1"
 LLOYD_K = 8
 MOD_STEP = 50
 
@@ -106,7 +105,7 @@ def ivf_index(
     from ..functions import similarity
 
     build_cents = _CENT_BUILDERS[variant]
-    fp = input_fingerprint(sf_dir, "embeddings", f"{_IVF_VERSION}-{variant}")
+    fp = input_fingerprint(sf_dir, "embeddings", ivf_index, variant)
     cents = materialized(
         spark, f"ivf_cents_{variant}", fp, lambda: build_cents(spark, sf_dir)
     )

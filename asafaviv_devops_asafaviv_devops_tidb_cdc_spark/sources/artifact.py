@@ -6,10 +6,18 @@ assignment) rather than its lineage. Recomputing such a stage inside
 every consuming query is the pattern the round-3 event-sink fix
 removed for the CDC chain (sources/event_sink.py — parse once, serve
 many); this module generalizes the mechanism: an artifact is keyed by
-a content fingerprint of its inputs + a params/schema version, built
-atomically (write to a temp dir, rename into place — concurrent
-sessions race safely, a crashed build leaves no visible dir), and
-served as a plain parquet scan from then on.
+a content fingerprint of its source table, the code of its derivation
+and its real parameters (:func:`input_fingerprint`), built atomically
+(write to a temp dir, rename into place — concurrent sessions race
+safely, a crashed build leaves no visible dir), and served as a plain
+parquet scan from then on.
+
+The derivation's code enters the key as ``plans/closure.py::code_key``:
+a hash over every package unit the building function reaches. Nobody
+decides by hand when an artifact is stale: an edit anywhere in the
+derivation's closure rotates the key and rebuilds, and an edit outside
+it keeps serving the committed bytes. A superseded key's directory
+stays on disk.
 
 At 100 TB this is not an optimization but the only workable shape: the
 cluster table / ANN index over a corpus is a pipeline ARTIFACT that
@@ -29,6 +37,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.closure import code_key
 from .tables import read_parquet
 
 ARTIFACT_ROOT_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
@@ -43,14 +52,19 @@ def _artifact_root() -> Path:
     )
 
 
-def input_fingerprint(sf_dir: str, table: str, version: str) -> str:
-    """Content key for an artifact derived from one source table:
-    (resolved path, size, mtime) of the parquet + a version string the
-    caller bumps when the derivation or schema changes. Regenerated
-    testdata invalidates automatically."""
+def input_fingerprint(
+    sf_dir: str, table: str, derivation: Callable, *params: object
+) -> str:
+    """Content key for an artifact derived from one source table: the
+    parquet's (resolved path, size, mtime), the code key of
+    ``derivation`` (the top-level function that builds the artifact,
+    usually the caller) and ``params``, the values the build reads that
+    its code does not fix. Regenerated testdata and an edited
+    derivation both rotate the key."""
     src = Path(sf_dir) / f"{table}.parquet"
     st = src.stat()
-    key = f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{version}"
+    parts = (src.resolve(), st.st_size, st.st_mtime_ns, code_key(derivation), *params)
+    key = "|".join(map(str, parts))
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 

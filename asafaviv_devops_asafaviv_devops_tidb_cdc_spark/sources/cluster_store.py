@@ -23,15 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .artifact import input_fingerprint, materialized
 from .tables import load_table
 
-# bump when the corpus construction, pair params, or CC output changes
-_CC_VERSION = "neardup-cc-v1"
-_PAIRS_VERSION = "neardup-pairs-v1"
-_MH_PAIRS_VERSION = "neardup-minhash-pairs-v4"  # r9: star reps + band-agreement gate
-_PIPE_CC_VERSION = "pipeline-cc-v1"
-_MH_MUTANT_VERSION = "minhash-mutant-pairs-v4"  # r9: star reps + band-agreement gate
-_SIMHASH_PAIRS_VERSION = "simhash-pairs-v1"
-
-
 def neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup test corpus: documents plus planted exact copies
     (every 10th doc, id+1e6) and near-miss mutants (every 7th doc with
@@ -59,7 +50,7 @@ def ngram_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # module-level import here would be circular
     from ..functions.dedup import ngram_jaccard_pairs
 
-    fp = input_fingerprint(sf_dir, "documents", _PAIRS_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", ngram_pair_table)
     return materialized(
         spark,
         "neardup_pairs",
@@ -78,7 +69,7 @@ def minhash_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change."""
     from ..functions.dedup import neardup_pairs
 
-    fp = input_fingerprint(sf_dir, "documents", _MH_PAIRS_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", minhash_pair_table)
     return materialized(
         spark,
         "neardup_minhash_pairs",
@@ -107,7 +98,7 @@ def minhash_mutant_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scratch, keeping the artifact honest)."""
     from ..functions.dedup import neardup_pairs
 
-    fp = input_fingerprint(sf_dir, "documents", _MH_MUTANT_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", minhash_mutant_pair_table)
     return materialized(
         spark,
         "minhash_mutant_pairs",
@@ -123,7 +114,7 @@ def simhash_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation)."""
     from ..functions.dedup import simhash_neardup_pairs
 
-    fp = input_fingerprint(sf_dir, "documents", _SIMHASH_PAIRS_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", simhash_pair_table)
     return materialized(
         spark,
         "simhash_pairs",
@@ -156,7 +147,7 @@ def pipeline_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return neardup_clusters(ngram_jaccard_pairs(exact_dedup(qual)))
 
-    fp = input_fingerprint(sf_dir, "documents", _PIPE_CC_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", pipeline_cluster_table)
     return materialized(spark, "pipeline_clusters", fp, build)
 
 
@@ -166,7 +157,7 @@ def neardup_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     served as a parquet scan after."""
     from ..functions.dedup import neardup_clusters
 
-    fp = input_fingerprint(sf_dir, "documents", _CC_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", neardup_cluster_table)
     return materialized(
         spark,
         "neardup_clusters",
@@ -174,8 +165,6 @@ def neardup_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: neardup_clusters(ngram_pair_table(spark, sf_dir)),
     )
 
-
-_WEB_CC_VERSION = "web-cc-v1"
 
 
 def web_staged_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,5 +265,5 @@ def web_cluster_table(
         )
         return neardup_clusters(ngram_jaccard_pairs(exact_dedup(qual)))
 
-    fp = input_fingerprint(sf_dir, "documents", _WEB_CC_VERSION)
+    fp = input_fingerprint(sf_dir, "documents", web_cluster_table)
     return materialized(spark, "web_clusters", fp, build)

@@ -20,10 +20,12 @@ pushdown/pruning) is precisely what the reference does with ES and what
 any warehouse does with its bronze->silver hop.
 
 The cache key is (resolved path, size, mtime) of the source parquet
-(``artifact.input_fingerprint``), so regenerated testdata invalidates
-automatically; the build is the artifact store's atomic commit (write
-to a temp dir, rename into place) under the sink's own root, so
-concurrent sessions race safely.
+plus the code key of :func:`normalized_sink`'s closure
+(``artifact.input_fingerprint``), so regenerated testdata and an edit
+anywhere in the P1-P5 chain both invalidate automatically; the build
+is the artifact store's atomic commit (write to a temp dir, rename
+into place) under the sink's own root, so concurrent sessions race
+safely.
 """
 
 from __future__ import annotations
@@ -40,7 +42,6 @@ from .cdc_gen import envelopes_from_events
 from .tables import load_table
 
 SINK_ROOT_ENV = "SPARK_GRAFT_SINK_DIR"
-_SCHEMA_VERSION = "v1"  # bump when the normalized schema changes
 
 
 def _sink_root() -> Path:
@@ -55,7 +56,7 @@ def _sink_root() -> Path:
 def _fingerprint(sf_dir: str) -> str:
     # a name of its own: perfbench/layers.py reads it to tell a sink
     # build from a serve
-    return input_fingerprint(sf_dir, "events", _SCHEMA_VERSION)
+    return input_fingerprint(sf_dir, "events", normalized_sink)
 
 
 def build_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,6 @@ from .artifact import input_fingerprint, serve_committed
 from .tables import load_table
 
 LAYOUT_ROOT_ENV = "SPARK_GRAFT_LAYOUT_DIR"
-_SCHEMA_VERSION = "v1"
 
 
 def write_partitioned(
@@ -135,7 +134,7 @@ def partitioned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return serve_committed(
         spark,
-        _layout_root() / input_fingerprint(sf_dir, "lineitem", _SCHEMA_VERSION),
+        _layout_root() / input_fingerprint(sf_dir, "lineitem", partitioned_lineitem),
         # partitionBy writes _SUCCESS at the table root
         lambda path: write_partitioned(
             live(), path, ["ship_year"], sort_cols=["l_shipdate"]

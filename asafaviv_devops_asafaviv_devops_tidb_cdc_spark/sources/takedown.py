@@ -7,9 +7,9 @@ training-shard landings (training_io.py) — and a deletion request
 honored when the purged documents disappear from EVERY one of them,
 not just the source table. The artifact store already has the right
 invalidation primitive: artifacts are keyed by a content fingerprint
-of their inputs PLUS a version string (sources/artifact.py), so a
-takedown is expressed as a new version component — the purge spec —
-which yields a fresh fingerprint, forces a from-scratch rebuild over
+of their inputs PLUS their derivation's code and parameters
+(sources/artifact.py), so a takedown is expressed as a new parameter —
+the purge spec — which yields a fresh fingerprint, forces a from-scratch rebuild over
 the purged source, and leaves the pre-purge artifact untouched for
 audit. This module drives that path for a deterministic purge cohort
 (``doc_id % PURGE_MOD == 0`` — in production the spec would be a
@@ -32,15 +32,14 @@ from .tables import load_table
 # The deterministic purge cohort: every PURGE_MOD-th document (and its
 # aligned embedding vector) is the subject of a takedown request.
 PURGE_MOD = 37
-_TD_VERSION = "takedown-v1"
 
 
-def _purge_tag(version: str) -> str:
-    """Version string for a purge-aware artifact: base version + the
-    purge spec. A different purge set (new takedown batch) is a new
-    spec, hence a new fingerprint, hence a rebuild — the invalidation
-    path IS the propagation mechanism."""
-    return f"{version}|purge-mod{PURGE_MOD}"
+def _purge_tag() -> str:
+    """The purge spec, a key parameter of every purge-aware artifact. A
+    different purge set (new takedown batch) is a new spec, hence a new
+    fingerprint, hence a rebuild — the invalidation path IS the
+    propagation mechanism."""
+    return f"purge-mod{PURGE_MOD}"
 
 
 def purged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,7 +81,7 @@ def takedown_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return neardup_clusters(ngram_jaccard_pairs(corpus))
 
-    fp = input_fingerprint(sf_dir, "documents", _purge_tag(f"{_TD_VERSION}-cc"))
+    fp = input_fingerprint(sf_dir, "documents", takedown_cluster_table, _purge_tag())
     return materialized(spark, "takedown_clusters", fp, build)
 
 
@@ -103,9 +102,7 @@ def takedown_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return similarity.ivf_assignment(emb, cents)
 
-    fp = input_fingerprint(
-        sf_dir, "embeddings", _purge_tag(f"{_TD_VERSION}-ivf")
-    )
+    fp = input_fingerprint(sf_dir, "embeddings", takedown_ivf_cells, _purge_tag())
     return materialized(spark, "takedown_ivf_cells", fp, build, partition_by=["cid"])
 
 
@@ -132,6 +129,6 @@ def takedown_shards_path(spark: SparkSession, sf_dir: str) -> str:
 
     return materialized_path(
         "takedown_shards",
-        input_fingerprint(sf_dir, "documents", _purge_tag(f"{_TD_VERSION}-shards")),
+        input_fingerprint(sf_dir, "documents", takedown_shards_path, _purge_tag()),
         write,
     )

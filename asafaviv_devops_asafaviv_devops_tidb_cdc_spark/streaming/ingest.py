@@ -29,6 +29,7 @@ the checkpoint pins the first run's count for every later trigger.
 
 from __future__ import annotations
 
+import hashlib
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -214,7 +215,7 @@ def envelope_files(
     from ..sources.artifact import input_fingerprint, materialized_path
 
     fp = input_fingerprint(
-        sf_dir, "events", f"env-v1-d{duplicate_fraction_mod}-f{n_files}"
+        sf_dir, "events", envelope_files, duplicate_fraction_mod, n_files
     )
     return materialized_path(
         "envelopes",
@@ -232,14 +233,14 @@ def events_files(spark: SparkSession, sf_dir: str) -> str:
     are. Written once per events fingerprint, like
     :func:`envelope_files`; consumers read it and keep their own
     checkpoints. A resumable consumer's checkpoint records these
-    absolute file paths, so moving a consumer onto or off this landing
-    needs a workdir version bump."""
+    absolute file paths, which is why :func:`resumable_workdir` keys
+    the workdir by the landing path."""
     from ..sources.artifact import input_fingerprint, materialized_path
 
     events = load_table(spark, sf_dir, "events")
     return materialized_path(
         "events_normalized",
-        input_fingerprint(sf_dir, "events", "dq-src-v1"),
+        input_fingerprint(sf_dir, "events", events_files),
         lambda dest: events.write.mode("overwrite").parquet(dest),
     )
 
@@ -254,16 +255,16 @@ def documents_files(spark: SparkSession, sf_dir: str) -> str:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return materialized_path(
         "documents_pii_src",
-        input_fingerprint(sf_dir, "documents", "pii-src-v1"),
+        input_fingerprint(sf_dir, "documents", documents_files),
         lambda dest: docs.repartition(6).write.mode("overwrite").parquet(dest),
     )
 
-def stream_workdir(sf_dir: str, tag: str) -> Path:
-    """Scratch dir for a streaming query's src/state/ckpt/sink. Prefers
-    tmpfs: checkpoint/state/sink writes fsync, and on a real disk those
-    stalls dominate (and destabilize) stream wall-clock; production
-    points these at fast local SSD or object storage. Falls back to
-    the system tempdir when /dev/shm is absent or unwritable."""
+def _stream_root() -> Path:
+    """The root of every stream workdir. Prefers tmpfs:
+    checkpoint/state/sink writes fsync, and on a real disk those stalls
+    dominate (and destabilize) stream wall-clock; production points
+    these at fast local SSD or object storage. Falls back to the system
+    tempdir when /dev/shm is absent or unwritable."""
     import os as _os
 
     shm = Path("/dev/shm")
@@ -272,33 +273,44 @@ def stream_workdir(sf_dir: str, tag: str) -> Path:
         if shm.is_dir() and _os.access(shm, _os.W_OK)
         else Path(tempfile.gettempdir())
     )
+    return base / "tidb_cdc_spark_stream"
+
+
+def stream_workdir(sf_dir: str, tag: str) -> Path:
+    """Scratch dir for a streaming query's src/state/ckpt/sink, named by
+    the scale factor and ``tag``; the caller owns its lifecycle."""
     sf = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return base / "tidb_cdc_spark_stream" / f"{sf}_{tag}"
+    return _stream_root() / f"{sf}_{tag}"
 
 
-def resumable_workdir(sf_dir: str, table: str, tag: str, version: str) -> Path:
+def resumable_workdir(
+    source_dir: str, maintainer: Callable, *params: object
+) -> Path:
     """Workdir for a stream whose state + checkpoint are KEPT across
     invocations (the production posture: a stream drains its backlog
     once; every later trigger processes only NEW data — re-running a
     query against an already-drained checkpoint is an empty drain plus
-    a state read, not a replay). Keyed by the source table's content
-    fingerprint + a version string the caller bumps whenever the fold
-    logic or state schema changes, so regenerated testdata or a
-    rewritten maintainer can never serve stale state. The checkpoint
-    itself guarantees the rest: a crashed prior drain resumes
-    exactly-once (q_stream_resume pins this), and a finished one
-    no-ops."""
+    a state read, not a replay). Keyed by the resolved landing path the
+    checkpoint reads (a landing's path already carries its source
+    table's fingerprint and its artifact root), the code key of
+    ``maintainer`` (the top-level function that runs the stream,
+    usually the caller: plans/closure.py::code_key) and ``params``, so
+    regenerated testdata, a moved landing or a rewritten fold can never
+    resume stale state. The checkpoint itself guarantees the rest: a
+    crashed prior drain resumes exactly-once (q_stream_resume pins
+    this), and a finished one no-ops."""
     import os as _os
 
-    from ..sources.artifact import input_fingerprint
+    from ..plans.closure import code_key
 
     # state files are PROVIDER-SPECIFIC (an HDFS-format checkpoint
     # cannot be resumed under RocksDB or vice versa), so the posture
     # sweep (SPARK_GRAFT_STATE_PROVIDER=rocksdb) gets its own workdir
     # instead of colliding with the default provider's state
     provider = _os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "").lower() or "hdfs"
-    fp = input_fingerprint(sf_dir, table, version)
-    return stream_workdir(sf_dir, f"{tag}_{provider[:8]}_{fp}")
+    parts = (Path(source_dir).resolve(), code_key(maintainer), provider, *params)
+    fp = hashlib.sha256("|".join(map(str, parts)).encode()).hexdigest()[:16]
+    return _stream_root() / f"{maintainer.__name__}_{provider[:8]}_{fp}"
 
 
 # micro-batch bound of the ingest stream (backpressure)

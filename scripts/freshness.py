@@ -11,7 +11,8 @@ a query's green verdict can silently go stale in two ways:
 
 File-level ``git diff`` is useless for (2): the big query modules
 change every round, which would flag everything. This module instead
-builds a FUNCTION-granular reference closure per query — the
+takes the package's FUNCTION-granular closure walk (plans/closure.py,
+the same walk that keys artifacts and stream workdirs) — the
 ``def q_*`` body, its decorator (the oracle SQL f-string), and every
 package function / class / module-level constant it transitively
 references — and compares each unit's source text between HEAD and the
@@ -26,24 +27,24 @@ scripts/freshness.py`` prints the ledger for humans.
 
 from __future__ import annotations
 
-import ast
 import json
 import re
 import subprocess
 import sys
+from functools import partial
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "asafaviv_devops_asafaviv_devops_tidb_cdc_spark"
 PKG_DIR = REPO / PKG
 
-# Units in these files are excluded from change detection: registry.py
-# holds only registration plumbing and the generated window order
-# (_CHECK_FIRST, _REPROOF_QUEUE), which is REQUIRED to change every
-# round without invalidating verdicts.
-_EXCLUDE_FILES = {f"{PKG}/registry.py"}
-
 sys.path.insert(0, str(REPO))
+
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.plans.closure import (  # noqa: E402
+    SourceTree,
+    query_closure,
+    read_source,
+)
 
 
 # --------------------------------------------------------------------
@@ -100,187 +101,25 @@ def round_commits(repo: Path = REPO) -> dict[int, str]:
 
 
 # --------------------------------------------------------------------
-# source index: (relpath, unit_name) -> (source text, AST node)
+# source trees: the package's closure walk over the worktree or a commit
 # --------------------------------------------------------------------
 
-class ModuleIndex:
-    """Per-module maps extracted from one parsed source file."""
-
-    def __init__(self, relpath: str, source: str) -> None:
-        self.relpath = relpath
-        self.lines = source.splitlines()
-        self.units: dict[str, ast.AST] = {}      # top-level def/class/assign
-        self.imports: dict[str, str] = {}        # alias -> module relpath
-        self.from_imports: dict[str, tuple[str, str]] = {}  # alias -> (relpath, name)
-        try:
-            tree = ast.parse(source)
-        except SyntaxError:
-            return
-        pkg_parts = relpath.split("/")[:-1]  # e.g. [PKG, 'queries']
-        for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                self.units[node.name] = node
-            elif isinstance(node, ast.Assign):
-                for tgt in node.targets:
-                    if isinstance(tgt, ast.Name):
-                        self.units[tgt.id] = node
-            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
-                self.units[node.target.id] = node
-        # imports, resolving package-relative dots against this module's dir
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                for a in node.names:
-                    if a.name.startswith(PKG):
-                        alias = a.asname or a.name.split(".")[0]
-                        self.imports[alias] = _mod_to_relpath(a.name)
-            elif isinstance(node, ast.ImportFrom):
-                base = _resolve_from(node, pkg_parts)
-                if base is None:
-                    continue
-                for a in node.names:
-                    alias = a.asname or a.name
-                    sub = _mod_to_relpath(f"{base}.{a.name}")
-                    if sub is not None:
-                        # `from ..streaming import alerts` -> module alias
-                        self.imports[alias] = sub
-                    else:
-                        # `from ..sources import load_table` -> named unit
-                        rel = _mod_to_relpath(base)
-                        if rel is not None:
-                            self.from_imports[alias] = (rel, a.name)
-
-    def unit_source(self, name: str) -> str | None:
-        node = self.units.get(name)
-        if node is None:
-            return None
-        start = node.lineno
-        for deco in getattr(node, "decorator_list", []):
-            start = min(start, deco.lineno)
-        return "\n".join(self.lines[start - 1 : node.end_lineno])
+def _git_show(commit: str, relpath: str) -> str | None:
+    proc = subprocess.run(
+        ["git", "show", f"{commit}:{relpath}"],
+        cwd=REPO, capture_output=True, text=True,
+    )
+    return proc.stdout if proc.returncode == 0 else None
 
 
-def _mod_to_relpath(dotted: str) -> str | None:
-    """'PKG.queries.cdc' -> 'PKG/queries/cdc.py' (or pkg __init__).
-    Existence is checked against the HEAD worktree — a module present
-    only in an old tree resolves to None there, which at worst
-    over-flags (the from-import falls back to a named-unit lookup)."""
-    if not dotted.startswith(PKG):
-        return None
-    rel = dotted.replace(".", "/")
-    for cand in (f"{rel}.py", f"{rel}/__init__.py"):
-        if (REPO / cand).exists():
-            return cand
-    return None
-
-
-def _resolve_from(node: ast.ImportFrom, pkg_parts: list[str]) -> str | None:
-    """Resolve an ImportFrom to a dotted package path, or None if external."""
-    if node.level == 0:
-        return node.module if node.module and node.module.startswith(PKG) else None
-    base_parts = pkg_parts[: len(pkg_parts) - (node.level - 1)]
-    if not base_parts or base_parts[0] != PKG:
-        return None
-    dotted = ".".join(base_parts)
-    return f"{dotted}.{node.module}" if node.module else dotted
-
-
-class TreeIndex:
-    """All package modules at HEAD-worktree or at a git commit."""
+class TreeIndex(SourceTree):
+    """Package modules at the worktree (``commit=None``) or at a git
+    commit, parsed as the closure walk reaches them."""
 
     def __init__(self, commit: str | None) -> None:
-        self.commit = commit
-        self.modules: dict[str, ModuleIndex] = {}
-        for relpath in self._list_files():
-            src = self._read(relpath)
-            if src is not None:
-                self.modules[relpath] = ModuleIndex(relpath, src)
-
-    def _list_files(self) -> list[str]:
-        if self.commit is None:
-            return sorted(
-                str(p.relative_to(REPO))
-                for p in PKG_DIR.rglob("*.py")
-                if "__pycache__" not in p.parts
-            )
-        out = subprocess.run(
-            ["git", "ls-tree", "-r", "--name-only", self.commit, PKG],
-            cwd=REPO, capture_output=True, text=True, check=True,
-        ).stdout
-        return [line for line in out.splitlines() if line.endswith(".py")]
-
-    def _read(self, relpath: str) -> str | None:
-        if self.commit is None:
-            try:
-                return (REPO / relpath).read_text()
-            except OSError:
-                return None
-        proc = subprocess.run(
-            ["git", "show", f"{self.commit}:{relpath}"],
-            cwd=REPO, capture_output=True, text=True,
+        super().__init__(
+            read_source if commit is None else partial(_git_show, commit)
         )
-        return proc.stdout if proc.returncode == 0 else None
-
-    def unit_source(self, relpath: str, name: str) -> str | None:
-        mod = self.modules.get(relpath)
-        return mod.unit_source(name) if mod else None
-
-
-# --------------------------------------------------------------------
-# reference closure at HEAD
-# --------------------------------------------------------------------
-
-def _unit_refs(mod: ModuleIndex, node: ast.AST) -> set[tuple[str, str]]:
-    """Package units referenced from one unit's AST: bare names that
-    resolve locally or via from-imports, and `alias.attr` where alias is
-    an imported package module."""
-    refs: set[tuple[str, str]] = set()
-    own = getattr(node, "name", None)
-    for sub in ast.walk(node):
-        if isinstance(sub, ast.Attribute) and isinstance(sub.value, ast.Name):
-            target = mod.imports.get(sub.value.id)
-            if target:
-                refs.add((target, sub.attr))
-        elif isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Load):
-            if sub.id == own:
-                continue
-            if sub.id in mod.units:
-                refs.add((mod.relpath, sub.id))
-            elif sub.id in mod.from_imports:
-                refs.add(mod.from_imports[sub.id])
-        elif isinstance(sub, ast.ImportFrom):
-            # function-local imports
-            base = _resolve_from(sub, mod.relpath.split("/")[:-1])
-            if base is None:
-                continue
-            rel = _mod_to_relpath(base)
-            if rel is not None:
-                for a in sub.names:
-                    refs.add((rel, a.name))
-    return refs
-
-
-def query_closure(head: TreeIndex, relpath: str, fn_name: str) -> set[tuple[str, str]]:
-    """Transitive package-unit closure of one query function at HEAD."""
-    seen: set[tuple[str, str]] = set()
-    stack = [(relpath, fn_name)]
-    while stack:
-        rel, name = stack.pop()
-        if (rel, name) in seen or rel in _EXCLUDE_FILES:
-            continue
-        mod = head.modules.get(rel)
-        if mod is None:
-            continue
-        if name not in mod.units:
-            # a package re-export (`from .tables import load_table` in
-            # sources/__init__.py): follow it to the defining unit
-            if name in mod.from_imports:
-                stack.append(mod.from_imports[name])
-            continue
-        seen.add((rel, name))
-        for ref in _unit_refs(mod, mod.units[name]):
-            if ref not in seen:
-                stack.append(ref)
-    return seen
 
 
 # --------------------------------------------------------------------

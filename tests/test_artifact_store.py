@@ -84,12 +84,18 @@ def test_dead_partial_build_is_replaced(spark, art_root):
     assert (dead / "_SUCCESS").exists()
 
 
-def test_input_fingerprint_tracks_source_and_version():
-    fp1 = artifact.input_fingerprint(SF_SMOKE, "documents", "v1")
-    fp2 = artifact.input_fingerprint(SF_SMOKE, "documents", "v2")
-    fp3 = artifact.input_fingerprint(SF_SMOKE, "embeddings", "v1")
-    assert len({fp1, fp2, fp3}) == 3  # version and source both key it
-    assert fp1 == artifact.input_fingerprint(SF_SMOKE, "documents", "v1")
+def test_input_fingerprint_tracks_source_and_params():
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import cluster_store as CS
+
+    fp1 = artifact.input_fingerprint(SF_SMOKE, "documents", CS.ngram_pair_table)
+    fp2 = artifact.input_fingerprint(SF_SMOKE, "documents", CS.ngram_pair_table, 8)
+    fp3 = artifact.input_fingerprint(SF_SMOKE, "embeddings", CS.ngram_pair_table)
+    fp4 = artifact.input_fingerprint(SF_SMOKE, "documents", CS.neardup_cluster_table)
+    # params, source and derivation each key it
+    assert len({fp1, fp2, fp3, fp4}) == 4
+    assert fp1 == artifact.input_fingerprint(SF_SMOKE, "documents", CS.ngram_pair_table)
+    with pytest.raises(ValueError, match="top-level function"):
+        artifact.input_fingerprint(SF_SMOKE, "documents", lambda: None)
 
 
 def test_materialized_path_serves_by_path_and_builds_once(spark, art_root):

@@ -1059,19 +1059,59 @@ def test_funnel_under_zipf_skew_matches_batch(spark, tmp_path):
     assert len(hist[0]["view"]) + len(hist[0]["click"]) + len(hist[0]["purchase"]) == 90
 
 
-def test_resumable_workdir_rotates_on_version_and_source(tmp_path):
-    """The resumable checkpoint scaffold is keyed by (source
-    fingerprint, fold version): same inputs resolve to the same dir
-    (that is what makes resume possible), a version bump rotates to a
-    fresh dir (stale state can never serve a rewritten fold), and the
-    fingerprint tracks the source table's content."""
+def test_resumable_workdir_rotates_on_landing_and_maintainer(tmp_path):
+    """The resumable checkpoint scaffold is keyed by (landing path,
+    maintainer code): same inputs resolve to the same dir (that is
+    what makes resume possible), while another landing dir (another
+    source fingerprint or artifact root) or another maintainer rotates
+    to a fresh dir, so a checkpoint never resumes over files it did
+    not record and stale state can never serve a rewritten fold."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries import streaming_checks as SC
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming.ingest import resumable_workdir
 
-    a = resumable_workdir(SF_SMOKE, "events", "merge", "merge-v1")
-    b = resumable_workdir(SF_SMOKE, "events", "merge", "merge-v1")
+    landing = str(tmp_path / "landing_a")
+    a = resumable_workdir(landing, SC.q_stream_cdc_replay)
+    b = resumable_workdir(landing, SC.q_stream_cdc_replay)
     assert a == b, "same key must resolve to the same workdir"
-    assert a != resumable_workdir(SF_SMOKE, "events", "merge", "merge-v2")
-    assert a != resumable_workdir(SF_SMOKE, "documents", "merge", "merge-v1")
+    assert a.name.startswith("q_stream_cdc_replay_")
+    assert a != resumable_workdir(str(tmp_path / "landing_b"), SC.q_stream_cdc_replay)
+    assert a != resumable_workdir(landing, SC.q_stream_join_view)
+    assert a != resumable_workdir(landing, SC.q_stream_cdc_replay, 2)
+
+
+def test_doc_dedup_resumes_under_another_artifact_root(spark, tmp_path, monkeypatch):
+    """A resumable workdir follows the landing its checkpoint reads.
+    q_stream_doc_dedup run under artifact root A, then under root B,
+    with one shared stream root, gets one workdir per landing, and both
+    calls serve the same rows. Keyed by the source table alone, the
+    second call resumed A's checkpoint over B's files and failed with
+    ``Wrong basePath``."""
+    import shutil
+
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import artifact
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    # a private copy of the source gives a fingerprint no earlier run used
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    shutil.copy(Path(SF_SMOKE) / "documents.parquet", sf / "documents.parquet")
+    stream_root = ingest.stream_workdir(str(sf), "probe").parent
+    stream_root.mkdir(parents=True, exist_ok=True)
+    before = {p.name for p in stream_root.iterdir()}
+    rows = []
+    try:
+        for root in ("a", "b"):
+            monkeypatch.setenv(artifact.ARTIFACT_ROOT_ENV, str(tmp_path / root))
+            q = registry.QUERIES["q_stream_doc_dedup"](spark, str(sf))
+            rows.append(sorted(q.collect()))
+    finally:
+        new = {p.name for p in stream_root.iterdir()} - before
+        for name in new:
+            if "dedup" in name:
+                shutil.rmtree(stream_root / name, ignore_errors=True)
+    assert rows[0], "the dedup stream served no rows"
+    assert rows[0] == rows[1]
+    assert len([n for n in new if "dedup" in n]) == 2, new
 
 
 def test_replay_stream_resume_equals_fresh_drain(spark, tmp_path):
@@ -1496,16 +1536,18 @@ def test_compaction_crash_debris_never_corrupts_serving(spark):
 
 def test_ingest_resumable_second_call_is_empty_pass(spark):
     """The r7 ingest conversion: q_stream_ingest_counts /
-    q_stream_dedupe persist sink + checkpoint per (events fingerprint,
-    dup_mod, version), so a SECOND invocation must be an empty
-    availableNow pass — identical counts, and not one new file
-    committed to the sink's transaction log."""
+    q_stream_dedupe persist sink + checkpoint per (envelope landing,
+    drain code), so a SECOND invocation must be an empty availableNow
+    pass — identical counts, and not one new file committed to the
+    sink's transaction log."""
     from pathlib import Path
 
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries import streaming_checks as SC
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
 
     first = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
-    base = ingest.resumable_workdir(SF_SMOKE, "events", "ing_dup", "ingest-v2")
+    src = ingest.envelope_files(spark, SF_SMOKE, 5)
+    base = ingest.resumable_workdir(src, SC._run_stream)
     meta = Path(base) / "sink" / "_spark_metadata"
     committed = sorted(p.name for p in meta.iterdir())
     again = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
