@@ -1055,52 +1055,55 @@ def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type counters (dashboard json:314) but cannot sequence. Each
     stage is 'earliest qualifying event strictly AFTER the user
     completed the previous stage', so a click before any view does not
-    count. Physical strategy: each stage frame is user-cardinality
-    (one conditional fact agg), and every stage join is an equi-join
-    on the SAME user_id the previous agg shuffled on — co-partitioned,
-    no broadcast of fact-derived data, three total shuffles regardless
-    of event volume. Conversion is exact integer ppm via floor-div;
-    the 3-row window is driver-trivial."""
+    count. Physical strategy: one shuffle on user_id; each stage time
+    is a conditional MIN over the user's window, chained on the stage
+    before (the three windows share that partitioning and sort), then
+    one per-user row and a global count. Conversion is exact integer
+    ppm via floor-div; the 3-row window is driver-trivial."""
+    return funnel_report(funnel_stage_counts(_events(spark, sf_dir)))
+
+
+def funnel_stage_counts(events: DataFrame) -> DataFrame:
+    """(stage, n_users): users who reached each funnel stage — the
+    census the batch query reports and the stream twin differences per
+    batch. Always three rows (a stage nobody reached counts 0)."""
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
-    v = (
-        ev.filter(F.col("event_type") == "view")
+    w = Window.partitionBy("user_id")
+
+    def first_after(event_type: str, after):
+        ok = F.col("event_type") == event_type
+        if after is not None:
+            ok = ok & (F.col("ts") > F.col(after))
+        return F.min(F.when(ok, F.col("ts"))).over(w)
+
+    per_user = (
+        events.withColumn("v_ts", first_after("view", None))
+        .withColumn("c_ts", first_after("click", "v_ts"))
+        .withColumn("p_ts", first_after("purchase", "c_ts"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("v_ts"))
+        .agg(*[F.max(c).alias(c) for c in ("v_ts", "c_ts", "p_ts")])
     )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("v_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("c_ts"))
+    return per_user.agg(
+        *[F.count(c).alias(c) for c in ("v_ts", "c_ts", "p_ts")]
+    ).selectExpr(
+        "stack(3, '1_view', v_ts, '2_click', c_ts, '3_purchase', p_ts) AS (stage, n_users)"
     )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("c_ts"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("p_ts"))
-    )
-    stages = (
-        v.agg(F.lit("1_view").alias("stage"), F.count("*").alias("n_users"))
-        .unionByName(
-            c.agg(F.lit("2_click").alias("stage"), F.count("*").alias("n_users"))
-        )
-        .unionByName(
-            p.agg(
-                F.lit("3_purchase").alias("stage"), F.count("*").alias("n_users")
-            )
-        )
-    )
+
+
+def funnel_report(stages: DataFrame) -> DataFrame:
+    """The (stage, n_users) census plus each stage's conversion from the
+    one before, in exact integer ppm; 1000000 after a stage nobody
+    reached (the oracle's integer division by zero is NULL)."""
+    from pyspark.sql import Window
+
     w = Window.orderBy("stage")
     return stages.select(
         "stage",
         "n_users",
         F.coalesce(
             F.floor(
-                F.col("n_users") * 1000000 / F.lag("n_users").over(w)
+                F.try_divide(F.col("n_users") * 1000000, F.lag("n_users").over(w))
             ).cast("long"),
             F.lit(1000000),
         ).alias("conv_ppm"),

@@ -672,28 +672,30 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded grid, never the event stream. The funnel (W11) is a path
     query over three fixed stages; this is the full first-order graph
     it generalizes."""
-    ev = load_table(spark, sf_dir, "events")
+    return transition_report(transition_counts(load_table(spark, sf_dir, "events")))
+
+
+def transition_counts(events: DataFrame) -> DataFrame:
+    """(from_type, to_type, n): the consecutive-pair census of
+    ``events`` per user, ordered by (ts, event_id) — the batch query's
+    counts, and the census the stream twin differences per batch."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type").over(w).alias("to_type"),
+    t = events.select(
+        "event_type", F.lead("event_type").over(w).alias("to_type")
     ).filter(F.col("to_type").isNotNull())
-    c = t.groupBy(
-        F.col("event_type").alias("from_type"), "to_type"
-    ).agg(F.count("*").cast("long").alias("n"))
-    return transition_report(c)
+    return t.groupBy(F.col("event_type").alias("from_type"), "to_type").agg(
+        F.count("*").cast("long").alias("n")
+    )
 
 
 def transition_report(c: DataFrame) -> DataFrame:
     """The census assembly over a (from_type, to_type, n) count frame —
-    shared verbatim by the batch query and the streaming monitor
-    (whose per-user recomputed pair partials aggregate to the
-    identical count frame), so the streamed matrix hash-matches the
-    batch oracle by construction. Everything after the counts runs on
-    the bounded type x type grid."""
+    shared verbatim by the batch query and the stream twin (whose
+    folded epoch partials sum to the identical count frame), so the
+    streamed matrix hash-matches the batch oracle by construction.
+    Everything after the counts runs on the bounded type x type grid."""
     s = c.groupBy("from_type").agg(F.sum("n").cast("long").alias("tot"))
     return (
         c.join(F.broadcast(s), "from_type")
@@ -706,25 +708,45 @@ def transition_report(c: DataFrame) -> DataFrame:
     )
 
 
+def stream_transition_counts(
+    spark: SparkSession, src: str, schema, workdir
+) -> DataFrame:
+    """The stream twin's maintainer over the event files at ``src``:
+    each user's history is bucketed fold state, each batch's partial is
+    transition_counts(H ∪ B) − transition_counts(H) over the users it
+    touches (a late event inserted between two paired events rewires at
+    most one pair into two, so a partial changes at most 3 counts per
+    event), and the served (from_type, to_type, n > 0) rows are the
+    census of the final history, whatever the arrival order."""
+    from ..streaming import delta as D
+
+    grid = ["from_type", "to_type"]
+    counts = D.fold_stream(
+        spark,
+        src,
+        schema,
+        workdir,
+        D.history_delta(transition_counts, grid, ["n"]),
+        lambda df: D.fold_generic(df, grid, ["n"]),
+        max_files=1,
+        history=["user_id"],
+    )
+    return counts.filter(F.col("n") > 0)
+
+
 @register("q_stream_transitions", oracle=None)  # batch oracle below
 def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X23b — transition census STREAM TWIN with per-user HISTORY
-    state: consecutive-pair semantics are NON-monotone under
-    out-of-order arrival (a late event inserts BETWEEN two already-
-    seen events and rewires two pairs), so a running last-event scalar
-    is wrong — the correct state is the per-user event history with
-    each arriving event BISECTED into it (the streaming/funnel.py
-    argument; state is bounded by a user's own activity, never the
-    stream's length). Emission is the splice's pair-count DELTAS — a
-    late insert rewires at most one pair into two, i.e. <= 3
-    (from,to) increments per event — so cumulative emission is
-    O(events), not O(batches x history) (the round-6 verdict flag).
-    Serving SUMs the deltas and aggregates with the SAME
-    transition_report as the batch query — hash-identical to the
-    batch SQL oracle over interleaved out-of-order micro-batches."""
+    """X23b — transition census STREAM TWIN: consecutive-pair semantics
+    are NON-monotone under out-of-order arrival (a late event inserts
+    BETWEEN two already-seen events and rewires two pairs), so the
+    state is each user's event history, kept as bucketed fold state.
+    Each micro-batch's partial is the batch census over (history ∪
+    batch) minus the census over history, for the users the batch
+    touches (stream_transition_counts); the partials telescope to the
+    census of the final history, and serving runs the SAME
+    transition_report as the batch query — hash-identical to the batch
+    SQL oracle over interleaved out-of-order micro-batches."""
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import delta as D
-    from ..streaming import transitions as ST
     from ..streaming.ingest import resumable_workdir
 
     ev = load_table(spark, sf_dir, "events")
@@ -739,31 +761,18 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(dest),
     )
     # resumable: the first call drains the 6 interleaved micro-batches
-    # through the history state; later calls are an empty drain + a
+    # through the history fold; later calls are an empty drain + a
     # fold of the compacted grid partials
-    base = resumable_workdir(src, q_stream_transitions)
-
-    def grid(df: DataFrame) -> DataFrame:
-        # each epoch's deltas fold onto the (from_type, to_type) grid
-        return D.fold_generic(df, ["from_type", "to_type"], ["delta"])
-
-    counts = D.fold_stream(
-        spark,
-        src,
-        "user_id bigint, event_id bigint, ts timestamp, event_type string",
-        base,
-        grid,
-        grid,
-        max_files=1,
-        stream=ST.pair_deltas,
-    )
     return transition_report(
-        counts.select("from_type", "to_type", F.col("delta").alias("n")).filter(
-            F.col("n") > 0
+        stream_transition_counts(
+            spark,
+            src,
+            "user_id bigint, event_id bigint, ts timestamp, event_type string",
+            resumable_workdir(src, q_stream_transitions),
         )
     )
 
 
-# the per-user recomputed pairs aggregate to the identical count
-# frame, so the batch SQL IS the twin's oracle
+# the streamed partials sum to the identical count frame, so the batch
+# SQL IS the twin's oracle
 ORACLES["q_stream_transitions"] = ORACLES["q_event_transitions"]

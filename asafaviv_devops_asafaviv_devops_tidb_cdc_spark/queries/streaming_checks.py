@@ -51,8 +51,8 @@ QUALIFY streak >= {alerts.DEFAULT_FOR_WINDOWS}
 def q_alert_sustained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W7 — sustained-condition alert (reference monitoring/
     alerts.yml:6-14: error rate above threshold, sustained ``for:``
-    N windows) via gaps-and-islands; streaming twin in
-    streaming/alerts.py::sustained_alerts_stream."""
+    N windows) via gaps-and-islands; its stream twin is
+    q_stream_alerts."""
     return alerts.sustained_alerts(load_table(spark, sf_dir, "events"))
 
 
@@ -289,33 +289,21 @@ GROUP BY 1
 
 @register("q_stream_alerts", oracle=ORACLES["q_alert_sustained"])
 def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W7 stream form — the sustained-alert evaluator as a REAL
-    applyInPandasWithState stream (custom per-rule state: open window
-    counts + streak, straddle-safe across micro-batches). The LAST
-    streaming operator family at the gate: its output is
-    hash-compared against the same gaps-and-islands batch oracle as
-    q_alert_sustained — custom stateful Python streaming == batch SQL,
-    proven end to end. Resumable (r7): the drain runs once per source
-    fingerprint; later calls are an empty availableNow pass + a sink
-    read."""
+    """W7 stream form — the sustained-alert evaluator over a streamed
+    fold: each micro-batch's per-window (n_total, n_errors) counts are
+    summed through streaming/delta.py::fold_stream, so a window that
+    straddles batches, or arrives out of order, merges exactly; the
+    served alerts are the batch gaps-and-islands step over the folded
+    counts, hash-compared against the same oracle as
+    q_alert_sustained. Resumable: the drain runs once per landing;
+    later calls are an empty availableNow pass + a read of the
+    compacted base."""
     events = load_table(spark, sf_dir, "events")
     src = ingest.events_files(spark, sf_dir)
-    base = ingest.resumable_workdir(src, q_stream_alerts)
-    ingest.drain(
-        spark,
-        src,
-        events.schema,
-        lambda s: alerts.sustained_alerts_stream(s)
-        .writeStream.format("parquet")
-        .option("path", str(base / "sink"))
-        .option("checkpointLocation", str(base / "ckpt")),
+    counts = alerts.stream_window_counts(
+        spark, src, events.schema, ingest.resumable_workdir(src, q_stream_alerts)
     )
-    sink = spark.read.parquet(str(base / "sink"))
-    return sink.select(
-        F.timestamp_millis(F.col("window_ms")).alias("window_start"),
-        "error_ppm",
-        "streak",
-    )
+    return alerts.sustained_windows(counts)
 
 
 # The rules-as-data battery: the whole of the reference's alerts.yml
@@ -536,22 +524,23 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (metrics registers before this module)
 @register("q_stream_funnel", oracle=ORACLES["q_funnel_stages"])
 def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W11 stream form — the ordered-event funnel as a REAL
-    applyInPandasWithState stream (streaming/funnel.py): per-user state
-    holds the funnel-type event HISTORY and recomputes (view, click,
-    purchase) stage times on every update, because the funnel's
-    strictly-after semantics are non-monotone — a late-arriving
-    earlier view can requalify an old click (the replay splits events
-    by event_id % 3, so micro-batches interleave in time and that path
-    actually runs). Last-emission-per-user is a pure function of final
-    state, so the streamed stage counts hash-match the batch SQL
-    oracle regardless of batch boundaries. Resumable (r7): the first
-    call drains the 3 interleaved micro-batches, later ones are an
-    empty availableNow pass + a sink read; max n_updates per user
-    (kept in state) selects the newest emission across runs."""
+    """W11 stream form — the ordered-event funnel as a history fold
+    (streaming/delta.py::fold_stream with ``history``): each user's
+    funnel-type events are bucketed fold state, and each micro-batch's
+    partial is the batch stage census over (history ∪ batch) minus the
+    census over history, for the users the batch touches. The funnel's
+    strictly-after semantics are non-monotone — a late-arriving earlier
+    view can requalify an old click (the replay splits events by
+    event_id % 3, so micro-batches interleave in time and that path
+    actually runs) — and the difference of two full-history censuses
+    absorbs that: the partials sum to the census of the final history,
+    so the served report hash-matches the batch SQL oracle regardless
+    of batch boundaries. Resumable: the first call drains the 3
+    interleaved micro-batches, later ones are an empty availableNow
+    pass + a read of the compacted base."""
     from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
-    from ..streaming import funnel as FU
+    from .metrics import funnel_report, funnel_stage_counts
 
     events = load_table(spark, sf_dir, "events")
     # 3 interleaved files = 3 out-of-order micro-batches
@@ -564,22 +553,21 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(dest),
     )
-    base = ingest.resumable_workdir(src, q_stream_funnel)
-    # each batch's emissions fold to last-per-user partials, so serving
-    # stays O(users) however many drains accumulate
-    served = D.fold_stream(
+    stages = D.fold_stream(
         spark,
         src,
         events.schema,
-        base,
-        FU.last_per_user,
-        FU.last_per_user,
+        ingest.resumable_workdir(src, q_stream_funnel),
+        D.history_delta(funnel_stage_counts, ["stage"], ["n_users"]),
+        lambda df: D.fold_generic(df, ["stage"], ["n_users"]),
         max_files=1,
-        stream=FU.funnel_stream,
+        # the history keeps only the funnel events' three columns
+        stream=lambda s: s.filter(
+            F.col("event_type").isin("view", "click", "purchase")
+        ).select("user_id", "event_type", "ts"),
+        history=["user_id"],
     )
-    # `served` is already last-per-user; final_stage_counts' window
-    # pass over it is a no-op selection, keeping one serving path
-    return FU.final_stage_counts(served)
+    return funnel_report(stages)
 
 
 @register(

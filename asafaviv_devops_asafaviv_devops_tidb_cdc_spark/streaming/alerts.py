@@ -8,29 +8,32 @@ run of >= N consecutive breached windows (missing windows break the
 run, matching Prometheus pendings resetting when the expr stops
 returning).
 
-Batch implementation: gaps-and-islands — breached windows, island id =
+Batch implementation: per-window (n_total, n_errors) counts, then
+gaps-and-islands over them — breached windows, island id =
 window_start - rank * width (consecutive windows share it), alert rows
 where the running streak inside the island reaches N. One shuffle on
 the island sort; SQL-expressible, so it gets a DuckDB oracle.
 
-Streaming implementation: ``applyInPandasWithState`` keeps (streak,
-last window) per key and emits fire/clear transitions — the only
-operator in this engine needing custom state (SURVEY §4.2).
+Streaming implementation: the window counts are an integer-sum fold
+(streaming/delta.py::fold_stream), so a window split across
+micro-batches, or arriving after a later one, sums to the same counts
+as in batch; the served alerts are the same gaps-and-islands step over
+the folded counts, with no per-rule state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from .delta import fold_generic, fold_stream
 
 WINDOW_MS = 300_000  # 5-minute buckets
 DEFAULT_THRESHOLD_PPM = 200_000  # fire when >20% of a window's events are errors
 DEFAULT_FOR_WINDOWS = 3  # "for: 15m" at 5-minute resolution
 
 
-def breached_windows(
-    events: DataFrame, threshold_ppm: int = DEFAULT_THRESHOLD_PPM
-) -> DataFrame:
-    """Tumbling 5-min error-ratio windows that breach the threshold."""
+def window_counts(events: DataFrame) -> DataFrame:
+    """(window_start, n_total, n_errors) per tumbling 5-min window."""
     return (
         events.groupBy(F.window("ts", "5 minutes").alias("w"))
         .agg(
@@ -39,24 +42,36 @@ def breached_windows(
             .cast("long")
             .alias("n_errors"),
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "n_total",
-            "n_errors",
-            F.expr("(n_errors * 1000000) div n_total").cast("long").alias("error_ppm"),
-        )
-        .filter(F.col("error_ppm") >= threshold_ppm)
+        .select(F.col("w.start").alias("window_start"), "n_total", "n_errors")
     )
 
 
-def sustained_alerts(
-    events: DataFrame,
+def stream_window_counts(spark: SparkSession, src: str, schema, workdir) -> DataFrame:
+    """``window_counts`` of the event files at ``src`` as a streamed
+    integer-sum fold: each micro-batch's counts are one epoch partial,
+    and the served counts are their per-window sums."""
+    return fold_stream(
+        spark,
+        src,
+        schema,
+        workdir,
+        window_counts,
+        lambda df: fold_generic(df, ["window_start"], ["n_total", "n_errors"]),
+    )
+
+
+def sustained_windows(
+    counts: DataFrame,
     threshold_ppm: int = DEFAULT_THRESHOLD_PPM,
     for_windows: int = DEFAULT_FOR_WINDOWS,
 ) -> DataFrame:
-    """Batch W7: windows where the breach has been sustained for >=
-    ``for_windows`` consecutive windows."""
-    b = breached_windows(events, threshold_ppm)
+    """Gaps-and-islands over window counts: the breached windows where
+    the breach has been sustained for >= ``for_windows`` consecutive
+    windows."""
+    b = counts.select(
+        "window_start",
+        F.expr("(n_errors * 1000000) div n_total").cast("long").alias("error_ppm"),
+    ).filter(F.col("error_ppm") >= threshold_ppm)
     w_rank = Window.orderBy("window_start")
     islanded = b.withColumn(
         "island",
@@ -73,6 +88,15 @@ def sustained_alerts(
         .filter(F.col("streak") >= for_windows)
         .select("window_start", "error_ppm", "streak")
     )
+
+
+def sustained_alerts(
+    events: DataFrame,
+    threshold_ppm: int = DEFAULT_THRESHOLD_PPM,
+    for_windows: int = DEFAULT_FOR_WINDOWS,
+) -> DataFrame:
+    """Batch W7: ``sustained_windows`` over the events' window counts."""
+    return sustained_windows(window_counts(events), threshold_ppm, for_windows)
 
 
 def evaluate_rules(
@@ -173,122 +197,4 @@ def evaluate_rules(
         islanded.withColumn("streak", F.count("*").over(w_streak).cast("long"))
         .filter(F.col("streak") >= F.col("for_windows"))
         .select("rule", "window_start", "value", "streak")
-    )
-
-
-def make_sustained_update(
-    threshold_ppm: int = DEFAULT_THRESHOLD_PPM,
-    for_windows: int = DEFAULT_FOR_WINDOWS,
-):
-    """The applyInPandasWithState update function, factored out so the
-    batch-boundary (window-straddle) semantics are unit-testable
-    without driving a real stream."""
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        # State carries the OPEN (= newest-seen) window's accumulated
-        # counts, the streak BEFORE it, and whether it already fired.
-        # A window whose events straddle two micro-batches (file/offset
-        # boundaries don't align to windows under maxFilesPerTrigger)
-        # arrives again with window_ms == open_ms: merge its counts and
-        # re-evaluate instead of resetting the streak / double-firing
-        # (the round-1 `else 1` bug).
-        if state.exists:
-            (open_ms, streak_prev, open_total, open_errors, open_fired) = state.get
-        else:
-            open_ms, streak_prev, open_total, open_errors, open_fired = -1, 0, 0, 0, False
-        out = []
-
-        def evaluate():
-            """(Re-)evaluate the open window; fire at most once."""
-            nonlocal open_fired
-            if open_total <= 0:
-                return
-            ppm = open_errors * 1_000_000 // open_total
-            if ppm >= threshold_ppm:
-                streak = streak_prev + 1
-                if streak >= for_windows and not open_fired:
-                    out.append((int(open_ms), int(ppm), int(streak)))
-                    open_fired = True
-
-        batches = list(pdfs)
-        if batches:
-            pdf = pd.concat(batches)
-            ms = (pdf["ts"] - pd.Timestamp(0)) // pd.Timedelta(milliseconds=1)
-            pdf = pdf.assign(window_ms=(ms // WINDOW_MS) * WINDOW_MS)
-            grouped = (
-                pdf.groupby("window_ms")
-                .agg(
-                    n_total=("event_type", "size"),
-                    n_errors=("event_type", lambda s: int((s == "error").sum())),
-                )
-                .sort_index()
-            )
-            for window_ms, row in grouped.iterrows():
-                window_ms = int(window_ms)
-                if window_ms == open_ms:
-                    open_total += int(row["n_total"])
-                    open_errors += int(row["n_errors"])
-                else:
-                    # close the open window: fold its final breach
-                    # status into the streak for the next window
-                    if open_ms >= 0:
-                        breached = (
-                            open_total > 0
-                            and open_errors * 1_000_000 // open_total >= threshold_ppm
-                        )
-                        consecutive = window_ms == open_ms + WINDOW_MS
-                        streak_prev = (
-                            streak_prev + 1 if (breached and consecutive) else 0
-                        )
-                    open_ms = window_ms
-                    open_total = int(row["n_total"])
-                    open_errors = int(row["n_errors"])
-                    open_fired = False
-                evaluate()
-        state.update(
-            (int(open_ms), int(streak_prev), int(open_total), int(open_errors), bool(open_fired))
-        )
-        yield pd.DataFrame(out, columns=["window_ms", "error_ppm", "streak"])
-
-    return update
-
-
-def sustained_alerts_stream(
-    events: DataFrame,
-    threshold_ppm: int = DEFAULT_THRESHOLD_PPM,
-    for_windows: int = DEFAULT_FOR_WINDOWS,
-) -> DataFrame:
-    """Streaming W7 via applyInPandasWithState: per alert-rule key the
-    operator buckets its events into 5-min windows itself (Spark
-    forbids stateful ops after a streaming aggregation), carrying the
-    open window's counts + the streak before it across micro-batches.
-    A window that STRADDLES a batch boundary is merged into the open
-    state and re-evaluated (at-most-once fire per window) rather than
-    resetting the streak. Windows are assumed non-decreasing across
-    batches (true for a replayed log / a single Kafka partition per
-    rule — the reference's exact setup, docker-compose.yml:102
-    partition-num=1); a late out-of-order window degrades to a streak
-    reset, never a crash. One irreducible append-mode caveat: a fired
-    window cannot be retracted if a late straddle drops its ratio back
-    under the threshold.
-
-    Scale note: the key is the alert RULE (tiny cardinality — 5 rules
-    in reference monitoring/alerts.yml), not the event key; the
-    production shape is a windowed pre-aggregation stream feeding this
-    operator one row per window."""
-    update = make_sustained_update(threshold_ppm, for_windows)
-    keyed = events.select(
-        F.lit("error_rate").alias("rule"), F.col("ts"), F.col("event_type")
-    )
-    return keyed.groupBy("rule").applyInPandasWithState(
-        update,
-        outputStructType="window_ms long, error_ppm long, streak long",
-        stateStructType=(
-            "open_ms long, streak_prev long, open_total long, "
-            "open_errors long, open_fired boolean"
-        ),
-        outputMode="append",
-        timeoutConf="NoTimeout",
     )

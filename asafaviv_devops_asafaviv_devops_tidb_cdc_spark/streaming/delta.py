@@ -7,9 +7,17 @@ micro-batch with the family's ``per_batch`` into ONE small partial,
 compact the partials into a crash-safe base, and serve the fold. A
 family supplies only its two folds — the retraction totals
 (q_stream_delta_agg), DQ violation counts, KMV and sample bottom-k, the
-funnel's last-per-user argmax, the transition grid, the shard manifest
-and so on; the drain, checkpoint, partial layout, compaction and
-serving read exist here once.
+sustained-alert window counts, the shard manifest and so on; the drain,
+checkpoint, partial layout, compaction and serving read exist here
+once.
+
+A census that is a function of each key's whole history (the
+transition pairs and the funnel stages, whose answers a late event can
+rewire) runs through the same path with ``history=<key columns>``: the
+keys' events are kept as bucketed state (``merge.apply_bucketed_fold``)
+and each batch's partial is census(H ∪ B) − census(H), where H is the
+prior history of the keys the batch holds, so the partials telescope
+to the census of the final history.
 
 Idempotence: partials land in an ``epoch=<id>`` directory written with
 mode=overwrite, so a micro-batch retry after a crash rewrites its own
@@ -29,7 +37,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import ingest
+from . import ingest, merge
 
 _BASE_PREFIX = "base_v"
 
@@ -46,6 +54,37 @@ def epoch_partials(partials_dir: str, per_batch):
         )
 
     return fold
+
+
+def history_partials(partials_dir: str, state_dir: str, keys: list[str], per_batch):
+    """The ``foreachBatch`` function of a history fold: each batch B is
+    appended to the bucketed history through ``merge.apply_bucketed_fold``
+    under its epoch, and inside that fold ``per_batch(H, H ∪ B)`` is
+    written as the epoch partial, where H is the prior history of the
+    keys B holds (the touched buckets of the manifest committed BEFORE
+    this epoch, narrowed to B's keys). The partial lands before the
+    epoch's manifest commits; a replay of a committed epoch is a no-op
+    and leaves that partial in place, and a replay of an uncommitted
+    one reads the same H and rewrites the same partial. A batch with no
+    rows adds no partial."""
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        def fold(old: DataFrame | None, new: DataFrame) -> DataFrame:
+            if old is None:
+                h = new.limit(0)
+            else:
+                k = new.select(*keys).distinct()
+                h = old.join(k, [old[c].eqNullSafe(k[c]) for c in keys], "left_semi")
+            per_batch(h, h.unionByName(new)).write.mode("overwrite").parquet(
+                f"{partials_dir}/epoch={epoch_id}"
+            )
+            return new if old is None else old.unionByName(new)
+
+        merge.apply_bucketed_fold(
+            batch_df.sparkSession, batch_df, state_dir, epoch_id, keys, fold
+        )
+
+    return sink
 
 
 def _base_version(partials_dir: str) -> tuple[int, Path | None]:
@@ -107,6 +146,21 @@ def fold_generic(
     )
 
 
+def history_delta(census, group_cols: list[str], sum_cols: list[str]):
+    """The ``per_batch`` of a history fold whose census is an integer
+    count frame: census(H ∪ B) − census(H) on the grid. Keys the batch
+    does not touch are absent from both sides; summed over epochs the
+    partials telescope to census(final history)."""
+
+    def per_batch(h: DataFrame, hb: DataFrame) -> DataFrame:
+        before = census(h).select(
+            *group_cols, *[(-F.col(c)).alias(c) for c in sum_cols]
+        )
+        return fold_generic(census(hb).unionByName(before), group_cols, sum_cols)
+
+    return per_batch
+
+
 def folded_with(
     spark: SparkSession, partials_dir: str, fold_fn
 ) -> DataFrame:
@@ -114,7 +168,7 @@ def folded_with(
     refold monoid: apply ``fold_fn`` to the live partials (newest base
     + epochs above its version). ``fold_fn`` must satisfy
     fold(fold(A) ∪ fold(B)) == fold(A ∪ B) — integer sums
-    (fold_generic), per-key argmax (funnel), bottom-k (KMV) all do."""
+    (fold_generic), bottom-k (KMV and the sample) all do."""
     return fold_fn(spark.read.parquet(*_live_paths(partials_dir)))
 
 
@@ -175,6 +229,7 @@ def fold_stream(
     max_files: int = 2,
     fmt: str = "parquet",
     stream=None,
+    history: list[str] | None = None,
 ) -> DataFrame:
     """Run one epoch-partial maintainer and serve its fold.
 
@@ -185,9 +240,17 @@ def fold_stream(
     returns ``fold`` over the live partials. ``fold`` must be
     refold-idempotent (see folded_with). The checkpoint makes every
     call after the first an empty drain over an already-consumed
-    backlog, and a file landed later is folded exactly once."""
+    backlog, and a file landed later is folded exactly once.
+
+    With ``history`` (key columns) the batches are also kept as
+    bucketed state at ``<workdir>/history`` and ``per_batch`` gets the
+    pair (H, H ∪ B), H being the prior history of the batch's keys (see
+    history_partials and history_delta)."""
     partials = f"{workdir}/partials"
-    sink = epoch_partials(partials, per_batch)
+    if history is None:
+        sink = epoch_partials(partials, per_batch)
+    else:
+        sink = history_partials(partials, f"{workdir}/history", history, per_batch)
     ingest.drain(
         spark,
         source_dir,

@@ -1,6 +1,6 @@
 """S1/S2 Kafka source constructor, S3 ES sink options, health/lifecycle
 parity, the E5 header-sniffing decoder, and the sustained-alert
-straddle semantics — the surfaces with no query-shaped oracle.
+window-straddle semantics — the surfaces with no query-shaped oracle.
 """
 
 from __future__ import annotations
@@ -8,8 +8,6 @@ from __future__ import annotations
 import struct
 import tempfile
 from pathlib import Path
-
-import pandas as pd
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions import multimodal
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
@@ -193,67 +191,99 @@ def test_decode_runs_inside_map_in_pandas(spark):
 # --- W7 stream: window-straddle semantics --------------------------------
 
 
-class _FakeState:
-    def __init__(self):
-        self.exists = False
-        self.get = None
+def _served_alerts(spark, tmp_path, files, threshold_ppm, for_windows):
+    """Land each of ``files`` (lists of (epoch_ms, is_error)) in turn,
+    draining the alerts fold after each; -> the served
+    [(window_ms, error_ppm, streak)] after each file. The last is
+    asserted equal to the batch evaluator over every row."""
+    from pyspark.sql import functions as F
 
-    def update(self, v):
-        self.exists = True
-        self.get = v
+    def events(rows):
+        return spark.createDataFrame(
+            [(ms, "error" if e else "ok") for ms, e in rows],
+            "ms long, event_type string",
+        ).select(F.timestamp_millis("ms").alias("ts"), "event_type")
+
+    def rows(df):
+        return sorted(
+            (int(r["window_start"].timestamp() * 1000), r["error_ppm"], r["streak"])
+            for r in df.collect()
+        )
+
+    src, served = str(tmp_path / "src"), []
+    for f in files:
+        events(f).coalesce(1).write.mode("append").parquet(src)
+        counts = alerts.stream_window_counts(
+            spark, src, "ts timestamp, event_type string", tmp_path / "work"
+        )
+        served.append(rows(alerts.sustained_windows(counts, threshold_ppm, for_windows)))
+    every = events([r for f in files for r in f])
+    assert served[-1] == rows(alerts.sustained_alerts(every, threshold_ppm, for_windows))
+    return served
 
 
-def _batch(rows):
-    """rows = [(epoch_ms, is_error), ...] -> the update fn's input."""
-    return pd.DataFrame(
-        {
-            "ts": [pd.Timestamp(ms, unit="ms") for ms, _ in rows],
-            "event_type": ["error" if e else "ok" for _, e in rows],
-        }
-    )
-
-
-def _run(update, state, rows):
-    out = list(update(("error_rate",), iter([_batch(rows)]), state))
-    return [tuple(r) for r in pd.concat(out).itertuples(index=False, name=None)]
-
-
-def test_straddled_window_merges_instead_of_resetting_streak():
+def test_straddled_window_merges_instead_of_resetting_streak(spark, tmp_path):
     """Round-1 ADVICE finding: a breached window split across two
     micro-batches must keep the streak and fire AT MOST once."""
     W = alerts.WINDOW_MS
-    update = alerts.make_sustained_update(threshold_ppm=1, for_windows=2)
-    state = _FakeState()
-    # batch 1: window 0 breached, window W breached first half -> fires at W
-    fired = _run(update, state, [(0, True), (W, True)])
-    assert [(w, s) for w, _, s in fired] == [(W, 2)]
-    # batch 2: the SECOND half of window W (straddle) + window 2W breached
-    fired = _run(update, state, [(W + 1000, True), (2 * W, True)])
+    # file 1: window 0 breached, window W breached first half; file 2:
+    # the SECOND half of window W (straddle) + window 2W breached
+    fired = _served_alerts(
+        spark, tmp_path, [[(0, True), (W, True)], [(W + 1000, True), (2 * W, True)]],
+        threshold_ppm=1, for_windows=2,
+    )[-1]
     # no duplicate fire for W; 2W continues the streak at 3
-    assert [(w, s) for w, _, s in fired] == [(2 * W, 3)]
+    assert [(w, s) for w, _, s in fired] == [(W, 2), (2 * W, 3)]
 
 
-def test_straddle_completes_streak_without_double_fire():
+def test_straddle_completes_streak_without_double_fire(spark, tmp_path):
     """Straddle arriving BEFORE the window fired: the merged counts
     fire the window exactly once."""
     W = alerts.WINDOW_MS
-    update = alerts.make_sustained_update(threshold_ppm=500_000, for_windows=2)
-    state = _FakeState()
-    # window 0 breached; window W first half all-ok (under threshold)
-    fired = _run(update, state, [(0, True), (W, False)])
-    assert fired == []
-    # second half of window W: enough errors to flip it over threshold
-    fired = _run(update, state, [(W + 1, True), (W + 2, True), (W + 3, True)])
+    # window 0 breached; window W's first half all-ok (under threshold),
+    # its second half enough errors to flip it over
+    fired = _served_alerts(
+        spark, tmp_path,
+        [[(0, True), (W, False)], [(W + 1, True), (W + 2, True), (W + 3, True)]],
+        threshold_ppm=500_000, for_windows=2,
+    )[-1]
     assert [(w, s) for w, _, s in fired] == [(W, 2)]
 
 
-def test_gap_resets_streak():
+def test_gap_resets_streak(spark, tmp_path):
     W = alerts.WINDOW_MS
-    update = alerts.make_sustained_update(threshold_ppm=1, for_windows=2)
-    state = _FakeState()
-    fired = _run(update, state, [(0, True), (3 * W, True), (4 * W, True)])
+    fired = _served_alerts(
+        spark, tmp_path, [[(0, True), (3 * W, True)], [(4 * W, True)]],
+        threshold_ppm=1, for_windows=2,
+    )[-1]
     # 0 and 3W are not consecutive -> streak restarts; fires at 4W
     assert [(w, s) for w, _, s in fired] == [(4 * W, 2)]
+
+
+def test_out_of_order_window_completes_streak(spark, tmp_path):
+    """Windows 0 and 2 land before window 1: once window 1 arrives the
+    run 0-1-2 is consecutive and fires at window 2, as in batch."""
+    W = alerts.WINDOW_MS
+    served = _served_alerts(
+        spark, tmp_path, [[(0, True), (2 * W, True)], [(W, True)]],
+        threshold_ppm=1, for_windows=3,
+    )
+    assert served[0] == []
+    assert [(w, s) for w, _, s in served[-1]] == [(2 * W, 3)]
+
+
+def test_late_straddle_retracts_fired_window(spark, tmp_path):
+    """A late straddle drops a fired window back under the threshold:
+    the served alerts are recomputed from the merged counts, so the
+    fire is withdrawn, as in batch."""
+    W = alerts.WINDOW_MS
+    served = _served_alerts(
+        spark, tmp_path,
+        [[(0, True), (W, True), (2 * W, True)], [(2 * W + i, False) for i in (1, 2, 3)]],
+        threshold_ppm=500_000, for_windows=3,
+    )
+    assert [(w, s) for w, _, s in served[0]] == [(2 * W, 3)]
+    assert served[-1] == []
 
 
 # ---------------------------------------------------------------- BMP pixels

@@ -369,7 +369,7 @@ def test_bigram_counts_conserve_totals(spark, docs):
     assert total == sum(len(d) - 1 for d in docs)
 
 
-# --- funnel state: order-independence of the non-monotone fold ------------
+# --- funnel census: order-independence of the non-monotone stages --------
 
 _funnel_event = st.tuples(
     st.sampled_from(["view", "click", "purchase"]),
@@ -377,30 +377,39 @@ _funnel_event = st.tuples(
 )
 
 
-@given(st.lists(_funnel_event, min_size=0, max_size=20), st.randoms())
-@settings(max_examples=200, deadline=None)
-def test_funnel_stages_are_arrival_order_independent(events, rng):
-    """The streaming funnel's per-user fold must give the same (v,c,p)
-    for ANY arrival order — the reason state keeps full per-type
+@given(
+    st.lists(st.lists(_funnel_event, max_size=12), min_size=1, max_size=8),
+    st.randoms(),
+)
+@settings(max_examples=30, deadline=None)
+def test_funnel_stages_are_arrival_order_independent(spark, users, rng):
+    """The funnel stage census (shared by q_funnel_stages and the
+    stream's history fold) must count, for ANY arrival order of each
+    user's events, exactly the users whose earliest-qualifying chain
+    reaches each stage — the reason the stream keeps every user's full
     history instead of greedy scalars."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming.funnel import _stages
+    from pyspark.sql import functions as F
 
-    def run(order):
-        vs = [t for e, t in order if e == "view"]
-        cs = [t for e, t in order if e == "click"]
-        ps = [t for e, t in order if e == "purchase"]
-        return _stages(vs, cs, ps)
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.metrics import (
+        funnel_stage_counts,
+    )
 
-    shuffled = list(events)
-    rng.shuffle(shuffled)
-    assert run(events) == run(shuffled)
-    # ... and it matches the batch definition directly
-    v, c, p = run(events)
-    views = sorted(t for e, t in events if e == "view")
-    want_v = views[0] if views else -1
-    want_c = min((t for e, t in events if e == "click" and want_v != -1 and t > want_v), default=-1)
-    want_p = min((t for e, t in events if e == "purchase" and want_c != -1 and t > want_c), default=-1)
-    assert (v, c, p) == (want_v, want_c, want_p)
+    rows = [(u, e, t) for u, evs in enumerate(users) for e, t in evs]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(
+        rows, "user_id long, event_type string, s long"
+    ).select("user_id", "event_type", F.timestamp_seconds("s").alias("ts"))
+    got = {r["stage"]: r["n_users"] for r in funnel_stage_counts(df).collect()}
+
+    want = {"1_view": 0, "2_click": 0, "3_purchase": 0}
+    for evs in users:
+        v = min((t for e, t in evs if e == "view"), default=-1)
+        c = min((t for e, t in evs if e == "click" and v != -1 and t > v), default=-1)
+        p = min((t for e, t in evs if e == "purchase" and c != -1 and t > c), default=-1)
+        want["1_view"] += v >= 0
+        want["2_click"] += c >= 0
+        want["3_purchase"] += p >= 0
+    assert got == want
 
 
 # --- delta-join identity: epoch split never double-counts a pair ----------

@@ -1,5 +1,5 @@
 """Streaming semantics: stream-equals-batch, exactly-once dedupe, and
-the stateful sustained-alert operator's stream/batch agreement."""
+the stream folds' agreement with their batch queries."""
 
 from __future__ import annotations
 
@@ -113,40 +113,25 @@ def test_windowed_agg_stream_matches_batch(spark):
     assert streamed == batch
 
 
-def test_sustained_alert_stream_matches_batch(spark):
+def test_sustained_alert_stream_matches_batch(spark, tmp_path):
+    """The streamed window counts equal the batch counts, and so do the
+    alerts over them. sf0.001 spreads its events thinly (no three
+    consecutive windows hold an error), so the alerts compare at one
+    window and 1 ppm."""
     events = load_table(spark, SF_SMOKE, "events")
-    batch = {
-        (r["window_start"], r["streak"])
-        for r in alerts.sustained_alerts(events, threshold_ppm=1).collect()
-    }
-
-    # replay events through the stateful streaming operator
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    work = Path(tempfile.gettempdir()) / "tidb_cdc_spark_stream" / "alert_check"
-    if work.exists():
-        shutil.rmtree(work)
-    events.write.mode("overwrite").parquet(str(work / "src"))
-    stream_src = spark.readStream.schema(events.schema).parquet(str(work / "src"))
-    out = alerts.sustained_alerts_stream(stream_src, threshold_ppm=1)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(work / "sink"))
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    # replay events as 4 files (2 micro-batches) through the streamed
+    # window-count fold
+    src = str(tmp_path / "src")
+    events.repartition(4).write.parquet(src)
+    counts = alerts.stream_window_counts(spark, src, events.schema, tmp_path / "work")
+    assert sorted(tuple(r) for r in counts.collect()) == sorted(
+        tuple(r) for r in alerts.window_counts(events).collect()
     )
-    q.awaitTermination()
-    got = spark.read.parquet(str(work / "sink"))
-    stream = {
-        (r["ws"], r["streak"])
-        for r in got.select(
-            F.timestamp_millis(F.col("window_ms")).alias("ws"), "streak"
-        ).collect()
-    }
-    assert stream == batch
+    stream = sorted(
+        tuple(r) for r in alerts.sustained_windows(counts, 1, 1).collect()
+    )
+    batch = sorted(tuple(r) for r in alerts.sustained_alerts(events, 1, 1).collect())
+    assert stream == batch and len(batch) > 0
 
 
 from pathlib import Path  # noqa: E402  (used by the bucket-layout tests)
@@ -293,21 +278,11 @@ _TRANSITIONS_SCHEMA = "user_id bigint, event_id bigint, ts timestamp, event_type
 def _transition_counts(spark, src, schema, workdir):
     """The q_stream_transitions maintainer over ``src``: served
     (from_type, to_type, n) rows with n > 0."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
-        delta,
-        transitions as TR,
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.profiling import (
+        stream_transition_counts,
     )
 
-    def grid(df):
-        return delta.fold_generic(df, ["from_type", "to_type"], ["delta"])
-
-    counts = delta.fold_stream(
-        spark, str(src), schema, workdir, grid, grid,
-        max_files=1, stream=TR.pair_deltas,
-    )
-    return counts.select(
-        "from_type", "to_type", F.col("delta").alias("n")
-    ).filter(F.col("n") > 0)
+    return stream_transition_counts(spark, str(src), schema, workdir)
 
 
 def _delta_epochs(spark, src, pdir, ckpt):
@@ -341,8 +316,8 @@ def test_checkpoint_from_eight_partitions_resumes(
     its count when resumed by the data-sized code (Spark reads it back
     from the offset log), folds the new files in, and serves the same
     answer: the batch last-writer-wins replay for the merge fold, a
-    one-shot drain of the whole source for the stateful transitions
-    census."""
+    one-shot drain of the whole source for the transitions history
+    fold."""
     import shutil
 
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
@@ -404,13 +379,12 @@ def test_moved_drains_record_the_data_sized_domain(
 ):
     """Every file-source stream starts through ``ingest.drain``, which
     sizes the shuffle domain from the stream's read bound: over a KB
-    source a stateless foreachBatch fold, a stateful memory-sink stream
+    source a stateless foreachBatch fold, the funnel's history fold
     and the two-sided stream-stream join each record ONE partition in
     their offset log instead of a fixed count."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
         delta,
         dq,
-        funnel as FU,
         ingest,
     )
 
@@ -429,19 +403,9 @@ def test_moved_drains_record_the_data_sized_domain(
         )
         ckpt = tmp_path / "ckpt"
     elif consumer == "funnel":
-        # a memory sink has no checkpoint option; the session default
-        # root places it at <root>/<query name>
-        key = "spark.sql.streaming.checkpointLocation"
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, str(tmp_path / "mem"))
-        try:
-            FU.run_funnel_stream(spark, src, events.schema, "funnel_domain")
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-        ckpt = tmp_path / "mem" / "funnel_domain"
+        monkeypatch.setattr(ingest, "resumable_workdir", lambda *a: tmp_path / "funnel")
+        assert registry.QUERIES["q_stream_funnel"](spark, SF_SMOKE).count() == 3
+        ckpt = tmp_path / "funnel" / "ckpt"
     else:
         monkeypatch.setattr(ingest, "resumable_workdir", lambda *a: tmp_path / "ssjoin")
         assert registry.QUERIES["q_stream_stream_join"](spark, SF_SMOKE).count() > 0
@@ -869,20 +833,53 @@ def test_join_view_invariant_to_batch_boundaries(spark):
     assert one == three and len(one) > 0
 
 
-def test_funnel_state_requalifies_on_late_earlier_view():
-    """The funnel's strictly-after semantics are non-monotone: a late
-    EARLIER view must requalify an old click, and that a purchase. The
-    per-user history state makes the fold order-independent."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming.funnel import _stages
+def _funnel_events(spark, rows):
+    """rows = [(event_id, user_id, event_type, ms)] -> event rows."""
+    return spark.createDataFrame(
+        rows, "event_id long, user_id long, event_type string, ms long"
+    ).select(
+        "event_id", F.timestamp_millis("ms").alias("ts"), "user_id", "event_type"
+    )
 
-    # click@10, purchase@20 arrive first: no view -> nothing qualifies
-    assert _stages([], [10], [20]) == (-1, -1, -1)
-    # late view@5 arrives: click@10 qualifies, then purchase@20
-    assert _stages([5], [10], [20]) == (5, 10, 20)
-    # view after the only click: click never qualifies
-    assert _stages([15], [10], [20]) == (15, -1, -1)
-    # a second, earlier view flips it back
-    assert _stages([15, 3], [10], [20]) == (3, 10, 20)
+
+def _served_funnel(spark, monkeypatch, src, workdir):
+    """q_stream_funnel's served {stage: n_users} over the files at ``src``."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import artifact
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    monkeypatch.setattr(artifact, "materialized_path", lambda *a: str(src))
+    monkeypatch.setattr(ingest, "resumable_workdir", lambda *a: workdir)
+    rows = registry.QUERIES["q_stream_funnel"](spark, SF_SMOKE).collect()
+    return {r["stage"]: (r["n_users"], r["conv_ppm"]) for r in rows}
+
+
+def test_funnel_state_requalifies_on_late_earlier_view(spark, tmp_path, monkeypatch):
+    """The funnel's strictly-after semantics are non-monotone: a late
+    EARLIER view must requalify an old click, and that a purchase.
+    Two files, the late views landing second: after the first file no
+    user has a stage past the view; after the second the served stages
+    equal the batch q_funnel_stages over the same rows."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries import metrics
+
+    first = [
+        (1, 1, "click", 10), (2, 1, "purchase", 20),  # no view yet
+        (3, 2, "view", 15), (4, 2, "click", 10), (5, 2, "purchase", 20),
+    ]
+    # user 1's view@5 and user 2's earlier view@3 qualify both clicks
+    second = [(6, 1, "view", 5), (7, 2, "view", 3)]
+    src = tmp_path / "src"
+    _funnel_events(spark, first).coalesce(1).write.parquet(str(src))
+    served = _served_funnel(spark, monkeypatch, src, tmp_path / "work")
+    assert {k: n for k, (n, _) in served.items()} == {
+        "1_view": 1, "2_click": 0, "3_purchase": 0
+    }
+    _funnel_events(spark, second).coalesce(1).write.mode("append").parquet(str(src))
+    served = _served_funnel(spark, monkeypatch, src, tmp_path / "work")
+    batch = metrics.funnel_report(
+        metrics.funnel_stage_counts(_funnel_events(spark, first + second))
+    )
+    assert served == {r["stage"]: (r["n_users"], r["conv_ppm"]) for r in batch.collect()}
+    assert served["3_purchase"][0] == 2
 
 
 def test_stream_funnel_matches_batch(spark):
@@ -1005,58 +1002,45 @@ def test_join_view_bounded_io_under_zipf_skew(spark):
     assert got == expected
 
 
-def test_funnel_under_zipf_skew_matches_batch(spark, tmp_path):
-    """Skew stress for the stateful funnel: one hot user owns half of
-    all events (a long per-user history — the state the hot key of a
-    real corpus accumulates), a light tail the rest, delivered in 3
+def test_funnel_under_zipf_skew_matches_batch(spark, tmp_path, monkeypatch):
+    """Skew stress for the funnel history fold: one hot user owns half
+    of all events (a long per-user history — the state the hot key of
+    a real corpus accumulates), a light tail the rest, delivered in 3
     out-of-order micro-batches. The streamed stage counts must equal
-    the batch derivation computed from the same rows — the per-user
-    history state recomputes (v, c, p) correctly regardless of how
-    much of the stream one key owns or how its events interleave."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import funnel as FU
-
+    the per-user earliest-qualifying derivation over the same rows,
+    regardless of how much of the stream one key owns or how its
+    events interleave."""
+    types = ("view", "click", "purchase")
     rows = []
     for i in range(180):
         u = 0 if i % 2 == 0 else (i % 31) + 1
-        et = FU.FUNNEL_TYPES[i % 3]
         # deliberately non-monotone times so late batches requalify
-        ms = ((i * 37) % 180) * 1000
-        rows.append((i, u, et, ms))
-    df = spark.createDataFrame(
-        [(i, u, et, ms) for (i, u, et, ms) in rows],
-        "event_id long, user_id long, event_type string, t_ms long",
-    ).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.timestamp_millis(F.col("t_ms")).alias("ts"),
-    )
+        rows.append((i, u, types[i % 3], ((i * 37) % 180) * 1000))
     src = str(tmp_path / "skew_src")
     # 3 interleaved files = 3 out-of-order micro-batches
-    df.withColumn("_f", F.col("event_id") % 3).repartition(3, "_f").drop(
-        "_f"
-    ).write.mode("overwrite").parquet(src)
-    emissions = FU.run_funnel_stream(
-        spark, src, df.schema, "funnel_zipf_skew"
-    )
+    _funnel_events(spark, rows).withColumn("_f", F.col("event_id") % 3).repartition(
+        3, "_f"
+    ).drop("_f").write.mode("overwrite").parquet(src)
     got = {
-        r["stage"]: r["n_users"]
-        for r in FU.final_stage_counts(emissions).collect()
+        k: n
+        for k, (n, _) in _served_funnel(spark, monkeypatch, src, tmp_path / "w").items()
     }
 
-    # batch reference: per-user earliest-qualifying recomputation
+    # reference: per-user earliest-qualifying recomputation
     hist: dict = {}
     for (_, u, et, ms) in rows:
-        hist.setdefault(u, {"view": [], "click": [], "purchase": []})[et].append(ms)
+        hist.setdefault(u, {t: [] for t in types})[et].append(ms)
     v_n = c_n = p_n = 0
-    for u, h in hist.items():
-        v, c, p = FU._stages(h["view"], h["click"], h["purchase"])
+    for h in hist.values():
+        v = min(h["view"], default=-1)
+        c = min((t for t in h["click"] if v != -1 and t > v), default=-1)
+        p = min((t for t in h["purchase"] if c != -1 and t > c), default=-1)
         v_n += v >= 0
         c_n += c >= 0
         p_n += p >= 0
     assert got == {"1_view": v_n, "2_click": c_n, "3_purchase": p_n}
     # the hot user really is hot: half the events, full funnel
-    assert len(hist[0]["view"]) + len(hist[0]["click"]) + len(hist[0]["purchase"]) == 90
+    assert sum(len(ts) for ts in hist[0].values()) == 90
 
 
 def test_resumable_workdir_rotates_on_landing_and_maintainer(tmp_path):
@@ -1156,20 +1140,17 @@ def test_replay_stream_resume_equals_fresh_drain(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_transitions_out_of_order_matches_batch(spark, tmp_path):
-    """Order stress for the stateful transition census (X23b): one hot
+def test_transitions_out_of_order_matches_batch(spark, tmp_path, monkeypatch):
+    """Order stress for the transition history fold (X23b): one hot
     user owns half of all events, times are deliberately non-monotone
     and delivered in 3 interleaved micro-batches, so late events land
     BETWEEN already-paired events and must rewire pairs. The streamed
     (from, to) counts must equal the batch lead()-window derivation
-    over the same rows — the history state discards arrival order by
-    construction. Also pins the EMISSION VOLUME: the delta design
-    emits at most 3 (from,to) increments per event, so cumulative
-    |emitted deltas| must stay <= 3 * n_events regardless of how hot
-    a key is (the round-6 verdict's O(N*H) re-emission flag)."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
-        transitions as TR,
-    )
+    over the same rows. Also pins the EMISSION VOLUME: an inserted
+    event rewires at most one pair into two, so summed over the epoch
+    partials (read before compaction) |n| stays <= 3 * n_events
+    however hot a key is — no epoch re-emits a key's pair list."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
 
     types = ["view", "click", "purchase", "signup", "error"]
     rows = []
@@ -1191,15 +1172,15 @@ def test_transitions_out_of_order_matches_batch(spark, tmp_path):
         "_f"
     ).write.mode("overwrite").parquet(src)
 
-    emissions = TR.run_transitions_stream(
-        spark,
-        src,
-        "user_id long, event_id long, event_type string, ts timestamp",
-        "transitions_ooo_test",
-    )
+    monkeypatch.setattr(delta, "compact_with", lambda *a: None)
     got = {
         (r["from_type"], r["to_type"]): r["n"]
-        for r in TR.final_pair_counts(emissions).collect()
+        for r in _transition_counts(
+            spark,
+            src,
+            "user_id long, event_id long, event_type string, ts timestamp",
+            tmp_path / "work",
+        ).collect()
     }
 
     # batch reference: sorted per-user consecutive pairs
@@ -1215,23 +1196,24 @@ def test_transitions_out_of_order_matches_batch(spark, tmp_path):
     assert got == want
     # the hot user really is hot: half the events
     assert len(hist[0]) == 100
-    # emission volume: <= 3 count-deltas per event, NOT O(history)
-    # per update — the hot key must not re-emit its pair list
-    vol = emissions.agg(
-        F.sum(F.abs(F.col("delta"))).alias("v")
-    ).collect()[0]["v"]
+    pdir = tmp_path / "work" / "partials"
+    # one partial per batch that holds events (the hash split may leave
+    # one of the 3 files empty), none compacted into a base
+    assert len(list(pdir.glob("epoch=*"))) >= 2 and not list(pdir.glob("base_v*"))
+    partials = spark.read.parquet(str(pdir))
+    vol = partials.agg(F.sum(F.abs(F.col("n"))).alias("v")).collect()[0]["v"]
     assert vol <= 3 * len(rows)
 
 
 def test_transitions_resumable_incremental_update(spark, tmp_path):
     """The resumable transitions census is genuinely INCREMENTAL: a
     second drain against the same checkpoint picks up only NEW files,
-    restores per-user history from the state store, and splices the
-    late events in — the folded census after (drain A; drain B) must
+    reads per-user history from the bucketed history state, and
+    differences the late events' census in — the folded census after (drain A; drain B) must
     equal the batch census over A+B, and the no-op re-drain between
-    them must add zero deltas. This is the applyInPandasWithState
-    state-restore path across SEPARATE query starts, not micro-batches
-    within one start."""
+    them must add zero deltas. This is the history fold's state-restore
+    path across SEPARATE query starts, not micro-batches within one
+    start."""
     types = ["view", "click", "purchase"]
     rows = []
     for i in range(120):
@@ -1328,19 +1310,13 @@ def test_dedup_stream_resume_incremental(spark, tmp_path):
 
 
 def test_alerts_stream_resume_continues_streaks(spark, tmp_path):
-    """The resumable sustained-alert stream (r7 conversion) across
-    SEPARATE query starts: the checkpointed applyInPandasWithState
-    state must carry the OPEN window's partial counts and the streak
-    through a restart — window 3 straddles the two drains and must
-    merge, not double-fire; streaks must continue, not reset. Final
-    sink == the batch gaps-and-islands evaluator over everything
-    (all-error events make partial-window ppm == final ppm, so even
-    the at-most-once early fire matches the batch answer)."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import alerts
-
+    """The resumable sustained-alert stream across SEPARATE query
+    starts: the folded window counts carry the open window's partial
+    counts through a restart — window 3 straddles the two drains and
+    must merge, not double-fire; streaks must continue, not reset.
+    Final served alerts == the batch gaps-and-islands evaluator over
+    everything."""
     src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
     w = alerts.WINDOW_MS // 1000  # 300 s windows
 
     def write_chunk(secs):
@@ -1352,21 +1328,12 @@ def test_alerts_stream_resume_continues_streaks(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(src)
 
     def drain():
-        stream_src = spark.readStream.schema(
-            "ts timestamp, event_type string"
-        ).parquet(src)
-        q = (
-            alerts.sustained_alerts_stream(stream_src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        counts = alerts.stream_window_counts(
+            spark, src, "ts timestamp, event_type string", tmp_path / "work"
         )
-        q.awaitTermination()
         return sorted(
-            (r["window_ms"], r["error_ppm"], r["streak"])
-            for r in spark.read.parquet(sink).collect()
+            (int(r["window_start"].timestamp() * 1000), r["error_ppm"], r["streak"])
+            for r in alerts.sustained_windows(counts).collect()
         )
 
     # drain 1: windows 0-2 complete, window 3 partial (one event)
@@ -1375,9 +1342,9 @@ def test_alerts_stream_resume_continues_streaks(spark, tmp_path):
     )
     first = drain()
     # windows 0,1 below the for: gate; 2 fires at streak 3; 3 fires
-    # early (streak 4) on its partial-but-all-error counts
+    # on its partial-but-all-error counts
     assert [(ms // 1000 // w, st) for ms, _, st in first] == [(2, 3), (3, 4)]
-    # no-op re-drain: nothing new -> no re-fire of the open window
+    # no-op re-drain: nothing new -> identical alerts
     assert drain() == first
 
     # drain 2: rest of window 3 (straddle) + windows 4, 5
@@ -1398,6 +1365,7 @@ def test_alerts_stream_resume_continues_streaks(spark, tmp_path):
         for r in alerts.sustained_alerts(events).collect()
     )
     assert got == [(int(ms), ppm, st) for ms, ppm, st in want]
+    assert [st for _, _, st in got] == [3, 4, 5, 6]
 
 
 def _land_in_files(spark, query, dest):
@@ -1419,7 +1387,7 @@ def _land_in_files(spark, query, dest):
 )
 def test_fold_stream_serves_one_compacted_base(spark, tmp_path, monkeypatch, query):
     """The fold-stream contract, over an integer-sum (delta), a bottom-k
-    (sample) and an argmax (funnel) maintainer run through their
+    (sample) and a history-difference (funnel) maintainer run through their
     registered queries: after every call the partials dir holds one
     committed base and no ``epoch=`` dir, a repeated call adds no
     epoch and serves identical rows, and a file landed afterwards is
@@ -1553,3 +1521,136 @@ def test_ingest_resumable_second_call_is_empty_pass(spark):
     again = _counts(registry.QUERIES["q_stream_dedupe"](spark, SF_SMOKE))
     assert again == first
     assert sorted(p.name for p in meta.iterdir()) == committed
+
+
+def test_history_fold_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch may replay an epoch whose history manifest already
+    committed (a crash before Spark's commit log): the replay is a
+    no-op, so the partial and the history stay byte-identical and the
+    served census is unchanged — and equals the batch census of every
+    row. A replay of an epoch that died after its partial but before
+    its manifest reads the same prior history and rewrites the same
+    partial and state."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.profiling import (
+        transition_counts,
+    )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
+
+    grid = ["from_type", "to_type"]
+    pdir, hdir = tmp_path / "partials", tmp_path / "history"
+    sink = delta.history_partials(
+        str(pdir), str(hdir), ["user_id"],
+        delta.history_delta(transition_counts, grid, ["n"]),
+    )
+    types = ["view", "click", "purchase"]
+    rows = [(i % 5, i, types[(i * 7) % 3], (i * 13) % 40) for i in range(40)]
+
+    def events(part):
+        return spark.createDataFrame(
+            part, "user_id long, event_id long, event_type string, s long"
+        ).select("user_id", "event_id", F.timestamp_seconds("s").alias("ts"), "event_type")
+
+    sink(events(rows[::2]), 0)
+    sink(events(rows[1::2]), 1)
+
+    def files(root):
+        return {
+            p.relative_to(root).as_posix(): p.read_bytes()
+            for p in sorted(root.rglob("*.parquet"))
+        }
+
+    def served():
+        return sorted(
+            tuple(r)
+            for r in delta.folded_with(
+                spark, str(pdir), lambda df: delta.fold_generic(df, grid, ["n"])
+            ).filter(F.col("n") > 0).collect()
+        )
+
+    history, census = files(hdir), served()
+    partial = sorted(files(pdir / "epoch=1").values())
+    sink(events(rows[1::2]), 1)  # the replay
+    assert files(hdir) == history
+    assert sorted(files(pdir / "epoch=1").values()) == partial
+    assert served() == census
+    assert census == sorted(tuple(r) for r in transition_counts(events(rows)).collect())
+
+    def state():
+        return sorted(tuple(r) for r in merge.read_state(spark, str(hdir)).collect())
+
+    before = state()
+    (hdir / "_manifest" / f"{1:09d}.json").unlink()  # died before its commit
+    sink(events(rows[1::2]), 1)
+    assert sorted(files(pdir / "epoch=1").values()) == partial
+    assert state() == before
+    assert served() == census
+
+
+def test_history_fold_reads_only_the_batch_keys(spark, tmp_path):
+    """A late batch of one user differences that user's history only:
+    the H handed to ``per_batch`` holds none of the other users that
+    share its hash bucket, whose rows would cancel out anyway."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
+
+    seen = []
+
+    def per_batch(h, hb):
+        seen.append(sorted(r["user_id"] for r in h.select("user_id").collect()))
+        return hb.groupBy("user_id").count()
+
+    sink = delta.history_partials(
+        str(tmp_path / "partials"), str(tmp_path / "history"), ["user_id"], per_batch
+    )
+    users = range(64)  # 64 users over 16 buckets: every bucket is shared
+    sink(spark.createDataFrame([(u, 0) for u in users], "user_id long, t long"), 0)
+    sink(spark.createDataFrame([(7, 1)], "user_id long, t long"), 1)
+    assert seen == [[], [7]]
+
+
+@pytest.mark.parametrize("k", [1, 2, 5])
+def test_stream_folds_are_batch_boundary_invariant(spark, tmp_path, monkeypatch, k):
+    """The sf0.001 events split into ``k`` files by a seeded random
+    split: the served stream transitions, funnel and alerts equal their
+    batch queries whatever the batch boundaries (pandas
+    assert_frame_equal, the grouped-map test pattern)."""
+    from pandas.testing import assert_frame_equal
+
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import artifact
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    events = load_table(spark, SF_SMOKE, "events")
+    src = tmp_path / "src"
+    split = events.withColumn("_f", F.floor(F.rand(seed=k) * k))
+    for i in range(k):
+        split.filter(F.col("_f") == i).drop("_f").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    assert len(list(src.glob("part-*.parquet"))) == k
+    monkeypatch.setattr(artifact, "materialized_path", lambda *a: str(src))
+    monkeypatch.setattr(ingest, "events_files", lambda *a: str(src))
+    monkeypatch.setattr(
+        ingest, "resumable_workdir", lambda _src, fn, *a: tmp_path / fn.__name__
+    )
+
+    def frame(df, keys):
+        return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+    for stream_q, batch_q, keys in [
+        ("q_stream_transitions", "q_event_transitions", ["from_type", "to_type"]),
+        ("q_stream_funnel", "q_funnel_stages", ["stage"]),
+        ("q_stream_alerts", "q_alert_sustained", ["window_start"]),
+    ]:
+        assert_frame_equal(
+            frame(registry.QUERIES[stream_q](spark, SF_SMOKE), keys),
+            frame(registry.QUERIES[batch_q](spark, SF_SMOKE), keys),
+        )
+    # sf0.001 holds no sustained breach at the default rule, so also
+    # compare the window counts q_stream_alerts folded, which its
+    # alerts are a function of
+    counts = alerts.stream_window_counts(
+        spark, str(src), events.schema, tmp_path / "q_stream_alerts"
+    )
+    assert_frame_equal(
+        frame(counts, ["window_start"]),
+        frame(alerts.window_counts(events), ["window_start"]),
+    )
