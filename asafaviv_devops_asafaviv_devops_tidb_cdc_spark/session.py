@@ -1,13 +1,33 @@
 """SparkSession factory tuned for the test environment (local[N], one
 JVM) while keeping every knob meaningful on a real multi-executor
 cluster at 100 TB scale (see ``plans/scale.py`` for the rationale).
+
+The ``file:`` file system is ``jvm/NioLocalFs.java``, compiled into the
+committed ``jvm/nio-local-fs.jar`` on the driver class path. This JVM
+loads no native Hadoop library, so Hadoop's own local file system
+shells out per file: ``chmod`` for every file and directory it creates,
+and ``readlink`` for every link-status call, which FileContext's rename
+of each checkpoint file makes several times (927 process starts in one
+``cdc_ingest`` benchmark run, each costing the driver about 2 ms of
+CPU). The shim makes both calls through ``java.nio`` and keeps the rest
+identical: the ``.crc`` checksums (it is wrapped exactly as
+``LocalFileSystem`` and ``LocalFs`` wrap the stock one), FileContext's
+atomic no-overwrite rename of the stream offset and commit logs, and the
+permission bits (a sticky-bit mode, a setgid directory and a symlink's
+status go to Hadoop's own code). Stream checkpoints, state-store deltas,
+sinks, merge buckets and artifacts all write through it. In local mode
+the executors share the driver JVM; a cluster deployment puts the same
+jar on ``spark.executor.extraClassPath``.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+NIO_LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
 
 
 def get_spark(app_name: str = "tidb_cdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -60,6 +80,11 @@ def get_spark(app_name: str = "tidb_cdc_spark", shuffle_partitions: int | None =
         # Force the sweep every 5 min instead of the 30-min default —
         # the same knob a long-lived cluster driver pins.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # fork-free file: scheme (module docstring), for the FileSystem
+        # API and for the FileContext API of the checkpoint manager
+        .config("spark.driver.extraClassPath", str(NIO_LOCAL_FS_JAR))
+        .config("spark.hadoop.fs.file.impl", "tidbcdc.jvm.NioLocalFs")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "tidbcdc.jvm.NioLocalFs$Fs")
     )
     # 100 TB state posture on demand (plans/scale.py::streaming_conf):
     # SPARK_GRAFT_STATE_PROVIDER=rocksdb runs every stateful streaming
