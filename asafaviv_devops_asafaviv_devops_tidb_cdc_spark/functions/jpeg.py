@@ -1752,7 +1752,6 @@ def decode_jpeg_pixels(payload: bytes):
 # Spark stages
 # ---------------------------------------------------------------------------
 
-SYNTH_SCHEMA = "media_id long, payload binary"
 JPEG_STATS_SCHEMA = (
     "media_id long, width int, height int, n_blocks int, "
     "dc_sum long, coeff_abs_sum long, coeff_wsum long"

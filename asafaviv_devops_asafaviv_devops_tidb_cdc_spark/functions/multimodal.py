@@ -30,23 +30,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("meta", T.StructType(
-            [
-                T.StructField("n_bytes", T.LongType()),
-                T.StructField("sha256", T.StringType()),
-                T.StructField("width", T.IntegerType()),
-                T.StructField("height", T.IntegerType()),
-            ]
-        )),
-    ]
-)
+from pyspark.sql import DataFrame, functions as F
 
 FEATURE_SCHEMA = (
     "media_id long, n_bytes long, n_chunks int, byte_sum long, mean_byte double, "

@@ -3,16 +3,11 @@ BASELINE north-star "100 TB-scale design").
 
 AQE's skew handling only splits oversized sort-merge-join partitions;
 it does not help a groupBy whose state concentrates on one hot key, nor
-a shuffled join against a replicated-dim pattern. These helpers are the
-standard salting shapes, kept semantics-identical to their naive forms
-(tests assert equality):
-
-- ``salted_join``: fact rows get a random salt in [0, n); the (small)
-  build side is replicated once per salt and the join key becomes
-  (key, salt) — a hot fact key now spreads over n reducer partitions.
-- ``salted_distinct_count``: distinct values are salted by their own
-  hash, so each (key, salt) partition counts a disjoint value set
-  exactly; the final sum shuffles n pre-aggregated rows per key.
+a shuffled join against a replicated-dim pattern. ``salted_join`` is the
+standard salting shape, kept semantics-identical to the naive join
+(tests assert equality): fact rows get a salt in [0, n); the (small)
+build side is replicated once per salt and the join key becomes
+(key, salt) — a hot fact key now spreads over n reducer partitions.
 
 Plain ``groupBy().count()/sum()`` needs no salting — map-side partial
 aggregation already collapses hot keys before the shuffle.
@@ -54,24 +49,3 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
     return fact_s.join(dim_s, on + ["_salt"], how).drop("_salt")
-
-
-def salted_distinct_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    n_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """Exact count-distinct per key in two stages: stage 1 counts
-    distinct values within (key, hash(value) % n_salts) — disjoint
-    value sets, so per-salt counts are exact — stage 2 sums the n_salts
-    partials. The hot key's distinct-state never lands on one reducer."""
-    keys = list(keys)
-    stage1 = (
-        df.withColumn("_salt", F.pmod(F.hash(F.col(value_col)), F.lit(n_salts)))
-        .groupBy(*keys, F.col("_salt"))
-        .agg(F.countDistinct(value_col).alias("_partial"))
-    )
-    return stage1.groupBy(*keys).agg(
-        F.sum("_partial").cast("long").alias(f"n_distinct_{value_col}")
-    )

@@ -315,7 +315,6 @@ def extract_warc_stats(payload: bytes):
 # Spark stages
 # ---------------------------------------------------------------------------
 
-SYNTH_SCHEMA = "media_id long, payload binary"
 WARC_STATS_SCHEMA = (
     "media_id long, n_records int, n_responses int, total_len long, "
     "body_sum long, body_wsum long, uri_len_sum long"

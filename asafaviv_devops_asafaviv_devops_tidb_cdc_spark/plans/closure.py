@@ -9,7 +9,7 @@ unit), ``alias.attr`` where ``alias`` is an imported package module,
 and the names of function-local imports. A nested function or lambda
 is part of the source of the unit that encloses it.
 
-Two consumers share the walk:
+Three consumers share the walk:
 
 - :func:`code_key` hashes the closure source of one function. The
   artifact store (``sources/artifact.py::input_fingerprint``) and the
@@ -18,6 +18,8 @@ Two consumers share the walk:
   closure rotates its key, and an edit outside it does not.
 - ``scripts/freshness.py`` compares each query's closure between the
   worktree and the commit that added its latest gate verdict.
+- ``tests/test_reachability.py`` walks from every query and entry
+  point, and fails on a unit that nothing reaches.
 
 Units in ``registry.py`` are left out: it holds only registration
 plumbing and the generated gate-window lists, which change every round
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import ast
 import hashlib
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
 PKG = __name__.split(".")[0]
@@ -178,8 +180,13 @@ def _unit_refs(mod: ModuleIndex, node: ast.AST) -> set[tuple[str, str]]:
 
 def query_closure(tree: SourceTree, relpath: str, fn_name: str) -> set[tuple[str, str]]:
     """Transitive package-unit closure of one top-level unit."""
+    return units_closure(tree, [(relpath, fn_name)])
+
+
+def units_closure(tree: SourceTree, roots: Iterable[tuple[str, str]]) -> set[tuple[str, str]]:
+    """Transitive package-unit closure of ``(relpath, unit)`` roots."""
     seen: set[tuple[str, str]] = set()
-    stack = [(relpath, fn_name)]
+    stack = list(roots)
     while stack:
         rel, name = stack.pop()
         if (rel, name) in seen or rel in _EXCLUDE_FILES:

@@ -591,7 +591,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         # no explicit broadcast on the support table: it is bounded by
         # DISTINCT PARTS, which grows with scale factor — at gate SF
-        # AQE broadcasts it on its own (plan-pinned in PLANS.md), and
+        # AQE broadcasts it on its own, and
         # at 100x it is free to pick a shuffle join instead of
         # pressuring the driver with an unoverridable hint (r10
         # advice / r11 broadcast-hint audit)

@@ -782,7 +782,7 @@ GROUP BY 1
     )
 
 
-@register("q_canonical_pick", oracle=None)
+@register("q_canonical_pick", oracle=_canonical_oracle())
 def q_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E13 — canonical selection: after near-dup clustering, KEEP one
     document per cluster — the longest (keep-longest is the standard
@@ -818,9 +818,6 @@ def q_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("chars_dropped"),
     )
-
-
-ORACLES["q_canonical_pick"] = _canonical_oracle()
 
 
 @register("q_stream_doc_dedup", oracle=None)
@@ -943,7 +940,7 @@ GROUP BY 1
     )
 
 
-@register("q_dedup_yield_by_source", oracle=None)
+@register("q_dedup_yield_by_source", oracle=_dedup_yield_oracle())
 def q_dedup_yield_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2f — near-dup yield attributed to SOURCE: which provenance
     contributes the duplicate mass (min-id survivor per cluster; every
@@ -985,9 +982,6 @@ def q_dedup_yield_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_dropped"),
     )
-
-
-ORACLES["q_dedup_yield_by_source"] = _dedup_yield_oracle()
 
 
 # ---------------------------------------------------------------------------

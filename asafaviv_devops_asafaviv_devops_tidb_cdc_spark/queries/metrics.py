@@ -309,13 +309,6 @@ _W1H = 3_600_000
 _W1M = 60_000
 
 
-def _bucket(col, width_ms: int):
-    # epoch-floor bucketing; identical alignment to Spark's window()
-    return F.timestamp_millis(
-        (F.unix_millis(col) - (F.unix_millis(col) % width_ms)).cast("long")
-    )
-
-
 @register(
     "q_rate_5m",
     oracle=f"""

@@ -343,12 +343,7 @@ def load_all() -> None:
     if _loaded:
         return
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # allow partially-built query subpackages during development
-            if mod.rsplit(".", 1)[-1] not in str(exc):
-                raise
+        importlib.import_module(mod)
     _reorder()
     _loaded = True
 

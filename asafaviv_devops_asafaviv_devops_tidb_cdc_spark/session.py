@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 NIO_LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
 
 
-def get_spark(app_name: str = "tidb_cdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "tidb_cdc_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     Local-mode defaults; on a real cluster only ``shuffle.partitions``
@@ -38,8 +38,7 @@ def get_spark(app_name: str = "tidb_cdc_spark", shuffle_partitions: int | None =
     an upper bound, not a fixed cost).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
+    shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -72,8 +72,3 @@ def stop_gracefully(query: StreamingQuery, timeout_sec: float = 30.0) -> bool:
         # a query stopped mid-batch surfaces its cancellation here;
         # termination is what we asked for
         return not query.isActive
-
-
-def stop_all_gracefully(spark: SparkSession, timeout_sec: float = 30.0) -> bool:
-    """Drain every active stream — the process-exit hook."""
-    return all(stop_gracefully(q, timeout_sec) for q in spark.streams.active)

@@ -40,27 +40,6 @@ def test_salted_join_equals_plain_join(spark):
     assert sorted(salted.columns) == sorted(plain.columns)
 
 
-def test_salted_distinct_count_is_exact(spark):
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions import skew
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    import pyspark.sql.functions as F
-
-    plain = {
-        r["l_returnflag"]: r["n"]
-        for r in li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_orderkey").alias("n"))
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: r["n_distinct_l_orderkey"]
-        for r in skew.salted_distinct_count(
-            li, ["l_returnflag"], "l_orderkey", n_salts=8
-        ).collect()
-    }
-    assert salted == plain
-
-
 def test_snapshot_restore_roundtrip(spark):
     cust = load_table(spark, SF_SMOKE, "customer")
     with tempfile.TemporaryDirectory() as d:

@@ -72,3 +72,15 @@ def test_code_key_parses_only_reached_modules_once(monkeypatch):
     wrapped = functools.wraps(event_sink.normalized_sink)(lambda *a: None)
     assert closure.code_key(wrapped) == key
     assert len(reads) == cold, "a warm code_key must parse nothing"
+
+
+def test_oracle_functions_are_in_their_query_closure():
+    # an edit to a query's oracle SQL must flag the query for re-proof,
+    # so the oracle function is called from the query's @register decorator
+    corpus_ops = f"{closure.PKG}/queries/corpus_ops.py"
+    tree = closure.SourceTree()
+    for query, oracle_fn in [
+        ("q_canonical_pick", "_canonical_oracle"),
+        ("q_dedup_yield_by_source", "_dedup_yield_oracle"),
+    ]:
+        assert (corpus_ops, oracle_fn) in closure.query_closure(tree, corpus_ops, query)

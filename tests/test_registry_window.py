@@ -7,6 +7,8 @@ tests/test_freshness.py enforces the composition policy itself."""
 
 from __future__ import annotations
 
+import pytest
+
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.registry import _CHECK_FIRST
 
@@ -32,3 +34,12 @@ def test_window_is_fully_oracle_backed():
     # a hash verdict.)
     unbacked = [n for n in _CHECK_FIRST if n not in registry.ORACLES]
     assert unbacked == [], unbacked
+
+
+def test_load_all_raises_on_a_missing_query_module(monkeypatch):
+    # a module that fails to import must not silently drop its queries
+    bogus = registry.__name__.rsplit(".", 1)[0] + ".queries.no_such_module"
+    monkeypatch.setattr(registry, "_QUERY_MODULES", [*registry._QUERY_MODULES, bogus])
+    monkeypatch.setattr(registry, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError):
+        registry.load_all()
