@@ -237,6 +237,9 @@ DECODE_SCHEMA = (
 )
 
 
+SYNTH_PARTS_DIVISOR = 2
+
+
 def _synth_parts(sc) -> int:
     """Partition count for the synth->decode Arrow chains. One policy
     for all six builders: a chained mapInPandas pair runs TWO Python
@@ -247,24 +250,14 @@ def _synth_parts(sc) -> int:
     case — one workload owns the box), but in the 256-query suite it
     loses ~20% of TOTAL suite time (64 concurrent Python workers
     oversubscribe against the JVM's own task threads, and every
-    later query inherits the churn). A mixed engine defaults to the
-    suite-optimal half-width; a dedicated media pipeline can flip it
-    per-process via SPARK_GRAFT_SYNTH_DIVISOR=1 (what the stress
-    harness A/Bs)."""
-    import os
-
-    div = int(
-        os.environ.get("SPARK_GRAFT_SYNTH_DIVISOR", SYNTH_PARTS_DIVISOR)
-    )
-    return max(sc.defaultParallelism // div, 1)
-
-
-SYNTH_PARTS_DIVISOR = 2
+    later query inherits the churn), so the engine runs half-width."""
+    return max(sc.defaultParallelism // SYNTH_PARTS_DIVISOR, 1)
 
 
 def synth_payload_stage(media_ids: DataFrame, synth_fn) -> DataFrame:
     """Shared Arrow synth scaffold for every per-id bytes builder
-    (JPEG gray/color/progressive, WARC): repartition to half the
+    (the containers, BMP, WAV, AVI and PNG here; JPEG
+    gray/color/progressive, WARC): repartition to half the
     cores (synth is CPU-bound; leave headroom for the decode stage)
     and mapInPandas ``synth_fn(media_id) -> bytes`` into
     (media_id, payload) rows. One copy of the stage policy — tune the
@@ -277,7 +270,7 @@ def synth_payload_stage(media_ids: DataFrame, synth_fn) -> DataFrame:
 
     n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
     return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, "media_id long, payload binary"
+        _build, SYNTH_SCHEMA
     )
 
 
@@ -290,37 +283,27 @@ def synth_container_payloads(media_ids: DataFrame) -> DataFrame:
     Every 5th id emits unrecognizable bytes (the opaque-payload branch).
     """
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w = mid % 1000 + 1
-                h = (mid * 7) % 1000 + 1
-                kind = mid % 5
-                if kind == 0:
-                    b = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + struct.pack(">II", w, h) + b"\x08"
-                elif kind == 1:
-                    b = b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00"
-                elif kind == 2:
-                    b = b"BM" + b"\x00" * 16 + struct.pack("<ii", w, h) + b"\x00\x00"
-                elif kind == 3:
-                    ch = mid % 8 + 1
-                    sr = 8000 + (mid % 100) * 10
-                    b = (
-                        b"RIFF" + b"\x00\x00\x00\x00" + b"WAVE"
-                        + b"fmt \x10\x00\x00\x00\x01\x00"
-                        + struct.pack("<HI", ch, sr) + b"\x00\x00\x00\x00"
-                    )
-                else:
-                    b = b"not-a-container-" + str(mid).encode()
-                rows.append((mid, b))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def payload(mid: int) -> bytes:
+        w = mid % 1000 + 1
+        h = (mid * 7) % 1000 + 1
+        kind = mid % 5
+        if kind == 0:
+            return b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + struct.pack(">II", w, h) + b"\x08"
+        if kind == 1:
+            return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00"
+        if kind == 2:
+            return b"BM" + b"\x00" * 16 + struct.pack("<ii", w, h) + b"\x00\x00"
+        if kind == 3:
+            ch = mid % 8 + 1
+            sr = 8000 + (mid % 100) * 10
+            return (
+                b"RIFF" + b"\x00\x00\x00\x00" + b"WAVE"
+                + b"fmt \x10\x00\x00\x00\x01\x00"
+                + struct.pack("<HI", ch, sr) + b"\x00\x00\x00\x00"
+            )
+        return b"not-a-container-" + str(mid).encode()
 
-    n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
-    return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, SYNTH_SCHEMA
-    )
+    return synth_payload_stage(media_ids, payload)
 
 
 BMP_STATS_SCHEMA = (
@@ -340,40 +323,32 @@ def synth_bmp_payloads(media_ids: DataFrame) -> DataFrame:
     padding, so a decoder only matches the oracle if it strips
     padding and un-flips rows correctly."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w = mid % 48 + 4
-                h = (mid * 7) % 48 + 4
-                raster = (
-                    (mid + np.arange(3 * w * h, dtype=np.int64)) % 256
-                ).astype(np.uint8).reshape(h, w * 3)
-                stride = (w * 3 + 3) & ~3
-                padded = np.zeros((h, stride), dtype=np.uint8)
-                padded[:, : w * 3] = raster[::-1]  # bottom-up rows
-                data = padded.tobytes()
-                header = (
-                    b"BM"
-                    + struct.pack("<I", 54 + len(data))
-                    + b"\x00\x00\x00\x00"
-                    + struct.pack("<I", 54)
-                    + struct.pack("<I", 40)
-                    + struct.pack("<ii", w, h)
-                    + struct.pack("<HH", 1, 24)
-                    + struct.pack("<II", 0, len(data))
-                    + struct.pack("<iiII", 0, 0, 0, 0)
-                )
-                rows.append((mid, header + data))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def payload(mid: int) -> bytes:
+        w = mid % 48 + 4
+        h = (mid * 7) % 48 + 4
+        raster = (
+            (mid + np.arange(3 * w * h, dtype=np.int64)) % 256
+        ).astype(np.uint8).reshape(h, w * 3)
+        stride = (w * 3 + 3) & ~3
+        padded = np.zeros((h, stride), dtype=np.uint8)
+        padded[:, : w * 3] = raster[::-1]  # bottom-up rows
+        data = padded.tobytes()
+        header = (
+            b"BM"
+            + struct.pack("<I", 54 + len(data))
+            + b"\x00\x00\x00\x00"
+            + struct.pack("<I", 54)
+            + struct.pack("<I", 40)
+            + struct.pack("<ii", w, h)
+            + struct.pack("<HH", 1, 24)
+            + struct.pack("<II", 0, len(data))
+            + struct.pack("<iiII", 0, 0, 0, 0)
+        )
+        return header + data
 
-    n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
-    return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, SYNTH_SCHEMA
-    )
+    return synth_payload_stage(media_ids, payload)
 
 
 def bmp_pixel_stats(media: DataFrame) -> DataFrame:
@@ -496,36 +471,28 @@ def synth_wav_payloads(media_ids: DataFrame) -> DataFrame:
     it walks the RIFF chunk structure instead of assuming a fixed
     44-byte layout."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                ch = mid % 4 + 1
-                sr = 8000 + (mid % 8) * 1000
-                n = (mid % 400 + 100) * ch
-                samples = (
-                    (mid * 31 + 7 * np.arange(n, dtype=np.int64)) % 65536
-                    - 32768
-                ).astype("<i2")
-                data = samples.tobytes()
-                fmt = (
-                    b"fmt " + struct.pack("<I", 16)
-                    + struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
-                )
-                decoy = b"LIST" + struct.pack("<I", 4) + b"INFO"
-                body = b"WAVE" + fmt + decoy + b"data" + struct.pack(
-                    "<I", len(data)
-                ) + data
-                rows.append((mid, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def payload(mid: int) -> bytes:
+        ch = mid % 4 + 1
+        sr = 8000 + (mid % 8) * 1000
+        n = (mid % 400 + 100) * ch
+        samples = (
+            (mid * 31 + 7 * np.arange(n, dtype=np.int64)) % 65536
+            - 32768
+        ).astype("<i2")
+        data = samples.tobytes()
+        fmt = (
+            b"fmt " + struct.pack("<I", 16)
+            + struct.pack("<HHIIHH", 1, ch, sr, sr * ch * 2, ch * 2, 16)
+        )
+        decoy = b"LIST" + struct.pack("<I", 4) + b"INFO"
+        body = b"WAVE" + fmt + decoy + b"data" + struct.pack(
+            "<I", len(data)
+        ) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
-    return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, SYNTH_SCHEMA
-    )
+    return synth_payload_stage(media_ids, payload)
 
 
 def decode_wav_samples(payload: bytes):
@@ -629,42 +596,34 @@ def synth_avi_payloads(media_ids: DataFrame) -> DataFrame:
     it walks the movi LIST selecting video chunks and honors RIFF
     word-alignment."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                n = mid % 24 + 6
-                movi = b"movi"
-                for f in range(n):
-                    fs = (mid + f) % 64 + 16
-                    data = (
-                        (mid + f * 131 + np.arange(fs, dtype=np.int64)) % 256
-                    ).astype(np.uint8).tobytes()
-                    movi += b"00db" + struct.pack("<I", fs) + data
-                    if fs & 1:
-                        movi += b"\x00"  # RIFF word alignment
-                    movi += b"01wb" + struct.pack("<I", 4) + b"\x00" * 4
-                avih_body = (
-                    struct.pack("<IIII", 33333, 0, 0, 0)
-                    + struct.pack("<I", n)  # dwTotalFrames
-                    + b"\x00" * 36
-                )
-                hdrl = b"hdrl" + b"avih" + struct.pack("<I", 56) + avih_body
-                body = (
-                    b"AVI "
-                    + b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
-                    + b"LIST" + struct.pack("<I", len(movi)) + movi
-                )
-                rows.append((mid, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def payload(mid: int) -> bytes:
+        n = mid % 24 + 6
+        movi = b"movi"
+        for f in range(n):
+            fs = (mid + f) % 64 + 16
+            data = (
+                (mid + f * 131 + np.arange(fs, dtype=np.int64)) % 256
+            ).astype(np.uint8).tobytes()
+            movi += b"00db" + struct.pack("<I", fs) + data
+            if fs & 1:
+                movi += b"\x00"  # RIFF word alignment
+            movi += b"01wb" + struct.pack("<I", 4) + b"\x00" * 4
+        avih_body = (
+            struct.pack("<IIII", 33333, 0, 0, 0)
+            + struct.pack("<I", n)  # dwTotalFrames
+            + b"\x00" * 36
+        )
+        hdrl = b"hdrl" + b"avih" + struct.pack("<I", 56) + avih_body
+        body = (
+            b"AVI "
+            + b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
+            + b"LIST" + struct.pack("<I", len(movi)) + movi
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
-    return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, SYNTH_SCHEMA
-    )
+    return synth_payload_stage(media_ids, payload)
 
 
 def decode_avi_frames(payload: bytes):
@@ -1044,90 +1003,82 @@ def synth_png_payloads(media_ids: DataFrame) -> DataFrame:
     concatenates IDATs, inflates every deflate block type (verifying
     adler32), and reconstructs all three filters byte-exactly."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
+    import zlib
 
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w = mid % 24 + 4
-                h = (mid * 5) % 24 + 4
-                raster = (
-                    (mid * 13 + np.arange(3 * w * h, dtype=np.int64)) % 256
-                ).astype(np.uint8).reshape(h, 3 * w)
-                # encode-side filtering, whole-raster vectorized
-                # (uint8 subtraction wraps mod 256 natively); the
-                # decoder must invert exactly
-                left = np.zeros_like(raster)
-                left[:, 3:] = raster[:, :-3]
-                above = np.zeros_like(raster)
-                above[1:] = raster[:-1]
-                ftypes = (mid + np.arange(h)) % 3
-                filt = np.where(
-                    (ftypes == 1)[:, None],
-                    raster - left,  # Sub: minus left pixel's same byte
-                    np.where(
-                        (ftypes == 2)[:, None],
-                        raster - above,  # Up: minus the row above
-                        raster,  # None
-                    ),
+    def payload(mid: int) -> bytes:
+        w = mid % 24 + 4
+        h = (mid * 5) % 24 + 4
+        raster = (
+            (mid * 13 + np.arange(3 * w * h, dtype=np.int64)) % 256
+        ).astype(np.uint8).reshape(h, 3 * w)
+        # encode-side filtering, whole-raster vectorized
+        # (uint8 subtraction wraps mod 256 natively); the
+        # decoder must invert exactly
+        left = np.zeros_like(raster)
+        left[:, 3:] = raster[:, :-3]
+        above = np.zeros_like(raster)
+        above[1:] = raster[:-1]
+        ftypes = (mid + np.arange(h)) % 3
+        filt = np.where(
+            (ftypes == 1)[:, None],
+            raster - left,  # Sub: minus left pixel's same byte
+            np.where(
+                (ftypes == 2)[:, None],
+                raster - above,  # Up: minus the row above
+                raster,  # None
+            ),
+        )
+        lines = np.empty((h, 1 + 3 * w), dtype=np.uint8)
+        lines[:, 0] = ftypes
+        lines[:, 1:] = filt
+        body = lines.tobytes()
+        variant = mid % 3
+        if variant == 1:
+            # fixed-Huffman framing via the library encoder
+            # (Z_FIXED forbids dynamic trees). memLevel 9
+            # keeps it one block.
+            co = zlib.compressobj(6, zlib.DEFLATED, 15, 9, zlib.Z_FIXED)
+            stream = bytearray(co.compress(body) + co.flush())
+        elif variant == 2:
+            # hand-rolled guaranteed-BTYPE=2 stream (the
+            # library encoder never picks dynamic for these
+            # small near-uniform rasters; pytest validates
+            # every _deflate_dynamic stream via zlib)
+            stream = bytearray(_deflate_dynamic(body))
+        else:
+            # hand-rolled zlib framing: header + stored blocks
+            # (<=512 bytes each) + adler32 of the raw bytes
+            stream = bytearray(b"\x78\x01")
+            pos = 0
+            while True:
+                part = body[pos : pos + 512]
+                pos += len(part)
+                final = 1 if pos >= len(body) else 0
+                stream.append(final)  # BTYPE=00 in bits 1-2
+                stream.extend(
+                    struct.pack("<HH", len(part), len(part) ^ 0xFFFF)
                 )
-                lines = np.empty((h, 1 + 3 * w), dtype=np.uint8)
-                lines[:, 0] = ftypes
-                lines[:, 1:] = filt
-                body = lines.tobytes()
-                variant = mid % 3
-                if variant == 1:
-                    # fixed-Huffman framing via the library encoder
-                    # (Z_FIXED forbids dynamic trees). memLevel 9
-                    # keeps it one block.
-                    co = zlib.compressobj(6, zlib.DEFLATED, 15, 9, zlib.Z_FIXED)
-                    stream = bytearray(co.compress(body) + co.flush())
-                elif variant == 2:
-                    # hand-rolled guaranteed-BTYPE=2 stream (the
-                    # library encoder never picks dynamic for these
-                    # small near-uniform rasters; pytest validates
-                    # every _deflate_dynamic stream via zlib)
-                    stream = bytearray(_deflate_dynamic(body))
-                else:
-                    # hand-rolled zlib framing: header + stored blocks
-                    # (<=512 bytes each) + adler32 of the raw bytes
-                    stream = bytearray(b"\x78\x01")
-                    pos = 0
-                    while True:
-                        part = body[pos : pos + 512]
-                        pos += len(part)
-                        final = 1 if pos >= len(body) else 0
-                        stream.append(final)  # BTYPE=00 in bits 1-2
-                        stream.extend(
-                            struct.pack("<HH", len(part), len(part) ^ 0xFFFF)
-                        )
-                        stream.extend(part)
-                        if final:
-                            break
-                    stream.extend(
-                        struct.pack(">I", zlib.adler32(body) & 0xFFFFFFFF)
-                    )
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                cut = max(len(stream) // 2, 1)
-                payload = (
-                    b"\x89PNG\r\n\x1a\n"
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", bytes(stream[:cut]))
-                    + _png_chunk(b"tEXt", b"Comment\x00decoy between idats")
-                    + _png_chunk(b"IDAT", bytes(stream[cut:]))
-                    + _png_chunk(b"IEND", b"")
-                )
-                rows.append((mid, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+                stream.extend(part)
+                if final:
+                    break
+            stream.extend(
+                struct.pack(">I", zlib.adler32(body) & 0xFFFFFFFF)
+            )
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        cut = max(len(stream) // 2, 1)
+        payload = (
+            b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", bytes(stream[:cut]))
+            + _png_chunk(b"tEXt", b"Comment\x00decoy between idats")
+            + _png_chunk(b"IDAT", bytes(stream[cut:]))
+            + _png_chunk(b"IEND", b"")
+        )
+        return payload
 
-    n_parts = _synth_parts(media_ids.sparkSession.sparkContext)
-    return media_ids.select("media_id").repartition(n_parts).mapInPandas(
-        _build, SYNTH_SCHEMA
-    )
+    return synth_payload_stage(media_ids, payload)
 
 
 def _inflate(stream: bytes):

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import kmv as KMV, similarity
 from ..plans.scale import narrow_partitions, scoped_shuffle_partitions
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
 from ._money import CENTS_SQL, cents
 
@@ -154,17 +154,16 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kmv_report(_kmv_union_and_summarize(per_group), _kmv_exact_side(li))
 
 
-@register("q_stream_kmv", oracle=None)  # batch oracle attached below
+@register("q_stream_kmv", oracle=_KMV_ORACLE)
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E27b — KMV sketch STREAM TWIN: each micro-batch folds its local
-    per-group bottom-K (<= groups x K tiny rows, an idempotent
-    ``epoch=<id>`` partial — a retried batch overwrites its own
-    partial) and serving takes bottom-K over the union of partials:
-    because the sketch is a commutative idempotent bounded monoid the
-    streamed sketch is EXACTLY the batch sketch and hash-matches
-    q_kmv_distinct's oracle. This is the always-current distinct
-    dashboard at 100 TB/day: state per epoch is bounded by the sketch
-    size, never the member count. The exact_distinct audit columns are
+    per-group bottom-K (<= groups x K tiny rows) into the committed
+    sketch state under its epoch — a retried batch is a no-op — and
+    serving re-ranks that state: because the sketch is a commutative
+    idempotent bounded monoid the streamed sketch is EXACTLY the batch
+    sketch and hash-matches q_kmv_distinct's oracle. This is the
+    always-current distinct dashboard at 100 TB/day: the state is
+    bounded by the sketch size, never the member count. The exact_distinct audit columns are
     computed batch-side from the same source (ground truth for the
     verdict is an offline audit by definition — maintaining it
     streaming would need unbounded state, which is precisely what the
@@ -182,8 +181,8 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "lineitem", q_stream_kmv),
         lambda dest: li.repartition(6).write.mode("overwrite").parquet(dest),
     )
-    # resumable: the first call drains the 3 micro-batches into epoch
-    # partials, later calls are an empty drain + a partials fold
+    # resumable: the first call drains the 3 micro-batches into the
+    # state, later calls are an empty drain + a state read
     base = resumable_workdir(src, q_stream_kmv)
     sketch = D.fold_stream(
         spark,
@@ -196,10 +195,6 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-rank: the served base carries no rank column
     folded = KMV.bottom_k(sketch)
     return _kmv_report(_kmv_union_and_summarize(folded), _kmv_exact_side(li))
-
-
-# the streamed sketch folds to exactly the batch sketch
-ORACLES["q_stream_kmv"] = ORACLES["q_kmv_distinct"]
 
 
 # ---------------------------------------------------------------------------
@@ -340,13 +335,13 @@ def q_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gapfill_series(_hourly_obs(load_table(spark, sf_dir, "events")))
 
 
-@register("q_stream_gapfill", oracle=None)  # batch oracle attached below
+@register("q_stream_gapfill", oracle=_GAPFILL_ORACLE)
 def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W15b — gap-fill STREAM TWIN: the hourly (type, hr) cent-sums
     are SUM-DECOMPOSABLE, so each micro-batch folds one tiny
-    per-(type, hr) partial (idempotent ``epoch=<id>`` —
-    streaming/delta.py::fold_stream) and serving sums the partials into the
-    identical obs frame, then runs the SAME gapfill_series — the
+    per-(type, hr) partial into the committed sums (a replayed epoch
+    is a no-op — streaming/delta.py::fold_stream), and serving runs
+    the SAME gapfill_series over them, the identical obs frame — the
     streamed densified dashboard hash-matches the batch SQL oracle
     exactly. This is how a live gap-filled chart actually deploys:
     the fill recomputes over the bounded (type x hour) grid each
@@ -366,11 +361,6 @@ def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda df: D.fold_generic(df, ["event_type", "hr"], ["cents"]),
     )
     return gapfill_series(obs)
-
-
-# the stream twin folds to the identical obs frame, so the batch SQL
-# IS its oracle (same contract as q_stream_event_drift)
-ORACLES["q_stream_gapfill"] = ORACLES["q_gapfill_interpolate"]
 
 
 # ---------------------------------------------------------------------------
@@ -1138,9 +1128,7 @@ def q_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X30 — OLS trend slope (exact-integer least squares)
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_trend_slope",
-    oracle=f"""
+_TREND_SLOPE_ORACLE = f"""
 WITH e AS (
   SELECT event_type, epoch_ms(ts) // 86400000 AS day_num,
          {_EV_CENTS_SQL} AS c
@@ -1170,8 +1158,10 @@ SELECT event_type, n AS n_days,
        CASE WHEN den = 0 OR num = 0 THEN 'flat'
             WHEN num > 0 THEN 'rising' ELSE 'falling' END AS direction
 FROM fit
-""",
-)
+"""
+
+
+@register("q_trend_slope", oracle=_TREND_SLOPE_ORACLE)
 def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30 — trend detection by ordinary least squares: the OLS slope
     of each event type's daily revenue series in EXACT INTEGER
@@ -1479,24 +1469,19 @@ def q_dbscan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_trend", oracle=None)  # batch oracle attached below
+@register("q_stream_trend", oracle=_TREND_SLOPE_ORACLE)
 def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30b — OLS trend STREAM TWIN: daily cent-sums are
     SUM-DECOMPOSABLE, so each micro-batch folds one tiny per-(type,
-    day) partial (idempotent ``epoch=<id>`` —
-    streaming/delta.py::fold_stream) and serving sums the partials
-    into the identical daily frame, then runs the SAME trend_from_daily
+    day) partial into the committed sums (a replayed epoch is a no-op
+    — streaming/delta.py::fold_stream), and serving runs the SAME
+    trend_from_daily over them, the identical daily frame
     — the live trend detector hash-matches the batch SQL oracle
     exactly. The regression
     recomputes over the bounded type x day grid each refresh; state
     tracks the key grid, not event volume — continuously-updated
     'error revenue rising' alerting at 100 TB/day."""
     return trend_from_daily(_streamed_daily(spark, sf_dir))
-
-
-# the stream twin folds to the identical daily frame, so the batch SQL
-# IS its oracle (same contract as q_stream_gapfill)
-ORACLES["q_stream_trend"] = ORACLES["q_trend_slope"]
 
 
 # ---------------------------------------------------------------------------
@@ -1579,9 +1564,7 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X32 — changepoint detection (best level-shift split)
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_changepoint",
-    oracle=f"""
+_CHANGEPOINT_ORACLE = f"""
 WITH e AS (
   SELECT epoch_ms(ts) // 86400000 AS day_num, {_EV_CENTS_SQL} AS c
   FROM events),
@@ -1608,8 +1591,10 @@ SELECT split_day, mean_left_mcents, mean_right_mcents,
 FROM shifts
 ORDER BY shift_mcents DESC, split_day
 LIMIT 1
-""",
-)
+"""
+
+
+@register("q_changepoint", oracle=_CHANGEPOINT_ORACLE)
 def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X32 — changepoint detection: the day that best splits the daily
     revenue series into two level regimes (max |mean-after −
@@ -1670,7 +1655,7 @@ def changepoint_from_daily(d: DataFrame) -> DataFrame:
     )
 
 
-@register("q_stream_changepoint", oracle=None)  # batch oracle below
+@register("q_stream_changepoint", oracle=_CHANGEPOINT_ORACLE)
 def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X32b — changepoint STREAM VIEW over the SAME folded state as
     the trend twin: one streaming fold (the per-(type, day) cent-sum
@@ -1689,11 +1674,6 @@ def q_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("y").cast("long").alias("y"))
     )
     return changepoint_from_daily(daily)
-
-
-# the type-marginal of the folded frame is the batch daily series, so
-# the batch SQL IS the view's oracle
-ORACLES["q_stream_changepoint"] = ORACLES["q_changepoint"]
 
 
 # ---------------------------------------------------------------------------

@@ -77,17 +77,19 @@ typed AS (
 """
 
 
-@register(
-    "q_ops_by_table_op",
-    oracle=CDC_ROWS_CTE
+OPS_BY_TABLE_OP_ORACLE = (
+    CDC_ROWS_CTE
     + f"""
 SELECT {_TABLE_CASE} AS table_name,
        {_OP_CASE} AS operation,
        CAST(COUNT(*) AS BIGINT) AS n
 FROM cdc_rows
 GROUP BY 1, 2
-""",
+"""
 )
+
+
+@register("q_ops_by_table_op", oracle=OPS_BY_TABLE_OP_ORACLE)
 def q_ops_by_table_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 — running count by (table, op): the consumer's
     ``tidb_cdc_operations_total`` counter (reference index.js:90-95,

@@ -26,10 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import parse as P
 from ..operators.replay import retraction_totals, scd2_versions
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
 from ..sources.event_sink import normalized_sink
 from .cdc import CDC_ROWS_CTE, _OP_CASE, _TABLE_CASE
+from .llm_pipeline import DEDUP_EXACT_ORACLE
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -439,9 +440,8 @@ typed AS (
 """
 
 
-@register(
-    "q_scd2_history",
-    oracle=_SCD2_CTE
+_SCD2_HISTORY_ORACLE = (
+    _SCD2_CTE
     + """
 SELECT table_name, row_id, user_id, value, valid_from_ms, valid_to_ms,
        CAST(CASE WHEN valid_to_ms IS NULL THEN 1 ELSE 0 END AS INTEGER)
@@ -454,8 +454,11 @@ FROM (
   FROM typed
 )
 WHERE operation <> 'delete'
-""",
+"""
 )
+
+
+@register("q_scd2_history", oracle=_SCD2_HISTORY_ORACLE)
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9 — slowly-changing-dimension type-2 history: every non-delete
     change event becomes a version row with [valid_from, valid_to)
@@ -478,7 +481,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_scd2", oracle=None)
+@register("q_stream_scd2", oracle=_SCD2_HISTORY_ORACLE)
 def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9 stream form — SCD2 history maintained by a REAL Structured
     Streaming query: keyed-recompute foreachBatch (touched keys rebuild
@@ -504,9 +507,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "valid_to_ms",
         "is_current",
     )
-
-
-ORACLES["q_stream_scd2"] = ORACLES["q_scd2_history"]
 
 
 # ---------------------------------------------------------------------------
@@ -580,9 +580,8 @@ def q_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A10 — incremental aggregate maintenance (retraction semantics)
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_delta_agg",
-    oracle=CDC_ROWS_CTE
+_DELTA_AGG_ORACLE = (
+    CDC_ROWS_CTE
     + f"""
 SELECT {_TABLE_CASE} AS table_name,
        CAST(SUM(CASE WHEN e = 8 THEN -1 WHEN e = 7 THEN 0 ELSE 1 END)
@@ -595,8 +594,11 @@ SELECT {_TABLE_CASE} AS table_name,
        END) AS BIGINT) AS net_sum_micro
 FROM cdc_rows
 GROUP BY 1
-""",
+"""
 )
+
+
+@register("q_delta_agg", oracle=_DELTA_AGG_ORACLE)
 def q_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 — incremental materialized-view maintenance over the
     changefeed: each event contributes its retraction delta (+new for
@@ -611,20 +613,20 @@ def q_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retraction_totals(typed)
 
 
-@register("q_stream_delta_agg", oracle=None)
+@register("q_stream_delta_agg", oracle=_DELTA_AGG_ORACLE)
 def q_stream_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 stream form — the retraction fold executed by a REAL
-    Structured Streaming query (foreachBatch partials, idempotent
-    epoch=<id> overwrite — streaming/delta.py). Deltas commute, so the
-    folded totals equal the batch q_delta_agg independent of batch
-    boundaries; the oracle is attached right after this definition
-    (same SQL text as q_delta_agg) and the driver hash-compares the
-    STREAMED result against the BATCH oracle — true stream/batch
+    Structured Streaming query (foreachBatch folds into
+    manifest-committed state, a replayed epoch is a no-op —
+    streaming/delta.py). Deltas commute, so the folded totals equal
+    the batch q_delta_agg independent of batch boundaries; the query
+    registers q_delta_agg's oracle text and the driver hash-compares
+    the STREAMED result against the BATCH oracle — true stream/batch
     equivalence, checked end to end."""
     from ..streaming import ingest as I
 
-    # resumable: first call drains into epoch partials, later calls are
-    # an empty drain + the monoid fold over the committed partials
+    # resumable: first call drains into the state, later calls are an
+    # empty drain + a read of the committed state
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
     return _streamed_delta_totals(
         spark, src, I.resumable_workdir(src, q_stream_delta_agg)
@@ -640,7 +642,7 @@ def _delta_totals(df: DataFrame) -> DataFrame:
 
 def _streamed_delta_totals(spark: SparkSession, src: str, workdir) -> DataFrame:
     """Drain an envelope backlog through the retraction fold and serve
-    the compacted totals. The fold never inspects event order, so any
+    the committed totals. The fold never inspects event order, so any
     interleaving of the files converges to the same totals."""
     from ..streaming import delta as D
     from ..streaming import ingest as I
@@ -655,11 +657,6 @@ def _streamed_delta_totals(spark: SparkSession, src: str, workdir) -> DataFrame:
         fmt="json",
         stream=P.normalized_events,
     )
-
-
-# stream/batch equivalence IS the claim: the streamed fold must
-# hash-match the batch oracle exactly (deltas commute across batches)
-ORACLES["q_stream_delta_agg"] = ORACLES["q_delta_agg"]
 
 
 # ---------------------------------------------------------------------------
@@ -820,7 +817,7 @@ def q_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_doc_dedup", oracle=None)
+@register("q_stream_doc_dedup", oracle=DEDUP_EXACT_ORACLE)
 def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 stream form — exact dedup maintained by a REAL Structured
     Streaming query: documents arrive in micro-batches, each folds
@@ -857,9 +854,6 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.survivors(spark, str(base / "state")).select(
         "doc_id", "lang", "source", "n_chars"
     )
-
-
-ORACLES["q_stream_doc_dedup"] = ORACLES["q_dedup_exact"]
 
 
 @register(
@@ -1158,34 +1152,30 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A10 compaction — delta-partials fold (round 5 driver proof)
 # ---------------------------------------------------------------------------
 
-@register("q_compact_partials", oracle=None)
+@register("q_compact_partials", oracle=_DELTA_AGG_ORACLE)
 def q_compact_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 maintenance — the crash-safe partials compaction
-    (streaming/delta.py::compact_with) driven end to end: run the
-    retraction-fold stream, which compacts its epoch partials into a
-    versioned base (staged write + atomic rename = the commit point),
-    compact AGAIN (must no-op), then serve. The served totals must
-    hash-match the BATCH q_delta_agg oracle — totals preservation
-    through compaction, checked at the gate, not just in pytest. At
-    100 TB compaction is what bounds the serving read at O(groups +
-    batches-since-compaction); correctness must therefore survive it
-    byte-exactly. Resumable (r7b): partials + checkpoint persist per
-    (envelope landing, fold code) — the FIRST call pays the
-    drain + real compaction; every later call still drives the full
-    protocol but hits its steady-state branches (empty availableNow
-    drain, no-op compact passes, base-only serve), which is exactly
-    the per-trigger cost a production maintainer pays."""
-    from ..streaming import delta as D
+    """A10 maintenance — the retraction fold's state commit
+    (streaming/delta.py::fold_stream through
+    streaming/merge.py::apply_bucketed_fold) driven end to end: run the
+    retraction-fold stream, which folds each epoch's partial into the
+    manifest-committed totals, run it AGAIN (an empty drain that
+    commits nothing), then serve the committed state. The served
+    totals must hash-match the BATCH q_delta_agg oracle — totals
+    preservation through the per-epoch state folds, checked at the
+    gate, not just in pytest. At 100 TB the fold is what bounds the
+    serving read at O(groups); correctness must therefore survive it
+    byte-exactly. Resumable (r7b): state + checkpoint persist per
+    (envelope landing, fold code) — the FIRST call pays the drain;
+    every later call still drives the full protocol but hits its
+    steady-state branches (empty availableNow drains, a state-only
+    serve), which is exactly the per-trigger cost a production
+    maintainer pays."""
     from ..streaming.ingest import envelope_files, resumable_workdir
 
     src = envelope_files(spark, sf_dir, None, n_files=4)
     base = resumable_workdir(src, q_compact_partials)
     _streamed_delta_totals(spark, src, base)
-    D.compact_with(spark, str(base / "partials"), _delta_totals)  # no-op
-    return D.folded_with(spark, str(base / "partials"), _delta_totals)
-
-
-ORACLES["q_compact_partials"] = ORACLES["q_delta_agg"]
+    return _streamed_delta_totals(spark, src, base)  # empty drain
 
 
 # ---------------------------------------------------------------------------

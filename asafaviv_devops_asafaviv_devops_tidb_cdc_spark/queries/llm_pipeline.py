@@ -42,9 +42,7 @@ def _doubled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- E1: exact dedup -------------------------------------------------------
 
 
-@register(
-    "q_dedup_exact",
-    oracle="""
+DEDUP_EXACT_ORACLE = """
 WITH doubled AS (
   SELECT doc_id, text, lang, source, n_chars FROM documents
   UNION ALL
@@ -56,8 +54,10 @@ ranked AS (
   FROM doubled
 )
 SELECT doc_id, lang, source, n_chars FROM ranked WHERE rn = 1
-""",
-)
+"""
+
+
+@register("q_dedup_exact", oracle=DEDUP_EXACT_ORACLE)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 — exact dedup: one shuffle on the 256-bit content hash,
     deterministic min-id survivor."""

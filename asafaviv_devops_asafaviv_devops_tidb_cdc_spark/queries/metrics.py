@@ -495,9 +495,7 @@ def q_hll_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_session_windows",
-    oracle="""
+SESSION_WINDOWS_ORACLE = """
 WITH flagged AS (
   SELECT user_id, ts, value,
          CASE WHEN ts >= LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -519,8 +517,10 @@ SELECT user_id,
          AS total_value_cents
 FROM sessions
 GROUP BY user_id, sid
-""",
-)
+"""
+
+
+@register("q_session_windows", oracle=SESSION_WINDOWS_ORACLE)
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization — gap-based session windows (30-min inactivity
     closes a session) via Spark's native ``session_window``; the
@@ -1009,9 +1009,7 @@ def q_approx_quantile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_funnel_stages",
-    oracle="""
+FUNNEL_STAGES_ORACLE = """
 WITH v AS (
   SELECT user_id, MIN(ts) AS v_ts FROM events
   WHERE event_type = 'view' GROUP BY 1
@@ -1040,8 +1038,10 @@ SELECT stage, n_users,
                      lag(n_users) OVER (ORDER BY stage), 1000000)
             AS BIGINT) AS conv_ppm
 FROM stages
-""",
-)
+"""
+
+
+@register("q_funnel_stages", oracle=FUNNEL_STAGES_ORACLE)
 def q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-event funnel (view -> click -> purchase) — the product
     analytics staple the reference's Grafana layer approximates with

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
 
 
@@ -425,9 +425,7 @@ def q_stream_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_event_drift",
-    oracle="""
+_EVENT_DRIFT_ORACLE = """
 WITH e AS (
   SELECT CAST(epoch_ms(ts) // 86400000 AS BIGINT) AS day_num, event_type
   FROM events),
@@ -451,8 +449,10 @@ SELECT day_num,
        SUM(dev * dev) > 2000000000 AS drifted
 FROM j
 GROUP BY 1
-""",
-)
+"""
+
+
+@register("q_event_drift", oracle=_EVENT_DRIFT_ORACLE)
 def q_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift census: per-day event-type mix compared to
     the corpus-wide mix as a squared-ppm L2 distance — the monitoring
@@ -509,13 +509,13 @@ def drift_census(obs: DataFrame) -> DataFrame:
     )
 
 
-@register("q_stream_event_drift", oracle=None)  # batch oracle attached below
+@register("q_stream_event_drift", oracle=_EVENT_DRIFT_ORACLE)
 def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift STREAM TWIN: per-micro-batch (day, type)
-    counts folded into idempotent ``epoch=<id>`` partials (counts are
-    sum-decomposable, so a retried batch overwrites its own partial
-    and never double-counts — the streaming/dq.py recipe); serving
-    sums the partials into the obs frame and runs the SAME
+    counts folded into the committed count state (counts are
+    sum-decomposable, and a retried batch is a no-op, so nothing
+    double-counts — the streaming/dq.py recipe); serving reads the
+    state as the obs frame and runs the SAME
     drift_census as the batch query, so the streamed result
     hash-matches the batch SQL oracle exactly. This is how the
     monitor actually deploys at 100 TB: drift flagged within one
@@ -535,11 +535,6 @@ def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda df: D.fold_generic(df, ["day_num", "event_type"], ["o"]),
     )
     return drift_census(obs)
-
-
-# the stream twin folds to the identical obs frame, so the batch SQL
-# IS its oracle (same contract as q_stream_delta_agg / q_delta_agg)
-ORACLES["q_stream_event_drift"] = ORACLES["q_event_drift"]
 
 
 # ---------------------------------------------------------------------------
@@ -641,9 +636,7 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X23 — user-journey transition census (Markov matrix; round 6)
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_event_transitions",
-    oracle="""
+_EVENT_TRANSITIONS_ORACLE = """
 WITH t AS (
   SELECT user_id, event_type,
          LEAD(event_type) OVER (PARTITION BY user_id
@@ -657,8 +650,10 @@ s AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS tot FROM c GROUP BY 1)
 SELECT c.from_type, c.to_type, c.n,
        CAST(c.n * 1000000 // s.tot AS BIGINT) AS share_ppm
 FROM c JOIN s USING (from_type)
-""",
-)
+"""
+
+
+@register("q_event_transitions", oracle=_EVENT_TRANSITIONS_ORACLE)
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X23 — user-journey transition census: for every consecutive
     pair of events per user (ordered by event time, event_id
@@ -734,7 +729,7 @@ def stream_transition_counts(
     return counts.filter(F.col("n") > 0)
 
 
-@register("q_stream_transitions", oracle=None)  # batch oracle below
+@register("q_stream_transitions", oracle=_EVENT_TRANSITIONS_ORACLE)
 def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X23b — transition census STREAM TWIN: consecutive-pair semantics
     are NON-monotone under out-of-order arrival (a late event inserts
@@ -762,7 +757,7 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # resumable: the first call drains the 6 interleaved micro-batches
     # through the history fold; later calls are an empty drain + a
-    # fold of the compacted grid partials
+    # read of the committed grid counts
     return transition_report(
         stream_transition_counts(
             spark,
@@ -773,6 +768,3 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the streamed partials sum to the identical count frame, so the batch
-# SQL IS the twin's oracle
-ORACLES["q_stream_transitions"] = ORACLES["q_event_transitions"]

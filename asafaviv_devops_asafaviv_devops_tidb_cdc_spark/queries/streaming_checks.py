@@ -13,16 +13,16 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
 from ..streaming import alerts, ingest, merge
+from .cdc import OPS_BY_TABLE_OP_ORACLE, TYPED_CTE
+from .metrics import FUNNEL_STAGES_ORACLE, SESSION_WINDOWS_ORACLE
 
 _W = alerts.WINDOW_MS
 
 
-@register(
-    "q_alert_sustained",
-    oracle=f"""
+_ALERT_SUSTAINED_ORACLE = f"""
 WITH b AS (
   SELECT epoch_ms(CAST(epoch_ms(ts) // {_W} * {_W} AS BIGINT)) AS window_start,
          CAST(COUNT(*) AS BIGINT) AS n_total,
@@ -46,8 +46,10 @@ SELECT window_start, error_ppm,
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS streak
 FROM islanded
 QUALIFY streak >= {alerts.DEFAULT_FOR_WINDOWS}
-""",
-)
+"""
+
+
+@register("q_alert_sustained", oracle=_ALERT_SUSTAINED_ORACLE)
 def q_alert_sustained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W7 — sustained-condition alert (reference monitoring/
     alerts.yml:6-14: error rate above threshold, sustained ``for:``
@@ -74,7 +76,7 @@ def _run_stream(spark: SparkSession, sf_dir: str, dup_mod: int | None) -> DataFr
     return spark.read.parquet(str(base / "sink"))
 
 
-@register("q_stream_ingest_counts")  # oracle attached below
+@register("q_stream_ingest_counts", oracle=OPS_BY_TABLE_OP_ORACLE)
 def q_stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 — the P1-P5 chain executed as a REAL Structured Streaming
     query (availableNow file source standing in for Kafka, parquet
@@ -84,7 +86,28 @@ def q_stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sink.groupBy("table_name", "operation").agg(F.count("*").alias("n"))
 
 
-@register("q_stream_cdc_replay")  # oracle attached below
+# the merge replay's live state must aggregate to the last-writer-wins
+# batch replay
+_STREAM_CDC_REPLAY_ORACLE = (
+    TYPED_CTE
+    + """
+SELECT table_name,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+         AS sum_value_cents
+FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY table_name, user_id
+    ORDER BY ts DESC, offset_ DESC, rownum DESC) AS rn
+  FROM typed
+)
+WHERE rn = 1 AND operation <> 'delete'
+GROUP BY 1
+"""
+)
+
+
+@register("q_stream_cdc_replay", oracle=_STREAM_CDC_REPLAY_ORACLE)
 def q_stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 stream form — incremental current-state materialization:
     the envelope backlog split into out-of-order micro-batches, each
@@ -151,7 +174,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"SELECT w.start AS window_start, event_type, n FROM {name}")
 
 
-@register("q_stream_dedupe")  # oracle attached below
+@register("q_stream_dedupe", oracle=OPS_BY_TABLE_OP_ORACLE)
 def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 exactly-once upgrade: every 5th envelope is replayed
     (at-least-once duplicate, reference index.js:350-352 semantics);
@@ -163,8 +186,8 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the streaming sessionizer must agree row-for-row with the batch
 # q_session_windows gaps-and-islands oracle — registered with the SAME
-# oracle text (metrics registers before this module)
-@register("q_stream_sessions", oracle=ORACLES["q_session_windows"])
+# oracle text
+@register("q_stream_sessions", oracle=SESSION_WINDOWS_ORACLE)
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W9/§2.9 — gap-based session windows computed by a REAL
     Structured Streaming aggregation (native ``session_window``, 30-min
@@ -257,37 +280,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The streaming results are deterministic, so they get REAL oracles —
-# the driver hash-compares each STREAMED result against the equivalent
-# batch SQL (true stream/batch equivalence at the gate, not just pytest):
-# - ingest counts and the duplicate-replay dedupe must both equal the
-#   single-delivery batch chain counts (A1 oracle);
-# - the merge replay's live state must aggregate to the last-writer-wins
-#   batch replay.
-from .cdc import TYPED_CTE as _TYPED_CTE  # noqa: E402
-
-ORACLES["q_stream_ingest_counts"] = ORACLES["q_ops_by_table_op"]
-ORACLES["q_stream_dedupe"] = ORACLES["q_ops_by_table_op"]
-ORACLES["q_stream_cdc_replay"] = (
-    _TYPED_CTE
-    + """
-SELECT table_name,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-         AS sum_value_cents
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY table_name, user_id
-    ORDER BY ts DESC, offset_ DESC, rownum DESC) AS rn
-  FROM typed
-)
-WHERE rn = 1 AND operation <> 'delete'
-GROUP BY 1
-"""
-)
-
-
-@register("q_stream_alerts", oracle=ORACLES["q_alert_sustained"])
+@register("q_stream_alerts", oracle=_ALERT_SUSTAINED_ORACLE)
 def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W7 stream form — the sustained-alert evaluator over a streamed
     fold: each micro-batch's per-window (n_total, n_errors) counts are
@@ -297,7 +290,7 @@ def q_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, hash-compared against the same oracle as
     q_alert_sustained. Resumable: the drain runs once per landing;
     later calls are an empty availableNow pass + a read of the
-    compacted base."""
+    committed counts."""
     events = load_table(spark, sf_dir, "events")
     src = ingest.events_files(spark, sf_dir)
     counts = alerts.stream_window_counts(
@@ -421,7 +414,7 @@ FROM l JOIN r USING (user_id)
 """
 
 
-@register("q_stream_join_view", oracle=_TYPED_CTE + _JV_SELECT)
+@register("q_stream_join_view", oracle=TYPED_CTE + _JV_SELECT)
 def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10b stream form — a MAINTAINED JOIN VIEW: click-state |><|
     purchase-state ON user_id, kept fresh per micro-batch by
@@ -460,7 +453,7 @@ def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # before envelope generation), so the gate hash-proves the maintainer
 # under skew, complementing the bounded-I/O property test
 # (tests/test_streaming.py::test_join_view_bounded_io_under_zipf_skew).
-_TYPED_CTE_SKEW = _TYPED_CTE.replace(
+_TYPED_CTE_SKEW = TYPED_CTE.replace(
     "FROM events\n", "FROM events_skew\n", 1
 ).replace(
     "WITH gen AS (",
@@ -521,8 +514,7 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # the streamed funnel must agree with the batch q_funnel_stages oracle
-# (metrics registers before this module)
-@register("q_stream_funnel", oracle=ORACLES["q_funnel_stages"])
+@register("q_stream_funnel", oracle=FUNNEL_STAGES_ORACLE)
 def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W11 stream form — the ordered-event funnel as a history fold
     (streaming/delta.py::fold_stream with ``history``): each user's
@@ -537,7 +529,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the served report hash-matches the batch SQL oracle regardless
     of batch boundaries. Resumable: the first call drains the 3
     interleaved micro-batches, later ones are an empty availableNow
-    pass + a read of the compacted base."""
+    pass + a read of the committed census."""
     from ..sources.artifact import input_fingerprint, materialized_path
     from ..streaming import delta as D
     from .metrics import funnel_report, funnel_stage_counts
@@ -697,7 +689,7 @@ def q_stream_late_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_resume", oracle=ORACLES["q_ops_by_table_op"])
+@register("q_stream_resume", oracle=OPS_BY_TABLE_OP_ORACLE)
 def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 checkpoint-resume PROVEN at the gate: drain half the
     envelope backlog, STOP, land the rest, and resume from the same

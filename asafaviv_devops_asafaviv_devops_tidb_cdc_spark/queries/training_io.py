@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import sampling as SK, text as TX
 from ..functions.dedup import _with_shingles
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
 
 
@@ -37,9 +37,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E14 — training shard writer + manifest
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_shard_manifest",
-    oracle=f"""
+_SHARD_MANIFEST_ORACLE = f"""
 WITH s AS (
   SELECT doc_id,
          CAST(strlen(text) AS BIGINT) AS nb,
@@ -53,8 +51,10 @@ SELECT substr(h, 1, 1) AS shard,
        MAX(h) AS last_key
 FROM s
 GROUP BY 1
-""",
-)
+"""
+
+
+@register("q_shard_manifest", oracle=_SHARD_MANIFEST_ORACLE)
 def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E14 — training-shard export: deterministic global shuffle +
     shard layout + manifest. Shuffle key = salted sha256(doc_id) (a
@@ -481,16 +481,16 @@ def q_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E19 — fixed-SIZE deterministic samples (exact-k, global and per-group)
 # ---------------------------------------------------------------------------
 
-@register(
-    "q_sample_fixed",
-    oracle=f"""
+_SAMPLE_FIXED_ORACLE = f"""
 WITH s AS (
   SELECT doc_id, source,
          {SK.salted_key_sql(SK.SAMPLE_SALT)} AS h
   FROM documents)
 SELECT doc_id, source, h FROM s ORDER BY h LIMIT {SK.SAMPLE_K}
-""",
-)
+"""
+
+
+@register("q_sample_fixed", oracle=_SAMPLE_FIXED_ORACLE)
 def q_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E19a — exact-k uniform sample (k=100): the fixed-SIZE
     counterpart to the fixed-RATE sha split (q_split_assign) — eval
@@ -751,7 +751,7 @@ def q_text_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_sample", oracle=None)  # batch oracle attached below
+@register("q_stream_sample", oracle=_SAMPLE_FIXED_ORACLE)
 def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E19c — fixed-size sample STREAM TWIN: each micro-batch keeps
     its local bottom-k by the salted sha key (an idempotent epoch
@@ -776,23 +776,18 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# bottom-k folding is exact, so the batch sample's SQL IS the oracle
-ORACLES["q_stream_sample"] = ORACLES["q_sample_fixed"]
-
-
-@register("q_stream_manifest", oracle=None)  # batch oracle attached below
+@register("q_stream_manifest", oracle=_SHARD_MANIFEST_ORACLE)
 def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E14b — shard-manifest STREAM TWIN: every manifest statistic is
     a commutative monoid (counts/byte-sums/id-checksums fold by +,
     key ranges by min/max), so a streaming ingest maintains the
     training-export manifest incrementally: per micro-batch ONE tiny
-    per-shard summary row lands as an idempotent epoch partial, and
-    serving folds partials with the same operators — hash-identical
-    to the batch manifest built from the written files
-    (q_shard_manifest's oracle). At 100 TB/day this is how the
-    manifest stays current without ever rescanning the corpus: the
-    fold state is n_shards rows per epoch, COMPACTED after each drain
-    through the shared crash-safe base protocol and resumed across
+    per-shard summary row folds into the committed manifest state
+    with the same operators — hash-identical to the batch manifest
+    built from the written files (q_shard_manifest's oracle). At
+    100 TB/day this is how the manifest stays current without ever
+    rescanning the corpus: the fold state is n_shards rows, committed
+    per epoch through the shared manifest protocol and resumed across
     invocations (provider-keyed workdir)."""
     from ..streaming import delta as D
     from ..streaming import ingest as I
@@ -809,11 +804,6 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         SK.fold_manifests,
     )
     return SK.manifest_select(manifests)
-
-
-# every manifest stat folds commutatively, so the batch manifest's
-# SQL IS the stream's oracle
-ORACLES["q_stream_manifest"] = ORACLES["q_shard_manifest"]
 
 
 # ---------------------------------------------------------------------------
@@ -882,9 +872,7 @@ _PII_PHONE = PII.PII_PHONE
 _PII_IP = PII.PII_IP
 
 
-@register(
-    "q_pii_census",
-    oracle=f"""
+_PII_CENSUS_ORACLE = f"""
 WITH c AS (
   SELECT doc_id, source,
          text
@@ -918,8 +906,10 @@ SELECT source,
        CAST(SUM(n_ip) AS BIGINT) AS n_ips,
        CAST(SUM(delta) AS BIGINT) AS chars_redacted
 FROM m GROUP BY 1
-""",
-)
+"""
+
+
+@register("q_pii_census", oracle=_PII_CENSUS_ORACLE)
 def q_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E23 — PII detection + redaction census: per source, how many
     docs carry an email / phone / IPv4 pattern, how many instances of
@@ -942,13 +932,13 @@ def q_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_stream_pii", oracle=None)  # batch oracle attached below
+@register("q_stream_pii", oracle=_PII_CENSUS_ORACLE)
 def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E23b — PII compliance monitor STREAM TWIN: each micro-batch's
-    per-source census lands as an idempotent epoch partial (every
-    statistic is a per-source SUM over disjoint doc sets, flagged-doc
-    counts included — functions/pii.py), and serving folds partials by
-    addition into EXACTLY the batch census, hash-matched against
+    per-source census folds by addition into the committed census
+    (every statistic is a per-source SUM over disjoint doc sets,
+    flagged-doc counts included — functions/pii.py), which is EXACTLY
+    the batch census, hash-matched against
     q_pii_census's oracle. This is how the scrub gate deploys at
     100 TB/day: a feed that starts leaking contact data is flagged
     within one micro-batch, with per-epoch state one row per source —
@@ -956,8 +946,8 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
-    # resumable: the first call drains the 3 micro-batches into epoch
-    # partials, later calls are an empty drain + a partials fold
+    # resumable: the first call drains the 3 micro-batches into the
+    # state, later calls are an empty drain + a state read
     src = I.documents_files(spark, sf_dir)
     return D.fold_stream(
         spark,
@@ -967,11 +957,6 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda b: PII.rollup(PII.doc_metrics(PII.with_planted_pii(b))),
         PII.fold_rollups,
     )
-
-
-# every census statistic folds commutatively over disjoint doc sets,
-# so the batch census's SQL IS the stream's oracle
-ORACLES["q_stream_pii"] = ORACLES["q_pii_census"]
 
 
 # ---------------------------------------------------------------------------

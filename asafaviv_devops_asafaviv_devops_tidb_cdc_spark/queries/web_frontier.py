@@ -427,11 +427,10 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     host graph is a set-union monoid (fold(fold(A) ∪ fold(B)) ==
     fold(A ∪ B) with fold = DISTINCT), so a streaming ingest
     maintains the E41 census incrementally: page-level host-pair
-    rows arrive in micro-batches, each batch lands its DISTINCT
-    pairs as an idempotent epoch partial, partials COMPACT through
-    the shared crash-safe base protocol (streaming/delta.py), and
-    serving folds once more then derives the out-/in-neighbor counts
-    — hash-identical to the batch census (the oracle's hp CTE). At
+    rows arrive in micro-batches, each batch's DISTINCT pairs fold
+    into the committed pair set through the shared manifest protocol
+    (streaming/delta.py), and serving derives the out-/in-neighbor
+    counts — hash-identical to the batch census (the oracle's hp CTE). At
     100 TB/day this is how the web graph stays current without
     re-walking the archive: the fold state is O(host-pairs), NOT
     O(pages), and rank (E41/E43) is a batch consumer of the folded
@@ -459,9 +458,8 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         input_fingerprint(sf_dir, "documents", q_stream_host_graph),
         _write_src,
     )
-    # per-epoch partial = the batch's distinct pairs: idempotent on
-    # replay (overwrite), tiny (O(new host-pairs)), and folds by the
-    # same DISTINCT the serving read applies
+    # per-epoch partial = the batch's distinct pairs: tiny (O(new
+    # host-pairs)), and folds into the state by the same DISTINCT
     pairs = D.fold_stream(
         spark,
         src,

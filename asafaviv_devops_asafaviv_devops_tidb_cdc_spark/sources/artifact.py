@@ -133,7 +133,7 @@ def materialized_path(
 def commit(dest: Path, write: Callable[[str], None]) -> None:
     """Build ``dest`` atomically: ``write`` fills a staging directory
     next to it (its ``_SUCCESS`` marker is the commit record), and a
-    rename makes it visible (the same recipe as streaming/delta.py)."""
+    rename makes it visible."""
     root = dest.parent
     root.mkdir(parents=True, exist_ok=True)
     # re-check under the completed marker: a sibling session may have

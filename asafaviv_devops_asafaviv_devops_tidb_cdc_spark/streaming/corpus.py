@@ -62,16 +62,13 @@ def run_dedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     schema: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int = 2,
 ) -> None:
     """Drain a document backlog maintaining min-id-per-content-hash
     survivor state, resuming from the existing checkpoint (the
     resumable-workdir posture)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_dedup_batch(spark, batch_df, state_dir, epoch_id, text_col, id_col)
+        apply_dedup_batch(spark, batch_df, state_dir, epoch_id)
 
     ingest.drain(
         spark,
@@ -80,7 +77,7 @@ def run_dedup_stream(
         lambda s: s.writeStream.foreachBatch(apply).option(
             "checkpointLocation", checkpoint_dir
         ),
-        max_files_per_trigger,
+        2,
     )
 
 

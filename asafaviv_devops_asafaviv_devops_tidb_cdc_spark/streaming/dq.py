@@ -6,13 +6,12 @@ accepted_values / range violation is a property of one row, so
 per-micro-batch violation counts fold into the exact batch totals by
 addition — which makes the streamed suite hash-comparable against the
 batch SQL oracle (the same stream/batch-equivalence contract as
-streaming/delta.py, and the same idempotent ``epoch=<id>`` partials
-recipe: a retried micro-batch overwrites its own partial, never
-double-counts). Uniqueness / referential integrity are NOT
-sum-decomposable (they compare rows across batches) — at scale those
-run against the serving state table (streaming/merge.py) per
-compaction, not per micro-batch; this module deliberately accepts only
-row-level kinds and raises otherwise.
+streaming/delta.py, whose state commits once per epoch: a retried
+micro-batch is a no-op, never double-counts). Uniqueness /
+referential integrity are NOT sum-decomposable (they compare rows
+across batches) — at scale those run against the serving state table
+(streaming/merge.py), not per micro-batch; this module deliberately
+accepts only row-level kinds and raises otherwise.
 
 Why stream DQ at all: a 100 TB ingest pipeline wants violation
 counters BEFORE the corpus lands (alerting on a poisoned source within

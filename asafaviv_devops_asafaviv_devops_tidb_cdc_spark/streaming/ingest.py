@@ -390,7 +390,6 @@ def run_ingest(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    dedupe: bool = True,
     fresh: bool = True,
 ) -> None:
     """Drain the backlog through P1->P5 into a parquet sink partitioned
@@ -408,13 +407,13 @@ def run_ingest(
     def sink(stream: DataFrame) -> DataStreamWriter:
         # no round-robin repartition: the file source already reads each
         # file (and each maxSplitBytes slice of a large one) as its own task
-        normalized = P.normalized_events(stream)
-        if dedupe:
-            # ``ts`` in the key lets the watermark evict state; a replayed
-            # duplicate carries the same ``es``, so it still matches
-            normalized = normalized.withWatermark("ts", "1 hour").dropDuplicates(
-                ["partition", "offset", "rownum", "ts"]
-            )
+        # ``ts`` in the key lets the watermark evict state; a replayed
+        # duplicate carries the same ``es``, so it still matches
+        normalized = (
+            P.normalized_events(stream)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicates(["partition", "offset", "rownum", "ts"])
+        )
         # (table, date) partitioning: per-table readers prune at the scan
         # and retention/compaction work in day units — the sink design the
         # reference approximates with per-table ES indices + 5 s refresh.

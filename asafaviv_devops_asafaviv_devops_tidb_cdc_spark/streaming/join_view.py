@@ -138,10 +138,7 @@ def run_join_view_stream(
     state_dir: str,
     view_dir: str,
     checkpoint_dir: str,
-    left_table: str = LEFT_TABLE,
-    right_table: str = RIGHT_TABLE,
     max_files_per_trigger: int = 2,
-    n_buckets: int = VIEW_N_BUCKETS,
 ) -> None:
     """Drain the envelope backlog, maintaining side state AND the
     materialized join view per micro-batch, resuming from existing
@@ -150,23 +147,14 @@ def run_join_view_stream(
     from . import ingest
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_join_view_batch(
-            spark,
-            batch_df,
-            state_dir,
-            view_dir,
-            epoch_id,
-            left_table=left_table,
-            right_table=right_table,
-            n_buckets=n_buckets,
-        )
+        apply_join_view_batch(spark, batch_df, state_dir, view_dir, epoch_id)
 
     ingest.drain(
         spark,
         source_dir,
         ingest.SOURCE_SCHEMA,
         lambda s: P.typed_rows(P.normalized_events(s))
-        .filter(F.col("table_name").isin(left_table, right_table))
+        .filter(F.col("table_name").isin(LEFT_TABLE, RIGHT_TABLE))
         .writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint_dir),
         max_files_per_trigger,

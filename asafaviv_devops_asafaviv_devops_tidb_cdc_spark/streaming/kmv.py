@@ -3,17 +3,16 @@ queries/advanced_ops.py::q_kmv_distinct).
 
 The KMV / bottom-k sketch is a commutative, idempotent, BOUNDED-SIZE
 monoid: bottom-K(S1 ∪ S2) = bottom-K(bottom-K(S1) ∪ bottom-K(S2)), so
-each micro-batch keeps its per-group local bottom-K as an
-``epoch=<id>`` partial (<= groups x K tiny rows; a retried batch
-overwrites its own partial and cannot corrupt the fold) and serving
-takes bottom-K over the union of partials — EXACTLY the batch sketch,
+each micro-batch folds its per-group local bottom-K (<= groups x K
+tiny rows) into the committed sketch state (a retried batch is a
+no-op and cannot corrupt the fold) — EXACTLY the batch sketch,
 hash-matching the batch oracle. Same recipe as streaming/sample.py,
 with a cardinality sketch instead of a sample as the folded monoid.
 
 At 100 TB/day this is the always-current distinct-count dashboard:
-per-epoch state is bounded by the sketch (not the member count), the
-partials compact like streaming/delta.py, and merging group sketches
-answers union cardinalities without touching the raw stream again.
+the state is bounded by the sketch (not the member count), and merging
+group sketches answers union cardinalities without touching the raw
+stream again.
 """
 
 from __future__ import annotations
@@ -33,9 +32,9 @@ def _hashed(df: DataFrame) -> DataFrame:
 
 
 def _base_sketch(parts: DataFrame) -> DataFrame:
-    """The KMV compaction/serving monoid: global per-group bottom-K
-    over any union of partial sketches (rank column dropped — a base
-    is itself a partial)."""
+    """The KMV state monoid: global per-group bottom-K over any union
+    of partial sketches (rank column dropped — the state is itself a
+    partial)."""
     return KMV.bottom_k(
         parts.select("member_set", "hv").distinct()
     ).select("member_set", "hv")

@@ -325,7 +325,6 @@ def run_replay_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    n_buckets: int = N_STATE_BUCKETS,
     tombstone_horizon_ms: int | None = None,
     fresh: bool = True,
 ) -> None:
@@ -352,7 +351,6 @@ def run_replay_stream(
             batch_df,
             state_dir,
             epoch_id,
-            n_buckets=n_buckets,
             tombstone_horizon_ms=tombstone_horizon_ms,
         )
 

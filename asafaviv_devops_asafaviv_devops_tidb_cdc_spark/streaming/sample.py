@@ -2,18 +2,16 @@
 queries/training_io.py::q_sample_fixed).
 
 Bottom-k by a salted sha key is a COMMUTATIVE, IDEMPOTENT fold:
-bottom-k(S1 ∪ S2) = bottom-k(bottom-k(S1) ∪ bottom-k(S2)), so keeping
-each micro-batch's local bottom-k as an ``epoch=<id>`` partial (<= k
-tiny rows per epoch, a retried batch overwrites its own partial) and
-taking bottom-k over the union at serving time yields EXACTLY the
+bottom-k(S1 ∪ S2) = bottom-k(bottom-k(S1) ∪ bottom-k(S2)), so folding
+each micro-batch's local bottom-k (<= k tiny rows) into the committed
+k-row state per epoch (a retried batch is a no-op) yields EXACTLY the
 batch answer — the streamed sample hash-matches the batch oracle. This
 is the classical distributed-reservoir replacement that stays
 deterministic: membership is a pure function of doc_id, so re-running
 the stream, reordering batches, or re-sharding the source cannot
 change the sample.
 
-At 100 TB the state is k rows per micro-batch epoch (compactable to a
-single k-row base exactly like streaming/delta.py), and each batch's
+At 100 TB the state is k rows (streaming/delta.py), and each batch's
 work is a local TakeOrderedAndProject — no shuffle of the corpus.
 """
 
@@ -31,5 +29,5 @@ def _keyed(df: DataFrame) -> DataFrame:
 
 
 def _bottom_k(parts: DataFrame) -> DataFrame:
-    """The sample family's serving/compaction monoid."""
+    """The sample family's state monoid."""
     return parts.orderBy("h").limit(SAMPLE_K).select("doc_id", "source", "h")

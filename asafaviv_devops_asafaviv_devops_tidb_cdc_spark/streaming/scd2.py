@@ -67,7 +67,6 @@ def run_scd2_stream(
     source_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
 ) -> None:
     """Drain the envelope backlog maintaining the per-key event state
     the SCD2 view derives from, resuming from existing state +
@@ -89,7 +88,7 @@ def run_scd2_stream(
         lambda s: P.typed_rows(P.normalized_events(s))
         .writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint_dir),
-        max_files_per_trigger,
+        2,
         "json",
     )
 

@@ -7,8 +7,8 @@ from three kinds of root:
 - every registered query (``registry.QUERIES``);
 - every module-level statement of a package module that is not a
   ``def``, a ``class``, an import, a docstring or an assignment to a
-  bare name: ``ORACLES["q_stream_kmv"] = ORACLES["q_kmv_distinct"]`` runs
-  at import, so what it names is live although no unit references it;
+  bare name: a module-level call or subscript assignment runs at
+  import, so what it names is live although no unit references it;
 - the entry points ``bench.py``, ``__spark_entry__.py`` and
   ``perfbench/*.py``, walked as whole files. perfbench binds package
   modules as ``merge = engine("streaming.merge")``; an assignment of a

@@ -1,12 +1,14 @@
 """The epoch contract of the bucketed fold state
-(``streaming/merge.py::apply_bucketed_fold``): one manifest per epoch
-is the only record of the state, so an epoch becomes visible once and
+(``streaming/merge.py::apply_bucketed_fold``, which also commits every
+``streaming/delta.py::fold_stream`` state): one manifest per epoch is
+the only record of the state, so an epoch becomes visible once and
 whole, a committed epoch replayed is a no-op, and reading the state
 never infers a schema.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import time
@@ -16,10 +18,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.plans import closure
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import load_table
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources.ann_store import index_delta
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+    alerts,
     corpus,
+    delta,
     ingest,
     join_view as JV,
     merge,
@@ -61,41 +66,91 @@ def _epoch2(spark):
     )
 
 
-def test_failed_commit_never_shows_a_torn_epoch(spark, tmp_path, monkeypatch):
-    """A fold that dies between its bucket renames leaves the previous
-    epoch as the whole visible state; its retry equals a clean fold."""
-    state, clean = str(tmp_path / "state"), str(tmp_path / "clean")
-    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=1, n_buckets=8)
+def _window_sink(workdir):
+    """A fold_stream sink (the sustained-alert window counts) and the
+    state dir it commits to."""
+    sink = delta.epoch_sink(
+        workdir,
+        alerts.window_counts,
+        lambda df: delta.fold_generic(df, ["window_start"], ["n_total", "n_errors"]),
+    )
+    return sink, f"{workdir}/state"
+
+
+def _crash_then_retry(spark, monkeypatch, run, clean, batches, at):
+    """``run`` and ``clean`` are (fold(batch, epoch), state dir) pairs.
+    Fold epoch 1 into ``run``, crash epoch 2 at the ``at`` = (rename,
+    replace) call counts, and check that the prior epoch stays the
+    whole visible state and that the retry equals a clean fold of both
+    epochs."""
+    (fold, state), (e1, e2), (at_rename, at_replace) = run, batches, at
+    fold(e1, 1)
     want1 = _rows(merge.read_state(spark, state))
-    b2 = _epoch2(spark).select(merge.bucket_of(n_buckets=8).alias("b")).distinct()
-    assert b2.count() >= 2
 
     calls = {"rename": 0, "replace": 0}
     real_rename, real_replace = Path.rename, os.replace
 
     def rename(self, target):
         calls["rename"] += 1
-        if calls["rename"] == 2:
+        if calls["rename"] == at_rename:
             raise OSError("injected: crash between two renames")
         return real_rename(self, target)
 
     def replace(src, dst):
         calls["replace"] += 1
-        if calls["replace"] == 2:
-            raise OSError("injected: crash at the second replace")
+        if calls["replace"] == at_replace:
+            raise OSError("injected: crash at the manifest replace")
         return real_replace(src, dst)
 
     with monkeypatch.context() as m:
         m.setattr(Path, "rename", rename)
         m.setattr(os, "replace", replace)
         with pytest.raises(OSError, match="injected"):
-            merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
+            fold(e2, 2)
     assert _rows(merge.read_state(spark, state)) == want1
 
-    merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
-    merge.apply_merge_batch(spark, _epoch1(spark), clean, epoch_id=1, n_buckets=8)
-    merge.apply_merge_batch(spark, _epoch2(spark), clean, epoch_id=2, n_buckets=8)
-    assert _rows(merge.read_state(spark, state)) == _rows(merge.read_state(spark, clean))
+    fold(e2, 2)
+    clean[0](e1, 1)
+    clean[0](e2, 2)
+    assert _rows(merge.read_state(spark, state)) == _rows(merge.read_state(spark, clean[1]))
+    assert _rows(merge.read_state(spark, clean[1])) != want1
+
+
+def test_failed_commit_never_shows_a_torn_epoch(spark, tmp_path, monkeypatch):
+    """A fold that dies between its bucket renames leaves the previous
+    epoch as the whole visible state; its retry equals a clean fold."""
+    b2 = _epoch2(spark).select(merge.bucket_of(n_buckets=8).alias("b")).distinct()
+    assert b2.count() >= 2
+
+    def merge_into(state):
+        return (
+            lambda b, e: merge.apply_merge_batch(spark, b, state, epoch_id=e, n_buckets=8),
+            state,
+        )
+
+    _crash_then_retry(
+        spark,
+        monkeypatch,
+        merge_into(str(tmp_path / "state")),
+        merge_into(str(tmp_path / "clean")),
+        (_epoch1(spark), _epoch2(spark)),
+        (2, 2),
+    )
+
+
+def test_failed_fold_stream_commit_never_shows_a_torn_epoch(spark, tmp_path, monkeypatch):
+    """A fold_stream epoch that dies at its manifest commit, after its
+    one bucket version was renamed into place, leaves the previous
+    epoch's state visible; its retry equals a clean fold."""
+    events = load_table(spark, SF_SMOKE, "events")
+    _crash_then_retry(
+        spark,
+        monkeypatch,
+        _window_sink(tmp_path / "run"),
+        _window_sink(tmp_path / "clean"),
+        _halves(events, "event_id"),
+        (2, 1),
+    )
 
 
 def test_committed_epoch_replayed_is_a_noop(spark, tmp_path):
@@ -206,6 +261,10 @@ def _maintainer(spark, name, tmp_path):
             state,
             _halves(docs, "doc_id"),
         )
+    if name == "fold_stream":
+        sink, state = _window_sink(tmp_path)
+        events = load_table(spark, SF_SMOKE, "events")
+        return sink, state, _halves(events, "event_id")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     cents = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
@@ -220,7 +279,13 @@ def _maintainer(spark, name, tmp_path):
 # Jobs one warm fold of this setup started before the manifest, when the
 # fold inferred the schema of its prior buckets (merge alone passed it)
 # and wrote an empty version for each bucket that folded to zero rows.
-_JOBS_BEFORE_MANIFEST = {"merge": 6, "scd2": 11, "join_view": 12, "corpus": 7, "ann": 9}
+# A fold_stream epoch committed through its own protocol: it wrote its
+# partial (2 jobs), compaction inferred the partials' schema and wrote a
+# new base (3), and serving inferred the base's schema (1); the read,
+# which now starts no job, is asserted separately.
+_JOBS_BEFORE_MANIFEST = {
+    "merge": 6, "scd2": 11, "join_view": 12, "corpus": 7, "ann": 9, "fold_stream": 6,
+}
 
 
 @pytest.mark.parametrize("name", sorted(_JOBS_BEFORE_MANIFEST))
@@ -234,3 +299,42 @@ def test_fold_and_read_start_no_inference_job(spark, tmp_path, name):
     else:
         assert warm < _JOBS_BEFORE_MANIFEST[name]
     assert merge.read_state(spark, state).count() > 0
+
+
+# the one place each rename may publish data: a write-once artifact
+# build, the manifest fold's bucket versions and manifest, and the
+# user-facing small-file compaction operator
+_COMMIT_POINTS = {
+    ("sources/artifact.py", "commit"),
+    ("streaming/merge.py", "apply_bucketed_fold"),
+    ("streaming/merge.py", "_commit"),
+    ("sources/layout.py", "compact"),
+}
+
+
+def _renames(tree):
+    """Top-level functions of a module that call ``os.rename``,
+    ``os.replace`` or a ``.rename`` method (``Path.rename``)."""
+    found = set()
+    for top in tree.body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            f = node.func
+            on_os = isinstance(f.value, ast.Name) and f.value.id == "os"
+            if f.attr == "rename" or (on_os and f.attr == "replace"):
+                found.add(getattr(top, "name", f"<module line {top.lineno}>"))
+    return found
+
+
+def test_state_is_published_only_through_the_commit_points():
+    """No SparkSession: every rename in the package that publishes data
+    sits in one of the commit points, so a crash test of those covers
+    every build and fold."""
+    pkg = Path(closure.ROOT) / closure.PKG
+    found = {
+        (path.relative_to(pkg).as_posix(), name)
+        for path in sorted(pkg.rglob("*.py"))
+        for name in _renames(ast.parse(path.read_text()))
+    }
+    assert found == _COMMIT_POINTS

@@ -285,27 +285,42 @@ def _transition_counts(spark, src, schema, workdir):
     return stream_transition_counts(spark, str(src), schema, workdir)
 
 
-def _delta_epochs(spark, src, pdir, ckpt):
-    """Drain ``src`` into retraction ``epoch=<id>`` partials and leave
-    them uncompacted: the drain and partial writer delta.fold_stream
-    runs, without its compaction."""
+def _delta_epochs(spark, src, workdir):
+    """Drain ``src`` through the retraction fold (the registered
+    q_stream_delta_agg maintainer) into the state at
+    ``<workdir>/state`` and return the served totals, sorted."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
+        _streamed_delta_totals,
+    )
+
+    return sorted(
+        (r["table_name"], r["net_rows"], r["net_sum_micro"])
+        for r in _streamed_delta_totals(spark, src, workdir).collect()
+    )
+
+
+def _batch_delta_totals(spark, src):
+    """The retraction totals of every envelope at ``src`` in one batch."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators.replay import (
         retraction_totals,
     )
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
-
-    sink = delta.epoch_partials(pdir, lambda b: retraction_totals(P.typed_rows(b)))
-    ingest.drain(
-        spark,
-        src,
-        ingest.SOURCE_SCHEMA,
-        lambda s: P.normalized_events(s)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt),
-        2,
-        "json",
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
+        _delta_totals,
     )
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
+
+    raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(str(src))
+    return sorted(
+        (r["table_name"], r["net_rows"], r["net_sum_micro"])
+        for r in _delta_totals(
+            retraction_totals(P.typed_rows(P.normalized_events(raw)))
+        ).collect()
+    )
+
+
+def _manifest_names(state_dir):
+    return sorted(p.name for p in (Path(state_dir) / "_manifest").glob("*.json"))
 
 
 @pytest.mark.parametrize("consumer", ["merge", "transitions"])
@@ -456,49 +471,37 @@ def test_ingest_dedupe_state_is_evicted_by_watermark(spark, tmp_path):
     assert 0 < state_rows[-1] <= state_rows[0] < n_rows, state_rows
 
 
-def test_delta_partials_compaction_preserves_totals(spark):
-    """A10 compaction: folding epoch partials into a versioned base
-    changes nothing about the served totals — before/after identical,
-    re-compaction is a no-op, and a resurrected stale epoch dir (an
-    interrupted cleanup) is ignored because serving skips epochs at or
-    below the base version."""
-    import shutil as sh
-    import tempfile
-
+def test_delta_partials_compaction_preserves_totals(spark, tmp_path):
+    """A10 fold: folding each epoch's retraction partial into the
+    manifest-committed state preserves the totals — the served state
+    over several micro-batches equals the batch fold of every event,
+    at most two manifests stay — and a replay of the committed epoch
+    (Spark's retry after a crash before its checkpoint commit) is a
+    no-op, even when handed other rows."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators.replay import (
+        retraction_totals,
+    )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
         _delta_totals,
     )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
 
-    base = Path(tempfile.mkdtemp())
-    src = ingest.write_envelope_files(spark, SF_SMOKE, str(base / "src"), None, n_files=4)
-    pdir = str(base / "partials")
-    _delta_epochs(spark, src, pdir, str(base / "ckpt"))
+    src = ingest.write_envelope_files(spark, SF_SMOKE, str(tmp_path / "src"), None, n_files=4)
+    served = _delta_epochs(spark, src, tmp_path)
+    assert served == _batch_delta_totals(spark, src) and served
+    # multiple micro-batches actually ran, and only two manifests remain
+    assert len(list((tmp_path / "ckpt" / "commits").glob("[0-9]*"))) >= 2
+    manifests = _manifest_names(tmp_path / "state")
+    assert len(manifests) == 2, manifests
 
-    def totals():
-        return sorted(
-            (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_with(spark, pdir, _delta_totals).collect()
-        )
-
-    before = totals()
-    epochs = delta._epoch_dirs(pdir)
-    assert len(epochs) >= 2  # multiple micro-batches actually ran
-    saved = Path(tempfile.mkdtemp()) / epochs[0][1].name
-    sh.copytree(epochs[0][1], saved)
-
-    delta.compact_with(spark, pdir, _delta_totals)
-    assert totals() == before
-    assert delta._epoch_dirs(pdir) == []  # all folded into the base
-    ver, _ = delta._base_version(pdir)
-    assert ver == max(e for e, _ in epochs)
-
-    delta.compact_with(spark, pdir, _delta_totals)  # idempotent no-op
-    assert totals() == before
-
-    # interrupted-cleanup simulation: a stale folded epoch reappears
-    sh.copytree(saved, Path(pdir) / saved.name)
-    assert totals() == before  # ignored, not double-counted
+    sink = delta.epoch_sink(
+        tmp_path, lambda b: retraction_totals(P.typed_rows(b)), _delta_totals
+    )
+    raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(src)
+    sink(P.normalized_events(raw), int(manifests[-1].split(".")[0]))  # the replay
+    assert _manifest_names(tmp_path / "state") == manifests
+    assert _delta_epochs(spark, src, tmp_path) == served
 
 
 def test_tombstone_gc_drops_expired_without_resurrection(spark):
@@ -662,9 +665,10 @@ def test_stateful_stream_under_rocksdb_provider(spark, tmp_path):
 
 
 def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
-    """Streaming DQ: a retried micro-batch overwrites its own epoch
-    partial (totals never double-count), and non-sum-decomposable
-    kinds are refused up front."""
+    """Streaming DQ: a retried micro-batch folds into the state once
+    (the sink called twice with one epoch commits once, so totals never
+    double-count), and non-sum-decomposable kinds are refused up
+    front."""
     import pytest as _pytest
 
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
@@ -680,22 +684,19 @@ def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
         "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE 'v' END AS s"
     ).repartition(4).write.mode("overwrite").parquet(src)
     checks = [{"id": "nn_s", "table": "t", "kind": "not_null", "column": "s"}]
-    partials = str(tmp_path / "partials")
-    D.fold_stream(
+    before = D.fold_stream(
         spark, src, "id long, s string", tmp_path,
         SDQ.violation_counts(checks), fold, max_files=1,
-    )
-    before = D.folded_with(spark, partials, fold).collect()
+    ).collect()
     assert {r["check_id"]: r["violations"] for r in before} == {"nn_s": 10}
-    # simulate a micro-batch RETRY: re-fold one batch into its own epoch
-    batch = spark.read.parquet(src).limit(0)
-    SDQ._check_batch(batch, checks).write.mode("overwrite").parquet(
-        f"{partials}/epoch=0"
-    )
-    again = D.folded_with(spark, partials, fold).collect()
-    # epoch 0 now holds the retried (empty) fold — totals reflect the
-    # OVERWRITE, not an addition; no partial is ever counted twice
-    assert {r["check_id"]: r["violations"] for r in again}["nn_s"] <= 10
+    # simulate a micro-batch RETRY: the whole source once more, twice
+    # under one new epoch
+    epoch = int(_manifest_names(tmp_path / "state")[-1].split(".")[0]) + 1
+    sink = D.epoch_sink(tmp_path, SDQ.violation_counts(checks), fold)
+    for _ in range(2):
+        sink(spark.read.parquet(src), epoch)
+    again = merge.read_state(spark, str(tmp_path / "state")).collect()
+    assert {r["check_id"]: r["violations"] for r in again} == {"nn_s": 20}
 
     with _pytest.raises(ValueError, match="not decomposable"):
         D.fold_stream(
@@ -1148,8 +1149,9 @@ def test_transitions_out_of_order_matches_batch(spark, tmp_path, monkeypatch):
     (from, to) counts must equal the batch lead()-window derivation
     over the same rows. Also pins the EMISSION VOLUME: an inserted
     event rewires at most one pair into two, so summed over the epoch
-    partials (read before compaction) |n| stays <= 3 * n_events
-    however hot a key is — no epoch re-emits a key's pair list."""
+    partials (``per_batch`` outputs, recorded as they are folded) |n|
+    stays <= 3 * n_events however hot a key is — no epoch re-emits a
+    key's pair list."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
 
     types = ["view", "click", "purchase", "signup", "error"]
@@ -1172,7 +1174,20 @@ def test_transitions_out_of_order_matches_batch(spark, tmp_path, monkeypatch):
         "_f"
     ).write.mode("overwrite").parquet(src)
 
-    monkeypatch.setattr(delta, "compact_with", lambda *a: None)
+    volumes = []
+    history_delta = delta.history_delta
+
+    def recording(*args):
+        per_batch = history_delta(*args)
+
+        def recorded(h, hb):
+            out = per_batch(h, hb)
+            volumes.append(out.agg(F.sum(F.abs(F.col("n")))).collect()[0][0] or 0)
+            return out
+
+        return recorded
+
+    monkeypatch.setattr(delta, "history_delta", recording)
     got = {
         (r["from_type"], r["to_type"]): r["n"]
         for r in _transition_counts(
@@ -1196,13 +1211,10 @@ def test_transitions_out_of_order_matches_batch(spark, tmp_path, monkeypatch):
     assert got == want
     # the hot user really is hot: half the events
     assert len(hist[0]) == 100
-    pdir = tmp_path / "work" / "partials"
     # one partial per batch that holds events (the hash split may leave
-    # one of the 3 files empty), none compacted into a base
-    assert len(list(pdir.glob("epoch=*"))) >= 2 and not list(pdir.glob("base_v*"))
-    partials = spark.read.parquet(str(pdir))
-    vol = partials.agg(F.sum(F.abs(F.col("n"))).alias("v")).collect()[0]["v"]
-    assert vol <= 3 * len(rows)
+    # one of the 3 files empty)
+    assert len(volumes) >= 2
+    assert sum(volumes) <= 3 * len(rows)
 
 
 def test_transitions_resumable_incremental_update(spark, tmp_path):
@@ -1243,12 +1255,14 @@ def test_transitions_resumable_incremental_update(spark, tmp_path):
 
     write_chunk(src, rows[:70])
     before = counts()
-    # no-op re-drain: no new files -> identical served counts
+    manifests = _manifest_names(tmp_path / "state")
+    # no-op re-drain: no new files -> identical served counts, no commit
     assert counts() == before
-    # bounded serving: compaction folded every epoch into ONE base —
-    # the partials dir must hold only base_v* (O(grid), not O(events))
-    names = {p.name for p in (tmp_path / "partials").iterdir()}
-    assert names and all(n.startswith("base_v") for n in names), names
+    assert _manifest_names(tmp_path / "state") == manifests
+    # bounded serving: every epoch folded into ONE bucket of O(grid)
+    # rows, of which at most two versions stay
+    assert 1 <= len(manifests) <= 2, manifests
+    assert len(list((tmp_path / "state" / "b0000").iterdir())) <= 2
 
     # late chunk: its events land BETWEEN already-spliced ones
     write_chunk(src, rows[70:])
@@ -1388,15 +1402,15 @@ def _land_in_files(spark, query, dest):
 def test_fold_stream_serves_one_compacted_base(spark, tmp_path, monkeypatch, query):
     """The fold-stream contract, over an integer-sum (delta), a bottom-k
     (sample) and a history-difference (funnel) maintainer run through their
-    registered queries: after every call the partials dir holds one
-    committed base and no ``epoch=`` dir, a repeated call adds no
-    epoch and serves identical rows, and a file landed afterwards is
-    folded exactly once — one new batch, and the served rows equal a
-    one-shot drain of every file."""
+    registered queries: after every call the state holds at most two
+    manifests, a repeated call commits none and serves identical rows,
+    and a file landed afterwards is folded exactly once — one new batch,
+    one new manifest, and the served rows equal a one-shot drain of
+    every file."""
     import shutil
 
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import artifact
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
 
     landing, src = tmp_path / "landing", tmp_path / "src"
     _land_in_files(spark, query, landing)
@@ -1418,88 +1432,72 @@ def test_fold_stream_serves_one_compacted_base(spark, tmp_path, monkeypatch, que
         rows = registry.QUERIES[query](spark, SF_SMOKE).collect()
         return sorted(tuple(r) for r in rows)
 
-    def one_base():
-        pdir = work["dir"] / "partials"
-        names = {p.name for p in pdir.iterdir()}
-        assert not any(n.startswith("epoch=") for n in names), names
-        ver, base = delta._base_version(str(pdir))
-        assert base is not None
-        assert [n for n in names if n.startswith(delta._BASE_PREFIX)] == [base.name]
-        return ver
+    def manifests():
+        names = _manifest_names(work["dir"] / "state")
+        assert 1 <= len(names) <= 2, names
+        return names
 
     def n_commits():
         return len(list((work["dir"] / "ckpt" / "commits").glob("[0-9]*")))
 
     first = run()
-    ver, commits = one_base(), n_commits()
+    committed, commits = manifests(), n_commits()
     assert run() == first and len(first) > 0
-    assert one_base() == ver and n_commits() == commits
+    assert manifests() == committed and n_commits() == commits
 
     shutil.copy(files[3], src / files[3].name)
     got = run()
-    assert one_base() > ver and n_commits() == commits + 1
+    late = manifests()
+    assert late[:-1] == committed[-1:] and late[-1] > committed[-1]
+    assert n_commits() == commits + 1
     work["dir"] = tmp_path / "one_shot"
     assert got == run()
 
 
-def test_compaction_crash_debris_never_corrupts_serving(spark):
-    """The shared compaction protocol's two crash points, pinned: a
-    staged ``_tmp_base_*`` fold (crash before the rename commit) and a
-    higher-versioned base WITHOUT ``_SUCCESS`` (a copy that raced the
-    marker) must both be invisible to serving — totals unchanged, even
-    though the fake base contains doubled counts — and the next
-    compaction sweeps them and commits normally."""
-    import shutil as sh
-    import tempfile
+def test_compaction_crash_debris_never_corrupts_serving(spark, tmp_path, monkeypatch):
+    """The fold's crash point, pinned: a micro-batch that dies after
+    renaming its new state version into place but before its manifest
+    commit leaves that version as debris. Serving reads the prior
+    manifest — the totals of the files folded before, never a torn or
+    doubled state — and the restarted drain replays the batch under
+    the same epoch and commits the totals of every file."""
+    import shutil
 
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.corpus_ops import (
-        _delta_totals,
-    )
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, ingest
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import ingest
 
-    base = Path(tempfile.mkdtemp())
-    src = ingest.write_envelope_files(
-        spark, SF_SMOKE, str(base / "src"), None, n_files=4
-    )
-    pdir = str(base / "partials")
-    _delta_epochs(spark, src, pdir, str(base / "ckpt"))
+    landing, src = tmp_path / "landing", tmp_path / "src"
+    ingest.write_envelope_files(spark, SF_SMOKE, str(landing), None, n_files=4)
+    files = sorted(p for p in landing.iterdir() if p.name.startswith("part-"))
+    assert len(files) == 4
+    src.mkdir()
+    for p in files[:3]:
+        shutil.copy(p, src / p.name)
+    work = tmp_path / "work"
+    before = _delta_epochs(spark, str(src), work)
+    committed = _manifest_names(work / "state")
+    versions = sorted(p.name for p in (work / "state" / "b0000").iterdir())
 
-    def totals():
-        return sorted(
-            (r["table_name"], r["net_rows"], r["net_sum_micro"])
-            for r in delta.folded_with(spark, pdir, _delta_totals).collect()
-        )
+    shutil.copy(files[3], src / files[3].name)
 
-    before = totals()
-    delta.compact_with(spark, pdir, _delta_totals)
-    ver, committed = delta._base_version(pdir)
-    assert committed is not None
+    def crash(*a):
+        raise OSError("injected: crash before the manifest commit")
 
-    # crash point 1: a staged fold that never renamed into place
-    staged = Path(pdir) / f"_tmp_{delta._BASE_PREFIX}{ver + 7:09d}"
-    sh.copytree(committed, staged)
-    assert totals() == before
+    with monkeypatch.context() as m:
+        m.setattr(merge, "_commit", crash)
+        with pytest.raises(Exception, match="injected"):
+            _delta_epochs(spark, str(src), work)
+    assert _manifest_names(work / "state") == committed
+    debris = sorted(p.name for p in (work / "state" / "b0000").iterdir())
+    assert len(debris) == len(versions) + 1, debris
+    assert sorted(
+        (r["table_name"], r["net_rows"], r["net_sum_micro"])
+        for r in merge.read_state(spark, str(work / "state")).collect()
+    ) == before
 
-    # crash point 2: a HIGHER-versioned base with no _SUCCESS marker,
-    # carrying doubled counts — committed-looking garbage
-    fake = Path(pdir) / f"{delta._BASE_PREFIX}{ver + 9:09d}"
-    sh.copytree(committed, fake)
-    (fake / "_SUCCESS").unlink()
-    doubled = spark.read.parquet(str(committed)).unionAll(
-        spark.read.parquet(str(committed))
-    )
-    doubled.write.mode("overwrite").parquet(str(fake))
-    import os
-    if (fake / "_SUCCESS").exists():
-        os.remove(fake / "_SUCCESS")
-    assert totals() == before
-
-    # the sweep removes both debris dirs; serving still identical
-    delta.compact_with(spark, pdir, _delta_totals)
-    assert totals() == before
-    names = {p.name for p in Path(pdir).iterdir()}
-    assert not any(n.startswith("_tmp_") for n in names), names
-    assert fake.name not in names, names
+    assert _delta_epochs(spark, str(src), work) == _batch_delta_totals(spark, src)
+    assert _delta_epochs(spark, str(src), work) != before
+    assert len(_manifest_names(work / "state")) == 2
+    assert not list((work / "state").glob("_stage_*"))
 
 
 def test_ingest_resumable_second_call_is_empty_pass(spark):
@@ -1526,21 +1524,23 @@ def test_ingest_resumable_second_call_is_empty_pass(spark):
 def test_history_fold_replay_is_idempotent(spark, tmp_path):
     """foreachBatch may replay an epoch whose history manifest already
     committed (a crash before Spark's commit log): the replay is a
-    no-op, so the partial and the history stay byte-identical and the
-    served census is unchanged — and equals the batch census of every
-    row. A replay of an epoch that died after its partial but before
-    its manifest reads the same prior history and rewrites the same
-    partial and state."""
+    no-op, so the census state and the history stay byte-identical and
+    the served census is unchanged — and equals the batch census of
+    every row. A replay of an epoch that died after its census commit
+    but before its history manifest reads the same prior history, and
+    its census fold is a no-op because that manifest exists."""
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.profiling import (
         transition_counts,
     )
     from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
 
     grid = ["from_type", "to_type"]
-    pdir, hdir = tmp_path / "partials", tmp_path / "history"
-    sink = delta.history_partials(
-        str(pdir), str(hdir), ["user_id"],
+    cdir, hdir = tmp_path / "state", tmp_path / "history"
+    sink = delta.epoch_sink(
+        tmp_path,
         delta.history_delta(transition_counts, grid, ["n"]),
+        lambda df: delta.fold_generic(df, grid, ["n"]),
+        ["user_id"],
     )
     types = ["view", "click", "purchase"]
     rows = [(i % 5, i, types[(i * 7) % 3], (i * 13) % 40) for i in range(40)]
@@ -1556,33 +1556,31 @@ def test_history_fold_replay_is_idempotent(spark, tmp_path):
     def files(root):
         return {
             p.relative_to(root).as_posix(): p.read_bytes()
-            for p in sorted(root.rglob("*.parquet"))
+            for p in sorted(root.rglob("*"))
+            if p.is_file()
         }
 
     def served():
         return sorted(
             tuple(r)
-            for r in delta.folded_with(
-                spark, str(pdir), lambda df: delta.fold_generic(df, grid, ["n"])
-            ).filter(F.col("n") > 0).collect()
+            for r in merge.read_state(spark, str(cdir)).filter(F.col("n") > 0).collect()
         )
 
-    history, census = files(hdir), served()
-    partial = sorted(files(pdir / "epoch=1").values())
+    history, state, census = files(hdir), files(cdir), served()
     sink(events(rows[1::2]), 1)  # the replay
     assert files(hdir) == history
-    assert sorted(files(pdir / "epoch=1").values()) == partial
+    assert files(cdir) == state
     assert served() == census
     assert census == sorted(tuple(r) for r in transition_counts(events(rows)).collect())
 
-    def state():
+    def history_rows():
         return sorted(tuple(r) for r in merge.read_state(spark, str(hdir)).collect())
 
-    before = state()
+    before = history_rows()
     (hdir / "_manifest" / f"{1:09d}.json").unlink()  # died before its commit
     sink(events(rows[1::2]), 1)
-    assert sorted(files(pdir / "epoch=1").values()) == partial
-    assert state() == before
+    assert files(cdir) == state
+    assert history_rows() == before
     assert served() == census
 
 
@@ -1598,8 +1596,11 @@ def test_history_fold_reads_only_the_batch_keys(spark, tmp_path):
         seen.append(sorted(r["user_id"] for r in h.select("user_id").collect()))
         return hb.groupBy("user_id").count()
 
-    sink = delta.history_partials(
-        str(tmp_path / "partials"), str(tmp_path / "history"), ["user_id"], per_batch
+    sink = delta.epoch_sink(
+        tmp_path,
+        per_batch,
+        lambda df: delta.fold_generic(df, ["user_id"], ["count"]),
+        ["user_id"],
     )
     users = range(64)  # 64 users over 16 buckets: every bucket is shared
     sink(spark.createDataFrame([(u, 0) for u in users], "user_id long, t long"), 0)
