@@ -184,7 +184,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resumable: the first call drains the 3 micro-batches into the
     # state, later calls are an empty drain + a state read
     base = resumable_workdir(src, q_stream_kmv)
-    sketch = D.fold_stream(
+    sketch = D.partial_stream(
         spark,
         src,
         li.schema,
@@ -352,7 +352,7 @@ def q_stream_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = I.events_files(spark, sf_dir)
     # the SAME aggregation as the batch query folds each micro-batch
-    obs = D.fold_stream(
+    obs = D.partial_stream(
         spark,
         src,
         load_table(spark, sf_dir, "events").schema,
@@ -1200,7 +1200,7 @@ def _streamed_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import ingest as I
 
     src = I.events_files(spark, sf_dir)
-    return D.fold_stream(
+    return D.partial_stream(
         spark,
         src,
         load_table(spark, sf_dir, "events").schema,

@@ -484,20 +484,31 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_stream_scd2", oracle=_SCD2_HISTORY_ORACLE)
 def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9 stream form — SCD2 history maintained by a REAL Structured
-    Streaming query: keyed-recompute foreachBatch (touched keys rebuild
-    their version chains from persisted tombstone-inclusive state ∪
-    batch; untouched keys carry computed intervals verbatim —
-    streaming/scd2.py). Out-of-order batches splice correctly. The
+    Streaming query: keyed recompute through the one stream maintainer
+    (delta.fold_stream of scd2.rebuild_state bucketed on the SCD2 key:
+    touched keys rebuild their version chains from persisted
+    tombstone-inclusive state ∪ batch; untouched keys carry computed
+    intervals verbatim). Out-of-order batches splice correctly. The
     oracle is the SAME SQL as the batch q_scd2_history — the driver
     hash-compares the STREAMED version table against it."""
-    from ..streaming import ingest as I
-    from ..streaming import scd2 as S
+    from ..streaming import delta as D, ingest as I, merge, scd2 as S
 
     # resumable: first call drains, later calls are an empty drain +
     # state read
     src = I.envelope_files(spark, sf_dir, None, n_files=4)
     base = I.resumable_workdir(src, q_stream_scd2)
-    S.run_scd2_stream(spark, src, str(base / "state"), str(base / "ckpt"))
+    D.fold_stream(
+        spark,
+        src,
+        I.SOURCE_SCHEMA,
+        base / "state",
+        base / "ckpt",
+        S.rebuild_state,
+        S.SCD2_KEYS,
+        merge.N_STATE_BUCKETS,
+        fmt="json",
+        stream=lambda s: P.typed_rows(P.normalized_events(s)),
+    )
     return S.history(spark, str(base / "state")).select(
         "table_name",
         "row_id",
@@ -647,7 +658,7 @@ def _streamed_delta_totals(spark: SparkSession, src: str, workdir) -> DataFrame:
     from ..streaming import delta as D
     from ..streaming import ingest as I
 
-    return D.fold_stream(
+    return D.partial_stream(
         spark,
         src,
         I.SOURCE_SCHEMA,
@@ -821,14 +832,15 @@ def q_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 stream form — exact dedup maintained by a REAL Structured
     Streaming query: documents arrive in micro-batches, each folds
-    into min-doc_id-per-content-hash survivor state
-    (streaming/corpus.py — commutative fold, so arrival order and
+    into min-doc_id-per-content-hash survivor state (delta.fold_stream
+    of streaming/corpus.py::survivor_fold bucketed on the content
+    hash — commutative fold, so arrival order and
     batch boundaries cannot change the survivor set, unlike a naive
     streaming dropDuplicates which keeps the nondeterministic first
     arrival). The oracle is the SAME SQL as batch q_dedup_exact — the
     driver hash-compares the STREAMED survivor set against it."""
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import corpus as C
+    from ..streaming import corpus as C, delta as D, merge
     from ..streaming.ingest import resumable_workdir
     from .llm_pipeline import _doubled_docs
 
@@ -844,12 +856,16 @@ def q_stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(dest),
     )
     base = resumable_workdir(src, q_stream_doc_dedup)
-    C.run_dedup_stream(
+    D.fold_stream(
         spark,
         src,
-        str(base / "state"),
-        str(base / "ckpt"),
-        schema="doc_id long, text string, lang string, source string, n_chars long",
+        "doc_id long, text string, lang string, source string, n_chars long",
+        base / "state",
+        base / "ckpt",
+        C.survivor_fold,
+        ["_h"],
+        merge.N_STATE_BUCKETS,
+        stream=C.with_hash,
     )
     return C.survivors(spark, str(base / "state")).select(
         "doc_id", "lang", "source", "n_chars"

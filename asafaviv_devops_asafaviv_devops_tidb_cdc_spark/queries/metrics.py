@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import parse as P
 from ..registry import QUERIES, register
-from ..sources import envelopes_from_events, load_table
+from ..sources import load_table
 
 # Prometheus histogram bucket bounds (reference node-consumer/index.js:102)
 LATENCY_BUCKETS = [0.001, 0.005, 0.01, 0.05, 0.1, 0.5, 1, 2, 5]

@@ -415,7 +415,7 @@ def q_stream_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import ingest as I
 
     src = I.events_files(spark, sf_dir)
-    return D.fold_stream(
+    return D.partial_stream(
         spark,
         src,
         load_table(spark, sf_dir, "events").schema,
@@ -526,7 +526,7 @@ def q_stream_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import ingest as I
 
     src = I.events_files(spark, sf_dir)
-    obs = D.fold_stream(
+    obs = D.partial_stream(
         spark,
         src,
         load_table(spark, sf_dir, "events").schema,
@@ -713,20 +713,23 @@ def stream_transition_counts(
     most one pair into two, so a partial changes at most 3 counts per
     event), and the served (from_type, to_type, n > 0) rows are the
     census of the final history, whatever the arrival order."""
-    from ..streaming import delta as D
+    from ..streaming import delta as D, merge
 
-    grid = ["from_type", "to_type"]
-    counts = D.fold_stream(
+    D.fold_stream(
         spark,
         src,
         schema,
-        workdir,
-        D.history_delta(transition_counts, grid, ["n"]),
-        lambda df: D.fold_generic(df, grid, ["n"]),
+        f"{workdir}/history",
+        f"{workdir}/ckpt",
+        D.union,
+        ["user_id"],
+        merge.N_STATE_BUCKETS,
+        then=D.history_census(
+            f"{workdir}/state", transition_counts, ["from_type", "to_type"], ["n"], ["user_id"]
+        ),
         max_files=1,
-        history=["user_id"],
     )
-    return counts.filter(F.col("n") > 0)
+    return merge.read_state(spark, f"{workdir}/state").filter(F.col("n") > 0)
 
 
 @register("q_stream_transitions", oracle=_EVENT_TRANSITIONS_ORACLE)

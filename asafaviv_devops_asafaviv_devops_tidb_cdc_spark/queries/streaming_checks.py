@@ -111,8 +111,9 @@ GROUP BY 1
 def q_stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 stream form — incremental current-state materialization:
     the envelope backlog split into out-of-order micro-batches, each
-    foreachBatch-MERGEd into a hash-BUCKETED state table
-    (streaming/merge.py): only buckets the batch's keys touch are read
+    MERGEd into a hash-BUCKETED state table by the one stream
+    maintainer (merge.run_replay_stream, a delta.fold_stream of
+    merge.merge_state): only buckets the batch's keys touch are read
     and rewritten (per-batch I/O bounded by batch key spread, not
     total state size — the Delta/Iceberg MERGE INTO shape). Returns
     per-table state counts; pytest asserts the final state equals the
@@ -418,30 +419,43 @@ FROM l JOIN r USING (user_id)
 def q_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10b stream form — a MAINTAINED JOIN VIEW: click-state |><|
     purchase-state ON user_id, kept fresh per micro-batch by
-    co-bucketed partial refresh (streaming/join_view.py — side states
-    and the view all hash-bucket on the join key; a batch touching K
-    user-buckets reads exactly those state buckets and rewrites
-    exactly those view buckets, so per-batch I/O is bounded by batch
-    key spread, never accumulated state size). The returned frame IS
+    co-bucketed partial refresh (one delta.fold_stream: the side-state
+    merge, whose ``then`` is streaming/join_view.py::view_of — side
+    state and view both hash-bucket on the join key; a batch touching
+    K user-buckets rewrites exactly those state buckets and refreshes
+    exactly those view buckets from them, committing the view first,
+    so per-batch I/O is bounded by batch key spread, never accumulated
+    state size). The returned frame IS
     the materialized view; the oracle is the batch join of the two
     final current states — stream-maintained join == batch join,
     hash-proven at the gate. Updates/deletes need no retraction logic:
     a refreshed bucket is a deterministic function of current side
     state. Reference parity: the ES/Grafana layer re-joins per panel
     refresh (dashboard json:62-85); this serves the join from state."""
-    from ..streaming import join_view as JV
-
     # resumable: first call drains + materializes the view, later calls
     # are an empty drain + a view read
     src = ingest.envelope_files(spark, sf_dir, None, n_files=4)
-    base = ingest.resumable_workdir(src, q_stream_join_view)
-    JV.run_join_view_stream(
+    return _join_view(spark, src, ingest.resumable_workdir(src, q_stream_join_view))
+
+
+def _join_view(spark: SparkSession, src: str, base: Path) -> DataFrame:
+    """Maintain the join view over the envelope files at ``src`` (the
+    side state at ``base/state``, the view at ``base/view``) and serve
+    the view."""
+    from ..streaming import delta as D, join_view as JV
+
+    D.fold_stream(
         spark,
         src,
-        str(base / "state"),
-        str(base / "view"),
-        str(base / "ckpt"),
-        max_files_per_trigger=2,
+        ingest.SOURCE_SCHEMA,
+        base / "state",
+        base / "ckpt",
+        merge.merge_state,
+        ["user_id"],
+        JV.VIEW_N_BUCKETS,
+        then=JV.view_of(base / "view"),
+        fmt="json",
+        stream=JV.sides,
     )
     return merge.read_state(spark, str(base / "view"))
 
@@ -469,7 +483,8 @@ _TYPED_CTE_SKEW = TYPED_CTE.replace(
 @register("q_stream_join_view_skew", oracle=_TYPED_CTE_SKEW + _JV_SELECT)
 def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10c under Zipf skew — the SAME co-bucketed join-view
-    maintainer as q_stream_join_view, driven by an envelope stream in
+    maintainer as q_stream_join_view (``_join_view``), driven by an
+    envelope stream in
     which one hot user owns HALF of all change events (every even
     event_id remapped to user 42 before envelope generation; the tail
     keeps its natural spread). This is the bot-traffic key profile a
@@ -485,7 +500,6 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream's history."""
     from ..sources import envelopes_from_events
     from ..sources.artifact import input_fingerprint, materialized_path
-    from ..streaming import join_view as JV
 
     events = load_table(spark, sf_dir, "events").withColumn(
         "user_id",
@@ -501,16 +515,7 @@ def q_stream_join_view_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .json(dest),
     )
-    base = ingest.resumable_workdir(src, q_stream_join_view_skew)
-    JV.run_join_view_stream(
-        spark,
-        src,
-        str(base / "state"),
-        str(base / "view"),
-        str(base / "ckpt"),
-        max_files_per_trigger=2,
-    )
-    return merge.read_state(spark, str(base / "view"))
+    return _join_view(spark, src, ingest.resumable_workdir(src, q_stream_join_view_skew))
 
 
 # the streamed funnel must agree with the batch q_funnel_stages oracle
@@ -545,21 +550,26 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(dest),
     )
-    stages = D.fold_stream(
+    base = ingest.resumable_workdir(src, q_stream_funnel)
+    D.fold_stream(
         spark,
         src,
         events.schema,
-        ingest.resumable_workdir(src, q_stream_funnel),
-        D.history_delta(funnel_stage_counts, ["stage"], ["n_users"]),
-        lambda df: D.fold_generic(df, ["stage"], ["n_users"]),
+        base / "history",
+        base / "ckpt",
+        D.union,
+        ["user_id"],
+        merge.N_STATE_BUCKETS,
+        then=D.history_census(
+            base / "state", funnel_stage_counts, ["stage"], ["n_users"], ["user_id"]
+        ),
         max_files=1,
         # the history keeps only the funnel events' three columns
         stream=lambda s: s.filter(
             F.col("event_type").isin("view", "click", "purchase")
         ).select("user_id", "event_type", "ts"),
-        history=["user_id"],
     )
-    return funnel_report(stages)
+    return funnel_report(merge.read_state(spark, str(base / "state")))
 
 
 @register(

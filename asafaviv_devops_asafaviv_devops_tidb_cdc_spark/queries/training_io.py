@@ -766,7 +766,7 @@ def q_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import sample as SS
 
     src = I.documents_files(spark, sf_dir)
-    return D.fold_stream(
+    return D.partial_stream(
         spark,
         src,
         "doc_id bigint, source string",
@@ -795,7 +795,7 @@ def q_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = I.documents_files(spark, sf_dir)
     # the SAME staging + census expressions as the batch writer
     # (functions/sampling.py) — the twins cannot drift apart
-    manifests = D.fold_stream(
+    manifests = D.partial_stream(
         spark,
         src,
         "doc_id bigint, text string",
@@ -949,7 +949,7 @@ def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resumable: the first call drains the 3 micro-batches into the
     # state, later calls are an empty drain + a state read
     src = I.documents_files(spark, sf_dir)
-    return D.fold_stream(
+    return D.partial_stream(
         spark,
         src,
         "doc_id bigint, source string, text string",

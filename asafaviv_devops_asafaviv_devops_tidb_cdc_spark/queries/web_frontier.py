@@ -460,7 +460,7 @@ def q_stream_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-epoch partial = the batch's distinct pairs: tiny (O(new
     # host-pairs)), and folds into the state by the same DISTINCT
-    pairs = D.fold_stream(
+    pairs = D.partial_stream(
         spark,
         src,
         "src string, dst string",

@@ -15,7 +15,7 @@ where the running streak inside the island reaches N. One shuffle on
 the island sort; SQL-expressible, so it gets a DuckDB oracle.
 
 Streaming implementation: the window counts are an integer-sum fold
-(streaming/delta.py::fold_stream), so a window split across
+(streaming/delta.py::partial_stream), so a window split across
 micro-batches, or arriving after a later one, sums to the same counts
 as in batch; the served alerts are the same gaps-and-islands step over
 the folded counts, with no per-rule state.
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .delta import fold_generic, fold_stream
+from .delta import fold_generic, partial_stream
 
 WINDOW_MS = 300_000  # 5-minute buckets
 DEFAULT_THRESHOLD_PPM = 200_000  # fire when >20% of a window's events are errors
@@ -50,7 +50,7 @@ def stream_window_counts(spark: SparkSession, src: str, schema, workdir) -> Data
     """``window_counts`` of the event files at ``src`` as a streamed
     integer-sum fold: each micro-batch's counts are one epoch partial,
     and the served counts are their per-window sums."""
-    return fold_stream(
+    return partial_stream(
         spark,
         src,
         schema,

@@ -10,8 +10,11 @@ idempotent, so any batch split / delivery order / retry converges to
 the same survivors, and the streamed result hash-matches the BATCH
 oracle (q_dedup_exact's SQL).
 
-Durability follows streaming/merge.py: hash-bucketed copy-on-write
-state committed by one manifest per epoch; a retried epoch is a no-op.
+q_stream_doc_dedup drains the documents through
+``streaming/delta.py::fold_stream`` with ``with_hash`` as the stream
+transform and ``survivor_fold`` bucketed on ``_h``: hash-bucketed
+copy-on-write state committed by one manifest per epoch; a retried
+epoch is a no-op.
 
 Scale posture: state is one row per DISTINCT document (the deduped
 corpus itself — the thing you're building anyway); each batch costs
@@ -25,59 +28,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import ingest
-from .merge import apply_bucketed_fold, read_state
+from .merge import read_state
 
 
-def apply_dedup_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    state_dir: str,
-    epoch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Fold one micro-batch of documents into the survivor state."""
-
-    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-        combined = batch if existing is None else existing.unionByName(batch)
-        # min-by-id per hash: commutative across batches, so arrival
-        # order cannot change the survivor set
-        w_cols = [c for c in combined.columns if c != "_h"]
-        return (
-            combined.groupBy("_h")
-            .agg(F.min(F.struct(id_col, *[c for c in w_cols if c != id_col])).alias("_s"))
-            .select("_h", "_s.*")
-        )
-
-    batch = batch_df.withColumn("_h", F.sha2(F.col(text_col), 256))
-    # bucket on the content hash — the fold's grouping key, so every row
-    # of one group lands in exactly one bucket
-    apply_bucketed_fold(spark, batch, state_dir, epoch_id, ["_h"], fold)
+def with_hash(docs: DataFrame) -> DataFrame:
+    """The documents with ``_h``, their content hash: the survivor
+    fold's grouping key and the state's bucket key, so every row of one
+    group lands in exactly one bucket."""
+    return docs.withColumn("_h", F.sha2(F.col("text"), 256))
 
 
-def run_dedup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-) -> None:
-    """Drain a document backlog maintaining min-id-per-content-hash
-    survivor state, resuming from the existing checkpoint (the
-    resumable-workdir posture)."""
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_dedup_batch(spark, batch_df, state_dir, epoch_id)
-
-    ingest.drain(
-        spark,
-        source_dir,
-        schema,
-        lambda s: s.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        2,
+def survivor_fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """(survivors ∪ batch) -> min-doc_id row per content hash:
+    commutative across batches, so arrival order cannot change the
+    survivor set."""
+    combined = batch if existing is None else existing.unionByName(batch)
+    rest = [c for c in combined.columns if c not in ("_h", "doc_id")]
+    return (
+        combined.groupBy("_h")
+        .agg(F.min(F.struct("doc_id", *rest)).alias("_s"))
+        .select("_h", "_s.*")
     )
 
 

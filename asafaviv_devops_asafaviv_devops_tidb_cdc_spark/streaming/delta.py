@@ -1,32 +1,33 @@
-"""The one fold-stream maintainer (the idempotent ``foreachBatch``
-exactly-once contract of Structured Streaming).
+"""The one stream maintainer (the offset log plus idempotent
+``foreachBatch`` sink of Structured Streaming's exactly-once contract).
 
-Every stream maintainer whose state is a commutative fold goes through
-:func:`fold_stream`: drain the source (``ingest.drain``), fold each
-micro-batch with the family's ``per_batch`` into ONE small partial,
-fold that partial into the state the previous epoch committed, and
-serve the state. A family supplies only its two folds — the retraction
-totals (q_stream_delta_agg), DQ violation counts, KMV and sample
-bottom-k, the sustained-alert window counts, the shard manifest and so
-on; the drain, checkpoint, state commit and serving read exist here
-once.
+Every stream maintainer goes through :func:`fold_stream`: drain the
+source (``ingest.drain``) under a checkpoint and fold each micro-batch
+into a hash-bucketed state table with ``merge.apply_bucketed_fold``.
+A maintainer supplies only its bucket spec (``keys``, ``n_buckets``)
+and its fold over (existing, batch):
 
-A census that is a function of each key's whole history (the
-transition pairs and the funnel stages, whose answers a late event can
-rewire) runs through the same path with ``history=<key columns>``: the
-keys' events are kept as bucketed state (``merge.apply_bucketed_fold``)
-and each batch's partial is census(H ∪ B) − census(H), where H is the
-prior history of the keys the batch holds, so the partials telescope
-to the census of the final history.
+- a commutative fold (the retraction totals, DQ violation counts, KMV
+  and sample bottom-k, the sustained-alert window counts, the shard
+  manifest and so on) keeps ONE bucket and folds each batch's partial
+  into it (:func:`partial_fold`);
+- a keyed fold (the CDC current-state merge, the SCD2 version chains,
+  the doc-dedup survivors) rewrites only the buckets the batch's keys
+  hash into.
 
-Idempotence: the state is a one-bucket manifest table committed through
-``merge.apply_bucketed_fold`` under the micro-batch's epoch — the same
-commit the bucketed maintainers use. An epoch whose manifest exists is
-a no-op, so a replay of a committed batch never double-counts, and a
-replay of an uncommitted one folds into the same prior state again.
-Each epoch's fold reads only the prior state, which the fold keeps at
-O(fold size); serving reads the newest manifest with its recorded
-schema and starts no job.
+A maintainer whose answer is derived from a second table commits that
+table between the first one's bucket write and its manifest commit
+(``then``, see :func:`epoch_sink`): the history folds (the transition
+pairs and the funnel stages, whose answers a late event can rewire)
+keep each key's events as the first table and fold
+census(H ∪ B) − census(H) into the census; the join view keeps the
+side state first and refreshes the view's buckets from it.
+
+Idempotence: every table commits one manifest per epoch, and an epoch
+whose manifest exists is a no-op, so a replay of a committed batch
+never double-counts, and a replay of an uncommitted one folds into the
+same prior state again. Serving is ``merge.read_state``: it reads the
+newest manifest with its recorded schema and starts no job.
 """
 
 from __future__ import annotations
@@ -49,6 +50,19 @@ def fold_generic(
     )
 
 
+def union(old: DataFrame | None, new: DataFrame) -> DataFrame:
+    """The append fold: existing rows carry over, the batch is added."""
+    return new if old is None else old.unionByName(new)
+
+
+def partial_fold(per_batch, fold):
+    """The (existing, batch) fold of a commutative family: ``fold``
+    over the state ∪ ``per_batch(batch)``. ``fold`` must satisfy
+    fold(fold(A) ∪ fold(B)) == fold(A ∪ B) — integer sums
+    (fold_generic), bottom-k (KMV and the sample) all do."""
+    return lambda old, new: fold(union(old, per_batch(new)))
+
+
 def history_delta(census, group_cols: list[str], sum_cols: list[str]):
     """The ``per_batch`` of a history fold whose census is an integer
     count frame: census(H ∪ B) − census(H) on the grid. Keys the batch
@@ -64,53 +78,50 @@ def history_delta(census, group_cols: list[str], sum_cols: list[str]):
     return per_batch
 
 
-def epoch_sink(workdir, per_batch, fold, history: list[str] | None = None):
-    """The ``foreachBatch`` function of :func:`fold_stream`: fold
-    ``per_batch(batch)`` into the state at ``<workdir>/state`` under
-    the batch's epoch, as ``fold(state ∪ partial)``. ``fold`` must
-    satisfy fold(fold(A) ∪ fold(B)) == fold(A ∪ B) — integer sums
-    (fold_generic), bottom-k (KMV and the sample) all do. The state is
-    ONE bucket, so its key may be any column of the partial and no
-    job computes the touched buckets.
+def history_census(state, census, group_cols: list[str], sum_cols: list[str], keys):
+    """The ``then`` of a history fold, whose first table is each key's
+    events (``union``, bucketed on ``keys``): fold
+    ``history_delta(census)(H, H ∪ B)`` into the integer-sum state at
+    ``state``, H and H ∪ B being the history before and after the epoch
+    narrowed to the keys B holds."""
+    per_batch = history_delta(census, group_cols, sum_cols)
 
-    With ``history`` (key columns) each batch B is first appended to
-    the bucketed history at ``<workdir>/history`` under the same epoch,
-    and inside that fold ``per_batch(H, H ∪ B)`` is folded into the
-    state, H being the prior history of the keys B holds (the touched
-    buckets of the manifest committed BEFORE this epoch, narrowed to
-    B's keys). The state's epoch commits before the history's: a replay
-    after a crash between the two re-reads the same H, and the state
-    fold is a no-op because its manifest exists. A batch with no rows
-    commits neither."""
-    state = f"{workdir}/state"
+    def then(old: DataFrame | None, written: DataFrame, _touched):
+        def partial(batch: DataFrame) -> DataFrame:
+            k = batch.select(*keys).distinct()
 
-    def commit(partial: DataFrame, epoch_id: int) -> None:
-        merge.apply_bucketed_fold(
-            partial.sparkSession,
-            partial,
-            state,
-            epoch_id,
-            partial.columns[:1],
-            lambda old, new: fold(new if old is None else old.unionByName(new)),
-            n_buckets=1,
-            touched=[0],
+            def narrow(df: DataFrame) -> DataFrame:
+                return df.join(k, [df[c].eqNullSafe(k[c]) for c in keys], "left_semi")
+
+            return per_batch(batch.limit(0) if old is None else narrow(old), narrow(written))
+
+        return epoch_sink(
+            state, partial_fold(partial, lambda df: fold_generic(df, group_cols, sum_cols))
         )
 
-    if history is None:
-        return lambda batch_df, epoch_id: commit(per_batch(batch_df), epoch_id)
+    return then
+
+
+def epoch_sink(state, fold, keys=(), n_buckets: int = 1, then=None):
+    """The ``foreachBatch`` function of :func:`fold_stream`: fold each
+    micro-batch into the table at ``state``, bucketed on ``keys``, as
+    ``fold(existing, batch)`` under the batch's epoch. A one-bucket
+    table needs no key and no job computes its touched buckets.
+
+    With ``then``, a second table is maintained from the first:
+    ``then(old, written, touched)`` — the first table's rows in the
+    buckets the batch touches before this epoch (None if there are
+    none) and after it, and those buckets — returns a sink that folds
+    the batch into the second table under the same epoch, after the
+    first table's bucket write and before its manifest commit. So the
+    second epoch commits first: a replay after a crash between the two
+    commits rewrites the same buckets from the same prior rows, and the
+    second fold is a no-op because its manifest exists."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        def grow(old: DataFrame | None, new: DataFrame) -> DataFrame:
-            if old is None:
-                h = new.limit(0)
-            else:
-                k = new.select(*history).distinct()
-                h = old.join(k, [old[c].eqNullSafe(k[c]) for c in history], "left_semi")
-            commit(per_batch(h, h.unionByName(new)), epoch_id)
-            return new if old is None else old.unionByName(new)
-
         merge.apply_bucketed_fold(
-            batch_df.sparkSession, batch_df, f"{workdir}/history", epoch_id, history, grow
+            batch_df.sparkSession, batch_df, state, epoch_id, keys, fold, n_buckets,
+            then=then and (lambda *tables: then(*tables)(batch_df, epoch_id)),
         )
 
     return sink
@@ -120,30 +131,43 @@ def fold_stream(
     spark: SparkSession,
     source_dir: str,
     schema,
-    workdir,
-    per_batch,
+    state,
+    checkpoint,
     fold,
+    keys=(),
+    n_buckets: int = 1,
+    then=None,
     max_files: int = 2,
     fmt: str = "parquet",
     stream=None,
-    history: list[str] | None = None,
-) -> DataFrame:
-    """Run one fold-stream maintainer and serve its state.
-
-    Drains ``source_dir`` (``stream`` applied to the source first, when
-    given) under the checkpoint ``<workdir>/ckpt``, folding each
-    micro-batch into the state at ``<workdir>/state`` (see epoch_sink),
-    and returns that state. The checkpoint makes every call after the
-    first an empty drain over an already-consumed backlog, and a file
-    landed later is folded exactly once."""
+) -> None:
+    """Run one stream maintainer: drain ``source_dir`` (``stream``
+    applied to the source first, when given) under the checkpoint
+    ``checkpoint``, folding each micro-batch into the table at
+    ``state`` (see epoch_sink). The checkpoint makes every call after
+    the first an empty drain over an already-consumed backlog, and a
+    file landed later is folded exactly once. Serve the result with
+    ``merge.read_state``."""
     ingest.drain(
         spark,
         source_dir,
         schema,
         lambda s: (stream(s) if stream else s)
-        .writeStream.foreachBatch(epoch_sink(workdir, per_batch, fold, history))
-        .option("checkpointLocation", f"{workdir}/ckpt"),
+        .writeStream.foreachBatch(epoch_sink(state, fold, keys, n_buckets, then))
+        .option("checkpointLocation", str(checkpoint)),
         max_files,
         fmt,
+    )
+
+
+def partial_stream(spark, source_dir, schema, workdir, per_batch, fold, **drain) -> DataFrame:
+    """Run a commutative family's maintainer (one bucket,
+    ``partial_fold(per_batch, fold)``) with its state at
+    ``<workdir>/state`` and its checkpoint at ``<workdir>/ckpt``, and
+    serve the state. ``drain`` takes fold_stream's ``max_files``,
+    ``fmt`` and ``stream``."""
+    fold_stream(
+        spark, source_dir, schema, f"{workdir}/state", f"{workdir}/ckpt",
+        partial_fold(per_batch, fold), **drain,
     )
     return merge.read_state(spark, f"{workdir}/state")

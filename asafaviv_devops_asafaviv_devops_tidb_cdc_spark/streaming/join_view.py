@@ -8,18 +8,21 @@ serving an always-fresh join without replaying either side.
 
 Design — co-bucketed partial refresh, pruned end to end:
 
-- BOTH side states and the view hash-bucket on the JOIN key
-  (``user_id``) — ``apply_merge_batch(bucket_keys=["user_id"])``. The
-  merge key stays (table_name, user_id): bucketing is a pure function
-  of a key subset, so a row's bucket never moves.
-- Per micro-batch: (1) MERGE the batch into the side-state table
-  (touched buckets only, the copy-on-write fold); (2) refresh the
-  view for exactly the user-buckets the batch touched — read THOSE
-  buckets of the side state's just-committed manifest (a path-level
-  prune, not a filter over a full scan), re-join left x right within
-  them, and rewrite THOSE view buckets. Untouched view buckets keep
-  byte-identity. Both tables commit through their own manifest, so a
-  reader of the view (``merge.read_state``) sees whole epochs only.
+- BOTH the side state and the view hash-bucket on the JOIN key
+  (``user_id``). The merge key stays (table_name, user_id): bucketing
+  is a pure function of a key subset, so a row's bucket never moves.
+- q_stream_join_view runs ``streaming/delta.py::fold_stream`` over
+  ``sides`` with ``merge.merge_state`` as the side-state fold and
+  ``view_of`` as its ``then``. Per micro-batch, after the side-state
+  fold has rewritten the user-buckets the batch touched and before
+  its manifest commits, the view is refreshed for exactly those
+  buckets: the side rows just written to THOSE buckets are re-joined
+  left x right and THOSE view buckets are rewritten. Untouched
+  buckets of both tables keep byte-identity. The view's epoch commits
+  before the side state's, each through its own manifest, so a reader
+  of the view (``merge.read_state``) sees whole epochs only, and a
+  replay after a crash between the two commits rewrites the same side
+  buckets and finds the view's epoch done.
 - Correctness does not depend on batch boundaries: the side-state
   merge is total-ordered (late events converge), and each refresh
   recomputes its buckets from the post-merge state, so the final view
@@ -35,129 +38,63 @@ simply drops out of the rejoined bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..operators import parse as P
-from .merge import (
-    apply_bucketed_fold,
-    apply_merge_batch,
-    live_state,
-    read_state,
-    touched_buckets,
-)
+from .merge import apply_bucketed_fold, live_state
 
 VIEW_N_BUCKETS = 8
 LEFT_TABLE = "click"
 RIGHT_TABLE = "purchase"
 
 
-def _view_rows(
-    side_state: DataFrame, left_table: str, right_table: str
-) -> DataFrame:
-    """The join view over (a subset of) the side state: one live row
-    per (table, user) on each side -> at most one pair per user."""
-    live = live_state(side_state)
-    lft = live.filter(F.col("table_name") == left_table).select(
-        "user_id",
-        F.col("row_id").alias("left_row_id"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias(
-            "left_value_cents"
-        ),
-    )
-    rgt = live.filter(F.col("table_name") == right_table).select(
-        "user_id",
-        F.col("row_id").alias("right_row_id"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias(
-            "right_value_cents"
-        ),
-    )
-    return lft.join(rgt, "user_id")
+def _view_rows(side_state: DataFrame) -> DataFrame:
+    """The join view over (a subset of) the side state. Each side holds
+    one live row per (table, user), so the inner join is a per-user
+    pick of each side's row: one aggregation on the join key, where a
+    join would re-derive the side state once per side."""
 
-
-def apply_join_view_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    state_dir: str,
-    view_dir: str,
-    epoch_id: int,
-    left_table: str = LEFT_TABLE,
-    right_table: str = RIGHT_TABLE,
-    n_buckets: int = VIEW_N_BUCKETS,
-) -> None:
-    """One micro-batch: MERGE into the co-bucketed side state, then
-    refresh exactly the view buckets this batch touched. The batch is
-    persisted ONCE and its touched-bucket set computed ONCE (one scalar
-    driver action), shared by both folds — state and view bucket on the
-    same key, so their touched sets are identical by construction."""
-    own_cache = not batch_df.is_cached
-    if own_cache:
-        batch_df = batch_df.persist()
-    try:
-        touched = touched_buckets(batch_df, ["user_id"], n_buckets)
-        if not touched:
-            return
-
-        # 1. side-state MERGE, bucketed on the JOIN key
-        apply_merge_batch(
-            spark,
-            batch_df,
-            state_dir,
-            epoch_id,
-            n_buckets=n_buckets,
-            bucket_keys=["user_id"],
-            touched=touched,
+    def side(table: str, prefix: str):
+        row = F.struct(
+            F.col("row_id").alias(f"{prefix}_row_id"),
+            F.floor(F.col("value") * 100 + 0.5).cast("long").alias(f"{prefix}_value_cents"),
         )
+        return F.max(F.when(F.col("table_name") == table, row)).alias(prefix)
 
-        # 2. partial view refresh: recompute exactly the user-buckets
-        # this batch touched, from the post-merge side state. The fold
-        # ignores `existing` — a refreshed bucket is a deterministic
-        # function of current side state, which is what makes
-        # update/delete handling retraction-free.
-        def refresh(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-            side = read_state(spark, state_dir, buckets=touched)
-            return _view_rows(side, left_table, right_table)
+    return (
+        live_state(side_state)
+        .groupBy("user_id")
+        .agg(side(LEFT_TABLE, "left"), side(RIGHT_TABLE, "right"))
+        .filter(F.col("left").isNotNull() & F.col("right").isNotNull())
+        .select("user_id", "left.*", "right.*")
+    )
 
-        apply_bucketed_fold(
-            spark,
-            batch_df,
+
+def view_of(view_dir):
+    """The ``then`` of the side-state fold (``delta.epoch_sink``):
+    refresh exactly the view buckets the batch touched as the join of
+    the side state's rows just written to those buckets. The refresh
+    ignores the view's existing rows — a refreshed bucket is a
+    deterministic function of current side state, which is what makes
+    update/delete handling retraction-free."""
+
+    def then(_old, written: DataFrame, touched: list[int]):
+        return lambda batch, epoch_id: apply_bucketed_fold(
+            batch.sparkSession,
+            batch,
             view_dir,
             epoch_id,
             ["user_id"],
-            refresh,
-            n_buckets=n_buckets,
-            touched=touched,
+            lambda _existing, _batch: _view_rows(written),
+            VIEW_N_BUCKETS,
+            touched,
         )
-    finally:
-        if own_cache:
-            batch_df.unpersist()
+
+    return then
 
 
-def run_join_view_stream(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    view_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-) -> None:
-    """Drain the envelope backlog, maintaining side state AND the
-    materialized join view per micro-batch, resuming from existing
-    state/view/checkpoint (see merge.run_replay_stream)."""
-
-    from . import ingest
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_join_view_batch(spark, batch_df, state_dir, view_dir, epoch_id)
-
-    ingest.drain(
-        spark,
-        source_dir,
-        ingest.SOURCE_SCHEMA,
-        lambda s: P.typed_rows(P.normalized_events(s))
-        .filter(F.col("table_name").isin(LEFT_TABLE, RIGHT_TABLE))
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir),
-        max_files_per_trigger,
-        "json",
+def sides(stream: DataFrame) -> DataFrame:
+    """The typed change rows of the two joined tables."""
+    return P.typed_rows(P.normalized_events(stream)).filter(
+        F.col("table_name").isin(LEFT_TABLE, RIGHT_TABLE)
     )
-

@@ -1,6 +1,6 @@
 """Incremental CDC current-state materialization (operator J6, stream
-form): a ``foreachBatch`` MERGE that upserts each micro-batch of typed
-row events into a keyed state table — the streaming twin of
+form): a MERGE that upserts each micro-batch of typed row events into
+a keyed state table — the streaming twin of
 ``operators/replay.py::current_state`` (reference transports DML but
 never materializes it; ES just accumulates one doc per event,
 reference node-consumer/index.js:278-281).
@@ -21,6 +21,12 @@ upsert and commit log a transactional table format (Delta/Iceberg
 ``MERGE INTO``) productionizes. The semantics — last
 writer wins, DELETE tombstones remove the key, tombstones expire after
 the source's replay horizon — are what the batch oracle checks.
+
+This module holds the merge fold (``merge_state``) and the commit
+point every stream maintainer shares (``apply_bucketed_fold``,
+``read_state``); the drain and its ``foreachBatch`` sink are
+``streaming/delta.py::fold_stream``'s, which ``run_replay_stream``
+calls.
 
 The stream's shuffle domain is sized from its micro-batch bound on the
 first run (streaming/ingest.py::stream_domain) and pinned by the
@@ -49,7 +55,10 @@ N_STATE_BUCKETS = 16
 
 def bucket_of(keys: Sequence[str] = STATE_KEYS, n_buckets: int = N_STATE_BUCKETS):
     """Deterministic state bucket for a key tuple. Recomputed on read
-    (never stored), so bucket files stay pure row data."""
+    (never stored), so bucket files stay pure row data. A one-bucket
+    table needs no key."""
+    if n_buckets == 1:
+        return F.lit(0)
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
@@ -131,21 +140,14 @@ def _load(
     return StructType.fromJson(m["schema"]), versions
 
 
-def read_state(
-    spark: SparkSession, state_dir: str, buckets: Sequence[int] | None = None
-) -> DataFrame:
+def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The state the newest manifest commits (tombstones included —
     wrap with ``live_state`` for the queryable view), read with the
-    schema the manifest records, so no inference job runs.
-    ``buckets`` restricts the read to those bucket ids."""
+    schema the manifest records, so no inference job runs."""
     schema, versions = _load(state_dir)
     if schema is None:
         raise FileNotFoundError(f"no committed state under {state_dir}")
-    paths = [
-        str(Path(state_dir) / v)
-        for b, v in sorted(versions.items())
-        if buckets is None or b in buckets
-    ]
+    paths = [str(Path(state_dir) / v) for _, v in sorted(versions.items())]
     if not paths:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*paths)
@@ -181,10 +183,9 @@ def touched_buckets(
     batch_df: DataFrame, keys: Sequence[str], n_buckets: int = N_STATE_BUCKETS
 ) -> list[int]:
     """Bucket ids a batch's keys hash into: ONE scalar driver action,
-    <= n_buckets ints. Maintainers that fold a batch into SEVERAL
-    state tables on the same key (e.g. the join view's side state +
-    view) compute this once and pass it to each fold instead of
-    re-running the scan per table."""
+    <= n_buckets ints; a one-bucket table needs none."""
+    if n_buckets == 1:
+        return [0]
     b = batch_df.select(bucket_of(keys, n_buckets).alias("_b"))
     return sorted(b.agg(F.collect_set("_b")).collect()[0][0])
 
@@ -198,6 +199,7 @@ def apply_bucketed_fold(
     fold,
     n_buckets: int = N_STATE_BUCKETS,
     touched: list[int] | None = None,
+    then=None,
 ) -> None:
     """Generic partition-pruned state maintenance: fold one micro-batch
     into the hash-bucketed state table, reading and rewriting ONLY the
@@ -218,12 +220,19 @@ def apply_bucketed_fold(
     the manifest. The write job reads old parquet + batch directly
     (different paths, no overwrite-while-read hazard). This is the
     table-format recipe Delta/Iceberg productionize: immutable data
-    files + a log of the files that make up each version."""
+    files + a log of the files that make up each version.
+
+    ``touched`` passes the batch's bucket ids when the caller knows
+    them. ``then(existing, written, touched)``, when given, runs after
+    the bucket write and before the manifest commit, with the touched
+    buckets' prior rows and their new ones: it commits a second table's
+    epoch derived from them, so the second table commits first
+    (streaming/delta.py::epoch_sink)."""
     if _manifest_path(state_dir, epoch_id).exists():
         return
-    # persist only if the caller hasn't: a maintainer driving several
-    # folds over one persisted batch keeps its cache alive across them
-    own_cache = not batch_df.is_cached
+    # the batch is read twice only when a job computes its buckets; a
+    # fold given them by another one's hook reuses that one's cache
+    own_cache = touched is None and n_buckets > 1 and not batch_df.is_cached
     if own_cache:
         batch_df = batch_df.persist()
     try:
@@ -238,15 +247,17 @@ def apply_bucketed_fold(
         schema = merged.schema
         # one write job for all touched buckets; the partition column is
         # recomputable from the keys so it is never stored in the rows.
-        # repartition ON the bucket id first: each touched bucket lands
-        # in exactly one task (one file) instead of |tasks| x |buckets|
-        # small files; no more tasks than the batch's shuffle domain
-        # (a stream's, pinned by its checkpoint), since every task pays
-        # its own conf and parquet-writer set-up
+        # Each touched bucket lands in exactly one task (one file)
+        # instead of |tasks| x |buckets| small files, and no more tasks
+        # than the batch's shuffle domain (a stream's, pinned by its
+        # checkpoint) run, since every task pays its own conf and
+        # parquet-writer set-up; one task needs no shuffle
         domain = int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n_tasks = min(len(touched), domain)
         stage = Path(state_dir) / f"_stage_v{epoch_id:09d}"
-        merged.withColumn("_bucket", bucket_of(keys, n_buckets)).repartition(
-            min(len(touched), domain), "_bucket"
+        merged = merged.withColumn("_bucket", bucket_of(keys, n_buckets))
+        (
+            merged.coalesce(1) if n_tasks == 1 else merged.repartition(n_tasks, "_bucket")
         ).write.mode("overwrite").partitionBy("_bucket").parquet(str(stage))
         for b in touched:
             rel = f"b{b:04d}/v{epoch_id:09d}"
@@ -260,63 +271,19 @@ def apply_bucketed_fold(
                 versions[b] = rel
             else:  # the bucket folded to zero rows
                 versions.pop(b, None)
+        if then is not None:
+            new = [str(Path(state_dir) / versions[b]) for b in touched if b in versions]
+            written = (
+                spark.read.schema(schema).parquet(*new)
+                if new
+                else spark.createDataFrame([], schema)
+            )
+            then(existing, written, touched)
         _commit(state_dir, epoch_id, schema, versions)
         shutil.rmtree(stage, ignore_errors=True)
     finally:
         if own_cache:
             batch_df.unpersist()
-
-
-def apply_merge_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    state_dir: str,
-    epoch_id: int,
-    keys: Sequence[str] = STATE_KEYS,
-    order_by: Sequence[str] = STATE_ORDER,
-    n_buckets: int = N_STATE_BUCKETS,
-    tombstone_horizon_ms: int | None = None,
-    bucket_keys: Sequence[str] | None = None,
-    touched: list[int] | None = None,
-) -> None:
-    """MERGE one micro-batch into the bucketed CDC state table:
-    last-writer-wins fold with tombstone retention + replay-horizon
-    expiry, partition-pruned via ``apply_bucketed_fold``.
-
-    ``bucket_keys`` (default: ``keys``) picks the bucketing columns
-    independently of the merge key — a state table co-bucketed with a
-    downstream consumer (e.g. a maintained join view bucketed on the
-    join key, streaming/join_view.py) lets that consumer read exactly
-    the state buckets it refreshes. Must be a subset of ``keys`` so a
-    key's rows always land in one bucket."""
-
-    def fold(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
-        # batch is persisted by apply_bucketed_fold, so the watermark
-        # scan (a scalar) doesn't recompute the parse chain
-        watermark_ms = None
-        if tombstone_horizon_ms is not None:
-            watermark_ms = batch.agg(
-                F.max(F.unix_millis(F.col(order_by[0])))
-            ).collect()[0][0]
-        return merge_state(
-            existing,
-            batch,
-            keys,
-            order_by,
-            tombstone_horizon_ms=tombstone_horizon_ms,
-            watermark_ms=watermark_ms,
-        )
-
-    apply_bucketed_fold(
-        spark,
-        batch_df,
-        state_dir,
-        epoch_id,
-        bucket_keys or keys,
-        fold,
-        n_buckets=n_buckets,
-        touched=touched,
-    )
 
 
 def run_replay_stream(
@@ -325,11 +292,11 @@ def run_replay_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    tombstone_horizon_ms: int | None = None,
     fresh: bool = True,
 ) -> None:
     """Drain a canal-json envelope backlog through P1->P6 and MERGE each
-    micro-batch into the bucketed state table at ``state_dir``.
+    micro-batch into the bucketed state table at ``state_dir``
+    (``merge_state`` through ``delta.fold_stream``).
 
     ``fresh=False`` keeps existing state + checkpoint and RESUMES: an
     already-drained backlog becomes an empty drain (the steady-state
@@ -339,29 +306,21 @@ def run_replay_stream(
     outlive a source or logic change."""
     if fresh:
         for d in (state_dir, checkpoint_dir):
-            p = Path(d)
-            if p.exists():
-                shutil.rmtree(p)
+            shutil.rmtree(d, ignore_errors=True)
 
-    from . import ingest
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_merge_batch(
-            spark,
-            batch_df,
-            state_dir,
-            epoch_id,
-            tombstone_horizon_ms=tombstone_horizon_ms,
-        )
+    from . import delta, ingest
 
     # no round-robin repartition: each file is its own task
-    ingest.drain(
+    delta.fold_stream(
         spark,
         source_dir,
         ingest.SOURCE_SCHEMA,
-        lambda s: P.typed_rows(P.normalized_events(s))
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir),
-        max_files_per_trigger,
-        "json",
+        state_dir,
+        checkpoint_dir,
+        merge_state,
+        STATE_KEYS,
+        N_STATE_BUCKETS,
+        max_files=max_files_per_trigger,
+        fmt="json",
+        stream=lambda s: P.typed_rows(P.normalized_events(s)),
     )

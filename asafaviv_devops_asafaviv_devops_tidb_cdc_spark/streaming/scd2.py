@@ -19,9 +19,12 @@ the batch query uses — one code path, two execution modes, which is
 why the streamed result can hash-match the batch oracle. Serving is a
 tombstone filter over precomputed intervals, no window at read time.
 
-Durability follows streaming/merge.py: hash-bucketed copy-on-write
-state committed by one manifest per epoch, so an epoch is visible once
-and whole, and a retried epoch is a no-op.
+``rebuild_state`` is the fold q_stream_scd2 hands to
+``streaming/delta.py::fold_stream`` (bucketed on ``SCD2_KEYS``), so
+the state is committed by one manifest per epoch
+(``merge.apply_bucketed_fold``): an epoch is visible once and whole,
+and a retried epoch is a no-op — the fold is order-sensitive, and
+folding a batch twice would double every touched key's version rows.
 
 Scale posture: the recompute cost per batch is O(events of touched
 keys), not O(state), and the rewrite is partition-pruned
@@ -35,10 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import parse as P
 from ..operators.replay import scd2_versions
-from . import ingest
-from .merge import apply_bucketed_fold, read_state
+from .merge import read_state
 
 SCD2_KEYS = ["table_name", "row_id"]
 _INTERVAL_COLS = ["valid_from_ms", "valid_to_ms", "is_current"]
@@ -60,37 +61,6 @@ def rebuild_state(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
         .unionByName(batch)
     )
     return carried.unionByName(scd2_versions(rebuilt_events, drop_deletes=False))
-
-
-def run_scd2_stream(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain the envelope backlog maintaining the per-key event state
-    the SCD2 view derives from, resuming from existing state +
-    checkpoint (see merge.run_replay_stream)."""
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        # apply_bucketed_fold handles retry idempotence (a committed
-        # epoch is never folded again — the SCD2 fold is order-sensitive
-        # and folding the batch twice would double every touched key's
-        # version rows) and rewrites only touched buckets
-        apply_bucketed_fold(
-            spark, batch_df, state_dir, epoch_id, SCD2_KEYS, rebuild_state
-        )
-
-    ingest.drain(
-        spark,
-        source_dir,
-        ingest.SOURCE_SCHEMA,
-        lambda s: P.typed_rows(P.normalized_events(s))
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir),
-        2,
-        "json",
-    )
 
 
 def history(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -17,7 +17,7 @@ from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.functions.dedup import (
 )
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators import parse as P
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.operators.replay import current_state
-from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import merge
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta, merge
 
 # one op = (key, operation, value); seq index supplies the total order
 _op = st.tuples(
@@ -119,7 +119,7 @@ def test_bucketed_merge_on_disk_converges_to_fold(spark, ops, cut, nb):
         chunk = df_all.filter(pred)
         if chunk.count() == 0:
             continue
-        merge.apply_merge_batch(spark, chunk, state, epoch_id=epoch, n_buckets=nb)
+        delta.epoch_sink(state, merge.merge_state, merge.STATE_KEYS, nb)(chunk, epoch)
         epoch += 1
     got = {
         r["user_id"]: int(r["value"])

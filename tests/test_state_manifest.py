@@ -31,7 +31,7 @@ from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
     scd2,
 )
 from tests.conftest import SF_SMOKE
-from tests.test_streaming import _jv_batch, _typed_batch
+from tests.test_streaming import _jv_batch, _jv_sink, _merge_sink, _typed_batch
 
 
 def _rows(df):
@@ -69,12 +69,12 @@ def _epoch2(spark):
 def _window_sink(workdir):
     """A fold_stream sink (the sustained-alert window counts) and the
     state dir it commits to."""
-    sink = delta.epoch_sink(
-        workdir,
+    state = f"{workdir}/state"
+    fold = delta.partial_fold(
         alerts.window_counts,
         lambda df: delta.fold_generic(df, ["window_start"], ["n_total", "n_errors"]),
     )
-    return sink, f"{workdir}/state"
+    return delta.epoch_sink(state, fold), state
 
 
 def _crash_then_retry(spark, monkeypatch, run, clean, batches, at):
@@ -123,10 +123,7 @@ def test_failed_commit_never_shows_a_torn_epoch(spark, tmp_path, monkeypatch):
     assert b2.count() >= 2
 
     def merge_into(state):
-        return (
-            lambda b, e: merge.apply_merge_batch(spark, b, state, epoch_id=e, n_buckets=8),
-            state,
-        )
+        return _merge_sink(state, 8), state
 
     _crash_then_retry(
         spark,
@@ -158,10 +155,10 @@ def test_committed_epoch_replayed_is_a_noop(spark, tmp_path):
     the fold and its checkpoint commit. Once the epoch's manifest is
     committed, the replay changes no file, even with other rows."""
     state = str(tmp_path / "state")
-    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=1, n_buckets=8)
-    merge.apply_merge_batch(spark, _epoch2(spark), state, epoch_id=2, n_buckets=8)
+    _merge_sink(state, 8)(_epoch1(spark), 1)
+    _merge_sink(state, 8)(_epoch2(spark), 2)
     files, rows = _files(state), _rows(merge.read_state(spark, state))
-    merge.apply_merge_batch(spark, _epoch1(spark), state, epoch_id=2, n_buckets=8)
+    _merge_sink(state, 8)(_epoch1(spark), 2)
     assert _files(state) == files
     assert _rows(merge.read_state(spark, state)) == rows
 
@@ -170,7 +167,7 @@ def test_versions_outside_the_last_two_manifests_are_pruned(spark, tmp_path):
     state = tmp_path / "state"
     for e in (1, 2, 3):
         batch = _typed_batch(spark, [("t", 1, "update", e, f"2024-01-01 00:00:0{e}", e)])
-        merge.apply_merge_batch(spark, batch, str(state), epoch_id=e, n_buckets=1)
+        _merge_sink(str(state), 1)(batch, e)
     assert sorted(p.name for p in (state / "_manifest").iterdir()) == [
         "000000002.json",
         "000000003.json",
@@ -194,12 +191,12 @@ def test_bucket_that_folds_to_zero_rows_leaves_the_manifest(spark, tmp_path):
             ("purchase", 3, "insert", 203, 2.0, "2024-01-01 00:00:01", 1),
         ],
     )
-    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
+    _jv_sink(state, view)(b1, 1)
     b = merge.touched_buckets(b1, ["user_id"], JV.VIEW_N_BUCKETS)[0]
     assert _manifest(view, 1)["buckets"] == {str(b): f"b{b:04d}/v000000001"}
 
     b2 = _jv_batch(spark, [("purchase", 3, "delete", 203, 2.0, "2024-01-01 00:01:00", 2)])
-    JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
+    _jv_sink(state, view)(b2, 2)
     assert _manifest(view, 2)["buckets"] == {}
     assert not (Path(view) / f"b{b:04d}" / "v000000002").exists()
     empty = merge.read_state(spark, view)
@@ -237,27 +234,27 @@ def _maintainer(spark, name, tmp_path):
         raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(src)
         batches = _halves(P.typed_rows(P.normalized_events(raw)), "offset")
     if name == "merge":
-        return lambda b, e: merge.apply_merge_batch(spark, b, state, e), state, batches
+        return _merge_sink(state), state, batches
     if name == "scd2":
-        return (
-            lambda b, e: merge.apply_bucketed_fold(
-                spark, b, state, e, scd2.SCD2_KEYS, scd2.rebuild_state
-            ),
-            state,
-            batches,
+        sink = delta.epoch_sink(
+            state, scd2.rebuild_state, scd2.SCD2_KEYS, merge.N_STATE_BUCKETS
         )
+        return sink, state, batches
     if name == "join_view":
         view = str(tmp_path / "view")
         sides = F.col("table_name").isin(JV.LEFT_TABLE, JV.RIGHT_TABLE)
         return (
-            lambda b, e: JV.apply_join_view_batch(spark, b.filter(sides), state, view, e),
+            lambda b, e: _jv_sink(state, view)(b.filter(sides), e),
             view,
             batches,
         )
     if name == "corpus":
         docs = load_table(spark, SF_SMOKE, "documents")
+        sink = delta.epoch_sink(
+            state, corpus.survivor_fold, ["_h"], merge.N_STATE_BUCKETS
+        )
         return (
-            lambda b, e: corpus.apply_dedup_batch(spark, b, state, e),
+            lambda b, e: sink(corpus.with_hash(b), e),
             state,
             _halves(docs, "doc_id"),
         )
@@ -287,6 +284,14 @@ _JOBS_BEFORE_MANIFEST = {
     "merge": 6, "scd2": 11, "join_view": 12, "corpus": 7, "ann": 9, "fold_stream": 6,
 }
 
+# Jobs one warm fold starts now that every stream maintainer runs
+# through delta.fold_stream: a one-bucket epoch neither persists its
+# batch nor shuffles it into its one write task, and the join view
+# refreshes from the side rows it has just written.
+_JOBS_ONE_MAINTAINER = {
+    "merge": 6, "scd2": 10, "join_view": 9, "corpus": 6, "ann": 8, "fold_stream": 3,
+}
+
 
 @pytest.mark.parametrize("name", sorted(_JOBS_BEFORE_MANIFEST))
 def test_fold_and_read_start_no_inference_job(spark, tmp_path, name):
@@ -298,6 +303,7 @@ def test_fold_and_read_start_no_inference_job(spark, tmp_path, name):
         assert warm <= _JOBS_BEFORE_MANIFEST[name]
     else:
         assert warm < _JOBS_BEFORE_MANIFEST[name]
+    assert warm <= _JOBS_ONE_MAINTAINER[name]
     assert merge.read_state(spark, state).count() > 0
 
 
@@ -338,3 +344,81 @@ def test_state_is_published_only_through_the_commit_points():
         for name in _renames(ast.parse(path.read_text()))
     }
     assert found == _COMMIT_POINTS
+
+
+def _stream_sinks(tree):
+    """Top-level functions of a module that call
+    ``<frame>.writeStream.foreachBatch(...)``."""
+    found = []
+    for top in tree.body:
+        for node in ast.walk(top):
+            f = getattr(node, "func", None)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(f, ast.Attribute)
+                and f.attr == "foreachBatch"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "writeStream"
+            ):
+                found.append(getattr(top, "name", f"<module line {top.lineno}>"))
+    return found
+
+
+def test_every_stream_maintainer_runs_through_one_foreachbatch_sink():
+    """No SparkSession: the package opens exactly one ``foreachBatch``
+    sink, in ``delta.fold_stream``, so the merge, SCD2, doc-dedup,
+    join-view and fold-stream maintainers share one drain, checkpoint
+    and epoch commit."""
+    pkg = Path(closure.ROOT) / closure.PKG
+    found = [
+        (path.relative_to(pkg).as_posix(), name)
+        for path in sorted(pkg.rglob("*.py"))
+        for name in _stream_sinks(ast.parse(path.read_text()))
+    ]
+    assert found == [("streaming/delta.py", "fold_stream")]
+
+
+def test_join_view_crash_between_its_two_commits_resumes_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """A join-view epoch commits the view, then the side state. A crash
+    between the two commits leaves the view one epoch ahead; the
+    restarted drain replays the epoch, whose view fold is a no-op (its
+    manifest exists) and whose side fold commits. The served view and
+    side state then equal an uninterrupted drain's, and the view's
+    files of the replayed epoch are the ones the first attempt wrote."""
+    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.queries.streaming_checks import (
+        _join_view,
+    )
+
+    src = ingest.write_envelope_files(spark, SF_SMOKE, str(tmp_path / "src"), None, n_files=4)
+    run, clean = tmp_path / "run", tmp_path / "clean"
+    real_commit = merge._commit
+
+    def crash(state_dir, epoch_id, *a):
+        if Path(state_dir) == run / "state" and epoch_id == 1:
+            raise OSError("injected: crash between the view and side-state commits")
+        return real_commit(state_dir, epoch_id, *a)
+
+    with monkeypatch.context() as m:
+        m.setattr(merge, "_commit", crash)
+        with pytest.raises(Exception, match="injected"):
+            _join_view(spark, src, run)
+    assert [p.name for p in sorted((run / "view" / "_manifest").glob("*.json"))][-1] == (
+        f"{1:09d}.json"
+    )
+    assert _manifest(run / "state", 0) and not (run / "state" / "_manifest" / f"{1:09d}.json").exists()
+    view_files = _files(run / "view")
+
+    served = _rows(_join_view(spark, src, run))
+    assert _files(run / "view") == view_files
+    assert served == _rows(_join_view(spark, src, clean)) and served
+    assert _rows(merge.read_state(spark, str(run / "state"))) == _rows(
+        merge.read_state(spark, str(clean / "state"))
+    )
+    for table in ("state", "view"):
+        assert sorted(p.name for p in (run / table / "_manifest").glob("*.json")) == sorted(
+            p.name for p in (clean / table / "_manifest").glob("*.json")
+        )
+    commits = [sorted(p.name for p in (d / "ckpt" / "commits").glob("[0-9]*")) for d in (run, clean)]
+    assert commits[0] == commits[1] == ["0", "1"]

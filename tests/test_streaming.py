@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark import registry
 from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.sources import load_table
-from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import alerts, merge
+from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import (
+    alerts,
+    delta,
+    join_view as JV,
+    merge,
+)
 
 from tests.conftest import SF_SMOKE
 
@@ -164,6 +169,20 @@ def _bucket_files(state_dir):
     return out
 
 
+def _merge_sink(state, n_buckets=merge.N_STATE_BUCKETS):
+    """The CDC merge maintainer's foreachBatch sink (q_stream_cdc_replay's
+    fold) over the state at ``state``."""
+    return delta.epoch_sink(state, merge.merge_state, merge.STATE_KEYS, n_buckets)
+
+
+def _jv_sink(state, view):
+    """The join-view maintainer's foreachBatch sink (q_stream_join_view's
+    folds): the side state at ``state`` and its view at ``view``."""
+    return delta.epoch_sink(
+        state, merge.merge_state, ["user_id"], JV.VIEW_N_BUCKETS, JV.view_of(view)
+    )
+
+
 @pytest.mark.parametrize("domain", ["session", "one_partition"])
 def test_merge_rewrites_only_touched_buckets(spark, domain):
     """Partition-pruned MERGE: a micro-batch whose keys hash into one
@@ -190,7 +209,7 @@ def test_merge_rewrites_only_touched_buckets(spark, domain):
         [("t", u, "insert", u * 10, f"2024-01-01 00:00:{u:02d}", u) for u in range(12)],
     )
     with scope():
-        merge.apply_merge_batch(spark, batch1, state, epoch_id=1, n_buckets=8)
+        _merge_sink(state, 8)(batch1, 1)
     before = _bucket_files(state)
     assert before, "batch1 wrote no state"
     # one version dir per touched bucket, one data file in each
@@ -201,7 +220,7 @@ def test_merge_rewrites_only_touched_buckets(spark, domain):
     batch2 = _typed_batch(spark, [("t", 3, "update", 999, "2024-01-01 00:01:00", 100)])
     b3 = batch2.select(merge.bucket_of(n_buckets=8).alias("b")).collect()[0]["b"]
     with scope():
-        merge.apply_merge_batch(spark, batch2, state, epoch_id=2, n_buckets=8)
+        _merge_sink(state, 8)(batch2, 2)
     after = _bucket_files(state)
 
     untouched_before = {p: c for p, c in before.items() if not p.startswith(f"b{b3:04d}/")}
@@ -411,7 +430,7 @@ def test_moved_drains_record_the_data_sized_domain(
             STREAM_DQ_CHECKS,
         )
 
-        delta.fold_stream(
+        delta.partial_stream(
             spark, src, events.schema, tmp_path,
             dq.violation_counts(STREAM_DQ_CHECKS),
             lambda df: delta.fold_generic(df, ["check_id"], ["violations"]),
@@ -496,7 +515,8 @@ def test_delta_partials_compaction_preserves_totals(spark, tmp_path):
     assert len(manifests) == 2, manifests
 
     sink = delta.epoch_sink(
-        tmp_path, lambda b: retraction_totals(P.typed_rows(b)), _delta_totals
+        tmp_path / "state",
+        delta.partial_fold(lambda b: retraction_totals(P.typed_rows(b)), _delta_totals),
     )
     raw = spark.read.schema(ingest.SOURCE_SCHEMA).json(src)
     sink(P.normalized_events(raw), int(manifests[-1].split(".")[0]))  # the replay
@@ -524,9 +544,15 @@ def test_tombstone_gc_drops_expired_without_resurrection(spark):
             ("t", 2, "insert", 20, "2024-01-01 00:00:02", 2),
         ],
     )
-    merge.apply_merge_batch(
-        spark, batch1, state, epoch_id=1, n_buckets=1, tombstone_horizon_ms=horizon
-    )
+    def expiring(existing, batch):
+        # the watermark is the batch's newest event time
+        wm = batch.agg(F.max(F.unix_millis("ts"))).collect()[0][0]
+        return merge.merge_state(
+            existing, batch, tombstone_horizon_ms=horizon, watermark_ms=wm
+        )
+
+    sink = delta.epoch_sink(state, expiring)  # one bucket
+    sink(batch1, 1)
     # tombstone still within horizon: retained
     ops1 = {
         (r["user_id"], r["operation"])
@@ -536,9 +562,7 @@ def test_tombstone_gc_drops_expired_without_resurrection(spark):
 
     # watermark advances past ts(delete) + horizon -> tombstone expires
     batch2 = _typed_batch(spark, [("t", 2, "update", 21, "2024-01-01 00:02:30", 3)])
-    merge.apply_merge_batch(
-        spark, batch2, state, epoch_id=2, n_buckets=1, tombstone_horizon_ms=horizon
-    )
+    sink(batch2, 2)
     final = merge.read_state(spark, state)
     ops2 = {(r["user_id"], r["operation"]) for r in final.collect()}
     assert (1, "delete") not in ops2  # physically gone
@@ -684,7 +708,7 @@ def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
         "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE 'v' END AS s"
     ).repartition(4).write.mode("overwrite").parquet(src)
     checks = [{"id": "nn_s", "table": "t", "kind": "not_null", "column": "s"}]
-    before = D.fold_stream(
+    before = D.partial_stream(
         spark, src, "id long, s string", tmp_path,
         SDQ.violation_counts(checks), fold, max_files=1,
     ).collect()
@@ -692,14 +716,16 @@ def test_stream_dq_retry_idempotent_and_refuses_nonrow_kinds(spark, tmp_path):
     # simulate a micro-batch RETRY: the whole source once more, twice
     # under one new epoch
     epoch = int(_manifest_names(tmp_path / "state")[-1].split(".")[0]) + 1
-    sink = D.epoch_sink(tmp_path, SDQ.violation_counts(checks), fold)
+    sink = D.epoch_sink(
+        tmp_path / "state", D.partial_fold(SDQ.violation_counts(checks), fold)
+    )
     for _ in range(2):
         sink(spark.read.parquet(src), epoch)
     again = merge.read_state(spark, str(tmp_path / "state")).collect()
     assert {r["check_id"]: r["violations"] for r in again} == {"nn_s": 20}
 
     with _pytest.raises(ValueError, match="not decomposable"):
-        D.fold_stream(
+        D.partial_stream(
             spark, src, "id long, s string", tmp_path / "w2",
             SDQ.violation_counts(
                 [{"id": "u", "table": "t", "kind": "unique", "columns": ["id"]}]
@@ -746,7 +772,7 @@ def test_join_view_maintained_through_updates_and_deletes(spark):
         [("click", u, "insert", 100 + u, 10.0 + u, f"2024-01-01 00:00:{u:02d}", u) for u in range(6)]
         + [("purchase", u, "insert", 200 + u, 50.0 + u, f"2024-01-01 00:00:{u:02d}", 50 + u) for u in (1, 3, 5)],
     )
-    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
+    _jv_sink(state, view)(b1, 1)
     v1 = {r["user_id"]: r for r in merge.read_state(spark, view).collect()}
     assert set(v1) == {1, 3, 5}
     assert v1[3]["left_value_cents"] == 1300 and v1[3]["right_value_cents"] == 5300
@@ -761,7 +787,7 @@ def test_join_view_maintained_through_updates_and_deletes(spark):
             ("purchase", 0, "insert", 300, 77.0, "2024-01-01 00:01:02", 102),
         ],
     )
-    JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
+    _jv_sink(state, view)(b2, 2)
     v2 = {r["user_id"]: r for r in merge.read_state(spark, view).collect()}
     assert set(v2) == {0, 1, 3}, "delete must drop the pair, insert must add it"
     assert v2[3]["left_value_cents"] == 9900, "update must propagate into the view"
@@ -785,7 +811,7 @@ def test_join_view_refresh_rewrites_only_touched_buckets(spark):
         [("click", u, "insert", u, 1.0, f"2024-01-01 00:00:{u:02d}", u) for u in range(12)]
         + [("purchase", u, "insert", 50 + u, 2.0, f"2024-01-01 00:00:{u:02d}", 50 + u) for u in range(12)],
     )
-    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
+    _jv_sink(state, view)(b1, 1)
     before = _bucket_files(view)
     assert before
 
@@ -793,7 +819,7 @@ def test_join_view_refresh_rewrites_only_touched_buckets(spark):
     b7 = b2.select(
         merge.bucket_of(["user_id"], JV.VIEW_N_BUCKETS).alias("b")
     ).collect()[0]["b"]
-    JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
+    _jv_sink(state, view)(b2, 2)
     after = _bucket_files(view)
 
     untouched_b = {p: c for p, c in before.items() if not p.startswith(f"b{b7:04d}/")}
@@ -823,7 +849,7 @@ def test_join_view_invariant_to_batch_boundaries(spark):
         base = Path(tempfile.mkdtemp())
         state, view = str(base / "state"), str(base / "view")
         for i, chunk in enumerate(chunks, start=1):
-            JV.apply_join_view_batch(spark, _jv_batch(spark, chunk), state, view, epoch_id=i)
+            _jv_sink(state, view)(_jv_batch(spark, chunk), i)
         return sorted(
             tuple(r) for r in merge.read_state(spark, view).collect()
         )
@@ -913,9 +939,9 @@ def test_join_view_retry_idempotent(spark):
         [("click", u, "insert", u, 1.0 + u, f"2024-01-01 00:00:{u:02d}", u) for u in range(5)]
         + [("purchase", u, "insert", 50 + u, 9.0, f"2024-01-01 00:00:{u:02d}", 50 + u) for u in (0, 2)],
     )
-    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)
+    _jv_sink(state, view)(b1, 1)
     first = sorted(tuple(r) for r in merge.read_state(spark, view).collect())
-    JV.apply_join_view_batch(spark, b1, state, view, epoch_id=1)  # retry
+    _jv_sink(state, view)(b1, 1)  # retry
     again = sorted(tuple(r) for r in merge.read_state(spark, view).collect())
     assert first == again and len(first) == 2
 
@@ -947,7 +973,7 @@ def test_join_view_bounded_io_under_zipf_skew(spark):
         rows.append(
             (t, u, "insert", 1000 + i, float(i), f"2024-01-01 00:{i // 60:02d}:{i % 60:02d}", i)
         )
-    JV.apply_join_view_batch(spark, _jv_batch(spark, rows), state, view, epoch_id=1)
+    _jv_sink(state, view)(_jv_batch(spark, rows), 1)
     view_before, state_before = _bucket_files(view), _bucket_files(state)
     assert view_before and state_before
 
@@ -958,7 +984,7 @@ def test_join_view_bounded_io_under_zipf_skew(spark):
     hot_b = b2.select(
         merge.bucket_of(["user_id"], JV.VIEW_N_BUCKETS).alias("b")
     ).collect()[0]["b"]
-    JV.apply_join_view_batch(spark, b2, state, view, epoch_id=2)
+    _jv_sink(state, view)(b2, 2)
     view_after, state_after = _bucket_files(view), _bucket_files(state)
 
     for files_before, files_after in (
@@ -1299,7 +1325,10 @@ def test_dedup_stream_resume_incremental(spark, tmp_path):
         ).parquet(src)
 
     def drain():
-        C.run_dedup_stream(spark, src, state, ckpt, schema=schema)
+        delta.fold_stream(
+            spark, src, schema, state, ckpt,
+            C.survivor_fold, ["_h"], merge.N_STATE_BUCKETS, stream=C.with_hash,
+        )
         return {
             (r["doc_id"], r["text"])
             for r in C.survivors(spark, state).collect()
@@ -1537,10 +1566,8 @@ def test_history_fold_replay_is_idempotent(spark, tmp_path):
     grid = ["from_type", "to_type"]
     cdir, hdir = tmp_path / "state", tmp_path / "history"
     sink = delta.epoch_sink(
-        tmp_path,
-        delta.history_delta(transition_counts, grid, ["n"]),
-        lambda df: delta.fold_generic(df, grid, ["n"]),
-        ["user_id"],
+        hdir, delta.union, ["user_id"], merge.N_STATE_BUCKETS,
+        delta.history_census(cdir, transition_counts, grid, ["n"], ["user_id"]),
     )
     types = ["view", "click", "purchase"]
     rows = [(i % 5, i, types[(i * 7) % 3], (i * 13) % 40) for i in range(40)]
@@ -1584,23 +1611,32 @@ def test_history_fold_replay_is_idempotent(spark, tmp_path):
     assert served() == census
 
 
-def test_history_fold_reads_only_the_batch_keys(spark, tmp_path):
+def test_history_fold_reads_only_the_batch_keys(spark, tmp_path, monkeypatch):
     """A late batch of one user differences that user's history only:
     the H handed to ``per_batch`` holds none of the other users that
     share its hash bucket, whose rows would cancel out anyway."""
-    from asafaviv_devops_asafaviv_devops_tidb_cdc_spark.streaming import delta
-
     seen = []
+    history_delta = delta.history_delta
 
-    def per_batch(h, hb):
-        seen.append(sorted(r["user_id"] for r in h.select("user_id").collect()))
-        return hb.groupBy("user_id").count()
+    def recording(*args):
+        per_batch = history_delta(*args)
 
-    sink = delta.epoch_sink(
-        tmp_path,
-        per_batch,
-        lambda df: delta.fold_generic(df, ["user_id"], ["count"]),
+        def recorded(h, hb):
+            seen.append(sorted(r["user_id"] for r in h.select("user_id").collect()))
+            return per_batch(h, hb)
+
+        return recorded
+
+    monkeypatch.setattr(delta, "history_delta", recording)
+    census = delta.history_census(
+        tmp_path / "state",
+        lambda df: df.groupBy("user_id").count(),
         ["user_id"],
+        ["count"],
+        ["user_id"],
+    )
+    sink = delta.epoch_sink(
+        tmp_path / "history", delta.union, ["user_id"], merge.N_STATE_BUCKETS, census
     )
     users = range(64)  # 64 users over 16 buckets: every bucket is shared
     sink(spark.createDataFrame([(u, 0) for u in users], "user_id long, t long"), 0)

@@ -241,7 +241,7 @@ def test_stream_sample_batch_boundary_invariance(spark, tmp_path):
     outs = []
     for mft in (1, 4):
         base = tmp_path / f"run_{mft}"
-        sample = D.fold_stream(
+        sample = D.partial_stream(
             spark,
             src,
             "doc_id bigint, source string",
@@ -409,7 +409,7 @@ def test_stream_pii_invariant_to_batch_boundaries(spark, tmp_path):
     outs = []
     for mft in (1, 4):
         base = tmp_path / f"run_{mft}"
-        census = D.fold_stream(
+        census = D.partial_stream(
             spark,
             src,
             "doc_id bigint, source string, text string",
