@@ -49,25 +49,24 @@ RIGHT_TABLE = "purchase"
 
 
 def _view_rows(side_state: DataFrame) -> DataFrame:
-    """The join view over (a subset of) the side state. Each side holds
-    one live row per (table, user), so the inner join is a per-user
-    pick of each side's row: one aggregation on the join key, where a
-    join would re-derive the side state once per side."""
-
-    def side(table: str, prefix: str):
-        row = F.struct(
-            F.col("row_id").alias(f"{prefix}_row_id"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias(f"{prefix}_value_cents"),
-        )
-        return F.max(F.when(F.col("table_name") == table, row)).alias(prefix)
-
-    return (
-        live_state(side_state)
-        .groupBy("user_id")
-        .agg(side(LEFT_TABLE, "left"), side(RIGHT_TABLE, "right"))
-        .filter(F.col("left").isNotNull() & F.col("right").isNotNull())
-        .select("user_id", "left.*", "right.*")
+    """The join view over (a subset of) the side state: one live row
+    per (table, user) on each side -> at most one pair per user."""
+    live = live_state(side_state)
+    lft = live.filter(F.col("table_name") == LEFT_TABLE).select(
+        "user_id",
+        F.col("row_id").alias("left_row_id"),
+        F.floor(F.col("value") * 100 + 0.5).cast("long").alias(
+            "left_value_cents"
+        ),
     )
+    rgt = live.filter(F.col("table_name") == RIGHT_TABLE).select(
+        "user_id",
+        F.col("row_id").alias("right_row_id"),
+        F.floor(F.col("value") * 100 + 0.5).cast("long").alias(
+            "right_value_cents"
+        ),
+    )
+    return lft.join(rgt, "user_id")
 
 
 def view_of(view_dir):
