@@ -715,6 +715,7 @@ def stream_transition_counts(
     census of the final history, whatever the arrival order."""
     from ..streaming import delta as D, merge
 
+    grid = ["from_type", "to_type"]
     D.fold_stream(
         spark,
         src,
@@ -725,7 +726,7 @@ def stream_transition_counts(
         ["user_id"],
         merge.N_STATE_BUCKETS,
         then=D.history_census(
-            f"{workdir}/state", transition_counts, ["from_type", "to_type"], ["n"], ["user_id"]
+            f"{workdir}/state", transition_counts, grid, ["n"], ["user_id"]
         ),
         max_files=1,
     )

@@ -93,7 +93,8 @@ def history_census(state, census, group_cols: list[str], sum_cols: list[str], ke
             def narrow(df: DataFrame) -> DataFrame:
                 return df.join(k, [df[c].eqNullSafe(k[c]) for c in keys], "left_semi")
 
-            return per_batch(batch.limit(0) if old is None else narrow(old), narrow(written))
+            h = batch.limit(0) if old is None else narrow(old)
+            return per_batch(h, narrow(written))
 
         return epoch_sink(
             state, partial_fold(partial, lambda df: fold_generic(df, group_cols, sum_cols))
@@ -160,7 +161,9 @@ def fold_stream(
     )
 
 
-def partial_stream(spark, source_dir, schema, workdir, per_batch, fold, **drain) -> DataFrame:
+def partial_stream(
+    spark: SparkSession, source_dir: str, schema, workdir, per_batch, fold, **drain
+) -> DataFrame:
     """Run a commutative family's maintainer (one bucket,
     ``partial_fold(per_batch, fold)``) with its state at
     ``<workdir>/state`` and its checkpoint at ``<workdir>/ckpt``, and
